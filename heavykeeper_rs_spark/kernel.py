@@ -65,16 +65,6 @@ _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
 
 
-def _hash_key_for_seed(seed: int) -> str:
-    """16-byte hash key for pandas' SipHash, derived from the sketch seed.
-
-    Mirrors the role of ``ahash::RandomState::with_seeds(seed,..)``
-    (src/heavykeeper.rs:118-121): same seed => same hash function =>
-    merge-compatible sketches.
-    """
-    return format(seed & 0xFFFFFFFFFFFFFFFF, "016x")
-
-
 def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
     with np.errstate(over="ignore"):
         x = (x ^ (x >> _U64(30))) * _U64(0xBF58476D1CE4E5B9)
@@ -1329,11 +1319,10 @@ class HeavyKeeper:
         key's own bytes plus a fixed per-tracked-item overhead
         covering this implementation's dict/heap entries, mirroring
         the reference's ``size_of::<Bucket>()`` + queue bookkeeping
-        terms."""
-        if item_heap_fn is None:
-            items = sum(len(k) + 96 for k in self.pq.counts)
-        else:
-            items = sum(int(item_heap_fn(k)) + 96 for k in self.pq.counts)
+        terms. Integer keys (the u64 lane) own no bytes beyond the
+        overhead, like the reference's ``|_| 0``."""
+        heap = item_heap_fn if item_heap_fn is not None else _item_heap
+        items = sum(int(heap(k)) + 96 for k in self.pq.counts)
         return int(self.fps.nbytes + self.counts.nbytes + items)
 
     # -- O15: debug dump ---------------------------------------------------
@@ -1559,6 +1548,12 @@ def _pq_key(x: object):
     if isinstance(x, (int, np.integer)):
         return int(x)
     return _as_bytes(x)
+
+
+def _item_heap(item) -> int:
+    """Default ``item_heap_fn`` of ``mem_bytes``: the bytes a str/bytes
+    key owns; 0 for integer keys."""
+    return len(item) if isinstance(item, (bytes, str)) else 0
 
 
 def _key_array(keys: list) -> np.ndarray:

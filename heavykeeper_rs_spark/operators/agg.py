@@ -3,7 +3,8 @@
 One runner for the whole sketch family: partial build per partition
 (``mapInArrow``), salted combine (``groupBy(salt).applyInPandas``),
 final merge on the driver. Identical plan shape to operators/topk.py —
-only the sketch kernel differs. The shuffle carries only serialized
+the same partial stage and ``operators.combine`` tree; only the sketch
+kernel differs. The shuffle carries only serialized
 sketch blobs (KiB-scale), never rows, so the plan's network cost is
 O(partitions), independent of input size: the property that makes this
 viable at 10^12 rows.
@@ -23,13 +24,11 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -40,10 +39,9 @@ from ..sketches.cms import CountMin
 from ..sketches.hll import HLL
 from ..sketches.kll import KLL
 from ..sketches.tdigest import TDigest
-
-_BLOB_SCHEMA = StructType(
-    [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
-)
+from . import combine
+from .combine import sketch_partials, tree_fold
+from .topk import grouped_blob_tree, grouped_partial_builder
 
 
 def _sketch_seed(sk) -> int:
@@ -60,36 +58,33 @@ def _sketch_seed(sk) -> int:
     return int(s) if s is not None else 0
 
 
+def _seeded(sk, pid: int):
+    """Give a sampling sketch (one with an ``rng``) its per-partition
+    RNG, derived from the sketch's seed and the partition id."""
+    if hasattr(sk, "rng"):
+        sk.rng = np.random.default_rng(np.random.PCG64((_sketch_seed(sk) << 7) + pid))
+    return sk
+
+
 def sketch_agg(
     df: DataFrame,
     col: str,
     make: Callable[[], object],
-    deserialize: Callable[[bytes], object],
     numeric: bool = False,
     weight_col: str | None = None,
     merge_groups: int = 64,
 ):
-    """Fold df[col] into a mergeable sketch; returns the merged sketch."""
+    """Fold df[col] into a mergeable sketch; returns the merged sketch.
+    Blobs decode through the magic-sniffing registry
+    (``variants.deserialize_any``), so ``make`` is all a family needs."""
     cast = DoubleType() if numeric else StringType()
     cols = [F.col(col).cast(cast).alias("__v")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast(DoubleType()).alias("__w"))
-    keyed = df.select(*cols)
     weighted = weight_col is not None
+    if weighted:
+        cols.append(F.col(weight_col).cast(DoubleType()).alias("__w"))
 
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        saw = False
+    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw = True
             v = batch.column(0).to_numpy(zero_copy_only=False)
             if weighted:
                 w = batch.column(1).to_numpy(zero_copy_only=False)
@@ -98,51 +93,17 @@ def sketch_agg(
             else:
                 valid = pd.notna(v)
                 sk.add_batch(v[valid])
-        if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = list(pdf["sketch"])
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return pd.DataFrame({"salt": [int(pdf["salt"].iloc[0])], "sketch": [acc.serialize()]})
-
-    # multi-level bounded-fan-in merge tree (see operators/topk.py
-    # _tree_merge): salt starts as partition id, divides by fan_in per
-    # level until <= fan_in blobs reach the driver
-    from .topk import estimate_partitions
-
-    n_parts = estimate_partitions(keyed)
-    fan_in = max(int(merge_groups), 2)  # caller's fan-in, BEFORE rebinding
-    merge_groups = n_parts  # build closure salts by pid
-    combined = keyed.mapInArrow(build, _BLOB_SCHEMA)
-    groups = n_parts
-    while groups > fan_in:
-        combined = (
-            combined.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_group, _BLOB_SCHEMA)
-        )
-        groups = -(-groups // fan_in)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    if not blobs:
-        return make()
-    acc = deserialize(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(deserialize(b))
-    return acc
+    partials, n_parts = sketch_partials(
+        df.select(*cols), lambda pid: _seeded(make(), pid), feed
+    )
+    return tree_fold(partials, n_parts, merge_groups, make)
 
 
 # ---------------------------------------------------------------- wrappers
 
 def hll_build(df: DataFrame, col: str, p: int = 14, seed: int = 12345, **kw) -> HLL:
-    return sketch_agg(df, col, lambda: HLL(p, seed), HLL.deserialize, **kw)
+    return sketch_agg(df, col, lambda: HLL(p, seed), **kw)
 
 
 def hll_distinct(df: DataFrame, col: str, p: int = 14, seed: int = 12345, **kw) -> float:
@@ -152,28 +113,54 @@ def hll_distinct(df: DataFrame, col: str, p: int = 14, seed: int = 12345, **kw) 
 def cms_build(
     df: DataFrame, col: str, width: int = 2048, depth: int = 5, seed: int = 12345, **kw
 ) -> CountMin:
-    return sketch_agg(df, col, lambda: CountMin(width, depth, seed), CountMin.deserialize, **kw)
+    return sketch_agg(df, col, lambda: CountMin(width, depth, seed), **kw)
 
 
 def bloom_build(
     df: DataFrame, col: str, m_bits: int = 1 << 20, k: int = 7, seed: int = 12345, **kw
 ) -> Bloom:
-    return sketch_agg(df, col, lambda: Bloom(m_bits, k, seed), Bloom.deserialize, **kw)
+    return sketch_agg(df, col, lambda: Bloom(m_bits, k, seed), **kw)
 
 
 def kll_build(df: DataFrame, col: str, k: int = 200, seed: int = 12345, **kw) -> KLL:
-    return sketch_agg(
-        df, col, lambda: KLL(k, seed), KLL.deserialize, numeric=True, **kw
-    )
+    return sketch_agg(df, col, lambda: KLL(k, seed), numeric=True, **kw)
 
 
 def tdigest_build(df: DataFrame, col: str, delta: float = 200.0, **kw) -> TDigest:
-    return sketch_agg(
-        df, col, lambda: TDigest(delta), TDigest.deserialize, numeric=True, **kw
-    )
+    return sketch_agg(df, col, lambda: TDigest(delta), numeric=True, **kw)
 
 
 # ------------------------------------------------------- grouped variants
+
+def _grouped_sketches(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    make: Callable[[], object],
+    numeric: bool,
+    finalize,
+    out_field: StructField,
+    fan_in: int,
+    max_live_groups: int,
+) -> DataFrame:
+    """Per-(partition, group) partials of ``make()`` sketches through
+    the per-group blob tree; ``finalize(group, blobs)`` emits the
+    ``(group, out_field)`` result rows."""
+    out_schema = StructType([StructField("group", StringType(), False), out_field])
+    dtype = np.float64 if numeric else object
+
+    def feed(sk, vals) -> None:
+        sk.add_batch(np.asarray(vals, dtype=dtype))
+
+    build = grouped_partial_builder(
+        lambda pid: _seeded(make(), pid), feed, max_live_groups
+    )
+    keyed = df.select(
+        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
+        F.col(value_col).cast(DoubleType() if numeric else StringType()).alias("__v"),
+    )
+    return grouped_blob_tree(keyed, build, finalize, out_schema, fan_in=fan_in)
+
 
 def sketch_by_group(
     df: DataFrame,
@@ -183,7 +170,6 @@ def sketch_by_group(
     finalize: Callable[[object], float],
     numeric: bool = False,
     out_col: str = "value",
-    deserialize: Callable[[bytes], object] | None = None,
     fan_in: int = 64,
     max_live_groups: int = 4096,
 ) -> DataFrame:
@@ -195,56 +181,15 @@ def sketch_by_group(
     (``operators.topk.grouped_blob_tree``). No row crosses the network,
     so a Zipf-hot group costs each mapper bounded sketch memory rather
     than landing its full row set on one reducer.
-
-    ``deserialize`` defaults to ``type(make()).deserialize``.
     """
-    from .topk import grouped_blob_tree
-
-    out_schema = StructType(
-        [
-            StructField("group", StringType(), False),
-            StructField(out_col, DoubleType(), False),
-        ]
-    )
-    cast = DoubleType() if numeric else StringType()
-    if deserialize is None:
-        deserialize = type(make()).deserialize
-
-    from .topk import grouped_partial_builder
-
-    def new_sketch(pid: int):
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        return sk
-
-    def feed(sk, vals) -> None:
-        if numeric:
-            sk.add_batch(np.asarray(vals, dtype=np.float64))
-        else:
-            sk.add_batch(np.asarray(vals, dtype=object))
-
-    build = grouped_partial_builder(new_sketch, feed, max_live_groups)
-
-    def merge_fn(blobs: list[bytes]) -> bytes:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return acc.serialize()
-
     def final(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return pd.DataFrame({"group": [group], out_col: [float(finalize(acc))]})
+        value = float(finalize(combine.fold(blobs)))
+        return pd.DataFrame({"group": [group], out_col: [value]})
 
-    keyed = df.select(
-        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
-        F.col(value_col).cast(cast).alias("__v"),
+    return _grouped_sketches(
+        df, group_col, value_col, make, numeric, final,
+        StructField(out_col, DoubleType(), False), fan_in, max_live_groups,
     )
-    return grouped_blob_tree(keyed, build, merge_fn, final, out_schema, fan_in=fan_in)
 
 
 def hll_distinct_by_group(
@@ -293,49 +238,20 @@ def sketch_blobs_by_group(
     of a scalar — for callers that probe the per-group sketches with
     group-specific keys afterwards (grouped CMS point queries, grouped
     Bloom membership), or persist them as a sketch table for reuse.
+
+    Blobs merge through the magic-sniffing registry
+    (``variants.deserialize_any``), which decodes every built-in
+    family; ``deserialize`` is accepted for signature compatibility and
+    not consulted.
     """
-    from .topk import grouped_blob_tree, grouped_partial_builder
-
-    out_schema = StructType(
-        [
-            StructField("group", StringType(), False),
-            StructField("sketch", BinaryType(), False),
-        ]
-    )
-    cast = DoubleType() if numeric else StringType()
-    if deserialize is None:
-        deserialize = type(make()).deserialize
-
-    def new_sketch(pid: int):
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        return sk
-
-    def feed(sk, vals) -> None:
-        if numeric:
-            sk.add_batch(np.asarray(vals, dtype=np.float64))
-        else:
-            sk.add_batch(np.asarray(vals, dtype=object))
-
-    build = grouped_partial_builder(new_sketch, feed, max_live_groups)
-
-    def merge_fn(blobs: list[bytes]) -> bytes:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return acc.serialize()
-
     def final(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        return pd.DataFrame({"group": [group], "sketch": [merge_fn(blobs)]})
+        blob = combine.merge(blobs)
+        return pd.DataFrame({"group": [group], "sketch": [blob]})
 
-    keyed = df.select(
-        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
-        F.col(value_col).cast(cast).alias("__v"),
+    return _grouped_sketches(
+        df, group_col, value_col, make, numeric, final,
+        StructField("sketch", BinaryType(), False), fan_in, max_live_groups,
     )
-    return grouped_blob_tree(keyed, build, merge_fn, final, out_schema, fan_in=fan_in)
 
 
 def cms_by_group(

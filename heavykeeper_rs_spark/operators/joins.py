@@ -94,12 +94,7 @@ def bloom_prefilter(
         small if common is None
         else small.select(F.col(small_col).cast(common).alias(small_col))
     )
-    bloom = sketch_agg(
-        small_keyed,
-        small_col,
-        lambda: Bloom(proto.m, proto.k, seed),
-        Bloom.deserialize,
-    )
+    bloom = sketch_agg(small_keyed, small_col, lambda: Bloom(proto.m, proto.k, seed))
     blob = bloom.serialize()
     bc = big.sparkSession.sparkContext.broadcast(blob)
     out_schema = big.schema

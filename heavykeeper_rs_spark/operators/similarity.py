@@ -485,7 +485,7 @@ def _reservoir_sample(df: DataFrame, vec_col: str, n: int, seed: int) -> np.ndar
     # a mapInArrow stage trips Spark's ArrowColumnVector getFloat
     # limitation (UNSUPPORTED_CALL) in the final projection
     keyed = df.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    from .topk import estimate_partitions
+    from .combine import estimate_partitions
 
     n_parts = estimate_partitions(keyed, bias="low")
     m = max(-(-n // n_parts), 8)  # per-partition reservoir size

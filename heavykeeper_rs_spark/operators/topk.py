@@ -7,7 +7,7 @@ aggregate, exactly the shape of Catalyst's HashAggregateExec pair:
   partial:  per-partition sketch build inside ``mapInArrow`` (Arrow
             batches → np.unique pre-aggregation → vectorized kernel)
   combine:  salted multi-level ``groupBy(salt).applyInPandas`` merge
-            tree with bounded fan-in (see ``_tree_merge``) — the
+            tree with bounded fan-in (``combine.blob_tree``) — the
             explicit skew control demanded by the north rule: no
             single reducer ever merges more than ``fan_in`` blobs
   final:    driver merges the ≤ fan_in surviving blobs and emits an
@@ -27,33 +27,35 @@ Scale notes (100 TB / 1000-executor thinking):
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..kernel import HeavyKeeper, HKParams, merge_blobs
+from ..kernel import HeavyKeeper, HKParams
 from ..variants import BucketedTopK, CuckooTopK
-
-_BLOB_SCHEMA = StructType(
-    [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
+from . import combine
+from .combine import (
+    estimate_partitions,
+    partition_id,
+    partition_rng,
+    sketch_partials,
+    tree_fold,
 )
 
 #: sketch-variant registry (README.md:48-51: all three expose one API)
 VARIANTS = {
-    "topk": None,  # canonical depth-row HeavyKeeper (kernel.HeavyKeeper)
+    "topk": HeavyKeeper,  # canonical depth-row layout
     "bucketed": BucketedTopK,
     "cuckoo": CuckooTopK,
 }
@@ -211,37 +213,6 @@ def parallelize_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def estimate_partitions(df: DataFrame, bias: str = "high") -> int:
-    """Cheap physical-partition ESTIMATE — no plan-to-RDD compile.
-
-    ``df.rdd.getNumPartitions()`` costs ~140 ms of driver time per
-    query (Python-RDD wrapper + plan compile; round-3 judged it a
-    fixed overhead worth removing). The consumers here tolerate
-    estimation error, so a file-listing heuristic suffices:
-
-    - ``bias="high"`` (merge-tree sizing): max(#input files,
-      defaultParallelism). Overestimate ⇒ a few empty salt groups /
-      at most one extra near-empty tree level; underestimate ⇒ pids
-      wrap modulo the estimate and fan in earlier. Both correct.
-    - ``bias="low"`` (per-partition reservoir sizing): min(#input
-      files, defaultParallelism). The safe error direction here is a
-      SMALL count (it enlarges the per-partition reservoir): Spark
-      bin-packs small files, so a raw file count can be far ABOVE the
-      actual split count — sizing the reservoir by it would starve the
-      sample (200 packed files ⇒ m≈10 over ~8 real splits). min(...)
-      caps that: a single file reports 1 (full reservoir per split),
-      and many files report defaultParallelism at most.
-    """
-    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if bias == "low":
-        return max(min(n_files, par), 1) if n_files else par
-    return max(n_files, par)
-
-
 def _dict_encodable(t: pa.DataType) -> bool:
     return (
         pa.types.is_string(t)
@@ -249,21 +220,6 @@ def _dict_encodable(t: pa.DataType) -> bool:
         or pa.types.is_binary(t)
         or pa.types.is_large_binary(t)
     )
-
-
-def _dict_preagg(col: pa.Array, w: np.ndarray | None):
-    """(distinct keys as object ndarray, per-key weight int64) via
-    Arrow dictionary_encode — the batch pre-aggregation done C-side."""
-    import pyarrow.compute as pc
-
-    d = pc.dictionary_encode(col)
-    idx = d.indices.to_numpy(zero_copy_only=False)
-    nd = len(d.dictionary)
-    if w is None:
-        wagg = np.bincount(idx, minlength=nd).astype(np.int64)
-    else:
-        wagg = np.bincount(idx, weights=w, minlength=nd).astype(np.int64)
-    return d.dictionary.to_numpy(zero_copy_only=False), wagg
 
 
 def _make_sketch(variant: str, params: HKParams, rng):
@@ -275,32 +231,32 @@ def _make_sketch(variant: str, params: HKParams, rng):
     )
 
 
-def _deserialize_variant(variant: str, blob: bytes):
-    if variant == "topk":
-        return HeavyKeeper.deserialize(blob)
-    return VARIANTS[variant].deserialize(blob)
+def _key_column(df: DataFrame, col: str):
+    """The key-cast rule sketch build and probe share — they must agree,
+    since the int64 lane and the string lane hash one value
+    differently. Binary keys (13-byte flow records,
+    examples/ip_files.rs:6) pass through untouched; integer keys stay
+    int64 lanes end-to-end (the u64 fast path the reference benches);
+    everything else becomes a UTF-8 string."""
+    src_type = dict(df.dtypes).get(col)
+    if src_type == "binary":
+        return F.col(col)
+    if src_type in ("bigint", "int", "smallint", "tinyint"):
+        return F.col(col).cast(LongType())
+    return F.col(col).cast(StringType())
 
 
-def _merge_variant_blobs(variant: str, blobs: list[bytes]) -> bytes:
-    if variant == "topk":
-        return merge_blobs(blobs)
-    acc = _deserialize_variant(variant, blobs[0])
-    for b in blobs[1:]:
-        acc.merge(_deserialize_variant(variant, b))
-    return acc.serialize()
-
-
-def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int, hashed: bool):
+def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int):
     """Feed a non-null Arrow string/binary column into a sketch.
 
-    ``hashed=True`` (canonical kernel): dictionary-encode (C pass),
-    hash the DISTINCT values straight off the Arrow buffers
-    (``hash_string_buffers``) and insert via ``add_batch_hashed`` —
-    zero per-key Python objects; only the few keys that enter the
-    top-K queue materialize (lazy ``take``). This is the string-lane
-    fix for the round-2 per-core gap (object-array SipHash bound).
-    ``hashed=False`` (variant layouts): dictionary pre-aggregation
-    with object keys, as before."""
+    Dictionary-encode (C pass), hash the DISTINCT values straight off
+    the Arrow buffers (``hash_string_buffers``) and insert via
+    ``add_batch_hashed`` — zero per-key Python objects; only the few
+    keys that enter the top-K queue materialize (lazy ``take``). This
+    is the string-lane fix for the round-2 per-core gap (object-array
+    SipHash bound), on ALL layouts: the variants share the hash_items
+    family, and hash_string_buffers produces identical values off the
+    buffers."""
     import pyarrow.compute as pc
 
     from ..kernel import arrow_string_buffers, hash_string_buffers
@@ -312,9 +268,6 @@ def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int, hashed: bo
         wagg = np.bincount(idx, minlength=nd).astype(np.int64)
     else:
         wagg = np.bincount(idx, weights=w, minlength=nd).astype(np.int64)
-    if not hashed:
-        sk.add_batch(d.dictionary.to_numpy(zero_copy_only=False), wagg)
-        return
     dic = d.dictionary
     offsets, data = arrow_string_buffers(dic)
     h = hash_string_buffers(offsets, data, seed)
@@ -339,25 +292,14 @@ _COALESCE_ROWS = 1048576
 _COALESCE_BYTES = 128 << 20
 
 
-def _build_partial(
-    params: HKParams, merge_groups: int, weighted: bool, variant: str = "topk"
-):
-    """mapInArrow kernel: one sketch per input partition."""
-    # zero-object lane on ALL layouts (round 4: variants gained
-    # add_batch_hashed; all three share the hash_items family, and
-    # hash_string_buffers produces identical values off the buffers)
-    hashed = True
+def _feed_keys(weighted: bool, seed: int):
+    """``sketch_partials`` feed of the key-column operators: drops null
+    keys (and weights), coalesces batches to ``_COALESCE_ROWS`` and
+    feeds each coalesced column through its lane."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
         import pyarrow.compute as pc
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = _make_sketch(variant, params, rng)
-        saw = False
         kbuf: list[pa.Array] = []
         wbuf: list[np.ndarray] = []
         rows = 0
@@ -372,7 +314,7 @@ def _build_partial(
             if weighted:
                 w = wbuf[0] if len(wbuf) == 1 else np.concatenate(wbuf)
             if _dict_encodable(kcol.type):
-                _feed_str_col(sk, kcol, w, params.seed, hashed)
+                _feed_str_col(sk, kcol, w, seed)
             elif w is not None:
                 sk.add_batch(kcol.to_numpy(zero_copy_only=False), w.astype(np.int64))
             else:
@@ -382,9 +324,6 @@ def _build_partial(
             kbuf, wbuf, rows, nbytes = [], [], 0, 0
 
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw = True
             if weighted:
                 mask = pc.and_kleene(
                     batch.column(0).is_valid(), batch.column(1).is_valid()
@@ -409,32 +348,29 @@ def _build_partial(
             if rows >= _COALESCE_ROWS or nbytes >= _COALESCE_BYTES:
                 flush()
         flush()
-        if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
 
-    return fn
+    return feed
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    salt = int(pdf["salt"].iloc[0])
-    blob = merge_blobs(list(pdf["sketch"]))
-    return pd.DataFrame({"salt": [salt], "sketch": [blob]})
-
-
-def _merge_group_variant(variant: str):
-    if variant == "topk":
-        return _merge_group
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = _merge_variant_blobs(variant, list(pdf["sketch"]))
-        return pd.DataFrame({"salt": [int(pdf["salt"].iloc[0])], "sketch": [blob]})
-
-    return fn
+def topk_partials(
+    df: DataFrame,
+    col: str,
+    params: HKParams,
+    weight_col: str | None = None,
+    variant: str = "topk",
+) -> tuple[DataFrame, int]:
+    """The partial stage of ``topk_sketch``: the key projection (column
+    pruning — the scan reads only these columns) into one sketch per
+    input partition. Returns ``(partials, n_parts)``."""
+    cols = [_key_column(df, col).alias("__key")]
+    weighted = weight_col is not None
+    if weighted:
+        cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
+    return sketch_partials(
+        df.select(*cols),
+        lambda pid: _make_sketch(variant, params, partition_rng(params.seed, pid)),
+        _feed_keys(weighted, params.seed),
+    )
 
 
 def topk_sketch(
@@ -456,65 +392,10 @@ def topk_sketch(
     if variant not in VARIANTS:
         raise ValueError(f"unknown variant {variant!r}; one of {sorted(VARIANTS)}")
     params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
-    # binary keys (13-byte flow records, examples/ip_files.rs:6) pass
-    # through untouched; integer keys stay int64 lanes end-to-end (the
-    # u64 fast path the reference benches); everything else becomes a
-    # UTF-8 string
-    src_type = dict(df.dtypes).get(col)
-    if src_type == "binary":
-        key_cast = F.col(col)
-    elif src_type in ("bigint", "int", "smallint", "tinyint"):
-        key_cast = F.col(col).cast(LongType())
-    else:
-        key_cast = F.col(col).cast(StringType())
-    cols = [key_cast.alias("__key")]
-    weighted = weight_col is not None
-    if weighted:
-        cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
-    keyed = df.select(*cols)  # column pruning: scan reads only these
-    n_parts = estimate_partitions(keyed)
-    partials = keyed.mapInArrow(
-        _build_partial(params, max(n_parts, 1), weighted, variant), _BLOB_SCHEMA
+    partials, n_parts = topk_partials(df, col, params, weight_col, variant)
+    return tree_fold(
+        partials, n_parts, merge_groups, lambda: _make_sketch(variant, params, None)
     )
-    combined = _tree_merge(partials, variant, n_parts, fan_in=merge_groups)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    if not blobs:
-        return _make_sketch(variant, params, None)
-    return _deserialize_variant(variant, _merge_variant_blobs(variant, blobs))
-
-
-def _tree_merge(
-    partials: DataFrame, variant: str, n_groups: int, fan_in: int = 64
-) -> DataFrame:
-    """Multi-level salted merge tree with bounded fan-in.
-
-    ``salt`` starts as the partition id; each level integer-divides it
-    by ``fan_in`` and merges within the group, shrinking the blob count
-    fan_in-fold, until at most ``fan_in`` blobs remain for the driver.
-    fan_in=64 by default: collecting 64 KiB-to-MiB blobs to one place
-    is cheap, while an extra applyInPandas level costs a whole stage of
-    latency (measured: the 32->4 level tripled a 40M-key job's wall
-    time); at 10^5 partitions two 64-way levels still bound every
-    reducer.
-    No reducer ever folds more than fan_in blobs, so the combine
-    stage's critical path is O(fan_in * log_{fan_in}(partitions))
-    merges — treeAggregate shape. (The reference's pairwise merge
-    chain, src/heavykeeper.rs:406-457, is the degenerate fan_in=2
-    depth=n version.) Level count is derived from the known partition
-    count, so small jobs keep a single shuffle.
-    """
-    merge_fn = _merge_group_variant(variant)
-    out = partials
-    groups = max(int(n_groups), 1)
-    fan_in = max(int(fan_in), 2)  # fan_in <= 1 would never converge
-    while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_fn, _BLOB_SCHEMA)
-        )
-        groups = -(-groups // fan_in)  # ceil div
-    return out
 
 
 def topk(
@@ -548,7 +429,12 @@ def topk(
     sk = topk_sketch(
         df, col, track, width, depth, decay, seed, weight_col, merge_groups, variant
     )
-    spark = df.sparkSession
+    return _result_df(df.sparkSession, sk, k, tie_break_key)
+
+
+def _result_df(spark: SparkSession, sk, k: int, tie_break_key: bool) -> DataFrame:
+    """The sketch's top ``k`` as an ``(item string, count long)``
+    DataFrame, ordered by count desc."""
     rows = sk.list()
     if tie_break_key:
         # ties order by the RENDERED item (the output column is a
@@ -557,8 +443,7 @@ def topk(
         # preserves code-point order); for the int64 fast lane it makes
         # "10" < "9" match the oracle instead of 9 < 10
         rows = sorted(rows, key=lambda t: (-t[1], _item_str(t[0])))
-    rows = rows[:k]
-    data = [(_item_str(item), int(c)) for item, c in rows]
+    data = [(_item_str(item), int(c)) for item, c in rows[:k]]
     schema = StructType(
         [StructField("item", StringType(), False), StructField("count", LongType(), False)]
     )
@@ -681,6 +566,59 @@ def _feed(sk, rex, chunk: list[str], max_token_len: int) -> None:
         sk.add_batch(uniq, weights=w)
 
 
+def _feed_text(
+    sk, col: pa.Array, rex: re.Pattern, max_token_len: int, seed: int
+) -> int:
+    """Tokenize one Arrow text column into the sketch; returns the
+    number of non-null documents fed. The default ``[a-z]+`` pattern
+    takes the object-free Arrow path; non-ASCII batches or a custom
+    pattern fall back to the chunked C-level regex pass."""
+    if rex.pattern == "[a-z]+" and _feed_tokens_arrow(sk, col, max_token_len, seed):
+        return len(col) - col.null_count
+    # chunked join: one C-level regex pass per ~4 MB of text — NOT one
+    # batch-wide string (64k multi-KB docs would build a transient
+    # multi-hundred-MB str)
+    chunk: list[str] = []
+    size = 0
+    rows = 0
+    for t in col.to_numpy(zero_copy_only=False):
+        if t is None:
+            continue
+        rows += 1
+        chunk.append(t)
+        size += len(t)
+        if size < (4 << 20):
+            continue
+        _feed(sk, rex, chunk, max_token_len)
+        chunk, size = [], 0
+    if chunk:
+        _feed(sk, rex, chunk, max_token_len)
+    return rows
+
+
+def token_partials(
+    df: DataFrame,
+    text_col: str,
+    params: HKParams,
+    token_re: str = "[a-z]+",
+    max_token_len: int = 64,
+) -> tuple[DataFrame, int]:
+    """The partial stage of ``topk_tokens``: the text column straight
+    into one in-kernel-tokenizing sketch per input partition. Returns
+    ``(partials, n_parts)``."""
+    rex = re.compile(token_re)
+
+    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
+        for batch in batches:
+            _feed_text(sk, batch.column(0), rex, max_token_len, params.seed)
+
+    return sketch_partials(
+        df.select(F.col(text_col).cast(StringType()).alias("__text")),
+        lambda pid: HeavyKeeper(params, rng=partition_rng(params.seed, pid)),
+        feed,
+    )
+
+
 def topk_tokens(
     df: DataFrame,
     text_col: str,
@@ -706,90 +644,13 @@ def topk_tokens(
     fall back to the chunked C-level regex pass. No explode, no
     shuffle of tokens — the only network traffic is sketch blobs.
     """
-    import re
-
     params = HKParams(
         k=_track_k(k, tie_break_key, candidates),
         width=width, depth=depth, decay=decay, seed=seed,
     )
-    rex = re.compile(token_re)
-    import os
-
-    ascii_ok = token_re == "[a-z]+" and os.environ.get(
-        "HK_TOKENIZE_ARROW", "1"
-    ) != "0"
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = HeavyKeeper(params, rng=rng)
-        saw = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw = True
-            if ascii_ok and _feed_tokens_arrow(
-                sk, batch.column(0), max_token_len, params.seed
-            ):
-                continue
-            texts = batch.column(0).to_numpy(zero_copy_only=False)
-            # chunked join: one C-level regex pass per ~4 MB of text —
-            # NOT one batch-wide string (64k multi-KB docs would build
-            # a transient multi-hundred-MB str)
-            chunk: list[str] = []
-            size = 0
-            for t in texts:
-                if t is None:
-                    continue
-                chunk.append(t)
-                size += len(t)
-                if size < (4 << 20):
-                    continue
-                _feed(sk, rex, chunk, max_token_len)
-                chunk, size = [], 0
-            if chunk:
-                _feed(sk, rex, chunk, max_token_len)
-        if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
-
-    keyed = df.select(F.col(text_col).cast(StringType()).alias("__text"))
-    n_parts = estimate_partitions(keyed)
-    fan_in = merge_groups  # caller's fan-in, BEFORE the salt rebinding
-    merge_groups = max(n_parts, 1)
-    partials = keyed.mapInArrow(build, _BLOB_SCHEMA)
-    combined = _tree_merge(partials, "topk", n_parts, fan_in=fan_in)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    sk = (
-        HeavyKeeper(params)
-        if not blobs
-        else HeavyKeeper.deserialize(merge_blobs(blobs))
-    )
-    rows = sk.list()
-    if tie_break_key:
-        rows = sorted(rows, key=lambda t: (-t[1], t[0]))
-    rows = rows[:k]
-    data = [(item.decode("utf-8", errors="replace"), int(c)) for item, c in rows]
-    schema = StructType(
-        [StructField("item", StringType(), False), StructField("count", LongType(), False)]
-    )
-    return local_result_df(df.sparkSession, data, schema)
-
-
-_GROUP_BLOB_SCHEMA = StructType(
-    [
-        StructField("group", StringType(), False),
-        StructField("salt", IntegerType(), False),
-        StructField("sketch", BinaryType(), False),
-    ]
-)
+    partials, n_parts = token_partials(df, text_col, params, token_re, max_token_len)
+    sk = tree_fold(partials, n_parts, merge_groups, lambda: HeavyKeeper(params))
+    return _result_df(df.sparkSession, sk, k, tie_break_key)
 
 
 def grouped_partial_builder(
@@ -822,8 +683,7 @@ def grouped_partial_builder(
     cap = max(int(max_live_groups), 2)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+        pid = partition_id()
         sketches: dict[str, object] = {}
         touch: dict[str, int] = {}
         t = 0
@@ -896,7 +756,6 @@ def grouped_partial_builder(
 def grouped_blob_tree(
     keyed: DataFrame,
     build_partials,
-    merge_blobs_fn,
     finalize_fn,
     out_schema: StructType,
     fan_in: int = 64,
@@ -904,7 +763,7 @@ def grouped_blob_tree(
     """Shared scaffold for per-group sketch aggregation that never
     shuffles rows — only serialized sketch blobs.
 
-    Shape (the per-group analog of ``_tree_merge``):
+    Shape (the per-group analog of the ungrouped combine):
 
       partial:  ``build_partials`` runs in ``mapInArrow`` and emits one
                 (group, salt=partition_id, blob) row per (partition,
@@ -913,40 +772,24 @@ def grouped_blob_tree(
                 independent of row count. A Zipf-hot group costs each
                 *mapper* bounded sketch memory instead of landing its
                 entire row set on one reducer.
-      combine:  multi-level ``groupBy(group, salt // fan_in)`` merge
-                tree — no reducer folds more than ``fan_in`` blobs per
-                level, so a group spread over 10^5 partitions merges in
+      combine:  ``combine.blob_tree`` keyed by group — multi-level
+                ``groupBy(group, salt // fan_in)`` merges; no reducer
+                folds more than ``fan_in`` blobs per level, so a group
+                spread over 10^5 partitions merges in
                 ~log_fan_in(10^5) ≈ 6 levels rather than one 10^5-way
                 fold.
       final:    ``groupBy(group)`` over the ≤ fan_in survivors runs
-                ``finalize_fn`` to emit result rows.
+                ``finalize_fn(group, blobs)`` to emit result rows.
     """
-    n_parts = estimate_partitions(keyed)
-    fan_in = max(int(fan_in), 2)  # fan_in <= 1 would never converge
-    out = keyed.mapInArrow(build_partials, _GROUP_BLOB_SCHEMA)
-
-    def merge_level(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "sketch": [merge_blobs_fn(list(pdf["sketch"]))],
-            }
-        )
-
-    groups = n_parts
-    while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("group", "salt")
-            .applyInPandas(merge_level, _GROUP_BLOB_SCHEMA)
-        )
-        groups = -(-groups // fan_in)  # ceil div
+    partials = keyed.mapInArrow(build_partials, combine.GROUP_BLOB_SCHEMA)
+    tree = combine.blob_tree(
+        partials, estimate_partitions(keyed), fan_in, keys=("group",)
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         return finalize_fn(str(pdf["group"].iloc[0]), list(pdf["sketch"]))
 
-    return out.groupBy("group").applyInPandas(final, out_schema)
+    return tree.groupBy("group").applyInPandas(final, out_schema)
 
 
 def topk_by_group(
@@ -997,32 +840,18 @@ def topk_by_group(
     )
 
     def new_sketch(pid: int):
-        return _make_sketch(
-            variant,
-            params,
-            np.random.default_rng(
-                np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-            ),
-        )
+        return _make_sketch(variant, params, partition_rng(params.seed, pid))
+
+    def feed(sk, vals, w=None) -> None:
+        sk.add_batch(vals, None if w is None else np.asarray(w, dtype=np.int64))
 
     weighted = weight_col is not None
-    if weighted:
-        build = grouped_partial_builder(
-            new_sketch,
-            lambda sk, vals, w: sk.add_batch(
-                vals, np.asarray(w, dtype=np.int64)
-            ),
-            max_live_groups,
-            weighted=True,
-        )
-    else:
-        build = grouped_partial_builder(
-            new_sketch, lambda sk, vals: sk.add_batch(vals), max_live_groups
-        )
+    build = grouped_partial_builder(
+        new_sketch, feed, max_live_groups, weighted=weighted
+    )
 
     def finalize(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        sk = _deserialize_variant(variant, _merge_variant_blobs(variant, blobs))
-        rows = sk.list()
+        rows = combine.fold(blobs).list()
         if tie_break_key:
             rows = sorted(rows, key=lambda t: (-t[1], t[0]))
         rows = rows[:k]
@@ -1041,14 +870,7 @@ def topk_by_group(
     if weighted:
         cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
     keyed = df.select(*cols)
-    return grouped_blob_tree(
-        keyed,
-        build,
-        lambda blobs: _merge_variant_blobs(variant, blobs),
-        finalize,
-        out_schema,
-        fan_in=fan_in,
-    )
+    return grouped_blob_tree(keyed, build, finalize, out_schema, fan_in=fan_in)
 
 
 def contains_top_k(df: DataFrame, col: str, sketch) -> DataFrame:
@@ -1073,7 +895,12 @@ def estimate(
     sketch is broadcast once; each Arrow batch probes it vectorized —
     the same plan shape as a broadcast-hash-join against the summary.
     The variant is sniffed from the blob magic, so a sketch built with
-    variant='bucketed' or 'cuckoo' probes identically."""
+    variant='bucketed' or 'cuckoo' probes identically. The probe column
+    is cast by ``topk_sketch``'s key rule, so an integer-keyed sketch
+    is probed on its int64 lane. The probe column must therefore have
+    the build column's key type: a string-built sketch probed with an
+    integer column (or the reverse) hashes every key on the other lane
+    and estimates 0 — cast the probe column to the build type first."""
     from ..variants import deserialize_any
 
     blob = sketch.serialize()
@@ -1105,8 +932,9 @@ def estimate(
             )
             yield out
 
-    withkey = df.withColumn("__probe_key", F.col(col).cast(StringType()))
+    withkey = df.withColumn("__probe_key", _key_column(df, col))
     return withkey.mapInArrow(probe, out_schema)
+
 
 def topk_by_grouping_sets(
     df: DataFrame,

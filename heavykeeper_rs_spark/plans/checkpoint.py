@@ -14,8 +14,9 @@ them makes the whole aggregation resumable:
   checkpoint from a different sketch shape, build mode, or input
   lineage is refused, not silently merged;
 - the combine stage is the SAME bounded-fan-in merge tree as the
-  non-checkpointed paths (no reducer ever folds more than ``fan_in``
-  blobs — at 10^5 partitions the critical path is
+  non-checkpointed paths (``operators.combine.blob_tree``, which also
+  sums the resumed/computed counters; no reducer ever folds more than
+  ``fan_in`` blobs — at 10^5 partitions the critical path is
   O(fan_in · log_fan_in(n)) merges, not one O(n) fold);
 - the final merged sketch is written to ``{dir}/final.bin``; a
   completed job resumes in O(1).
@@ -37,23 +38,23 @@ import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ..kernel import HeavyKeeper, HKParams, merge_blobs
+from ..kernel import HeavyKeeper, HKParams
+from ..operators import combine
 
 _CKPT_SCHEMA = StructType(
     [
-        StructField("salt", IntegerType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("status", StringType(), False),
+        *combine.BLOB_SCHEMA.fields,
+        StructField("resumed", IntegerType(), False),
+        StructField("computed", IntegerType(), False),
     ]
 )
+_CKPT_SUMS = ("resumed", "computed")
 
 
 def _params_token(
@@ -93,51 +94,8 @@ class CheckpointReport:
     final_was_cached: bool
 
 
-def _parse_status(s: str) -> tuple[int, int]:
-    res = comp = 0
-    for part in s.split(","):
-        kind, _, n = part.partition(":")
-        if kind == "resumed":
-            res += int(n)
-        elif kind == "computed":
-            comp += int(n)
-    return res, comp
-
-
-def _tree_merge_status(partials: DataFrame, n_groups: int, fan_in: int) -> DataFrame:
-    """Bounded-fan-in merge tree over (salt, sketch, status) rows — the
-    checkpoint twin of ``operators.topk._tree_merge`` that also folds
-    the resumed/computed counters. ``salt`` starts as the partition id;
-    each level integer-divides it by ``fan_in``, so no reducer ever
-    folds more than ``fan_in`` blobs and 10^5 partitions merge through
-    ~log_fan_in(10^5) levels instead of one sequential O(n) fold."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_blobs(list(pdf["sketch"]))
-        res = comp = 0
-        for s in pdf["status"]:
-            r, c = _parse_status(s)
-            res += r
-            comp += c
-        return pd.DataFrame(
-            {
-                "salt": [int(pdf["salt"].iloc[0])],
-                "sketch": [blob],
-                "status": [f"resumed:{res},computed:{comp}"],
-            }
-        )
-
-    out = partials
-    groups = max(int(n_groups), 1)
-    fan_in = max(int(fan_in), 2)
-    while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_group, _CKPT_SCHEMA)
-        )
-        groups = -(-groups // fan_in)  # ceil div
-    return out
+def _saved_partials(ckpt_dir: str) -> int:
+    return sum(f.endswith(".bin") for f in os.listdir(f"{ckpt_dir}/partials"))
 
 
 def _checkpointed_sketch(
@@ -170,29 +128,27 @@ def _checkpointed_sketch(
     final_path = f"{ckpt_dir}/final.bin"
     if os.path.exists(final_path):
         sk = HeavyKeeper.deserialize(open(final_path, "rb").read())
-        n_parts = len(
-            [f for f in os.listdir(f"{ckpt_dir}/partials") if f.endswith(".bin")]
-        )
+        n_parts = _saved_partials(ckpt_dir)
         return sk, CheckpointReport(n_parts, n_parts, 0, True)
 
+    def partial(pid: int, blob: bytes, resumed: int) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict(
+            {
+                "salt": pa.array([pid], type=pa.int32()),
+                "sketch": pa.array([blob], type=pa.binary()),
+                "resumed": pa.array([resumed], type=pa.int32()),
+                "computed": pa.array([1 - resumed], type=pa.int32()),
+            }
+        )
+
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+        pid = combine.partition_id()
         blob_path = f"{ckpt_dir}/partials/part-{pid:05d}.bin"
         if os.path.exists(blob_path):
             # resume: emit the saved partial, skip all sketch work
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid], type=pa.int32()),
-                    "sketch": pa.array([open(blob_path, "rb").read()], type=pa.binary()),
-                    "status": pa.array(["resumed:1,computed:0"], type=pa.string()),
-                }
-            )
+            yield partial(pid, open(blob_path, "rb").read(), 1)
             return
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = HeavyKeeper(params, rng=rng)
+        sk = HeavyKeeper(params, rng=combine.partition_rng(params.seed, pid))
         t0 = time.time()
         rows = 0
         for batch in batches:
@@ -214,26 +170,17 @@ def _checkpointed_sketch(
             f"{ckpt_dir}/partials/part-{pid:05d}.metrics.json",
             json.dumps(metrics).encode(),
         )
-        yield pa.RecordBatch.from_pydict(
-            {
-                "salt": pa.array([pid], type=pa.int32()),
-                "sketch": pa.array([blob], type=pa.binary()),
-                "status": pa.array(["resumed:0,computed:1"], type=pa.string()),
-            }
-        )
+        yield partial(pid, blob, 0)
 
     partials = keyed.mapInArrow(build, _CKPT_SCHEMA)
-    combined = _tree_merge_status(partials, n_input_parts, fan_in).collect()
-    resumed = computed = 0
-    for r in combined:
-        res, comp = _parse_status(r["status"])
-        resumed += res
-        computed += comp
+    combined = combine.blob_tree(
+        partials, n_input_parts, fan_in, sums=_CKPT_SUMS
+    ).collect()
+    resumed = sum(r["resumed"] for r in combined)
+    computed = sum(r["computed"] for r in combined)
     blobs = [r["sketch"] for r in combined]
-    if not blobs:
-        sk = HeavyKeeper(params)
-    else:
-        sk = HeavyKeeper.deserialize(merge_blobs(blobs))
+    # partials come from disk: refuse a valid blob of another family
+    sk = HeavyKeeper.deserialize(combine.merge(blobs)) if blobs else HeavyKeeper(params)
     _atomic_write(final_path, sk.serialize())
     summary = {
         "token": token,
@@ -243,10 +190,7 @@ def _checkpointed_sketch(
         "finished_ts": time.time(),
     }
     _atomic_write(f"{ckpt_dir}/SUMMARY.json", json.dumps(summary).encode())
-    n_parts = len(
-        [f for f in os.listdir(f"{ckpt_dir}/partials") if f.endswith(".bin")]
-    )
-    return sk, CheckpointReport(n_parts, resumed, computed, False)
+    return sk, CheckpointReport(_saved_partials(ckpt_dir), resumed, computed, False)
 
 
 def topk_checkpointed(
@@ -294,40 +238,15 @@ def topk_tokens_checkpointed(
     most worth resuming: each partition's tokenizer pass is minutes of
     CPU, and a preempted executor costs exactly its unfinished
     partitions, not the run."""
-    import os
     import re
 
-    from ..operators.topk import _feed, _feed_tokens_arrow
+    from ..operators.topk import _feed_text
 
     rex = re.compile(token_re)
-    ascii_ok = token_re == "[a-z]+" and os.environ.get(
-        "HK_TOKENIZE_ARROW", "1"
-    ) != "0"
     keyed = df.select(F.col(text_col).cast(StringType()).alias("__text"))
 
     def feed(sk: HeavyKeeper, batch: pa.RecordBatch) -> int:
-        if ascii_ok and _feed_tokens_arrow(
-            sk, batch.column(0), max_token_len, params.seed
-        ):
-            col = batch.column(0)
-            return batch.num_rows - col.null_count
-        texts = batch.column(0).to_numpy(zero_copy_only=False)
-        chunk: list[str] = []
-        size = 0
-        rows = 0
-        for t in texts:
-            if t is None:
-                continue
-            rows += 1
-            chunk.append(t)
-            size += len(t)
-            if size < (4 << 20):
-                continue
-            _feed(sk, rex, chunk, max_token_len)
-            chunk, size = [], 0
-        if chunk:
-            _feed(sk, rex, chunk, max_token_len)
-        return rows
+        return _feed_text(sk, batch.column(0), rex, max_token_len, params.seed)
 
     return _checkpointed_sketch(
         keyed, params, ckpt_dir, lineage, merge_groups, "tokens", feed

@@ -5,7 +5,8 @@ KLL, t-digest) is a distributive partial+final aggregate — the same
 shape as the reference's build/merge/list flow
 (src/heavykeeper.rs:406-457) and of Catalyst's two-phase
 HashAggregateExec. The generic distributed runner lives in
-operators/agg.py; anything implementing this protocol plugs in.
+operators/agg.py; anything implementing this protocol whose blob magic
+is registered in ``variants.deserialize_any`` plugs in.
 """
 
 from __future__ import annotations

@@ -24,11 +24,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _default_deserialize(blob: bytes):
-    from ..variants import deserialize_any
-
-    return deserialize_any(blob)
+from ..variants import deserialize_any
 
 
 def save_sketch(spark: SparkSession, sk, path: str, meta: dict | None = None) -> None:
@@ -43,12 +39,12 @@ def save_sketch(spark: SparkSession, sk, path: str, meta: dict | None = None) ->
 
 def load_sketch(spark: SparkSession, path: str, deserialize=None):
     """Revive a sketch saved by ``save_sketch``; returns (sketch, meta).
-    ``deserialize`` defaults to the HeavyKeeper-family magic sniffer —
-    pass e.g. ``HLL.deserialize`` for other families."""
+    ``deserialize`` defaults to the magic-sniffing registry
+    (``variants.deserialize_any``), which knows every built-in family."""
     rows = spark.read.parquet(path).collect()
     if len(rows) != 1:
         raise ValueError(f"sketch store at {path} has {len(rows)} rows, expected 1")
-    de = deserialize or _default_deserialize
+    de = deserialize or deserialize_any
     return de(bytes(rows[0]["sketch"])), json.loads(rows[0]["meta"])
 
 
@@ -77,5 +73,5 @@ def load_group(spark: SparkSession, path: str, group: str, deserialize=None):
             f"sketch store {path} holds multiple blobs for group {group!r} "
             "(double-written store?) — refusing to pick one arbitrarily"
         )
-    de = deserialize or _default_deserialize
+    de = deserialize or deserialize_any
     return de(bytes(rows[0]["sketch"]))

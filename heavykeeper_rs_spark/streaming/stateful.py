@@ -34,6 +34,8 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import HeavyKeeper, HKParams
+from ..operators import combine
+from ..variants import deserialize_any
 
 _OUT_SCHEMA = StructType(
     [
@@ -48,6 +50,24 @@ _STATE_SCHEMA = StructType(
         StructField("sketch", BinaryType(), True),
     ]
 )
+
+
+def _feed_rows(sk, pdfs: Iterator[pd.DataFrame], weighted: bool) -> int:
+    """Feed a state group's new rows (``__key`` and, when weighted,
+    ``__w``) into its sketch; returns the number of rows actually fed
+    (null keys or weights are skipped)."""
+    fed = 0
+    for pdf in pdfs:
+        keys = pdf["__key"].to_numpy()
+        ok = pd.notna(keys)
+        if weighted:
+            wv = pdf["__w"].to_numpy()
+            ok &= pd.notna(wv)
+            sk.add_batch(keys[ok], np.asarray(wv[ok], dtype=np.float64))
+        else:
+            sk.add_batch(keys[ok])
+        fed += int(ok.sum())
+    return fed
 
 
 def stateful_topk_stream(
@@ -67,7 +87,7 @@ def stateful_topk_stream(
     ``variants.deserialize_any``. ``weight_col`` feeds weighted adds
     (bytes-per-flow style streams).
     """
-    from ..operators.topk import VARIANTS, _deserialize_variant, _make_sketch
+    from ..operators.topk import VARIANTS, _make_sketch
 
     if variant not in VARIANTS:
         raise ValueError(f"unknown variant {variant!r}; one of {sorted(VARIANTS)}")
@@ -79,7 +99,7 @@ def stateful_topk_stream(
         shard = int(key[0])
         if state.exists:
             rows_seen, blob = state.get
-            sk = _deserialize_variant(variant, blob)
+            sk = VARIANTS[variant].deserialize(blob)  # refuses another layout
         else:
             rows_seen = 0
             sk = _make_sketch(
@@ -89,17 +109,7 @@ def stateful_topk_stream(
                     np.random.PCG64((params.seed << 9) ^ shard)
                 ),
             )
-        for pdf in pdfs:
-            keys = pdf["__key"].to_numpy()
-            valid = pd.notna(keys)
-            if weighted:
-                wv = pdf["__w"].to_numpy()
-                ok = valid & pd.notna(wv)
-                rows_seen += int(ok.sum())  # rows actually fed
-                sk.add_batch(keys[ok], np.asarray(wv[ok], dtype=np.float64))
-            else:
-                rows_seen += int(valid.sum())
-                sk.add_batch(keys[valid])
+        rows_seen += _feed_rows(sk, pdfs, weighted)
         blob = sk.serialize()
         state.update((rows_seen, blob))
         yield pd.DataFrame(
@@ -153,7 +163,7 @@ def stateful_windowed_topk_stream(
     ``stateful_windowed_sketch_stream``. ``variant`` selects the
     sketch layout; blobs carry the magic, so ``merge_window_blobs``
     folds any of them. ``slide`` < window makes the windows sliding."""
-    from ..operators.topk import VARIANTS, _deserialize_variant, _make_sketch
+    from ..operators.topk import VARIANTS, _make_sketch
 
     if variant not in VARIANTS:
         raise ValueError(f"unknown variant {variant!r}; one of {sorted(VARIANTS)}")
@@ -172,7 +182,7 @@ def stateful_windowed_topk_stream(
         col,
         ts_col,
         make,
-        lambda blob: _deserialize_variant(variant, blob),
+        VARIANTS[variant].deserialize,
         window=window,
         watermark=watermark,
         n_shards=n_shards,
@@ -185,7 +195,7 @@ def stateful_windowed_sketch_stream(
     col: str,
     ts_col: str,
     make,
-    deserialize,
+    deserialize=None,
     window: str = "1 hour",
     watermark: str = "10 minutes",
     n_shards: int = 4,
@@ -198,7 +208,8 @@ def stateful_windowed_sketch_stream(
     to sketches whose ``add_batch`` accepts weights.
 
     ``make(window_start, shard)`` builds a fresh sketch for a state
-    group; ``deserialize(blob)`` revives one. Keys are (window_start,
+    group; ``deserialize(blob)`` revives one (default: the
+    magic-sniffing ``variants.deserialize_any``). Keys are (window_start,
     shard); each group owns one serialized sketch in the state store.
     Rows later than ``watermark`` are dropped by Spark's watermark;
     when the watermark passes a window's end, the group's
@@ -219,36 +230,30 @@ def stateful_windowed_sketch_stream(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         wstart, shard = int(key[0]), int(key[1])
-        if state.hasTimedOut:
-            rows_seen, blob = state.get
-            state.remove()
-            yield pd.DataFrame(
+
+        def emit(rows_seen: int, final: int, blob: bytes) -> pd.DataFrame:
+            return pd.DataFrame(
                 {
                     "window_start": [wstart],
                     "shard": [shard],
                     "rows_seen": [rows_seen],
-                    "final": [1],
+                    "final": [final],
                     "sketch": [blob],
                 }
             )
+
+        if state.hasTimedOut:
+            rows_seen, blob = state.get
+            state.remove()
+            yield emit(rows_seen, 1, blob)
             return
         if state.exists:
             rows_seen, blob = state.get
-            sk = deserialize(blob)
+            sk = (deserialize or deserialize_any)(blob)
         else:
             rows_seen = 0
             sk = make(wstart, shard)
-        for pdf in pdfs:
-            keys = pdf["__key"].to_numpy()
-            valid = pd.notna(keys)
-            if weighted:
-                wv = pdf["__w"].to_numpy()
-                ok = valid & pd.notna(wv)
-                rows_seen += int(ok.sum())  # rows actually fed
-                sk.add_batch(keys[ok], np.asarray(wv[ok], dtype=np.float64))
-            else:
-                rows_seen += int(valid.sum())
-                sk.add_batch(keys[valid])
+        rows_seen += _feed_rows(sk, pdfs, weighted)
         blob = sk.serialize()
         end_ms = int(key[2]) * 1000
         # arbitrary-stateful ops don't auto-drop late input: if the
@@ -258,28 +263,12 @@ def stateful_windowed_sketch_stream(
         if end_ms <= state.getCurrentWatermarkMs():
             if state.exists:
                 state.remove()
-            yield pd.DataFrame(
-                {
-                    "window_start": [wstart],
-                    "shard": [shard],
-                    "rows_seen": [rows_seen],
-                    "final": [1],
-                    "sketch": [blob],
-                }
-            )
+            yield emit(rows_seen, 1, blob)
             return
         state.update((rows_seen, blob))
         # finalize when the event-time watermark passes the window end
         state.setTimeoutTimestamp(end_ms)
-        yield pd.DataFrame(
-            {
-                "window_start": [wstart],
-                "shard": [shard],
-                "rows_seen": [rows_seen],
-                "final": [0],
-                "sketch": [blob],
-            }
-        )
+        yield emit(rows_seen, 0, blob)
 
     weighted = weight_col is not None
     cols = [
@@ -354,35 +343,20 @@ def window_rows_seen(rows: list) -> int:
 def merge_window_blobs(rows: list, deserialize=None) -> dict[int, "HeavyKeeper"]:
     """Fold windowed-stream output rows into one sketch per window —
     the blob selection is ``_select_lives`` (see its docstring for the
-    consumer contract). ``deserialize`` defaults to the
-    HeavyKeeper-family magic-sniffing ``deserialize_any``; pass e.g.
-    ``HLL.deserialize`` for ``stateful_windowed_sketch_stream``
-    outputs of other families."""
+    consumer contract). ``deserialize`` defaults to the magic-sniffing
+    registry (``variants.deserialize_any``), which decodes every
+    built-in family."""
     per_window: dict[int, list[bytes]] = {}
     for k, lives in _select_lives(rows).items():
         per_window.setdefault(k[0], []).extend(b for _, b in lives)
-    if deserialize is None:
-        from ..variants import deserialize_any as deserialize
-
-    out: dict[int, object] = {}
-    for w, blobs in per_window.items():
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        out[w] = acc
-    return out
+    de = deserialize or deserialize_any
+    return {w: de(combine.merge(blobs)) for w, blobs in per_window.items()}
 
 
 def merge_shard_blobs(rows: list):
     """Merge the latest blob per shard into one sketch (driver-side).
     Variant-agnostic: the blob magic selects the layout."""
-    from ..variants import deserialize_any
-
     latest: dict[int, bytes] = {}
     for r in rows:
         latest[r["shard"]] = r["sketch"]
-    blobs = list(latest.values())
-    acc = deserialize_any(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(deserialize_any(b))
-    return acc
+    return combine.fold(list(latest.values()))

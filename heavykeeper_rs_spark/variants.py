@@ -43,16 +43,20 @@ import pandas as pd
 from .errors import SketchCompatError
 from .serde import dumps as serde_dumps, loads as serde_loads
 from .kernel import (
+    _MAGIC,
+    HeavyKeeper,
     HKParams,
     TopKQueue,
     _DENSE_DOMAIN_CAP,
     _as_bytes,
+    _item_heap,
     _key_array,
     _pq_key,
     _radix_argsort,
     _sniff_legacy_pickle,
     hash_items,
 )
+from .sketches import bloom, cms, hll, kll, tdigest
 
 _U64 = np.uint64
 _CUCKOO_SALT = _U64(0x9E3779B97F4A7C15)
@@ -562,7 +566,7 @@ class BucketedTopK(_VariantBase):
         return self
 
     def mem_bytes(self, item_heap_fn=None) -> int:
-        heap = item_heap_fn if item_heap_fn is not None else len
+        heap = item_heap_fn if item_heap_fn is not None else _item_heap
         items = sum(int(heap(k)) + 96 for k in self.pq.counts)
         return int(self.fps.nbytes + self.counts.nbytes + items)
 
@@ -1286,7 +1290,7 @@ class CuckooTopK(_VariantBase):
         return self
 
     def mem_bytes(self, item_heap_fn=None) -> int:
-        heap = item_heap_fn if item_heap_fn is not None else len
+        heap = item_heap_fn if item_heap_fn is not None else _item_heap
         items = sum(int(heap(k)) + 96 for k in self.pq.counts)
         return int(
             self.lobby_fp.nbytes
@@ -1296,21 +1300,33 @@ class CuckooTopK(_VariantBase):
             + items
         )
 
+
+#: blob magic -> sketch class, for every kind the library serializes
+_KINDS = {
+    _MAGIC: HeavyKeeper,
+    BucketedTopK.variant: BucketedTopK,
+    CuckooTopK.variant: CuckooTopK,
+    hll._KIND: hll.HLL,
+    cms._KIND: cms.CountMin,
+    bloom._KIND: bloom.Bloom,
+    kll._KIND: kll.KLL,
+    tdigest._KIND: tdigest.TDigest,
+}
+
+
 def deserialize_any(blob: bytes):
-    """Deserialize whichever sketch layout wrote the blob, sniffed from
-    the 4-byte magic (HKS1 canonical, HKB1 bucketed, HKC1 cuckoo).
+    """Deserialize whichever sketch kind wrote the blob, sniffed from
+    the 4-byte magic: the three HeavyKeeper layouts (HKS1 canonical,
+    HKB1 bucketed, HKC1 cuckoo) and the rest of the family (HLL1,
+    CMS1, BLM1, KLL1, TDG1).
 
     The reference exposes count()/contains() on all three layouts
     (src/heavykeeper.rs:220-246, src/bucketed.rs:260-269,
     src/cuckoo.rs:280-289); the distributed broadcast-probe operators
-    use this so a sketch built with ANY variant can be probed."""
-    from .kernel import _MAGIC, HeavyKeeper
-
+    use this so a sketch built with ANY variant can be probed, and the
+    merge tree (``operators.combine``) decodes every kind through it."""
     tag = bytes(blob[:4])
-    if tag == _MAGIC:
-        return HeavyKeeper.deserialize(blob)
-    if tag == BucketedTopK.variant:
-        return BucketedTopK.deserialize(blob)
-    if tag == CuckooTopK.variant:
-        return CuckooTopK.deserialize(blob)
-    raise ValueError(f"unknown sketch blob magic {tag!r}")
+    cls = _KINDS.get(tag)
+    if cls is None:
+        raise ValueError(f"unknown sketch blob magic {tag!r}")
+    return cls.deserialize(blob)

@@ -184,6 +184,19 @@ class TestDebugDump:
         assert d["queue"][0] == {"item": "a", "count": 9}
         assert d["tracked"] == 2 and d["nonzero_cells"] == len(d["buckets"])
 
+    def test_int_keys(self):
+        # the u64 lane tracks Python ints: describe()/mem_bytes() cost
+        # them at the fixed per-item overhead instead of calling len()
+        import numpy as np
+        from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams
+
+        sk = HeavyKeeper(HKParams(k=2, width=64, depth=2))
+        sk.add_batch(np.asarray([5] * 9 + [7] * 4, dtype=np.int64))
+        d = sk.debug()
+        assert d["queue"][0] == {"item": 5, "count": 9}
+        assert d["tracked"] == 2
+        assert d["mem_bytes"] == sk.mem_bytes(item_heap_fn=lambda _k: 0)
+
 
 class TestDuelVecDistribution:
     """The wave-vectorized duel (_duel_vec) must match the scalar

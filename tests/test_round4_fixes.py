@@ -159,6 +159,9 @@ class TestMemBytesItemHeapFn:
             sk = cls(k=4, width=64, depth=2)
             sk.add_batch(np.asarray([b"alpha"], dtype=object), np.array([5]))
             assert sk.mem_bytes(item_heap_fn=lambda _k: 0) < sk.mem_bytes()
+            ints = cls(k=4, width=64, depth=2)
+            ints.add_batch(np.asarray([3, 3, 9], dtype=np.int64))
+            assert ints.mem_bytes() == ints.mem_bytes(item_heap_fn=lambda _k: 0)
 
 
 class TestIvfSidecarViaSpark:

@@ -68,6 +68,22 @@ def test_estimate_broadcast_probe(spark, events):
         assert r["est_count"] == truth[r["event_type"]]
 
 
+def test_estimate_int64_keys(spark, events):
+    """An integer-keyed sketch lives on the int64 lane; the probe must
+    hash the same lane — a string-cast probe estimates every key 0."""
+    truth = {
+        r["user_id"]: r["count"] for r in events.groupBy("user_id").count().collect()
+    }
+    # k below the distinct count: PQ and cell estimates are both probed
+    sk = topk_sketch(events, "user_id", k=5, width=65536, depth=4)
+    assert len(truth) > 5
+    for df in (events, events.withColumn("user_id", F.col("user_id").cast("int"))):
+        probe = df.select("user_id").distinct()
+        rows = estimate(probe, "user_id", sk).collect()
+        got = {r["user_id"]: r["est_count"] for r in rows}
+        assert got == truth
+
+
 def test_parallelism_invariance_of_topk_set(spark, events):
     # different partitioning must agree within bound; uncontended -> equal
     a = topk(events.repartition(2), "event_type", k=5, width=1024, tie_break_key=True)

@@ -270,6 +270,12 @@ def test_deserialize_any_sniffs_magic():
     import pytest
 
     from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams
+    from heavykeeper_rs_spark.operators import combine
+    from heavykeeper_rs_spark.sketches.bloom import Bloom
+    from heavykeeper_rs_spark.sketches.cms import CountMin
+    from heavykeeper_rs_spark.sketches.hll import HLL
+    from heavykeeper_rs_spark.sketches.kll import KLL
+    from heavykeeper_rs_spark.sketches.tdigest import TDigest
     from heavykeeper_rs_spark.variants import (
         BucketedTopK,
         CuckooTopK,
@@ -287,8 +293,26 @@ def test_deserialize_any_sniffs_magic():
         back = deserialize_any(sk.serialize())
         assert type(back) is type(sk)
         assert back.list() == sk.list()
+    # the rest of the family: the round trip re-serializes byte-identical
+    words = np.asarray(["a", "b", "b", "c"], dtype=object)
+    nums = np.arange(100, dtype=np.float64)
+    family = [
+        (HLL(8, 7), words),
+        (CountMin(64, 3, 7), words),
+        (Bloom(1024, 3, 7), words),
+        (KLL(8, 7), nums),
+        (TDigest(50.0), nums),
+    ]
+    for sk, vals in family:
+        sk.add_batch(vals)
+        blob = sk.serialize()
+        back = deserialize_any(blob)
+        assert type(back) is type(sk)
+        assert back.serialize() == blob
     with pytest.raises(ValueError, match="unknown sketch blob magic"):
         deserialize_any(b"NOPE" + b"\x00" * 16)
+    with pytest.raises(ValueError, match="mixed kinds"):
+        combine.merge([canon.serialize(), buck.serialize()])
 
 
 def test_distributed_probe_all_variants(spark):

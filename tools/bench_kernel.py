@@ -35,7 +35,7 @@ def cpu_control(tag):
         best = max(best, 25_000_000 / (time.time() - t0) / 1e6)
     print(f"cpu_control_{tag:46s} {best:6.2f} Mops")
     return best
-# Kernel feed size in the distributed path: _build_partial coalesces
+# Kernel feed size in the distributed path: _feed_keys coalesces
 # Spark's 65536-row Arrow batches to _COALESCE_ROWS before each kernel
 # pass (operators/topk.py), so the single-core bench feeds the same way.
 B = 1048576

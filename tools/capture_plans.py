@@ -1,26 +1,44 @@
-"""Capture physical plans of headline queries into PLANS_APPENDIX.md.
+"""Capture the physical plans of entry queries.
 
-PLANS.md is the curated narrative; this appendix is the raw,
-regenerable evidence — run after plan-affecting changes:
+    python tools/capture_plans.py SF_DIR
+        Regenerates PLANS_APPENDIX.md: for each headline query in
+        ``CAPTURE``, the Spark ``executedPlan`` (AQE initial plan) plus
+        automated checks — pruned ReadSchema, PushedFilters,
+        PartitionFilters, and where Python runs (MapInArrow /
+        FlatMapGroupsInPandas only — never a row-wise UDF).
 
-    python tools/capture_plans.py [sf_dir]
+    python tools/capture_plans.py SF_DIR --tag TAG [--out DIR] QUERY ...
+        Writes ``.explain("formatted")`` of each query to
+        ``DIR/<query>_<TAG>.txt`` (DIR defaults to plans/r08) — the
+        before/after evidence of a plan-affecting change.
 
-Each section is the Spark `executedPlan` (AQE initial plan) for one
-entry query, plus automated checks: pruned ReadSchema, PushedFilters,
-PartitionFilters, and where Python runs (MapInArrow /
-FlatMapGroupsInPandas only — never a row-wise UDF).
+The sketch top-k queries materialize internally (their returned
+DataFrame is a local result), so for those the capture is the
+distributed part that actually runs: the keyed projection -> mapInArrow
+partial stage, built with the library's own partial-stage functions
+(``topk_partials``, ``token_partials``) and the entry's parameters.
+Every other query is captured as the DataFrame the entry returns.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entrymod
-from heavykeeper_rs_spark.session import get_spark
+import __spark_entry__ as entrymod  # noqa: E402
+from heavykeeper_rs_spark.kernel import HKParams  # noqa: E402
+from heavykeeper_rs_spark.operators.topk import (  # noqa: E402
+    parallelize_scan,
+    token_partials,
+    topk_partials,
+)
+from heavykeeper_rs_spark.session import get_spark  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 CAPTURE = [
     ("hk_estimate_event_types", "sketch build + broadcast probe (the build itself runs eagerly; the grouped query below shows the build plan shape)"),
@@ -34,18 +52,64 @@ CAPTURE = [
 ]
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app="capture-plans", master="local[8]", shuffle_partitions=8)
-    qs = entrymod.queries()
+def _params(width: int, depth: int) -> HKParams:
+    # k is the partial PQ size topk() tracks for these queries; it does
+    # not appear in the plan
+    return HKParams(k=256, width=width, depth=depth, decay=0.9, seed=12345)
+
+
+def _weighted_parts(spark, sf_dir):
+    # the entry's pre-aggregated feed (taken above 32 MB of lineitem)
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
+        F.col("l_partkey").cast("long").alias("pk")
+    ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
+    return topk_partials(li, "pk", _params(262144, 5), weight_col="q")
+
+
+#: partial stages of the internally-materializing sketch queries
+SKETCH_STAGES = {
+    "hk_topk_event_type": lambda spark, sf: topk_partials(
+        spark.read.parquet(f"{sf}/events.parquet"), "event_type", _params(1024, 4)
+    ),
+    "hk_topk_user": lambda spark, sf: topk_partials(
+        spark.read.parquet(f"{sf}/events.parquet"), "user_id", _params(65536, 4)
+    ),
+    "hk_weighted_topk_part": _weighted_parts,
+    "hk_topk_tokens": lambda spark, sf: token_partials(
+        parallelize_scan(spark.read.parquet(f"{sf}/documents.parquet").select("text")),
+        "text",
+        _params(65536, 4),
+    ),
+    "hk_topk_tokens_inkernel": lambda spark, sf: token_partials(
+        spark.read.parquet(f"{sf}/documents.parquet"), "text", _params(65536, 4)
+    ),
+}
+
+
+def plan_df(name: str, spark, sf_dir: str):
+    if name in SKETCH_STAGES:
+        partials, _ = SKETCH_STAGES[name](spark, sf_dir)
+        return partials
+    return entrymod.queries()[name](spark, sf_dir)
+
+
+def _formatted(df) -> str:
+    qe = df._jdf.queryExecution()
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return qe.explainString(mode)
+
+
+def write_appendix(spark, sf_dir: str) -> None:
     out = [
         "# PLANS_APPENDIX — captured physical plans\n",
         f"Regenerated by `python tools/capture_plans.py {sf_dir}`.",
         "See PLANS.md for the narrative review.\n",
     ]
     for name, note in CAPTURE:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        qe = plan_df(name, spark, sf_dir)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
         checks = []
         m = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
         if m:
@@ -68,9 +132,31 @@ def main() -> None:
         if len(lines) > 120:
             out.append(f"... ({len(lines) - 120} more lines)")
         out.append("```")
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS_APPENDIX.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS_APPENDIX.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote PLANS_APPENDIX.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*", help="with --tag: the queries to capture")
+    ap.add_argument("--tag", help="write formatted plans to OUT/<query>_<tag>.txt")
+    ap.add_argument("--out", default=os.path.join(ROOT, "plans", "r08"))
+    args = ap.parse_intermixed_args()
+    if bool(args.tag) != bool(args.queries):
+        ap.error("--tag and QUERY go together")
+    spark = get_spark(app="capture-plans", master="local[8]", shuffle_partitions=8)
+    if not args.tag:
+        write_appendix(spark, args.sf_dir)
+    else:
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.queries:
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f:
+                f.write(_formatted(plan_df(name, spark, args.sf_dir)))
+            print("wrote", path)
+    spark.stop()
 
 
 if __name__ == "__main__":
