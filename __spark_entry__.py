@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from heavykeeper_rs_spark.functions import text as T
+from heavykeeper_rs_spark.operators.scan import ScanProfile, fan_out
 from heavykeeper_rs_spark.operators.topk import estimate, topk, topk_sketch
 
 _TABLES = (
@@ -30,22 +31,6 @@ _TABLES = (
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table (file or directory of parts) for
-    cost-based plan choices; 'unknown' reads as large — at real scale
-    the large-input plan is the right default."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 1 << 60
 
 
 def _local_df(spark: SparkSession, data, schema) -> DataFrame:
@@ -90,9 +75,9 @@ def _hk_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     path tokenizes off the Arrow string buffers map-side, so only
     sketch blobs ever shuffle (guide §4.1: pass the function the
     columns it needs — here, the raw text)."""
-    from heavykeeper_rs_spark.operators.topk import parallelize_scan, topk_tokens
+    from heavykeeper_rs_spark.operators.topk import topk_tokens
 
-    docs = parallelize_scan(_t(spark, sf_dir, "documents").select("text"))
+    docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
     return topk_tokens(
         docs, "text", k=20, width=65536, depth=4, tie_break_key=True
     )
@@ -125,7 +110,10 @@ def _hk_weighted_topk_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.61 s direct vs 0.74 s pre-agg; sf1 measured 4.5 s direct vs
     # 1.3 s pre-agg), so small inputs keep the direct map-side feed —
     # the same estimates-in, plan-out shape AQE itself uses.
-    if _table_bytes(sf_dir, "lineitem") < 32 * (1 << 20):
+    # 'unknown' size reads as large: at real scale the large-input
+    # plan is the right default
+    size = ScanProfile(_t(spark, sf_dir, "lineitem")).bytes
+    if size is not None and size < 32 * (1 << 20):
         li = _t(spark, sf_dir, "lineitem").select(
             F.col("l_partkey").cast("long").alias("pk"),
             F.col("l_quantity").cast("long").alias("q"),
@@ -311,11 +299,10 @@ def _salted_exact_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe exact top-20 tokens: two-phase (key, salt) -> key
     aggregation so a Zipf head token never pins one reducer."""
     from heavykeeper_rs_spark.operators.skew import salted_topn
-    from heavykeeper_rs_spark.operators.topk import parallelize_scan
 
     # r8: fan out the single-row-group scan (same reason as
     # exact_topk_tokens — exact counts are order-independent)
-    docs = parallelize_scan(_t(spark, sf_dir, "documents").select("text"))
+    docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
     toks = docs.select(F.explode(T.tokens("text")).alias("token"))
     return salted_topn(toks, "token", n=20)
 
@@ -324,10 +311,8 @@ def _exact_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-truth twin of the flagship (groupBy.count.orderBy.limit —
     Spark's TakeOrderedAndProject path). r8: single-row-group scans are
     fanned out first — the JVM regex tokenizer otherwise runs on one
-    core (see ``effective_scan_tasks``)."""
-    from heavykeeper_rs_spark.operators.topk import parallelize_scan
-
-    docs = parallelize_scan(_t(spark, sf_dir, "documents").select("text"))
+    core (see ``scan.fan_out``)."""
+    docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
     return (
         docs.select(F.explode(T.tokens("text")).alias("token"))
         .groupBy("token")
@@ -403,13 +388,9 @@ def _token_stats_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _exact_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one representative doc per normalized-text hash.
-    r8: scan fanned out — the normalize-regex + xxhash64 projection ran
-    on one core for single-row-group inputs."""
-    from heavykeeper_rs_spark.operators.topk import parallelize_scan
-
-    docs = parallelize_scan(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    The scan is not fanned out: the normalize + xxhash64 projection
+    runs only in the JVM and is cheaper than a row exchange."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     keyed = docs.select(
         T.doc_fingerprint("text").alias("fp"), F.col("doc_id")
     )
@@ -880,11 +861,11 @@ def _vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-prep vocabulary build: top-10 vocab from the in-kernel
     token sketch + exact coverage (1 - OOV rate). Exact regime ->
     SQL-expressible coverage."""
-    from heavykeeper_rs_spark.operators.topk import build_vocab, parallelize_scan
+    from heavykeeper_rs_spark.operators.topk import build_vocab
 
     # r8: scan fan-out feeds both the in-kernel vocab sketch and the
     # JVM total-occurrence count (both order-independent)
-    docs = parallelize_scan(_t(spark, sf_dir, "documents").select("text"))
+    docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
     vocab, cov = build_vocab(docs, "text", 10, width=1 << 17)
     n = vocab.count()
     return _local_df(

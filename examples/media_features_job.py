@@ -49,14 +49,14 @@ def main() -> None:
         id_col, blob_col = sys.argv[4], sys.argv[5]
     else:
         types = dict(df.dtypes)
-        bins = [c for c in df.columns if types[c] == "binary"]
-        if not bins:
+        blob_col = next((c for c in df.columns if types[c] == "binary"), None)
+        id_col = next((c for c in df.columns if c != blob_col), None)
+        if blob_col is None or id_col is None:
             raise SystemExit(
-                f"no binary column in {in_path} (columns: {df.dtypes}); "
+                f"need a binary blob column and an id column in {in_path} "
+                f"(columns: {df.dtypes}); "
                 "pass id and blob column names as argv[4] argv[5]"
             )
-        blob_col = bins[0]
-        id_col = next(c for c in df.columns if c != blob_col)
     feats = resize_features(df, id_col, blob_col, grid, grid,
                             decoder=image_decoder)
     feats.write.mode("overwrite").parquet(out_path)

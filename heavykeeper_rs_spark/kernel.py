@@ -43,7 +43,6 @@ from __future__ import annotations
 import heapq
 import io
 import math
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -58,8 +57,8 @@ _U64 = np.uint64
 # slots (8 B each; the default caps the transient at a few MB per task
 # so 32 concurrent workers' tables stay L3-resident together —
 # per-worker wins above that are paid back in shared memory-bandwidth
-# contention). HK_DENSE_CAP=0 disables the dense lane entirely.
-_DENSE_DOMAIN_CAP = int(os.environ.get("HK_DENSE_CAP", 1 << 22))
+# contention).
+_DENSE_DOMAIN_CAP = 1 << 22
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
@@ -1406,30 +1405,19 @@ class HeavyKeeper:
             raise ValueError("not a HeavyKeeper v1/v2 blob")
         params = HKParams(k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed))
         sk = cls(params)
-        cells = depth * width
-        off = hs
-        if ver == 1:
+        if ver == 2:  # sparse
+            _, idx, fps_nz, cnt_nz, cand = _parse_blob_sparse(blob)
+            sk.fps.reshape(-1)[idx] = fps_nz
+            sk.counts.reshape(-1)[idx] = cnt_nz
+        else:
+            cells = depth * width
+            off = hs
             sk.fps = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
             off += 8 * cells
             sk.counts = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
             off += 8 * cells
-        else:  # sparse
-            (nnz,) = struct.unpack_from("<q", blob, off)
-            off += 8
-            if nnz < 0 or off + 24 * nnz > len(blob):
-                raise ValueError("bad sparse cell count")
-            idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
-            off += 8 * nnz
-            if nnz and (idx.min() < 0 or idx.max() >= cells):
-                raise ValueError("sparse cell index out of range")
-            fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-            off += 8 * nnz
-            cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-            off += 8 * nnz
-            sk.fps.reshape(-1)[idx] = fps_nz
-            sk.counts.reshape(-1)[idx] = cnt_nz
-        _sniff_legacy_pickle(blob[off : off + 2])
-        cand = serde_loads(blob[off:])
+            _sniff_legacy_pickle(blob[off : off + 2])
+            cand = serde_loads(blob[off:])
         for item, c, seq in sorted(cand, key=lambda t: t[2]):
             sk.pq.upsert(item, c)
         return sk
@@ -1566,8 +1554,11 @@ def _key_array(keys: list) -> np.ndarray:
 
 def _parse_blob_sparse(blob: bytes):
     """(params, idx, fps, cnt, cand) views of a sparse (v2) blob, or
-    None for dense/v1 blobs. Same validation as ``deserialize`` but no
-    dense scatter — the merge fast path reads the triplets in place."""
+    None for dense/v1 blobs — the one v2 parser: ``deserialize``
+    scatters its triplets, the merge fast path reads them in place.
+    Cell ids must be strictly ascending (as ``serialize`` writes them):
+    ``_sparse_cell_max`` looks them up with ``searchsorted``, so a
+    duplicated or out-of-order id raises instead of merging wrongly."""
     hs = struct.calcsize("<4sBqqqdq")
     magic, ver, k, width, depth, decay, seed = struct.unpack("<4sBqqqdq", blob[:hs])
     if magic != _MAGIC or ver != 2:
@@ -1583,7 +1574,9 @@ def _parse_blob_sparse(blob: bytes):
         raise ValueError("bad sparse cell count")
     idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
     off += 8 * nnz
-    if nnz and (idx.min() < 0 or idx.max() >= cells):
+    if nnz > 1 and not (idx[1:] > idx[:-1]).all():
+        raise ValueError("sparse cell ids not strictly ascending")
+    if nnz and (idx[0] < 0 or idx[-1] >= cells):
         raise ValueError("sparse cell index out of range")
     fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
     off += 8 * nnz

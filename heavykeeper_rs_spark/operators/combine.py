@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 from ..kernel import _MAGIC as _HK_MAGIC
 from ..kernel import merge_blobs
 from ..variants import deserialize_any
+from .scan import estimate_partitions
 
 BLOB_SCHEMA = StructType(
     [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
@@ -48,37 +49,6 @@ BLOB_SCHEMA = StructType(
 GROUP_BLOB_SCHEMA = StructType(
     [StructField("group", StringType(), False), *BLOB_SCHEMA.fields]
 )
-
-
-def estimate_partitions(df: DataFrame, bias: str = "high") -> int:
-    """Cheap physical-partition ESTIMATE — no plan-to-RDD compile.
-
-    ``df.rdd.getNumPartitions()`` costs ~140 ms of driver time per
-    query (Python-RDD wrapper + plan compile; round-3 judged it a
-    fixed overhead worth removing). The consumers here tolerate
-    estimation error, so a file-listing heuristic suffices:
-
-    - ``bias="high"`` (merge-tree sizing): max(#input files,
-      defaultParallelism). Overestimate ⇒ a few empty salt groups /
-      at most one extra near-empty tree level; underestimate ⇒ pids
-      wrap modulo the estimate and fan in earlier. Both correct.
-    - ``bias="low"`` (per-partition reservoir sizing): min(#input
-      files, defaultParallelism). The safe error direction here is a
-      SMALL count (it enlarges the per-partition reservoir): Spark
-      bin-packs small files, so a raw file count can be far ABOVE the
-      actual split count — sizing the reservoir by it would starve the
-      sample (200 packed files ⇒ m≈10 over ~8 real splits). min(...)
-      caps that: a single file reports 1 (full reservoir per split),
-      and many files report defaultParallelism at most.
-    """
-    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if bias == "low":
-        return max(min(n_files, par), 1) if n_files else par
-    return max(n_files, par)
 
 
 def partition_id() -> int:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..functions.text import doc_fingerprint
+from .scan import fan_out
 
 # Mersenne prime 2^31-1: (a*h+b) with a,b,h < p fits in int64, so the
 # permutation-hash matrix stays in native vectorized integer math.
@@ -147,8 +148,9 @@ def rolling_fingerprints(
                 names=["id", "rfp"],
             )
 
-    keyed = _ensure_parallelism(
-        df.select(F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__t"))
+    keyed = fan_out(
+        df.select(F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__t")),
+        min_bytes=0,
     )
     return keyed.mapInArrow(kernel, out_schema)
 
@@ -343,14 +345,8 @@ def minhash_signatures(
     keyed = df.select(
         F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__t")
     )
-    keyed = _ensure_parallelism(keyed)
+    keyed = fan_out(keyed, min_bytes=0)
     return keyed.mapInArrow(kernel, out_schema)
-
-
-def _ensure_parallelism(keyed: DataFrame) -> DataFrame:
-    from .topk import ensure_parallelism
-
-    return ensure_parallelism(keyed)
 
 
 def _bucket_pairs(
@@ -626,7 +622,7 @@ def simhash_signatures(
     keyed = df.select(
         F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__t")
     )
-    keyed = _ensure_parallelism(keyed)
+    keyed = fan_out(keyed, min_bytes=0)
     return keyed.mapInArrow(kernel, out_schema)
 
 

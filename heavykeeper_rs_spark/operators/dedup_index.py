@@ -67,7 +67,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .dedup import _ensure_parallelism, _minhash_params, _sig_and_bands
+from .dedup import _minhash_params, _sig_and_bands
+from .scan import fan_out
 
 _INDEX_SCHEMA = StructType(
     [
@@ -132,7 +133,7 @@ def minhash_index_rows(
     keyed = df.select(
         F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__t")
     )
-    keyed = _ensure_parallelism(keyed)
+    keyed = fan_out(keyed, min_bytes=0)
     return keyed.mapInArrow(kernel, _INDEX_SCHEMA)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.text import _LANG_FAMS, MAX_TOKEN_LEN
 from ..kernel import arrow_string_buffers
+from .scan import fan_out
 
 
 def _pack_word(w: bytes) -> int:
@@ -107,10 +108,8 @@ def lang_id_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(lid, n) language histogram of ``df[text_col]`` — one vectorized
     pass per partition, per-batch partial counts (<= 5 rows each), one
     tiny shuffle for the final sum. Small single-row-group scans are
-    fanned out first (``parallelize_scan``) so the classifier uses the
+    fanned out first (``scan.fan_out``) so the classifier uses the
     whole machine."""
-    from .topk import parallelize_scan
-
     names = _LANGS + ["und"]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -139,7 +138,7 @@ def lang_id_counts(df: DataFrame, text_col: str) -> DataFrame:
                 }
             )
 
-    keyed = parallelize_scan(df.select(F.col(text_col).cast("string").alias("__t")))
+    keyed = fan_out(df.select(F.col(text_col).cast("string").alias("__t")))
     partial = keyed.mapInArrow(kernel, _OUT_SCHEMA)
     return (
         partial.groupBy("lid")

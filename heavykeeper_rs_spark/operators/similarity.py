@@ -104,10 +104,11 @@ def signature_df(
                 names=["id", "sig"],
             )
 
-    from .topk import ensure_parallelism
+    from .scan import fan_out
 
-    keyed = ensure_parallelism(
-        df.select(F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__v"))
+    keyed = fan_out(
+        df.select(F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__v")),
+        min_bytes=0,
     )
     return keyed.mapInArrow(kernel, out_schema)
 
@@ -485,7 +486,7 @@ def _reservoir_sample(df: DataFrame, vec_col: str, n: int, seed: int) -> np.ndar
     # a mapInArrow stage trips Spark's ArrowColumnVector getFloat
     # limitation (UNSUPPORTED_CALL) in the final projection
     keyed = df.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    from .combine import estimate_partitions
+    from .scan import estimate_partitions
 
     n_parts = estimate_partitions(keyed, bias="low")
     m = max(-(-n // n_parts), 8)  # per-partition reservoir size

@@ -26,7 +26,6 @@ Scale notes (100 TB / 1000-executor thinking):
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Iterator
 
@@ -45,13 +44,8 @@ from pyspark.sql.types import (
 from ..kernel import HeavyKeeper, HKParams
 from ..variants import BucketedTopK, CuckooTopK
 from . import combine
-from .combine import (
-    estimate_partitions,
-    partition_id,
-    partition_rng,
-    sketch_partials,
-    tree_fold,
-)
+from .combine import partition_id, partition_rng, sketch_partials, tree_fold
+from .scan import estimate_partitions
 
 #: sketch-variant registry (README.md:48-51: all three expose one API)
 VARIANTS = {
@@ -102,115 +96,6 @@ def local_result_df(spark: SparkSession, data: list, schema) -> DataFrame:
         st = _parse_datatype_string(st)
     pdf = pd.DataFrame(data, columns=[f.name for f in st.fields])
     return spark.createDataFrame(pdf, schema=st)
-
-
-def ensure_parallelism(keyed: DataFrame) -> DataFrame:
-    """Round-robin a small (single-split) input to defaultParallelism.
-
-    Use ONLY in front of kernels whose per-row Python compute clearly
-    outweighs a row shuffle (measured: minhash/simhash shingling,
-    signature matmuls — 1.5s+/partition). The plain sketch builders are
-    ~10x cheaper than the exchange they'd pay, so they deliberately do
-    NOT use this; at corpus scale the scan yields >> defaultParallelism
-    splits and parallelism comes for free either way.
-
-    The repartition DECISION needs the exact partition count (an
-    estimate could insert a needless exchange on an already-parallel
-    input), so this is the one remaining site that compiles the plan
-    to an RDD — via the JVM-side handle, skipping the Python-RDD
-    wrapper ``df.rdd`` builds (~140 ms vs ~80 ms per call on this
-    box; a fixed driver cost, not a scale term)."""
-    par = keyed.sparkSession.sparkContext.defaultParallelism
-    try:
-        n = int(keyed._jdf.rdd().getNumPartitions())
-    except Exception:
-        n = keyed.rdd.getNumPartitions()
-    if n < par:
-        return keyed.repartition(par)
-    return keyed
-
-
-def effective_scan_tasks(df: DataFrame) -> int:
-    """Estimate how many scan tasks will carry ROWS — not how many
-    splits exist. Parquet assigns a row group to the split holding its
-    midpoint, so a 100 MB single-row-group file yields 32 splits but
-    ONE non-empty task: every `n < defaultParallelism` check based on
-    RDD partition counts is blind to it (the round-8 finding — at sf1
-    every single-row-group table ran its whole scan+kernel on one core
-    of 32). Driver cost is bounded: footers are only read when the
-    input is FEWER files than cores (each footer read is ~ms on any
-    FS); many-file inputs return the file count unread, and non-parquet
-    or unreachable files fall back to the optimistic split count so no
-    needless exchange is inserted at scale."""
-    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return par
-    if not files or len(files) >= par:
-        return max(len(files), par)
-    total_rg = 0
-    for f in files:
-        path = f[7:] if f.startswith("file://") else f
-        if not path.endswith(".parquet") or not os.path.exists(path):
-            return par  # unknown layout: assume the scan splits fine
-        try:
-            import pyarrow.parquet as _pq
-
-            total_rg += _pq.ParquetFile(path).num_row_groups
-        except Exception:
-            return par
-    return max(total_rg, 1)
-
-
-#: parallelize_scan fan-out floor: inputs smaller than this many
-#: compressed bytes are NOT worth an exchange — a single task chews
-#: through them faster than a repartition stage round-trips (measured
-#: at sf0.1: fanning out a 0.6 MB documents scan cost +0.1-0.3 s per
-#: query). Size-based, so the SAME code takes the single-task plan on
-#: toy inputs and the fan-out on anything where one core would be the
-#: bottleneck; override via HK_SCAN_FANOUT_MIN_MB.
-_FANOUT_MIN_BYTES = int(
-    float(os.environ.get("HK_SCAN_FANOUT_MIN_MB", "4")) * (1 << 20)
-)
-
-
-def _input_bytes(files: list[str]) -> int | None:
-    """Total size of local input files; None when any is unsizeable
-    (remote FS — callers then assume 'large')."""
-    total = 0
-    for f in files:
-        path = f[7:] if f.startswith("file://") else f
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
-
-
-def parallelize_scan(df: DataFrame) -> DataFrame:
-    """Round-robin-repartition a scan whose EFFECTIVE task count (row
-    groups, not splits — see ``effective_scan_tasks``) is below
-    defaultParallelism. Use in front of compute that clearly outweighs
-    one row exchange of the projected columns (regex tokenization,
-    Python kernels); at corpus scale the scan has >= cores row groups
-    and this is a no-op, so the exchange only ever exists where the
-    alternative was leaving most of the machine idle. Inputs below
-    ``_FANOUT_MIN_BYTES`` stay single-task — on toy inputs the
-    exchange costs more than it saves (both directions measured)."""
-    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        size = _input_bytes(files)
-        if size is not None and size < _FANOUT_MIN_BYTES:
-            return df
-    n = effective_scan_tasks(df)
-    if n < par:
-        return df.repartition(par)
-    return df
 
 
 def _dict_encodable(t: pa.DataType) -> bool:

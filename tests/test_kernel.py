@@ -357,19 +357,6 @@ def test_dense_preagg_matches_factorize():
     with the khash-factorize lane: identical exact counts on an
     uncontended fixture (where order effects cannot matter), identical
     (unique, weight) multisets on weighted and cancelling inputs."""
-    import heavykeeper_rs_spark.kernel as _K
-    import heavykeeper_rs_spark.variants as _V
-
-    # pin the cap so the test is independent of HK_DENSE_CAP in the env
-    old_caps = _K._DENSE_DOMAIN_CAP, _V._DENSE_DOMAIN_CAP
-    _K._DENSE_DOMAIN_CAP = _V._DENSE_DOMAIN_CAP = 1 << 22
-    try:
-        _dense_preagg_body()
-    finally:
-        _K._DENSE_DOMAIN_CAP, _V._DENSE_DOMAIN_CAP = old_caps
-
-
-def _dense_preagg_body():
     from heavykeeper_rs_spark.kernel import _DENSE_DOMAIN_CAP
 
     rng = np.random.default_rng(42)
@@ -544,3 +531,49 @@ class TestSparseMergeFastPath:
         a.add_batch(np.asarray([1, 2, 3], dtype=np.int64))
         empty = HeavyKeeper(HKParams(k=4, width=1024, depth=2)).serialize()
         self._check([a.serialize(), empty])
+
+    @staticmethod
+    def _reorder_cells(blob: bytes, case: str) -> bytes:
+        """``blob`` (sparse v2) with its cell triplets rewritten so the
+        first cell id appears twice (``duplicated``, last cell dropped)
+        or all ids run backwards (``reversed``)."""
+        import struct
+
+        off = struct.calcsize("<4sBqqqdq")
+        (nnz,) = struct.unpack_from("<q", blob, off)
+        off += 8
+        if case == "duplicated":
+            order = np.r_[0, np.arange(nnz - 1)]
+        else:
+            order = np.arange(nnz)[::-1]
+        parts = [
+            np.frombuffer(blob[off + 8 * nnz * j : off + 8 * nnz * (j + 1)], dtype=np.int64)[order]
+            for j in range(3)
+        ]
+        return blob[:off] + b"".join(p.tobytes() for p in parts) + blob[off + 24 * nnz :]
+
+    def _sparse_pair(self):
+        from heavykeeper_rs_spark.kernel import _parse_blob_sparse
+
+        p = HKParams(k=16, width=8192, depth=2)
+        a, b = HeavyKeeper(p), HeavyKeeper(p)
+        a.add_batch(np.arange(0, 200, dtype=np.int64))
+        b.add_batch(np.arange(100, 300, dtype=np.int64))
+        blobs = [a.serialize(), b.serialize()]
+        assert all(_parse_blob_sparse(x) is not None for x in blobs)
+        return blobs
+
+    @pytest.mark.parametrize("case", ["duplicated", "reversed"])
+    def test_unordered_cell_ids_raise(self, case):
+        """Cell ids must be strictly ascending: ``_sparse_cell_max``
+        binary-searches them, so a blob with a duplicated or reversed
+        id list would merge to a different sketch than deserialize +
+        merge. Both decoders must refuse it."""
+        from heavykeeper_rs_spark.kernel import merge_blobs
+
+        first, second = self._sparse_pair()
+        bad = self._reorder_cells(second, case)
+        with pytest.raises(ValueError, match="ascending"):
+            HeavyKeeper.deserialize(bad)
+        with pytest.raises(ValueError, match="ascending"):
+            merge_blobs([first, bad])

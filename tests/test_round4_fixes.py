@@ -262,7 +262,7 @@ class TestNewApiEdges:
         assert bool(sk.contains(np.asarray(["x", "y"], dtype=object)).all())
 
     def test_estimate_partitions_no_file_plan(self, spark):
-        from heavykeeper_rs_spark.operators.topk import estimate_partitions
+        from heavykeeper_rs_spark.operators.scan import estimate_partitions
 
         df = spark.createDataFrame([(1,)], "x int")
         par = spark.sparkContext.defaultParallelism
@@ -270,7 +270,7 @@ class TestNewApiEdges:
         assert estimate_partitions(df, bias="low") == par
 
     def test_estimate_partitions_file_scan(self, spark):
-        from heavykeeper_rs_spark.operators.topk import estimate_partitions
+        from heavykeeper_rs_spark.operators.scan import estimate_partitions
 
         df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         par = spark.sparkContext.defaultParallelism

@@ -32,11 +32,8 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from heavykeeper_rs_spark.kernel import HKParams  # noqa: E402
-from heavykeeper_rs_spark.operators.topk import (  # noqa: E402
-    parallelize_scan,
-    token_partials,
-    topk_partials,
-)
+from heavykeeper_rs_spark.operators.scan import fan_out  # noqa: E402
+from heavykeeper_rs_spark.operators.topk import token_partials, topk_partials  # noqa: E402
 from heavykeeper_rs_spark.session import get_spark  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -76,7 +73,7 @@ SKETCH_STAGES = {
     ),
     "hk_weighted_topk_part": _weighted_parts,
     "hk_topk_tokens": lambda spark, sf: token_partials(
-        parallelize_scan(spark.read.parquet(f"{sf}/documents.parquet").select("text")),
+        fan_out(spark.read.parquet(f"{sf}/documents.parquet").select("text")),
         "text",
         _params(65536, 4),
     ),
