@@ -6,7 +6,10 @@ group)), a salted bounded-fan-in tree merges the blobs in the cluster,
 and the driver folds the few survivors:
 
   partial:  ``(salt=partition id, sketch)`` rows out of ``mapInArrow``
-            (``sketch_partials`` for the ungrouped operators)
+            (``sketch_partials`` for the ungrouped operators, which
+            read plain parquet projections with pyarrow in the worker
+            when ``scan.direct_scan`` admits them, else through
+            Spark's scan)
   combine:  ``blob_tree`` — salted multi-level
             ``groupBy(salt).applyInPandas`` merge levels; no reducer
             ever folds more than ``fan_in`` blobs
@@ -41,7 +44,7 @@ from pyspark.sql.types import (
 from ..kernel import _MAGIC as _HK_MAGIC
 from ..kernel import merge_blobs
 from ..variants import deserialize_any
-from .scan import estimate_partitions
+from .scan import direct_scan, estimate_partitions
 
 BLOB_SCHEMA = StructType(
     [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
@@ -140,14 +143,25 @@ def blob_tree(
 
 def sketch_partials(keyed: DataFrame, make, feed) -> tuple[DataFrame, int]:
     """The partial stage of every ungrouped sketch operator, in
-    ``mapInArrow``: ``make(pid)`` builds one sketch per input
-    partition, ``feed(sketch, batches)`` consumes the partition's
-    non-empty Arrow batches, and a partition that saw any rows emits
-    one ``(salt = pid % n_parts, blob)`` row. Returns ``(partials,
-    n_parts)`` for ``blob_tree``."""
-    n_parts = max(estimate_partitions(keyed), 1)
+    ``mapInArrow``: ``make(pid)`` builds one sketch per task,
+    ``feed(sketch, batches)`` consumes the task's non-empty Arrow
+    batches, and a task that saw any rows emits one ``(salt = pid %
+    n_parts, blob)`` row. Returns ``(partials, n_parts)`` for
+    ``blob_tree``.
+
+    When ``scan.direct_scan`` admits ``keyed``, each task reads its
+    parquet units itself and ``n_parts`` is the exact task count;
+    otherwise Spark's scan feeds the stage and ``n_parts`` is
+    estimated from the file listing."""
+    direct = direct_scan(keyed)
+    if direct is None:
+        source, n_parts = keyed, max(estimate_partitions(keyed), 1)
+    else:
+        source, n_parts = direct.frame(keyed.sparkSession), len(direct.tasks)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if direct is not None:
+            batches = direct.read(batches)
         batches = (b for b in batches if b.num_rows)
         first = next(batches, None)
         if first is None:
@@ -162,7 +176,7 @@ def sketch_partials(keyed: DataFrame, make, feed) -> tuple[DataFrame, int]:
             }
         )
 
-    return keyed.mapInArrow(fn, BLOB_SCHEMA), n_parts
+    return source.mapInArrow(fn, BLOB_SCHEMA), n_parts
 
 
 def tree_fold(partials: DataFrame, n_parts: int, fan_in: int, empty):

@@ -16,9 +16,14 @@ aggregate, exactly the shape of Catalyst's HashAggregateExec pair:
 Scale notes (100 TB / 1000-executor thinking):
 - The shuffles move only sketch blobs (~KiB–MiB each), never row
   data. Input rows are consumed map-side.
-- Column pruning: we select ONLY the key column before mapInArrow, so
-  the parquet scan reads a single column (verify via .explain →
-  ReadSchema; PLANS.md captures the plans).
+- Column pruning: the partial stage reads ONLY the keyed projection
+  (``topk_keyed`` / ``token_keyed``). A plain parquet projection is
+  read by the direct reader (``scan.direct_scan``: pyarrow in the
+  worker, no JVM row→Arrow transfer; its plan is ``MapInArrow`` over a
+  ``Range`` of read tasks, with no FileScan); any other plan keeps
+  Spark's scan, whose ``ReadSchema`` in ``.explain`` names the one
+  pruned column. ``tools/capture_plans.py`` states which reader each
+  stage takes; PLANS.md captures the plans.
 - Tree depth = ceil(log_fan_in(partitions)) is derived from the known
   partition count, so small jobs keep a single shuffle while 10^5
   partitions get ~5 levels of 8-way merges.
@@ -244,18 +249,23 @@ def topk_partials(
     weight_col: str | None = None,
     variant: str = "topk",
 ) -> tuple[DataFrame, int]:
-    """The partial stage of ``topk_sketch``: the key projection (column
-    pruning — the scan reads only these columns) into one sketch per
-    input partition. Returns ``(partials, n_parts)``."""
-    cols = [_key_column(df, col).alias("__key")]
-    weighted = weight_col is not None
-    if weighted:
-        cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
+    """The partial stage of ``topk_sketch``: ``topk_keyed`` into one
+    sketch per task. Returns ``(partials, n_parts)``."""
     return sketch_partials(
-        df.select(*cols),
+        topk_keyed(df, col, weight_col),
         lambda pid: _make_sketch(variant, params, partition_rng(params.seed, pid)),
-        _feed_keys(weighted, params.seed),
+        _feed_keys(weight_col is not None, params.seed),
     )
+
+
+def topk_keyed(df: DataFrame, col: str, weight_col: str | None = None) -> DataFrame:
+    """The keyed projection ``topk_partials`` reads: ``__key`` by the
+    key rule, and the ``__w`` weight as bigint. Only these columns are
+    read, by Spark's scan (column pruning) or by the direct reader."""
+    cols = [_key_column(df, col).alias("__key")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
+    return df.select(*cols)
 
 
 def topk_sketch(
@@ -488,8 +498,8 @@ def token_partials(
     token_re: str = "[a-z]+",
     max_token_len: int = 64,
 ) -> tuple[DataFrame, int]:
-    """The partial stage of ``topk_tokens``: the text column straight
-    into one in-kernel-tokenizing sketch per input partition. Returns
+    """The partial stage of ``topk_tokens``: ``token_keyed`` straight
+    into one in-kernel-tokenizing sketch per task. Returns
     ``(partials, n_parts)``."""
     rex = re.compile(token_re)
 
@@ -498,10 +508,15 @@ def token_partials(
             _feed_text(sk, batch.column(0), rex, max_token_len, params.seed)
 
     return sketch_partials(
-        df.select(F.col(text_col).cast(StringType()).alias("__text")),
+        token_keyed(df, text_col),
         lambda pid: HeavyKeeper(params, rng=partition_rng(params.seed, pid)),
         feed,
     )
+
+
+def token_keyed(df: DataFrame, text_col: str) -> DataFrame:
+    """The projection ``token_partials`` reads: the text as ``__text``."""
+    return df.select(F.col(text_col).cast(StringType()).alias("__text"))
 
 
 def topk_tokens(

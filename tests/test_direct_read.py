@@ -1,0 +1,200 @@
+"""The direct parquet reader of the sketch partial stages
+(``scan.direct_scan``): over a multi-file fixture with null keys, empty
+files, a file without the key column and a file whose key column name
+differs only in case, every operator built on ``combine.sketch_partials``
+must give DuckDB's exact answer, as Spark's own reader does."""
+
+import contextlib
+import os
+
+import duckdb
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from heavykeeper_rs_spark.kernel import HKParams
+from heavykeeper_rs_spark.operators import scan
+from heavykeeper_rs_spark.operators.agg import cms_build, hll_build
+from heavykeeper_rs_spark.operators.topk import topk, topk_keyed, topk_partials, topk_tokens
+from heavykeeper_rs_spark.sketches.hll import HLL
+
+SCHEMA = "k bigint, w bigint, s string, t string"
+WORDS = ["alpha", "beta", "gamma", "delta", "Epsilon", "zeta"]
+
+
+def _part(rng, n, key="k", with_key=True):
+    k = rng.integers(0, 40, n).astype(np.int64)
+    cols = {}
+    if with_key:
+        cols[key] = pa.array(k, mask=rng.random(n) < 0.1)  # null keys
+    cols["w"] = pa.array(rng.integers(1, 5, n).astype(np.int64))
+    cols["s"] = pa.array([f"v{v}" if v % 9 else None for v in k], pa.string())
+    cols["t"] = pa.array(
+        [" ".join(rng.choice(WORDS, 3)) + f" x{v % 4}" for v in k], pa.string()
+    )
+    return pa.table(cols)
+
+
+@pytest.fixture(scope="module")
+def fixture_dir(tmp_path_factory):
+    """Files a–d hold rows; e is a 0-row parquet file, f a 0-byte file,
+    c lacks the key column, d spells it ``K``; a has 3 row groups."""
+    root = tmp_path_factory.mktemp("direct")
+    rng = np.random.default_rng(5)
+    pq.write_table(_part(rng, 3000), root / "a.parquet", row_group_size=1000)
+    pq.write_table(_part(rng, 2000), root / "b.parquet")
+    pq.write_table(_part(rng, 500, with_key=False), root / "c.parquet")
+    pq.write_table(_part(rng, 700, key="K"), root / "d.parquet")
+    pq.write_table(_part(rng, 0), root / "e.parquet")
+    (root / "f.parquet").write_bytes(b"")
+    return str(root)
+
+
+@pytest.fixture(scope="module")
+def rows(fixture_dir):
+    """All rows as Spark reads them: a missing key is null, ``K`` is ``k``."""
+    tables = []
+    for name in sorted(os.listdir(fixture_dir)):
+        path = os.path.join(fixture_dir, name)
+        if os.path.getsize(path):
+            t = pq.read_table(path)
+            t = t.rename_columns(["k" if c == "K" else c for c in t.column_names])
+            if "k" not in t.column_names:
+                t = t.append_column("k", pa.nulls(t.num_rows, pa.int64()))
+            tables.append(t.select(["k", "w", "s", "t"]))
+    return pa.concat_tables(tables)
+
+
+def _exact(rows, sql):
+    con = duckdb.connect()
+    con.register("rows", rows)
+    return con.execute(sql).fetchall()
+
+
+@pytest.fixture(scope="module")
+def df(spark, fixture_dir):
+    df = spark.read.schema(SCHEMA).parquet(fixture_dir)
+    assert scan.direct_scan(df.select(df.k.alias("__key"))) is not None
+    return df
+
+
+def test_batches_are_what_spark_reads(spark, df):
+    """The direct reader's batches hold exactly the rows Spark's reader
+    returns for the keyed projection, under its names and Arrow types,
+    at most ``maxRecordsPerBatch`` rows each."""
+    keyed = topk_keyed(df, "k", "w")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        direct = scan.direct_scan(keyed)
+    finally:
+        spark.conf.set(key, before)
+    ids = pa.record_batch([pa.array(range(len(direct.tasks)), pa.int64())], names=["id"])
+    batches = list(direct.read(iter([ids])))
+    assert {b.schema for b in batches} == {pa.schema([("__key", pa.int64()), ("__w", pa.int64())])}
+    assert max(b.num_rows for b in batches) == direct.batch_rows == 300
+    got = pa.Table.from_batches(batches).to_pylist()
+    want = [r.asDict() for r in keyed.collect()]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
+def _topk_rows(out):
+    return [(r["item"], r["count"]) for r in out.collect()]
+
+
+def test_topk_equals_exact(df, rows):
+    exact = _exact(
+        rows,
+        "SELECT CAST(k AS VARCHAR), count(*) AS n FROM rows WHERE k IS NOT NULL "
+        "GROUP BY 1 ORDER BY n DESC, 1 LIMIT 10",
+    )
+    assert _topk_rows(topk(df, "k", k=10, width=4096, tie_break_key=True)) == exact
+
+
+def test_weighted_topk_equals_exact(df, rows):
+    exact = _exact(
+        rows,
+        "SELECT CAST(k AS VARCHAR), sum(w) AS n FROM rows WHERE k IS NOT NULL "
+        "GROUP BY 1 ORDER BY n DESC, 1 LIMIT 10",
+    )
+    got = _topk_rows(topk(df, "k", k=10, width=4096, weight_col="w", tie_break_key=True))
+    assert got == [(k, int(n)) for k, n in exact]
+
+
+def test_topk_tokens_equals_exact(df, rows):
+    exact = _exact(
+        rows,
+        "SELECT tok, count(*) AS n FROM (SELECT unnest(regexp_extract_all(lower(t), "
+        "'[a-z]+')) AS tok FROM rows) GROUP BY 1 ORDER BY n DESC, 1 LIMIT 8",
+    )
+    assert _topk_rows(topk_tokens(df, "t", k=8, width=4096, tie_break_key=True)) == exact
+
+
+def test_hll_equals_one_sketch_of_every_row(df, rows):
+    """HLL registers are a max over rows, so the merged partials equal
+    one sketch fed every non-null value."""
+    ref = HLL(12, 7)
+    ref.add_batch(rows["s"].drop_null().to_numpy(zero_copy_only=False))
+    got = hll_build(df, "s", p=12, seed=7)
+    assert got.serialize() == ref.serialize()
+    (distinct,) = _exact(rows, "SELECT count(DISTINCT s) FROM rows")[0]
+    assert abs(got.estimate() - distinct) <= 0.05 * distinct
+
+
+def test_cms_equals_exact(df, rows):
+    exact = _exact(rows, "SELECT s, count(*) FROM rows WHERE s IS NOT NULL GROUP BY 1")
+    cms = cms_build(df, "s", width=4096, depth=4)
+    keys = np.asarray([k for k, _ in exact], dtype=object)
+    assert cms.estimate(keys).tolist() == [n for _, n in exact]
+
+
+def test_widened_file_reads_like_spark(spark, tmp_path):
+    """An int32 file under a bigint column widens, as Spark's reader
+    does; the partial stage still reads it directly."""
+    pq.write_table(pa.table({"k": pa.array([1, 2, 2], pa.int64())}), tmp_path / "a.parquet")
+    pq.write_table(pa.table({"k": pa.array([2, 3], pa.int32())}), tmp_path / "b.parquet")
+    df = spark.read.schema("k bigint").parquet(str(tmp_path))
+    assert scan.direct_scan(df.select(df.k.alias("__key"))) is not None
+    want = sorted((str(r.k), r.n) for r in df.groupBy("k").count().withColumnRenamed("count", "n").collect())
+    assert sorted(_topk_rows(topk(df, "k", k=10))) == want
+
+
+def test_mismatched_file_type_names_the_file(spark, tmp_path):
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), tmp_path / "a.parquet")
+    pq.write_table(pa.table({"k": pa.array(["7"])}), tmp_path / "bad.parquet")
+    df = spark.read.schema("k bigint").parquet(str(tmp_path))
+    assert scan.direct_scan(df.select(df.k.alias("__key"))) is not None
+    with pytest.raises(Exception, match="bad.parquet"):
+        topk(df, "k", k=3)
+
+
+@pytest.mark.parametrize("good_files", ["one", "par"])
+def test_corrupt_file_names_the_file(spark, tmp_path, good_files):
+    """With fewer files than cores the driver's footer read fails safe
+    to Spark's reader; with more, the worker's read raises. Either way
+    the error names the file."""
+    n = 1 if good_files == "one" else spark.sparkContext.defaultParallelism
+    for i in range(n):
+        pq.write_table(pa.table({"k": pa.array(range(50), pa.int64())}), tmp_path / f"{i}.parquet")
+    (tmp_path / "torn.parquet").write_bytes(b"PAR1 not a footer")
+    df = spark.read.schema("k bigint").parquet(str(tmp_path))
+    footer = pytest.warns(RuntimeWarning, match="torn.parquet")
+    with footer if n == 1 else contextlib.nullcontext():
+        assert (scan.direct_scan(df.select(df.k.alias("__key"))) is None) == (n == 1)
+        with pytest.raises(Exception, match="torn.parquet"):
+            topk(df, "k", k=3)
+
+
+def test_row_group_units_make_exact_partial_count(spark, tmp_path):
+    """One file of 8 row groups: one read unit per row group, and the
+    partial stage emits one blob per task, min(8, tasks)."""
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(pa.table({"k": pa.array(np.arange(8000), pa.int64())}), path,
+                   row_group_size=1000)
+    df = spark.read.parquet(path)
+    partials, n_parts = topk_partials(df, "k", HKParams(k=8, width=512, depth=4))
+    par = spark.sparkContext.defaultParallelism
+    assert n_parts == min(8, par)
+    assert partials.count() == min(8, n_parts)

@@ -526,6 +526,50 @@ class TestSparseMergeFastPath:
             pytest.skip("fixture produced dense blobs; fast path not exercised")
         self._check(blobs)
 
+    @pytest.mark.parametrize("trial", range(24))
+    def test_fuzz_against_dense_chain(self, trial):
+        """Random sparse, dense or mixed blob sets (int or string keys,
+        exact or contested, empty partials included), merged in a
+        random order: ``merge_blobs`` must equal the dense
+        ``HeavyKeeper.merge`` chain over the same order, whichever
+        rows landed in which partial."""
+        from heavykeeper_rs_spark.kernel import _parse_blob_sparse, merge_blobs
+
+        rng = np.random.default_rng(1000 + trial)
+        params = HKParams(
+            k=int(rng.integers(2, 40)),
+            width=int(rng.choice([64, 256, 1024, 4096])),
+            depth=int(rng.integers(1, 5)),
+            decay=float(rng.choice([0.9, 0.5])),
+            seed=int(rng.integers(0, 1 << 30)),
+        )
+        cells = params.width * params.depth
+        str_keys = bool(rng.integers(2))
+        layouts = [("sparse",), ("dense",), ("sparse", "dense")][trial % 3]
+        n_blobs = int(rng.integers(2, 9))
+        kinds = [layouts[i % len(layouts)] for i in range(n_blobs)]
+        blobs = []
+        for p, kind in enumerate(kinds):
+            sk = HeavyKeeper(params, rng=np.random.default_rng(trial * 100 + p))
+            if kind == "dense":  # about 2 keys per cell
+                keys = rng.integers(0, 8 * cells, 2 * cells)
+            else:  # Zipf over a domain too small to fill a third of the cells
+                keys = rng.zipf(1.3, int(rng.integers(0, 3000))) % max(params.width // 8, 1)
+            if str_keys:
+                keys = np.asarray([f"k{v}" for v in keys], dtype=object)
+            if len(keys):
+                sk.add_batch(keys)
+            blobs.append(sk.serialize())
+        assert [_parse_blob_sparse(b) is None for b in blobs] == [k == "dense" for k in kinds]
+        blobs = [blobs[i] for i in rng.permutation(n_blobs)]
+        fast = HeavyKeeper.deserialize(merge_blobs(blobs))
+        slow = self._dense_merge(blobs)
+        assert np.array_equal(fast.fps, slow.fps)
+        assert np.array_equal(fast.counts, slow.counts)
+        assert fast.pq.counts == slow.pq.counts
+        assert fast.list() == slow.list()
+        assert merge_blobs(blobs) == slow.serialize()
+
     def test_empty_sparse_blob(self):
         a = HeavyKeeper(HKParams(k=4, width=1024, depth=2))
         a.add_batch(np.asarray([1, 2, 3], dtype=np.int64))

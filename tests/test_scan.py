@@ -1,6 +1,6 @@
 """Scan sizing (operators/scan.py): input bytes from Spark's file index,
-row groups from parquet footers on any pyarrow filesystem, and the one
-fan-out decision."""
+row groups from parquet footers on any pyarrow filesystem, the one
+fan-out decision, and the gate of the direct parquet reader."""
 
 import os
 
@@ -9,8 +9,10 @@ import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 import pytest
 
+from heavykeeper_rs_spark.kernel import HKParams
 from heavykeeper_rs_spark.operators import scan
 from heavykeeper_rs_spark.operators.scan import ScanProfile, fan_out, footer_row_groups
+from heavykeeper_rs_spark.operators.topk import topk_partials
 
 
 def _write(path, n_rows, row_group_size=None):
@@ -99,3 +101,99 @@ def test_unreadable_scheme_fails_safe(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(ScanProfile, "files", property(lambda self: [uri]))
     with pytest.warns(RuntimeWarning, match=uri):
         assert not _round_robin(fan_out(df, min_bytes=0))
+
+
+# ------------------------------------------------ direct reader gate
+
+def _typed_table(n=200):
+    return pa.table(
+        {
+            "x": pa.array(range(n), pa.int64()),
+            "i": pa.array(range(n), pa.int32()),
+            "d": pa.array([v / 3 for v in range(n)], pa.float64()),
+            "s": pa.array([f"s{v % 7}" for v in range(n)]),
+            "b": pa.array([bytes([v % 5]) * 13 for v in range(n)]),
+            "w": pa.array([v % 3 + 1 for v in range(n)], pa.int64()),
+        }
+    )
+
+
+def _partials_plan(df, col, weight_col=None) -> str:
+    partials, _ = topk_partials(df, col, HKParams(k=8, width=256, depth=4), weight_col)
+    return partials._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture
+def typed_dir(tmp_path):
+    root = tmp_path / "typed"
+    root.mkdir()
+    pq.write_table(_typed_table(), str(root / "part-0.parquet"))
+    return str(root)
+
+
+def _filter(spark, d):
+    return spark.read.parquet(d).filter("x > 5"), "x"
+
+
+def _hive(spark, d):
+    root = os.path.join(os.path.dirname(d), "hive")
+    for p in range(2):
+        os.makedirs(f"{root}/p={p}")
+        pq.write_table(_typed_table(), f"{root}/p={p}/part-0.parquet")
+    return spark.read.parquet(root), "x"
+
+
+def _csv(spark, d):
+    path = os.path.join(os.path.dirname(d), "t.csv")
+    with open(path, "w") as f:
+        f.write("x\n" + "\n".join(map(str, range(50))) + "\n")
+    return spark.read.option("header", "true").schema("x bigint").csv(path), "x"
+
+
+def _double_to_string(spark, d):
+    return spark.read.parquet(d), "d"  # the key rule casts double to string
+
+
+def _merge_schema(spark, d):
+    return spark.read.option("mergeSchema", "true").parquet(d), "x"
+
+
+def _s3(spark, d, monkeypatch):
+    root = os.path.dirname(d)
+    local = pafs.SubTreeFileSystem(root, pafs.LocalFileSystem())
+    monkeypatch.setattr(scan, "_filesystem", lambda uri: (local, uri.split("://", 1)[1]))
+    monkeypatch.setattr(
+        ScanProfile, "files", property(lambda self: ["s3://typed/part-0.parquet"])
+    )
+    return spark.read.parquet(d), "x"
+
+
+@pytest.mark.parametrize(
+    "shape", [_filter, _hive, _csv, _double_to_string, _merge_schema, "binaryAsString", _s3]
+)
+def test_spark_reader_kept(spark, typed_dir, monkeypatch, shape):
+    """Plans the direct reader cannot prove equal to Spark's read keep
+    the FileScan."""
+    if shape == "binaryAsString":
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        try:
+            plan = _partials_plan(spark.read.parquet(typed_dir), "x")
+        finally:
+            spark.conf.unset("spark.sql.parquet.binaryAsString")
+    elif shape is _s3:
+        plan = _partials_plan(*_s3(spark, typed_dir, monkeypatch))
+    else:
+        plan = _partials_plan(*shape(spark, typed_dir))
+    assert "FileScan" in plan
+
+
+@pytest.mark.parametrize(
+    "col,weight_col", [("x", None), ("i", None), ("s", None), ("b", None), ("x", "w")]
+)
+def test_direct_reader_taken(spark, typed_dir, col, weight_col):
+    """A plain bigint, int32→bigint widening, string, binary and the
+    weighted (__key, __w) pair read with pyarrow in the worker: no
+    FileScan in the partial stage."""
+    df = spark.read.parquet(typed_dir)
+    plan = _partials_plan(df, col, weight_col)
+    assert "FileScan" not in plan and "MapInArrow" in plan

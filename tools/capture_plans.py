@@ -17,7 +17,11 @@ DataFrame is a local result), so for those the capture is the
 distributed part that actually runs: the keyed projection -> mapInArrow
 partial stage, built with the library's own partial-stage functions
 (``topk_partials``, ``token_partials``) and the entry's parameters.
-Every other query is captured as the DataFrame the entry returns.
+Their files start with the reader the stage takes, from the library's
+own gate (``scan.direct_scan`` on the stage's keyed projection): the
+direct parquet reader (MapInArrow over a Range of read tasks) or
+Spark's scan (MapInArrow over a FileScan). Every other query is
+captured as the DataFrame the entry returns.
 """
 
 from __future__ import annotations
@@ -32,8 +36,13 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from heavykeeper_rs_spark.kernel import HKParams  # noqa: E402
-from heavykeeper_rs_spark.operators.scan import fan_out  # noqa: E402
-from heavykeeper_rs_spark.operators.topk import token_partials, topk_partials  # noqa: E402
+from heavykeeper_rs_spark.operators.scan import direct_scan, fan_out  # noqa: E402
+from heavykeeper_rs_spark.operators.topk import (  # noqa: E402
+    token_keyed,
+    token_partials,
+    topk_keyed,
+    topk_partials,
+)
 from heavykeeper_rs_spark.session import get_spark  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -55,39 +64,50 @@ def _params(width: int, depth: int) -> HKParams:
     return HKParams(k=256, width=width, depth=depth, decay=0.9, seed=12345)
 
 
+def _topk_stage(df, col, params, weight_col=None):
+    return topk_keyed(df, col, weight_col), topk_partials(df, col, params, weight_col)[0]
+
+
+def _token_stage(df, params):
+    return token_keyed(df, "text"), token_partials(df, "text", params)[0]
+
+
 def _weighted_parts(spark, sf_dir):
     # the entry's pre-aggregated feed (taken above 32 MB of lineitem)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
         F.col("l_partkey").cast("long").alias("pk")
     ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
-    return topk_partials(li, "pk", _params(262144, 5), weight_col="q")
+    return _topk_stage(li, "pk", _params(262144, 5), weight_col="q")
 
 
-#: partial stages of the internally-materializing sketch queries
+#: partial stages of the internally-materializing sketch queries, as
+#: (keyed projection, partials)
 SKETCH_STAGES = {
-    "hk_topk_event_type": lambda spark, sf: topk_partials(
+    "hk_topk_event_type": lambda spark, sf: _topk_stage(
         spark.read.parquet(f"{sf}/events.parquet"), "event_type", _params(1024, 4)
     ),
-    "hk_topk_user": lambda spark, sf: topk_partials(
+    "hk_topk_user": lambda spark, sf: _topk_stage(
         spark.read.parquet(f"{sf}/events.parquet"), "user_id", _params(65536, 4)
     ),
     "hk_weighted_topk_part": _weighted_parts,
-    "hk_topk_tokens": lambda spark, sf: token_partials(
+    "hk_topk_tokens": lambda spark, sf: _token_stage(
         fan_out(spark.read.parquet(f"{sf}/documents.parquet").select("text")),
-        "text",
         _params(65536, 4),
     ),
-    "hk_topk_tokens_inkernel": lambda spark, sf: token_partials(
-        spark.read.parquet(f"{sf}/documents.parquet"), "text", _params(65536, 4)
+    "hk_topk_tokens_inkernel": lambda spark, sf: _token_stage(
+        spark.read.parquet(f"{sf}/documents.parquet"), _params(65536, 4)
     ),
 }
 
 
 def plan_df(name: str, spark, sf_dir: str):
+    """The DataFrame whose plan is captured for ``name``, and for a
+    sketch stage the reader ``scan.direct_scan`` picks for it."""
     if name in SKETCH_STAGES:
-        partials, _ = SKETCH_STAGES[name](spark, sf_dir)
-        return partials
-    return entrymod.queries()[name](spark, sf_dir)
+        keyed, partials = SKETCH_STAGES[name](spark, sf_dir)
+        reader = "direct parquet (pyarrow in the worker)" if direct_scan(keyed) else "Spark scan"
+        return partials, reader
+    return entrymod.queries()[name](spark, sf_dir), None
 
 
 def _formatted(df) -> str:
@@ -105,7 +125,7 @@ def write_appendix(spark, sf_dir: str) -> None:
         "See PLANS.md for the narrative review.\n",
     ]
     for name, note in CAPTURE:
-        qe = plan_df(name, spark, sf_dir)._jdf.queryExecution()
+        qe = plan_df(name, spark, sf_dir)[0]._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         checks = []
         m = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
@@ -150,9 +170,12 @@ def main() -> None:
         os.makedirs(args.out, exist_ok=True)
         for name in args.queries:
             path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            df, reader = plan_df(name, spark, args.sf_dir)
             with open(path, "w") as f:
-                f.write(_formatted(plan_df(name, spark, args.sf_dir)))
-            print("wrote", path)
+                if reader:
+                    f.write(f"Partial-stage reader: {reader}\n\n")
+                f.write(_formatted(df))
+            print("wrote", path, f"({reader})" if reader else "")
     spark.stop()
 
 
