@@ -1,12 +1,13 @@
-"""Pure-NumPy HeavyKeeper top-K sketch kernel.
+"""NumPy HeavyKeeper top-K sketch kernel.
 
 A from-scratch, vectorized re-implementation of the *semantics* of the
 reference crate (pmcgleenon/heavykeeper-rs, /root/reference — read
 only).  The reference is a single-threaded Rust library processing one
 item at a time; this kernel processes Arrow-sized batches with NumPy
 array ops and only drops to per-item Python for the statistically rare
-"decay duel survivor" residue.  Counts, fingerprints and bucket layout
-follow the paper / reference semantics:
+"decay duel survivor" residue. String keys are hashed by the C byte
+kernel in ``native.py``; everything else is NumPy.  Counts,
+fingerprints and bucket layout follow the paper / reference semantics:
 
 - state: ``depth`` rows x ``width`` buckets, each bucket a
   ``(fingerprint: u64, count: u64)`` cell (src/heavykeeper.rs:14-18)
@@ -50,6 +51,7 @@ import numpy as np
 import pandas as pd
 
 from .errors import InvalidDecay, InvalidDepth, InvalidK, InvalidWidth, SketchCompatError
+from .native import hash_slices
 from .serde import dumps as serde_dumps, loads as serde_loads
 
 _U64 = np.uint64
@@ -71,75 +73,15 @@ def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
         return x ^ (x >> _U64(31))
 
 
-_FNV_OFFSET = 0xCBF29CE484222325
-_FNV_PRIME = _U64(0x100000001B3)
-
-
 def hash_string_buffers(
     offsets: np.ndarray, data: np.ndarray, seed: int
 ) -> np.ndarray:
     """Canonical seeded 64-bit hash of variable-length byte strings,
     computed straight off (offsets, data) buffers — the layout of an
     Arrow string/binary array, so the distributed builders hash keys
-    with ZERO per-key Python objects (the round-2 string-lane fix:
-    the object-array SipHash was the per-core floor of every text
-    workload)."""
-    return hash_byte_slices(offsets[:-1], np.diff(offsets), data, seed)
-
-
-def hash_byte_slices(
-    starts: np.ndarray, lens: np.ndarray, data: np.ndarray, seed: int
-) -> np.ndarray:
-    """Seeded 64-bit hash of arbitrary (start, len) byte slices of one
-    buffer — the general form of ``hash_string_buffers`` (slices may
-    overlap or be out of order; the object-free tokenizer hashes every
-    token occurrence in place with this).
-
-    Vectorized FNV-1a waves: slices are processed one byte position
-    per wave over a descending-length-sorted view, so each wave is a
-    contiguous-prefix gather/xor/multiply with no boolean masks; a
-    splitmix64 finalizer mixes the seeded state. Total work is
-    O(total_bytes) vector ops regardless of length skew.
-    """
-    n = starts.shape[0]
-    seed_mix = (seed * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    if n <= 0:
-        return np.zeros(0, dtype=np.uint64)
-    minlen = int(lens.min())
-    maxlen = int(lens.max())
-    h = np.full(n, _U64(_FNV_OFFSET ^ seed_mix))
-    with np.errstate(over="ignore"):
-        # common-prefix waves: every string is active for j < minlen,
-        # so no sorting/masking at all — the whole-batch fast path
-        # (uniform-length keys, e.g. packed flow records, never sort)
-        for j in range(minlen):
-            h ^= data[starts + j]
-            h *= _FNV_PRIME
-        if maxlen > minlen:
-            # tail positions: only strings longer than minlen. Sort the
-            # survivors descending by length so each wave is a
-            # contiguous-prefix slice; 16-bit sort keys hit numpy's
-            # radix path (~6x over int64 comparison sort).
-            sub = np.flatnonzero(lens > minlen)
-            sl = lens[sub]
-            if maxlen - minlen < 0xFFFF:
-                skey = (maxlen - sl).astype(np.uint16)
-            else:
-                skey = -sl
-            sorder = sub[np.argsort(skey, kind="stable")]
-            hs = h[sorder]
-            sos = starts[sorder]
-            negl = -lens[sorder]  # ascending
-            for j in range(minlen, maxlen):
-                na = int(np.searchsorted(negl, -j, side="left"))
-                if na == 0:
-                    break
-                hs[:na] ^= data[sos[:na] + j]
-                hs[:na] *= _FNV_PRIME
-            h[sorder] = hs
-        # length mix + finalizer: avalanches FNV's weak high bits
-        h ^= lens.astype(np.uint64) << _U64(56)
-        return _splitmix64_arr(h)
+    with ZERO per-key Python objects. One C pass per byte
+    (``native.hash_slices``: seeded FNV-1a, length mix, splitmix64)."""
+    return hash_slices(offsets[:-1], np.diff(offsets), data, seed)
 
 
 def arrow_string_buffers(col) -> tuple[np.ndarray, np.ndarray]:
@@ -575,10 +517,10 @@ class HeavyKeeper:
     def add_batch_hashed(
         self,
         hashes: np.ndarray,
-        weights: np.ndarray,
+        weights: np.ndarray | None,
         key_take,
     ) -> None:
-        """Insert pre-hashed distinct keys WITHOUT materializing them.
+        """Insert pre-hashed keys WITHOUT materializing them.
 
         The zero-object string lane: the distributed builders
         dictionary-encode the Arrow batch (C pass), hash the distinct
@@ -586,9 +528,11 @@ class HeavyKeeper:
         (``hash_string_buffers``), and hand this method (hash, weight)
         int lanes plus ``key_take(indices) -> object ndarray`` — only
         the handful of keys that actually enter the top-K queue are
-        ever converted to Python objects. ``hashes`` must come from
-        this sketch's hash function (the seeded default family; a
-        custom hasher cannot guarantee that, so it is refused).
+        ever converted to Python objects. ``weights=None`` counts each
+        hash once: the token feed hands every occurrence's hash
+        straight in. ``hashes`` must come from this sketch's hash
+        function (the seeded default family; a custom hasher cannot
+        guarantee that, so it is refused).
         """
         if self._hasher is not None:
             raise ValueError(
@@ -601,9 +545,12 @@ class HeavyKeeper:
         # fold (rare) full-64-bit collisions exactly like add_batch
         inv, uh = pd.factorize(h, sort=False)
         k = uh.shape[0]
-        w = np.bincount(
-            inv, weights=np.asarray(weights, dtype=np.float64), minlength=k
-        ).astype(np.int64)
+        if weights is None:
+            w = np.bincount(inv, minlength=k)
+        else:
+            w = np.bincount(
+                inv, weights=np.asarray(weights, dtype=np.float64), minlength=k
+            ).astype(np.int64)
         first = np.empty(k, dtype=np.int64)
         first[inv[::-1]] = np.arange(h.shape[0] - 1, -1, -1)
         keep = w > 0

@@ -8,11 +8,12 @@ Arrow string buffers with NumPy instead of a per-token ``aggregate``
 fold of array built-ins. The JVM fold allocates two transient arrays
 per token per row; at ~70 us/doc it was the most expensive scan in the
 suite (guide §4.2: hand whole batches to vectorized native code). Here
-tokens come from the shared ``_ascii_token_slices`` tokenizer (the same
+tokens come from the shared ``native.ascii_tokens`` tokenizer (the same
 one the in-kernel token top-K is oracle-pinned on), candidate tokens
-(<= 5 bytes — the longest family word) are packed into uint64 lanes and
-matched against the 26 family words with exact byte equality: no
-hashing, no collisions, bit-identical scores to the JVM path.
+(<= 5 bytes — the longest family word) are case-folded and packed into
+uint64 lanes and matched against the 26 family words with exact byte
+equality: no hashing, no collisions, bit-identical scores to the JVM
+path.
 
 Non-ASCII batches fall back to a per-document Python replay of the
 exact oracle semantics (``re.findall('[a-z]+', text.lower())``), so
@@ -32,6 +33,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.text import _LANG_FAMS, MAX_TOKEN_LEN
 from ..kernel import arrow_string_buffers
+from ..native import ascii_tokens
 from .scan import fan_out
 
 
@@ -49,39 +51,36 @@ _FAM_PACKED = [
     for ws in _LANG_FAMS.values()
 ]
 assert _MAX_WORD <= 8, "packed-uint64 matching requires family words <= 8 bytes"
-# mask LUT: keep the first L bytes of a little-endian packed token
-_LEN_MASK = np.asarray(
-    [(1 << (8 * l)) - 1 for l in range(8)] + [0xFFFFFFFFFFFFFFFF], dtype=np.uint64
-)
 
 _OUT_SCHEMA = StructType(
     [StructField("lid", StringType(), False), StructField("n", LongType(), False)]
 )
 
 
-def _classify_ascii(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
-    """Per-doc family index (len(_LANGS) == 'und') for one ASCII batch."""
-    from .topk import _ascii_token_slices
-
+def _classify_ascii(offsets: np.ndarray, data: np.ndarray) -> np.ndarray | None:
+    """Per-doc family index (len(_LANGS) == 'und') for one batch, or
+    None when a document holds a non-ASCII byte."""
+    # only tokens short enough to BE a family word can score; the
+    # tokenizer's 64-byte cap never excludes one of these
+    toks = ascii_tokens(offsets, data, _MAX_WORD, 0)
+    if toks is None:
+        return None
+    _, s, l = toks
     ndocs = offsets.shape[0] - 1
     scores = np.zeros((ndocs, len(_LANGS)), dtype=np.int64)
-    if data.size:
-        starts, lens, low = _ascii_token_slices(offsets, data, 0)
-        # only tokens short enough to BE a family word can score; the
-        # tokenizer's 64-byte cap never excludes one of these
-        keep = lens <= _MAX_WORD
-        s, l = starts[keep], lens[keep]
-        if s.size:
-            pad = np.concatenate([low, np.zeros(8, dtype=np.uint8)])
-            win = np.lib.stride_tricks.sliding_window_view(pad, 8)
-            packed = np.ascontiguousarray(win[s]).view(np.uint64).reshape(-1)
-            packed = packed & _LEN_MASK[np.minimum(l, 8)]
-            doc_idx = np.searchsorted(offsets, s, side="right") - 1
-            for fi, words in enumerate(_FAM_PACKED):
-                m = packed == words[0]
-                for wv in words[1:]:
-                    m |= packed == wv
-                scores[:, fi] = np.bincount(doc_idx[m], minlength=ndocs)
+    if s.size:
+        # little-endian pack of the case-folded token bytes; positions
+        # past a token's end contribute 0 (and may clamp at the buffer)
+        packed = np.zeros(s.shape[0], dtype=np.uint64)
+        for j in range(_MAX_WORD):
+            b = data[np.minimum(s + j, data.size - 1)] | 0x20
+            packed |= (b * (l > j)).astype(np.uint64) << np.uint64(8 * j)
+        doc_idx = np.searchsorted(offsets, s, side="right") - 1
+        for fi, words in enumerate(_FAM_PACKED):
+            m = packed == words[0]
+            for wv in words[1:]:
+                m |= packed == wv
+            scores[:, fi] = np.bincount(doc_idx[m], minlength=ndocs)
     best = scores.max(axis=1)
     # np.argmax returns the FIRST maximum — exactly the "earlier family
     # wins ties" rule of lang_from_scores
@@ -124,11 +123,9 @@ def lang_id_counts(df: DataFrame, text_col: str) -> DataFrame:
             col = batch.column(0)
             if col.null_count:
                 col = pc.fill_null(col, "")
-            offsets, data = arrow_string_buffers(col)
-            if data.size and int(data.max()) >= 128:
+            lid = _classify_ascii(*arrow_string_buffers(col))
+            if lid is None:
                 lid = _classify_python(col.to_pylist())
-            else:
-                lid = _classify_ascii(offsets, data)
             counts += np.bincount(lid, minlength=len(names))
         if saw:
             yield pa.RecordBatch.from_pydict(

@@ -351,94 +351,35 @@ def _item_str(item) -> str:
     return str(item)
 
 
-_LOWER_LUT = np.arange(256, dtype=np.uint8)
-_LOWER_LUT[65:91] |= 0x20  # A-Z -> a-z; everything else identity
-_ALPHA_LUT = np.zeros(256, dtype=bool)
-_ALPHA_LUT[65:91] = _ALPHA_LUT[97:123] = True
-
-
-def _ascii_token_slices(
-    offsets: np.ndarray, data: np.ndarray, max_token_len: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(starts, lens, lowered buffer) of every ``[a-z]+`` token
-    occurrence in a batch of ASCII documents — pure NumPy, zero Python
-    objects. Equivalent to ``re.findall('[a-z]+', text.lower())`` per
-    doc when the buffer is ASCII (the caller checks): A–Z fold to a–z
-    with one masked OR, tokens are maximal alpha runs, and runs
-    spanning a document boundary are split at it (two adjacent docs
-    are contiguous in the Arrow buffer)."""
-    # one-gather case fold + one-gather token-byte classification
-    # (256-entry LUTs beat copy + range masks + masked OR ~3x)
-    low = _LOWER_LUT[data]
-    alpha = _ALPHA_LUT[data]
-    # run boundaries from ONE transition pass: xor of adjacent alpha
-    # flags (with phantom non-alpha sentinels at both ends) yields
-    # starts and ends interleaved — a single flatnonzero
-    trans = np.empty(alpha.shape[0] + 1, dtype=bool)
-    trans[0] = alpha[0] if alpha.shape[0] else False
-    if alpha.shape[0]:
-        np.logical_xor(alpha[1:], alpha[:-1], out=trans[1:-1])
-        trans[-1] = alpha[-1]
-    idx = np.flatnonzero(trans).astype(np.int64)
-    starts = idx[0::2]
-    ends = idx[1::2]
-    # split runs that cross a doc boundary: boundary b is inside a run
-    # iff both neighbors are alpha
-    bnd = np.unique(offsets[1:-1])  # empty docs repeat a boundary
-    if bnd.size:
-        inner = bnd[(bnd > 0) & (bnd < low.shape[0])]
-        cross = inner[alpha[inner - 1] & alpha[inner]]
-        if cross.size:
-            seg_starts = np.sort(np.concatenate([starts, cross]))
-            run_idx = np.searchsorted(starts, seg_starts, side="right") - 1
-            run_end = ends[run_idx]
-            nxt = np.searchsorted(cross, seg_starts, side="right")
-            next_cross = np.where(
-                nxt < cross.shape[0], cross[np.minimum(nxt, cross.shape[0] - 1)], np.iinfo(np.int64).max
-            )
-            seg_ends = np.minimum(run_end, next_cross)
-            starts, ends = seg_starts, seg_ends
-    lens = ends - starts
-    if max_token_len:
-        keep = lens <= max_token_len
-        starts, lens = starts[keep], lens[keep]
-    return starts, lens, low
-
-
 def _feed_tokens_arrow(sk, col, max_token_len: int, seed: int) -> bool:
-    """Object-free token feed: tokenize + hash every occurrence off
-    the Arrow buffers and insert via ``add_batch_hashed``; only tokens
-    entering the top-K queue ever materialize. Returns False (caller
-    falls back to the regex/str path) when the batch holds any
-    non-ASCII byte — exotic case folding ('K'→'k') then differs from
-    the byte fold, so the exact str semantics take over."""
+    """Object-free token feed: ``native.ascii_tokens`` tokenizes and
+    hashes every occurrence in one C pass over the Arrow buffers, and
+    the per-occurrence hashes go straight into ``add_batch_hashed``;
+    only tokens entering the top-K queue are ever lowered into Python
+    bytes. Returns False (caller falls back to the regex/str path) when
+    a document holds any non-ASCII byte — exotic case folding ('K'→'k')
+    then differs from the byte fold, so the exact str semantics take
+    over."""
     import pyarrow.compute as pc
 
-    from ..kernel import arrow_string_buffers, hash_byte_slices
+    from ..kernel import arrow_string_buffers
+    from ..native import ascii_tokens
 
     if col.null_count:
         col = pc.fill_null(col, "")
     offsets, data = arrow_string_buffers(col)
-    if data.size and int(data.max()) >= 128:
+    toks = ascii_tokens(offsets, data, max_token_len, seed)
+    if toks is None:
         return False
-    starts, lens, low = _ascii_token_slices(offsets, data, max_token_len)
-    if starts.size == 0:
-        return True
-    h_all = hash_byte_slices(starts, lens, low, seed)
-    inv, uh = pd.factorize(h_all, sort=False)
-    k = uh.shape[0]
-    w = np.bincount(inv, minlength=k).astype(np.int64)
-    first = np.empty(k, dtype=np.int64)
-    first[inv[::-1]] = np.arange(h_all.shape[0] - 1, -1, -1)
+    hashes, starts, lens = toks
 
     def key_take(sel: np.ndarray) -> np.ndarray:
-        idx = first[sel]
         return np.asarray(
-            [low[s : s + l].tobytes() for s, l in zip(starts[idx], lens[idx])],
+            [data[s : s + l].tobytes().lower() for s, l in zip(starts[sel], lens[sel])],
             dtype=object,
         )
 
-    sk.add_batch_hashed(np.asarray(uh, dtype=np.uint64), w, key_take)
+    sk.add_batch_hashed(hashes, None, key_take)
     return True
 
 
@@ -537,12 +478,13 @@ def topk_tokens(
 
     The word_count example (examples/word_count.rs:131-165) at corpus
     scale: rather than explode()-ing a 40x token blowup through the
-    JVM->Python Arrow channel, each batch is tokenized entirely off
-    the Arrow byte buffers (``_feed_tokens_arrow`` — zero Python token
-    objects; occurrences are hashed in place and fed through
-    ``add_batch_hashed``). Non-ASCII batches or a custom ``token_re``
-    fall back to the chunked C-level regex pass. No explode, no
-    shuffle of tokens — the only network traffic is sketch blobs.
+    JVM->Python Arrow channel, each batch is tokenized and hashed in
+    one C pass over the Arrow byte buffers (``_feed_tokens_arrow`` →
+    ``native.ascii_tokens`` — zero Python token objects; occurrence
+    hashes feed ``add_batch_hashed``). Non-ASCII batches or a custom
+    ``token_re`` fall back to the chunked C-level regex pass. No
+    explode, no shuffle of tokens — the only network traffic is sketch
+    blobs.
     """
     params = HKParams(
         k=_track_k(k, tie_break_key, candidates),

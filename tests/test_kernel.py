@@ -288,6 +288,37 @@ class TestStringBufferHash:
         assert not np.array_equal(h_obj, hash_items(np.asarray(keys, dtype=object), 1))
         assert len(set(h_obj.tolist())) == len(keys)
 
+    def test_known_answers(self):
+        """Pinned fingerprints: persisted blobs (checkpoints,
+        sketch_store) depend on these exact values."""
+        from heavykeeper_rs_spark.kernel import hash_items
+
+        keys = np.asarray(["", "a", "hello", "x" * 300], dtype=object)
+        assert hash_items(keys, 12345).tolist() == [
+            0x31FAEB299DF56851, 0xCE634A629D895014,
+            0x49C3115C8577DE33, 0xB7B95A6326A4EC37,
+        ]
+        assert hash_items(keys, 7).tolist() == [
+            0x89103A54E8D5A9C4, 0x637E3C872AB48A52,
+            0x75318C8177C8D921, 0xFA6F513A288557C6,
+        ]
+
+    def test_tokenizer_hashes_equal_hash_slices(self):
+        """ascii_tokens hashes each token over its lowered bytes exactly
+        like hash_slices, so token sketches merge with str-key ones."""
+        from heavykeeper_rs_spark.native import ascii_tokens, hash_slices
+
+        # a run split at a doc boundary, and one over max_len dropped
+        text = b"Hello, WORLDwide " + b"Z" * 70 + b" x  QuIcK"
+        data = np.frombuffer(text, dtype=np.uint8)
+        offsets = np.asarray([0, 12, len(text)], dtype=np.int64)
+        h, s, l = ascii_tokens(offsets, data, 64, 12345)
+        low = np.frombuffer(text.lower(), dtype=np.uint8)
+        assert [low[a : a + b].tobytes() for a, b in zip(s, l)] == [
+            b"hello", b"world", b"wide", b"x", b"quick",
+        ]
+        assert np.array_equal(h, hash_slices(s, l, low, 12345))
+
     def test_prefix_and_length_discrimination(self):
         from heavykeeper_rs_spark.kernel import hash_items
 

@@ -63,3 +63,17 @@ def test_langid_ascii_batch_matches_jvm(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     assert _op_counts(df) == _jvm_counts(df)
+
+
+def test_classify_ascii_reads_only_the_slice():
+    """A sliced Arrow array shares its parent's data buffer; only the
+    slice's bytes are tokenized and ASCII-checked."""
+    import pyarrow as pa
+
+    from heavykeeper_rs_spark.kernel import arrow_string_buffers
+    from heavykeeper_rs_spark.operators.langid import _LANGS, _classify_ascii
+
+    col = pa.array(["der die und", "the cat and the", "le la et", "café"])
+    got = _classify_ascii(*arrow_string_buffers(col.slice(1, 2)))
+    assert [_LANGS[i] for i in got] == ["en", "fr"]
+    assert _classify_ascii(*arrow_string_buffers(col.slice(2, 2))) is None

@@ -12,6 +12,41 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _package_zip(path) -> str:
+    """The package as ``--py-files`` ships it: its ``.py`` files only."""
+    with zipfile.ZipFile(path, "w") as zf:
+        for root, _dirs, files in os.walk(os.path.join(REPO, "heavykeeper_rs_spark")):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, REPO))
+    return str(path)
+
+
+def test_zip_only_package_hashes_known_answers(tmp_path):
+    """The C byte kernels travel as source inside ``native.py``: with
+    the package importable only from its ``.py`` zip, the string hash
+    builds in the process and gives the pinned fingerprints."""
+    zip_path = _package_zip(tmp_path / "hk.zip")
+    code = (
+        "import json, numpy as np, heavykeeper_rs_spark as hk\n"
+        "from heavykeeper_rs_spark.kernel import hash_items\n"
+        f"assert hk.__file__.startswith({zip_path!r}), hk.__file__\n"
+        "keys = np.asarray(['', 'a', 'hello', 'x' * 300], dtype=object)\n"
+        "print(json.dumps(hash_items(keys, 12345).tolist()))\n"
+    )
+    env = dict(os.environ, PYTHONPATH=zip_path)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout) == [
+        0x31FAEB299DF56851, 0xCE634A629D895014,
+        0x49C3115C8577DE33, 0xB7B95A6326A4EC37,
+    ]
+
+
 @pytest.mark.slow
 def test_spark_submit_py_files(spark, tmp_path):
     # materialize a small webtext corpus
@@ -20,13 +55,7 @@ def test_spark_submit_py_files(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     webtext(spark, 3000, seed=42, partitions=4).write.parquet(corpus)
 
-    zip_path = str(tmp_path / "hk.zip")
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(os.path.join(REPO, "heavykeeper_rs_spark")):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _package_zip(tmp_path / "hk.zip")
 
     spark_submit = os.path.join(
         os.path.dirname(os.path.dirname(sys.executable)), "bin", "spark-submit"
@@ -68,13 +97,7 @@ def test_spark_submit_curate_pipeline(spark, tmp_path):
     spark.read.parquet("/root/testdata/sf0.01/documents.parquet").write.parquet(src)
     dst = str(tmp_path / "curated")
 
-    zip_path = str(tmp_path / "hk2.zip")
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(os.path.join(REPO, "heavykeeper_rs_spark")):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zip_path = _package_zip(tmp_path / "hk2.zip")
     spark_submit = os.path.join(
         os.path.dirname(os.path.dirname(sys.executable)), "bin", "spark-submit"
     )

@@ -207,6 +207,21 @@ class TestArrowTokenizer:
         assert _feed_tokens_arrow(sk, pa.array(["héllo world"]), 64, 1) is False
         assert _feed_tokens_arrow(sk, pa.array(["K elvin"]), 64, 1) is False
 
+    def test_sliced_array_feeds_only_its_rows(self):
+        """A sliced Arrow array shares its parent's data buffer: bytes
+        outside the slice are neither tokenized nor ASCII-checked."""
+        import numpy as np
+        import pyarrow as pa
+
+        from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams
+        from heavykeeper_rs_spark.operators.topk import _feed_tokens_arrow
+
+        p = HKParams(k=10, width=256, depth=4, decay=0.9, seed=3)
+        for docs in (["alpha beta", "gamma", "delta epsilon"], ["héllo", "gamma", "wörld"]):
+            sk = HeavyKeeper(p, rng=np.random.default_rng(1))
+            assert _feed_tokens_arrow(sk, pa.array(docs).slice(1, 1), 64, 3)
+            assert sk.list() == [(b"gamma", 1)]
+
     def test_fingerprints_merge_with_str_path(self):
         """A sketch built via the arrow tokenizer must merge exactly
         with one built via the str path (same hash family)."""
