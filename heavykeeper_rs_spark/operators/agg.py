@@ -4,10 +4,12 @@ One runner for the whole sketch family: partial build per partition
 (``mapInArrow``), salted combine (``groupBy(salt).applyInPandas``),
 final merge on the driver. Identical plan shape to operators/topk.py —
 the same partial stage and ``operators.combine`` tree; only the sketch
-kernel differs. The shuffle carries only serialized
-sketch blobs (KiB-scale), never rows, so the plan's network cost is
-O(partitions), independent of input size: the property that makes this
-viable at 10^12 rows.
+kernel differs. One keyed projection (``agg_keyed``) and one feed
+(``_feed_values``) serve the ungrouped ``sketch_agg`` and every
+``*_by_group`` operator, which runs the partial stage's grouped mode.
+The shuffle carries only serialized sketch blobs (KiB-scale), never
+rows, so the plan's network cost is O(partitions), independent of
+input size: the property that makes this viable at 10^12 rows.
 
 Also exposes DataFrame-level conveniences:
 - hll_distinct(df, col)          -> float estimate
@@ -41,7 +43,6 @@ from ..sketches.kll import KLL
 from ..sketches.tdigest import TDigest
 from . import combine
 from .combine import sketch_partials, tree_fold
-from .topk import grouped_blob_tree, grouped_partial_builder
 
 
 def _sketch_seed(sk) -> int:
@@ -66,6 +67,38 @@ def _seeded(sk, pid: int):
     return sk
 
 
+def agg_keyed(
+    df: DataFrame,
+    col: str,
+    numeric: bool = False,
+    weight_col: str | None = None,
+    group_col: str | None = None,
+) -> DataFrame:
+    """The keyed projection of the ``sketch_agg`` family: the group
+    column when grouped, the values as ``__v`` (double when
+    ``numeric``, else string) and the ``__w`` weight as double."""
+    cols = [] if group_col is None else [combine.group_column(group_col)]
+    cols.append(F.col(col).cast(DoubleType() if numeric else StringType()).alias("__v"))
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast(DoubleType()).alias("__w"))
+    return df.select(*cols)
+
+
+def _feed_values(sk, batches: Iterator[pa.RecordBatch]) -> None:
+    """``sketch_partials`` feed of the ``sketch_agg`` family: column 0
+    holds the values and an optional column 1 the weights; a row with
+    a null value or weight is skipped."""
+    for batch in batches:
+        v = batch.column(0).to_numpy(zero_copy_only=False)
+        if batch.num_columns > 1:
+            w = batch.column(1).to_numpy(zero_copy_only=False)
+            valid = pd.notna(v) & pd.notna(w)
+            sk.add_batch(v[valid], np.asarray(w[valid], dtype=np.float64))
+        else:
+            valid = pd.notna(v)
+            sk.add_batch(v[valid])
+
+
 def sketch_agg(
     df: DataFrame,
     col: str,
@@ -77,25 +110,10 @@ def sketch_agg(
     """Fold df[col] into a mergeable sketch; returns the merged sketch.
     Blobs decode through the magic-sniffing registry
     (``variants.deserialize_any``), so ``make`` is all a family needs."""
-    cast = DoubleType() if numeric else StringType()
-    cols = [F.col(col).cast(cast).alias("__v")]
-    weighted = weight_col is not None
-    if weighted:
-        cols.append(F.col(weight_col).cast(DoubleType()).alias("__w"))
-
-    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
-        for batch in batches:
-            v = batch.column(0).to_numpy(zero_copy_only=False)
-            if weighted:
-                w = batch.column(1).to_numpy(zero_copy_only=False)
-                valid = pd.notna(v) & pd.notna(w)
-                sk.add_batch(v[valid], np.asarray(w[valid], dtype=np.float64))
-            else:
-                valid = pd.notna(v)
-                sk.add_batch(v[valid])
-
     partials, n_parts = sketch_partials(
-        df.select(*cols), lambda pid: _seeded(make(), pid), feed
+        agg_keyed(df, col, numeric, weight_col),
+        lambda pid: _seeded(make(), pid),
+        _feed_values,
     )
     return tree_fold(partials, n_parts, merge_groups, make)
 
@@ -143,23 +161,19 @@ def _grouped_sketches(
     fan_in: int,
     max_live_groups: int,
 ) -> DataFrame:
-    """Per-(partition, group) partials of ``make()`` sketches through
-    the per-group blob tree; ``finalize(group, blobs)`` emits the
-    ``(group, out_field)`` result rows."""
+    """Grouped ``sketch_agg``: ``agg_keyed`` with the group column
+    through the grouped partial stage (per-(partition, group) sketches,
+    ``_feed_values``) and the per-group blob tree;
+    ``finalize(group, blobs)`` emits the ``(group, out_field)`` result
+    rows."""
+    partials, n_parts = sketch_partials(
+        agg_keyed(df, value_col, numeric, group_col=group_col),
+        lambda pid: _seeded(make(), pid),
+        _feed_values,
+        max_live_groups,
+    )
     out_schema = StructType([StructField("group", StringType(), False), out_field])
-    dtype = np.float64 if numeric else object
-
-    def feed(sk, vals) -> None:
-        sk.add_batch(np.asarray(vals, dtype=dtype))
-
-    build = grouped_partial_builder(
-        lambda pid: _seeded(make(), pid), feed, max_live_groups
-    )
-    keyed = df.select(
-        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
-        F.col(value_col).cast(DoubleType() if numeric else StringType()).alias("__v"),
-    )
-    return grouped_blob_tree(keyed, build, finalize, out_schema, fan_in=fan_in)
+    return combine.grouped_blob_tree(partials, n_parts, fan_in, finalize, out_schema)
 
 
 def sketch_by_group(
@@ -175,10 +189,10 @@ def sketch_by_group(
 ) -> DataFrame:
     """One sketch per group: (group, finalize(sketch)) — scale-safe.
 
-    Partial sketches are built per (partition, group) inside
-    ``mapInArrow``; the shuffle then carries only serialized blobs
-    through a bounded-fan-in per-group merge tree
-    (``operators.topk.grouped_blob_tree``). No row crosses the network,
+    Partial sketches are built per (partition, group) by the grouped
+    mode of ``sketch_agg``'s partial stage; the shuffle then carries
+    only serialized blobs through a bounded-fan-in per-group merge tree
+    (``combine.grouped_blob_tree``). No row crosses the network,
     so a Zipf-hot group costs each mapper bounded sketch memory rather
     than landing its full row set on one reducer.
     """

@@ -5,11 +5,12 @@ emits one serialized sketch per input partition (or per (partition,
 group)), a salted bounded-fan-in tree merges the blobs in the cluster,
 and the driver folds the few survivors:
 
-  partial:  ``(salt=partition id, sketch)`` rows out of ``mapInArrow``
-            (``sketch_partials`` for the ungrouped operators, which
-            read plain parquet projections with pyarrow in the worker
-            when ``scan.direct_scan`` admits them, else through
-            Spark's scan)
+  partial:  ``(salt = pid % n_parts, sketch)`` rows out of
+            ``mapInArrow`` (``sketch_partials``, the only partial
+            stage: it reads plain parquet projections with pyarrow in
+            the worker when ``scan.direct_scan`` admits them, else
+            through Spark's scan; its grouped mode keeps one sketch per
+            live group and emits ``(group, salt, sketch)`` rows)
   combine:  ``blob_tree`` — salted multi-level
             ``groupBy(salt).applyInPandas`` merge levels; no reducer
             ever folds more than ``fan_in`` blobs
@@ -52,6 +53,13 @@ BLOB_SCHEMA = StructType(
 GROUP_BLOB_SCHEMA = StructType(
     [StructField("group", StringType(), False), *BLOB_SCHEMA.fields]
 )
+
+
+def group_column(col: str):
+    """The leading column of a grouped keyed projection: the group as
+    Spark's string cast renders it (a no-op on a string column, which
+    the direct reader then reads). ``_group_partials`` renders nulls."""
+    return F.col(col).cast(StringType()).alias("__group")
 
 
 def partition_id() -> int:
@@ -102,7 +110,7 @@ def blob_tree(
     """Multi-level salted merge tree with bounded fan-in.
 
     ``partials`` holds ``(*keys, salt, sketch, *sums)`` rows with
-    ``salt`` starting as the partition id (< ``n_parts``). Each level
+    ``salt`` starting as the partition id modulo ``n_parts``. Each level
     integer-divides ``salt`` by ``fan_in`` and merges within
     ``(*keys, salt)``, shrinking the blob count fan_in-fold, until at
     most ``fan_in`` blobs per key remain for the final. ``keys=
@@ -119,7 +127,12 @@ def blob_tree(
     merges — treeAggregate shape. (The reference's pairwise merge chain,
     src/heavykeeper.rs:406-457, is the degenerate fan_in=2 depth=n
     version.) Level count is derived from the known partition count, so
-    small jobs keep a single shuffle.
+    small jobs keep a single shuffle. The bound assumes ``n_parts`` ≥
+    the partitions P Spark runs. ``n_parts`` is exact on the direct
+    reader and an estimate on Spark's (a ``repartition`` can exceed
+    it); then the salts wrap, a level reducer folds up to
+    ceil(P / n_parts) * fan_in blobs, and when no level runs
+    (``n_parts`` ≤ ``fan_in``) the final gets all P.
     """
 
     def merge_level(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -141,13 +154,20 @@ def blob_tree(
     return out
 
 
-def sketch_partials(keyed: DataFrame, make, feed) -> tuple[DataFrame, int]:
-    """The partial stage of every ungrouped sketch operator, in
-    ``mapInArrow``: ``make(pid)`` builds one sketch per task,
-    ``feed(sketch, batches)`` consumes the task's non-empty Arrow
-    batches, and a task that saw any rows emits one ``(salt = pid %
-    n_parts, blob)`` row. Returns ``(partials, n_parts)`` for
-    ``blob_tree``.
+def sketch_partials(
+    keyed: DataFrame, make, feed, max_live_groups: int | None = None
+) -> tuple[DataFrame, int]:
+    """The partial stage of every sketch operator, in ``mapInArrow``:
+    ``make(pid)`` builds one sketch per task, ``feed(sketch, batches)``
+    consumes the task's non-empty Arrow batches, and a task that saw
+    any rows emits one ``(salt = pid % n_parts, blob)`` row. Returns
+    ``(partials, n_parts)`` for ``blob_tree``.
+
+    With ``max_live_groups`` set, ``keyed`` leads with a
+    ``group_column`` and the stage keeps one sketch per group, at most
+    ``max_live_groups`` of them live (``_group_partials``): ``feed``
+    gets each group's slice of each batch without the group column,
+    and the rows are ``(group, salt, blob)``.
 
     When ``scan.direct_scan`` admits ``keyed``, each task reads its
     parquet units itself and ``n_parts`` is the exact task count;
@@ -167,6 +187,12 @@ def sketch_partials(keyed: DataFrame, make, feed) -> tuple[DataFrame, int]:
         if first is None:
             return
         pid = partition_id()
+        if max_live_groups is not None:
+            yield from _group_partials(
+                chain([first], batches), lambda: make(pid), feed,
+                max_live_groups, pid % n_parts,
+            )
+            return
         sk = make(pid)
         feed(sk, chain([first], batches))
         yield pa.RecordBatch.from_pydict(
@@ -176,7 +202,80 @@ def sketch_partials(keyed: DataFrame, make, feed) -> tuple[DataFrame, int]:
             }
         )
 
-    return source.mapInArrow(fn, BLOB_SCHEMA), n_parts
+    schema = BLOB_SCHEMA if max_live_groups is None else GROUP_BLOB_SCHEMA
+    return source.mapInArrow(fn, schema), n_parts
+
+
+def _group_partials(
+    batches: Iterator[pa.RecordBatch], make, feed, max_live_groups: int, salt: int
+) -> Iterator[pa.RecordBatch]:
+    """Grouped mode of ``sketch_partials``: per-(task, group) sketches
+    with BOUNDED memory in the group dimension.
+
+    A null group renders as ``"None"``. Each batch is split by group,
+    and a group's sketch is made the first time the group appears —
+    before ``feed`` drops null values, so a group whose values are all
+    null still gets its (empty) sketch and appears in a per-group
+    aggregate, as under SQL GROUP BY. At most ``max_live_groups``
+    sketches stay live: when a new group pushes past the cap, the
+    least-recently-touched sketches are emitted early and evicted down
+    to half the cap. The check runs
+    INSIDE the per-batch group loop, because one Arrow batch can carry
+    more distinct groups than the cap (64k-row batches over a URL-scale
+    group key). The per-group merge tree folds several blobs per (task,
+    group), so early emission is merely more partials, never a
+    different answer; with eviction-to-half, a group-ordered stream
+    still amortizes to one blob per (task, group)."""
+    import pyarrow.compute as pc
+
+    cap = max(int(max_live_groups), 2)
+    live: dict[str, object] = {}  # iteration order: least recently touched first
+
+    def emit(groups: list[str]) -> pa.RecordBatch:
+        groups = sorted(groups)
+        return pa.RecordBatch.from_pydict(
+            {
+                "group": pa.array(groups, type=pa.string()),
+                "salt": pa.array([salt] * len(groups), type=pa.int32()),
+                "sketch": pa.array(
+                    [live.pop(g).serialize() for g in groups], type=pa.binary()
+                ),
+            }
+        )
+
+    for batch in batches:
+        d = pc.dictionary_encode(pc.fill_null(batch.column(0), "None"))
+        idx = d.indices.to_numpy()
+        order = np.argsort(idx, kind="stable")
+        bounds = np.searchsorted(idx[order], np.arange(len(d.dictionary) + 1))
+        values = batch.drop_columns([batch.schema.names[0]]).take(pa.array(order))
+        for gi, g in enumerate(d.dictionary.to_pylist()):
+            sk = live.pop(g, None)
+            live[g] = sk = make() if sk is None else sk
+            lo, hi = bounds[gi], bounds[gi + 1]
+            feed(sk, [values.slice(lo, hi - lo)])
+            if len(live) > cap:
+                yield emit(list(live)[: len(live) - cap // 2])
+    if live:
+        yield emit(list(live))
+
+
+def grouped_blob_tree(
+    partials: DataFrame, n_parts: int, fan_in: int, finalize, out_schema: StructType
+) -> DataFrame:
+    """Combine and final of grouped ``sketch_partials`` output: one
+    ``blob_tree`` per group, then ``finalize(group, blobs)`` over each
+    group's ≤ fan_in survivors emits its ``out_schema`` rows. Rows are
+    consumed map-side, so the shuffles carry only blobs — O(partitions ×
+    groups) of them, independent of the row count — and a Zipf-hot
+    group costs each mapper bounded sketch memory instead of landing
+    its row set on one reducer."""
+    tree = blob_tree(partials, n_parts, fan_in, keys=("group",))
+
+    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+        return finalize(str(pdf["group"].iloc[0]), list(pdf["sketch"]))
+
+    return tree.groupBy("group").applyInPandas(final, out_schema)
 
 
 def tree_fold(partials: DataFrame, n_parts: int, fan_in: int, empty):

@@ -24,14 +24,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketches.bloom import Bloom
 from .agg import sketch_agg
+from .topk import probe_distinct
 
 
 _INTEGRAL = {"byte", "tinyint", "short", "smallint", "int", "integer", "long", "bigint"}
@@ -100,24 +99,11 @@ def bloom_prefilter(
     out_schema = big.schema
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         bl = Bloom.deserialize(bc.value)
-        key_idx = None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            if key_idx is None:
-                key_idx = batch.schema.get_field_index("__bloom_key")
-            col = batch.column(key_idx)
-            d = pc.dictionary_encode(col)
-            idx = d.indices.to_numpy(zero_copy_only=False)
-            uniq = d.dictionary.to_numpy(zero_copy_only=False)
-            hit_u = bl.contains(uniq) if len(uniq) else np.zeros(0, dtype=bool)
-            keep = np.zeros(len(col), dtype=bool)
-            valid = pd.notna(idx)
-            if valid.any():
-                keep[valid] = hit_u[idx[valid].astype(np.int64)]
+            keep = probe_distinct(batch.column("__bloom_key"), bl.contains, bool)
             out = batch.drop_columns(["__bloom_key"]).filter(pa.array(keep))
             if out.num_rows:
                 yield out

@@ -4,20 +4,25 @@ The reference's build → merge → list flow (examples/ip_files.rs +
 src/heavykeeper.rs:406-457) re-expressed as a Spark two-phase
 aggregate, exactly the shape of Catalyst's HashAggregateExec pair:
 
-  partial:  per-partition sketch build inside ``mapInArrow`` (Arrow
-            batches → np.unique pre-aggregation → vectorized kernel)
+  partial:  per-partition sketch build in ``combine.sketch_partials``
+            (Arrow batches → pre-aggregation → vectorized kernel);
+            ``topk_by_group`` runs the same stage in its grouped mode,
+            one sketch per (partition, group), with the same keyed
+            projection (``topk_keyed``) and feed (``_feed_keys``)
   combine:  salted multi-level ``groupBy(salt).applyInPandas`` merge
             tree with bounded fan-in (``combine.blob_tree``) — the
             explicit skew control demanded by the north rule: no
             single reducer ever merges more than ``fan_in`` blobs
   final:    driver merges the ≤ fan_in surviving blobs and emits an
-            ordered result DataFrame
+            ordered result DataFrame (per group, in
+            ``combine.grouped_blob_tree``, for ``topk_by_group``)
 
 Scale notes (100 TB / 1000-executor thinking):
 - The shuffles move only sketch blobs (~KiB–MiB each), never row
   data. Input rows are consumed map-side.
 - Column pruning: the partial stage reads ONLY the keyed projection
-  (``topk_keyed`` / ``token_keyed``). A plain parquet projection is
+  (``topk_keyed``, with the group column when grouped, or
+  ``token_keyed``). A plain parquet projection is
   read by the direct reader (``scan.direct_scan``: pyarrow in the
   worker, no JVM row→Arrow transfer; its plan is ``MapInArrow`` over a
   ``Range`` of read tasks, with no FileScan); any other plan keeps
@@ -49,8 +54,7 @@ from pyspark.sql.types import (
 from ..kernel import HeavyKeeper, HKParams
 from ..variants import BucketedTopK, CuckooTopK
 from . import combine
-from .combine import partition_id, partition_rng, sketch_partials, tree_fold
-from .scan import estimate_partitions
+from .combine import partition_rng, sketch_partials, tree_fold
 
 #: sketch-variant registry (README.md:48-51: all three expose one API)
 VARIANTS = {
@@ -163,6 +167,8 @@ def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int):
     h = hash_string_buffers(offsets, data, seed)
 
     def key_take(sel: np.ndarray) -> np.ndarray:
+        if len(sel) == nd:  # every key enters the queue (it has room): no take
+            return np.asarray(dic.to_pylist(), dtype=object)[sel]
         return np.asarray(dic.take(pa.array(sel)).to_pylist(), dtype=object)
 
     sk.add_batch_hashed(h, wagg, key_take)
@@ -229,7 +235,9 @@ def _feed_keys(weighted: bool, seed: int):
                     )
                 )
             else:
-                col = batch.column(0).drop_null()
+                col = batch.column(0)
+                if col.null_count:
+                    col = col.drop_null()
                 if len(col) == 0:
                     continue
                 kbuf.append(col)
@@ -248,21 +256,29 @@ def topk_partials(
     params: HKParams,
     weight_col: str | None = None,
     variant: str = "topk",
+    group_col: str | None = None,
+    max_live_groups: int = 4096,
 ) -> tuple[DataFrame, int]:
-    """The partial stage of ``topk_sketch``: ``topk_keyed`` into one
-    sketch per task. Returns ``(partials, n_parts)``."""
+    """The partial stage of ``topk_sketch`` (and, with ``group_col``,
+    of ``topk_by_group``): ``topk_keyed`` into one sketch per task, or
+    per (task, group). Returns ``(partials, n_parts)``."""
     return sketch_partials(
-        topk_keyed(df, col, weight_col),
+        topk_keyed(df, col, weight_col, group_col),
         lambda pid: _make_sketch(variant, params, partition_rng(params.seed, pid)),
         _feed_keys(weight_col is not None, params.seed),
+        None if group_col is None else max_live_groups,
     )
 
 
-def topk_keyed(df: DataFrame, col: str, weight_col: str | None = None) -> DataFrame:
-    """The keyed projection ``topk_partials`` reads: ``__key`` by the
-    key rule, and the ``__w`` weight as bigint. Only these columns are
-    read, by Spark's scan (column pruning) or by the direct reader."""
-    cols = [_key_column(df, col).alias("__key")]
+def topk_keyed(
+    df: DataFrame, col: str, weight_col: str | None = None, group_col: str | None = None
+) -> DataFrame:
+    """The keyed projection ``topk_partials`` reads: the group column
+    when grouped, ``__key`` by the key rule, and the ``__w`` weight as
+    bigint. Only these columns are read, by Spark's scan (column
+    pruning) or by the direct reader."""
+    cols = [] if group_col is None else [combine.group_column(group_col)]
+    cols.append(_key_column(df, col).alias("__key"))
     if weight_col is not None:
         cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
     return df.select(*cols)
@@ -330,19 +346,23 @@ def topk(
 def _result_df(spark: SparkSession, sk, k: int, tie_break_key: bool) -> DataFrame:
     """The sketch's top ``k`` as an ``(item string, count long)``
     DataFrame, ordered by count desc."""
-    rows = sk.list()
-    if tie_break_key:
-        # ties order by the RENDERED item (the output column is a
-        # string, and every SQL oracle orders by it as VARCHAR) — for
-        # str/bytes keys this equals the old byte order (UTF-8
-        # preserves code-point order); for the int64 fast lane it makes
-        # "10" < "9" match the oracle instead of 9 < 10
-        rows = sorted(rows, key=lambda t: (-t[1], _item_str(t[0])))
-    data = [(_item_str(item), int(c)) for item, c in rows[:k]]
     schema = StructType(
         [StructField("item", StringType(), False), StructField("count", LongType(), False)]
     )
-    return local_result_df(spark, data, schema)
+    return local_result_df(spark, _top_rows(sk, k, tie_break_key), schema)
+
+
+def _top_rows(sk, k: int, tie_break_key: bool) -> list[tuple[str, int]]:
+    """The sketch's top ``k`` as rendered ``(item, count)`` rows, count
+    desc. With ``tie_break_key``, ties order by the RENDERED item: the
+    output column is a string, and every SQL oracle orders it as
+    VARCHAR. For str/bytes keys that is their byte order (UTF-8 keeps
+    code-point order); for the int64 lane it puts "10" before "9", as
+    the oracle does, instead of 9 before 10."""
+    rows = sk.list()
+    if tie_break_key:
+        rows = sorted(rows, key=lambda t: (-t[1], _item_str(t[0])))
+    return [(_item_str(item), int(c)) for item, c in rows[:k]]
 
 
 def _item_str(item) -> str:
@@ -402,25 +422,21 @@ def _feed(sk, rex, chunk: list[str], max_token_len: int) -> None:
         sk.add_batch(uniq, weights=w)
 
 
-def _feed_text(
-    sk, col: pa.Array, rex: re.Pattern, max_token_len: int, seed: int
-) -> int:
-    """Tokenize one Arrow text column into the sketch; returns the
-    number of non-null documents fed. The default ``[a-z]+`` pattern
-    takes the object-free Arrow path; non-ASCII batches or a custom
-    pattern fall back to the chunked C-level regex pass."""
+def _feed_text(sk, col: pa.Array, rex: re.Pattern, max_token_len: int, seed: int) -> None:
+    """Tokenize one Arrow text column into the sketch. The default
+    ``[a-z]+`` pattern takes the object-free Arrow path; non-ASCII
+    batches or a custom pattern fall back to the chunked C-level regex
+    pass."""
     if rex.pattern == "[a-z]+" and _feed_tokens_arrow(sk, col, max_token_len, seed):
-        return len(col) - col.null_count
+        return
     # chunked join: one C-level regex pass per ~4 MB of text — NOT one
     # batch-wide string (64k multi-KB docs would build a transient
     # multi-hundred-MB str)
     chunk: list[str] = []
     size = 0
-    rows = 0
     for t in col.to_numpy(zero_copy_only=False):
         if t is None:
             continue
-        rows += 1
         chunk.append(t)
         size += len(t)
         if size < (4 << 20):
@@ -429,7 +445,18 @@ def _feed_text(
         chunk, size = [], 0
     if chunk:
         _feed(sk, rex, chunk, max_token_len)
-    return rows
+
+
+def _feed_tokens(token_re: str, max_token_len: int, seed: int):
+    """``sketch_partials`` feed of the token operators: every batch's
+    text column through ``_feed_text``."""
+    rex = re.compile(token_re)
+
+    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
+        for batch in batches:
+            _feed_text(sk, batch.column(0), rex, max_token_len, seed)
+
+    return feed
 
 
 def token_partials(
@@ -442,16 +469,10 @@ def token_partials(
     """The partial stage of ``topk_tokens``: ``token_keyed`` straight
     into one in-kernel-tokenizing sketch per task. Returns
     ``(partials, n_parts)``."""
-    rex = re.compile(token_re)
-
-    def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
-        for batch in batches:
-            _feed_text(sk, batch.column(0), rex, max_token_len, params.seed)
-
     return sketch_partials(
         token_keyed(df, text_col),
         lambda pid: HeavyKeeper(params, rng=partition_rng(params.seed, pid)),
-        feed,
+        _feed_tokens(token_re, max_token_len, params.seed),
     )
 
 
@@ -495,145 +516,6 @@ def topk_tokens(
     return _result_df(df.sparkSession, sk, k, tie_break_key)
 
 
-def grouped_partial_builder(
-    new_sketch,
-    feed,
-    max_live_groups: int = 4096,
-    weighted: bool = False,
-):
-    """mapInArrow kernel factory for per-(partition, group) partials
-    with BOUNDED memory in the group dimension.
-
-    ``new_sketch(pid) -> sketch`` and ``feed(sketch, values)`` define
-    the sketch family (``feed(sketch, values, weights)`` when
-    ``weighted`` — the batch then carries a third weight column; rows
-    with a null value OR weight are skipped). Each mapper keeps at most
-    ``max_live_groups`` live sketches; when feeding pushes it past the
-    cap, the least-recently-touched sketches are serialized, emitted
-    early, and evicted down to half the cap — the per-group merge tree
-    downstream folds multiple blobs per (partition, group), so early
-    emission is merely more partials, never wrong. The cap is enforced
-    INSIDE the per-batch group loop, not just between batches: one
-    Arrow batch can carry more distinct groups than the cap (64k-row
-    batches over a URL-scale group key), and a between-batches-only
-    check would let the live dict spike to O(batch distinct groups)
-    sketches. High-cardinality group keys therefore cost
-    O(max_live_groups × sketch size) per mapper instead of O(all
-    groups seen) — with eviction-to-half, a group-ordered stream still
-    amortizes to one blob per (partition, group).
-    """
-    cap = max(int(max_live_groups), 2)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = partition_id()
-        sketches: dict[str, object] = {}
-        touch: dict[str, int] = {}
-        t = 0
-
-        def flush(groups_to_flush: list[str]) -> pa.RecordBatch:
-            items = sorted((g, sketches.pop(g)) for g in groups_to_flush)
-            for g in groups_to_flush:
-                touch.pop(g, None)
-            return pa.RecordBatch.from_pydict(
-                {
-                    "group": pa.array([g for g, _ in items], type=pa.string()),
-                    "salt": pa.array([pid] * len(items), type=pa.int32()),
-                    "sketch": pa.array(
-                        [sk.serialize() for _, sk in items], type=pa.binary()
-                    ),
-                }
-            )
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            t += 1
-            g = batch.column(0).to_numpy(zero_copy_only=False)
-            v = batch.column(1).to_numpy(zero_copy_only=False)
-            w = batch.column(2).to_numpy(zero_copy_only=False) if weighted else None
-            valid = pd.notna(v) if w is None else (pd.notna(v) & pd.notna(w))
-            if not valid.all():
-                # a group whose values are ALL null must still exist in
-                # the output (SQL GROUP BY semantics: the group appears,
-                # its aggregate sees zero values) — materialize an empty
-                # sketch for any group dropped by the null filter
-                for gn in np.unique(np.asarray(g[~valid], dtype=object)):
-                    if gn not in sketches:
-                        sketches[gn] = new_sketch(pid)
-                        touch[gn] = t
-                    if len(sketches) > cap:
-                        olds = sorted(touch, key=touch.get)[: len(sketches) - cap // 2]
-                        yield flush(olds)
-                g, v = g[valid], v[valid]
-                if w is not None:
-                    w = w[valid]
-            if v.size == 0:
-                continue
-            ug, inv = np.unique(np.asarray(g, dtype=object), return_inverse=True)
-            order = np.argsort(inv, kind="stable")
-            bounds = np.searchsorted(inv[order], np.arange(ug.shape[0] + 1))
-            for gi in range(ug.shape[0]):
-                sk = sketches.get(ug[gi])
-                if sk is None:
-                    sk = sketches[ug[gi]] = new_sketch(pid)
-                sel = order[bounds[gi] : bounds[gi + 1]]
-                if w is None:
-                    feed(sk, v[sel])
-                else:
-                    feed(sk, v[sel], w[sel])
-                touch[ug[gi]] = t
-                if len(sketches) > cap:
-                    # evict to half the cap so a stream of fresh groups
-                    # flushes in cap/2-sized chunks, not one group at a
-                    # time; LRU order — groups fed earlier in THIS batch
-                    # are eligible (their blobs merge downstream)
-                    olds = sorted(touch, key=touch.get)[: len(sketches) - cap // 2]
-                    yield flush(olds)
-        if sketches:
-            yield flush(list(sketches))
-
-    return build
-
-
-def grouped_blob_tree(
-    keyed: DataFrame,
-    build_partials,
-    finalize_fn,
-    out_schema: StructType,
-    fan_in: int = 64,
-) -> DataFrame:
-    """Shared scaffold for per-group sketch aggregation that never
-    shuffles rows — only serialized sketch blobs.
-
-    Shape (the per-group analog of the ungrouped combine):
-
-      partial:  ``build_partials`` runs in ``mapInArrow`` and emits one
-                (group, salt=partition_id, blob) row per (partition,
-                group) — rows are consumed map-side, so the shuffle
-                payload is O(partitions × groups) KiB-scale blobs,
-                independent of row count. A Zipf-hot group costs each
-                *mapper* bounded sketch memory instead of landing its
-                entire row set on one reducer.
-      combine:  ``combine.blob_tree`` keyed by group — multi-level
-                ``groupBy(group, salt // fan_in)`` merges; no reducer
-                folds more than ``fan_in`` blobs per level, so a group
-                spread over 10^5 partitions merges in
-                ~log_fan_in(10^5) ≈ 6 levels rather than one 10^5-way
-                fold.
-      final:    ``groupBy(group)`` over the ≤ fan_in survivors runs
-                ``finalize_fn(group, blobs)`` to emit result rows.
-    """
-    partials = keyed.mapInArrow(build_partials, combine.GROUP_BLOB_SCHEMA)
-    tree = combine.blob_tree(
-        partials, estimate_partitions(keyed), fan_in, keys=("group",)
-    )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        return finalize_fn(str(pdf["group"].iloc[0]), list(pdf["sketch"]))
-
-    return tree.groupBy("group").applyInPandas(final, out_schema)
-
-
 def topk_by_group(
     df: DataFrame,
     group_col: str,
@@ -651,8 +533,11 @@ def topk_by_group(
     candidates: int | None = None,
 ) -> DataFrame:
     """Top-K keys within each group — one sketch per group, built
-    scale-safe: partial sketches per (partition, group) map-side, then
-    a bounded-fan-in blob merge tree per group (``grouped_blob_tree``).
+    scale-safe: the grouped mode of ``topk``'s partial stage
+    (``topk_partials`` with ``group_col``: the same key rule, feed and
+    reader, one sketch per (partition, group) map-side), then a
+    bounded-fan-in blob merge tree per group
+    (``combine.grouped_blob_tree``).
 
     SURVEY §2.4: the reference has no grouping sets; multi-dimension
     top-K is done by running the sketch per group key. No row ever
@@ -681,38 +566,20 @@ def topk_by_group(
         ]
     )
 
-    def new_sketch(pid: int):
-        return _make_sketch(variant, params, partition_rng(params.seed, pid))
-
-    def feed(sk, vals, w=None) -> None:
-        sk.add_batch(vals, None if w is None else np.asarray(w, dtype=np.int64))
-
-    weighted = weight_col is not None
-    build = grouped_partial_builder(
-        new_sketch, feed, max_live_groups, weighted=weighted
-    )
-
     def finalize(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        rows = combine.fold(blobs).list()
-        if tie_break_key:
-            rows = sorted(rows, key=lambda t: (-t[1], t[0]))
-        rows = rows[:k]
+        rows = _top_rows(combine.fold(blobs), k, tie_break_key)
         return pd.DataFrame(
             {
                 "group": [group] * len(rows),
-                "item": [_item_str(it) for it, _ in rows],
-                "count": [int(c) for _, c in rows],
+                "item": [it for it, _ in rows],
+                "count": [c for _, c in rows],
             }
         )
 
-    cols = [
-        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__group"),
-        F.col(key_col).cast(StringType()).alias("__key"),
-    ]
-    if weighted:
-        cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
-    keyed = df.select(*cols)
-    return grouped_blob_tree(keyed, build, finalize, out_schema, fan_in=fan_in)
+    partials, n_parts = topk_partials(
+        df, key_col, params, weight_col, variant, group_col, max_live_groups
+    )
+    return combine.grouped_blob_tree(partials, n_parts, fan_in, finalize, out_schema)
 
 
 def contains_top_k(df: DataFrame, col: str, sketch) -> DataFrame:
@@ -725,6 +592,23 @@ def contains_top_k(df: DataFrame, col: str, sketch) -> DataFrame:
     compare matches the cast column."""
     items = [_item_str(it) for it, _ in sketch.list()]
     return df.filter(F.col(col).cast(StringType()).isin(items))
+
+
+def probe_distinct(col: pa.Array, probe, dtype) -> np.ndarray:
+    """``probe(distinct values of col)`` scattered back to every row:
+    one dictionary-encode pass (C), each distinct value probed once,
+    and a null row gets ``dtype``'s zero. The per-batch loop of every
+    broadcast probe (``estimate``, ``joins.bloom_prefilter``)."""
+    import pyarrow.compute as pc
+
+    d = pc.dictionary_encode(col)
+    idx = d.indices.to_numpy(zero_copy_only=False)  # float with NaN on null
+    out = np.zeros(len(col), dtype=dtype)
+    valid = pd.notna(idx)
+    if valid.any():
+        uniq = d.dictionary.to_numpy(zero_copy_only=False)
+        out[valid] = probe(uniq)[idx[valid].astype(np.int64)]
+    return out
 
 
 def estimate(
@@ -752,27 +636,14 @@ def estimate(
     )
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         sk = deserialize_any(bc.value)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            col_a = batch.column(batch.schema.get_field_index("__probe_key"))
-            # probe distinct keys only (dictionary_encode is one C
-            # pass); scatter estimates back through the indices
-            d = pc.dictionary_encode(col_a)
-            idx = d.indices.to_numpy(zero_copy_only=False)  # float w/ NaN on null
-            uniq = d.dictionary.to_numpy(zero_copy_only=False)
-            est_u = sk.estimate(uniq) if len(uniq) else np.zeros(0, dtype=np.int64)
-            est = np.zeros(len(col_a), dtype=np.int64)
-            valid = pd.notna(idx)
-            if valid.any():
-                est[valid] = est_u[idx[valid].astype(np.int64)]
-            out = batch.drop_columns(["__probe_key"]).append_column(
+            est = probe_distinct(batch.column("__probe_key"), sk.estimate, np.int64)
+            yield batch.drop_columns(["__probe_key"]).append_column(
                 out_col, pa.array(est, type=pa.int64())
             )
-            yield out
 
     withkey = df.withColumn("__probe_key", _key_column(df, col))
     return withkey.mapInArrow(probe, out_schema)

@@ -38,14 +38,13 @@ import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..kernel import HeavyKeeper, HKParams
 from ..operators import combine
+from ..operators.topk import _feed_keys, _feed_tokens, token_keyed, topk_keyed
 
 _CKPT_SCHEMA = StructType(
     [
@@ -58,10 +57,10 @@ _CKPT_SUMS = ("resumed", "computed")
 
 
 def _params_token(
-    params: HKParams, lineage: str, n_parts: int, mode: str = "topk"
+    params: HKParams, lineage: str, n_parts: int, mode: str, lane: str
 ) -> str:
-    """Job identity: sketch shape + build mode + input lineage +
-    PARTITION LAYOUT.
+    """Job identity: sketch shape + build mode + key lane + input
+    lineage + PARTITION LAYOUT.
 
     The partition count is part of the identity because partial blobs
     are keyed by partition id — a rerun that splits the same input
@@ -70,10 +69,12 @@ def _params_token(
     that now hold different rows, silently dropping/double-counting.
     A layout change makes the token mismatch and the job refuses the
     stale checkpoint instead. ``mode`` keeps a tokens build from
-    resuming a plain-column build with the same params.
+    resuming a plain-column build with the same params. ``lane`` is the
+    keyed column's Spark type: the int64 lane and the string lane hash
+    one value differently, so their partials never merge.
     """
     return (
-        f"mode={mode};k={params.k};w={params.width};d={params.depth};"
+        f"mode={mode};lane={lane};k={params.k};w={params.width};d={params.depth};"
         f"decay={params.decay};seed={params.seed};lineage={lineage};"
         f"n_parts={n_parts}"
     )
@@ -105,15 +106,17 @@ def _checkpointed_sketch(
     lineage: str,
     fan_in: int,
     mode: str,
-    feed: Callable[[HeavyKeeper, pa.RecordBatch], int],
+    feed: Callable[[HeavyKeeper, Iterator[pa.RecordBatch]], None],
 ) -> tuple[HeavyKeeper, CheckpointReport]:
     """Shared resumable-build scaffold: per-partition partial blobs on
     shared storage, bounded-fan-in merge tree, O(1) completed-job
-    resume. ``feed(sketch, batch) -> rows_consumed`` is the only
-    mode-specific piece."""
+    resume. ``keyed`` and ``feed(sketch, batches)`` are those of the
+    mode's ``sketch_partials`` stage; a partition's metrics count the
+    non-null values of its first column as its rows."""
     os.makedirs(f"{ckpt_dir}/partials", exist_ok=True)
     n_input_parts = max(keyed.rdd.getNumPartitions(), 1)
-    token = _params_token(params, lineage, n_input_parts, mode)
+    lane = keyed.schema.fields[0].dataType.simpleString()
+    token = _params_token(params, lineage, n_input_parts, mode, lane)
     token_path = f"{ckpt_dir}/TOKEN"
     if os.path.exists(token_path):
         existing = open(token_path).read()
@@ -151,10 +154,15 @@ def _checkpointed_sketch(
         sk = HeavyKeeper(params, rng=combine.partition_rng(params.seed, pid))
         t0 = time.time()
         rows = 0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            rows += feed(sk, batch)
+
+        def counted() -> Iterator[pa.RecordBatch]:
+            nonlocal rows
+            for batch in batches:
+                if batch.num_rows:
+                    rows += batch.num_rows - batch.column(0).null_count
+                    yield batch
+
+        feed(sk, counted())
         blob = sk.serialize()
         _atomic_write(blob_path, blob)
         metrics = {
@@ -209,16 +217,9 @@ def topk_checkpointed(
     checkpoints never silently merge. ``merge_groups`` is the merge
     tree's fan-in.
     """
-    keyed = df.select(F.col(col).cast(StringType()).alias("__key"))
-
-    def feed(sk: HeavyKeeper, batch: pa.RecordBatch) -> int:
-        keys = batch.column(0).to_numpy(zero_copy_only=False)
-        valid = pd.notna(keys)
-        sk.add_batch(keys[valid])
-        return int(valid.sum())
-
     return _checkpointed_sketch(
-        keyed, params, ckpt_dir, lineage, merge_groups, "topk", feed
+        topk_keyed(df, col), params, ckpt_dir, lineage, merge_groups, "topk",
+        _feed_keys(False, params.seed),
     )
 
 
@@ -238,18 +239,9 @@ def topk_tokens_checkpointed(
     most worth resuming: each partition's tokenizer pass is minutes of
     CPU, and a preempted executor costs exactly its unfinished
     partitions, not the run."""
-    import re
-
-    from ..operators.topk import _feed_text
-
-    rex = re.compile(token_re)
-    keyed = df.select(F.col(text_col).cast(StringType()).alias("__text"))
-
-    def feed(sk: HeavyKeeper, batch: pa.RecordBatch) -> int:
-        return _feed_text(sk, batch.column(0), rex, max_token_len, params.seed)
-
     return _checkpointed_sketch(
-        keyed, params, ckpt_dir, lineage, merge_groups, "tokens", feed
+        token_keyed(df, text_col), params, ckpt_dir, lineage, merge_groups, "tokens",
+        _feed_tokens(token_re, max_token_len, params.seed),
     )
 
 

@@ -87,6 +87,30 @@ def test_checkpoint_refuses_wrong_job(spark, events, tmp_path):
         topk_checkpointed(events, "event_type", PARAMS, ckpt, lineage="B")
 
 
+def test_int_key_checkpoint_estimates_on_the_int_lane(spark, events, tmp_path):
+    """An integer key column builds on the int64 lane, as ``topk_sketch``
+    does, so ``estimate`` (which probes integers on that lane) finds
+    its keys."""
+    from heavykeeper_rs_spark.operators.topk import estimate, topk_sketch
+
+    sk, _ = topk_checkpointed(events, "user_id", PARAMS, str(tmp_path / "ck_int"))
+    plain = topk_sketch(events, "user_id", k=10, width=2048, depth=4)
+    probe = events.select("user_id").distinct().orderBy("user_id").limit(5)
+    got = [r["est_count"] for r in estimate(probe, "user_id", sk).orderBy("user_id").collect()]
+    want = [r["est_count"] for r in estimate(probe, "user_id", plain).orderBy("user_id").collect()]
+    assert got == want and min(got) > 0
+
+
+def test_checkpoint_refuses_other_key_lane(spark, events, tmp_path):
+    """Partials of a string column never resume an integer-column build
+    of the same job: the two lanes hash one value differently."""
+    ckpt = str(tmp_path / "ck_lane")
+    as_string = events.withColumn("user_id", F.col("user_id").cast("string"))
+    topk_checkpointed(as_string, "user_id", PARAMS, ckpt, lineage="L")
+    with pytest.raises(ValueError, match="different job"):
+        topk_checkpointed(events, "user_id", PARAMS, ckpt, lineage="L")
+
+
 def test_results_match_unckpt_build(spark, events, tmp_path):
     from heavykeeper_rs_spark.operators.topk import topk_sketch
 

@@ -1,7 +1,7 @@
 """The direct parquet reader of the sketch partial stages
 (``scan.direct_scan``): over a multi-file fixture with null keys, empty
 files, a file without the key column and a file whose key column name
-differs only in case, every operator built on ``combine.sketch_partials``
+differs only in case, every operator built on ``combine.sketch_partials``, grouped or not,
 must give DuckDB's exact answer, as Spark's own reader does."""
 
 import contextlib
@@ -13,10 +13,23 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
 from heavykeeper_rs_spark.kernel import HKParams
-from heavykeeper_rs_spark.operators import scan
-from heavykeeper_rs_spark.operators.agg import cms_build, hll_build
-from heavykeeper_rs_spark.operators.topk import topk, topk_keyed, topk_partials, topk_tokens
+from heavykeeper_rs_spark.operators import combine, scan
+from heavykeeper_rs_spark.operators.agg import (
+    agg_keyed,
+    cms_build,
+    hll_build,
+    hll_distinct_by_group,
+)
+from heavykeeper_rs_spark.operators.topk import (
+    topk,
+    topk_by_group,
+    topk_keyed,
+    topk_partials,
+    topk_tokens,
+)
 from heavykeeper_rs_spark.sketches.hll import HLL
 
 SCHEMA = "k bigint, w bigint, s string, t string"
@@ -198,3 +211,94 @@ def test_row_group_units_make_exact_partial_count(spark, tmp_path):
     par = spark.sparkContext.defaultParallelism
     assert n_parts == min(8, par)
     assert partials.count() == min(8, n_parts)
+
+
+def test_grouped_gate(spark, df, tmp_path):
+    """A grouped projection of plain columns is read directly: a string
+    group with an int key (and its bigint weight), or with the agg
+    family's string values. A computed group or a double weight cast to
+    bigint keeps Spark's reader."""
+    assert scan.direct_scan(topk_keyed(df, "k", "w", group_col="s")) is not None
+    assert scan.direct_scan(agg_keyed(df, "t", group_col="s")) is not None
+    computed = df.withColumn("g", F.upper("s"))
+    assert scan.direct_scan(topk_keyed(computed, "k", group_col="g")) is None
+    pq.write_table(
+        pa.table({"g": ["a", "b"], "k": pa.array([1, 2], pa.int64()), "w": [1.5, 2.0]}),
+        tmp_path / "d.parquet",
+    )
+    doubles = spark.read.parquet(str(tmp_path))
+    assert scan.direct_scan(topk_keyed(doubles, "k", group_col="g")) is not None
+    assert scan.direct_scan(topk_keyed(doubles, "k", "w", group_col="g")) is None
+
+
+def test_topk_by_group_equals_exact(df, rows):
+    """Per-group top-k over the direct reader: null groups render
+    ``None``, null keys are skipped, ties order by the rendered key."""
+    assert scan.direct_scan(topk_keyed(df, "k", group_col="s")) is not None
+    exact = _exact(
+        rows,
+        "SELECT g, item, n FROM (SELECT coalesce(s, 'None') AS g, "
+        "CAST(k AS VARCHAR) AS item, count(*) AS n FROM rows WHERE k IS NOT NULL "
+        "GROUP BY 1, 2) QUALIFY row_number() OVER (PARTITION BY g ORDER BY n DESC, "
+        "item) <= 3 ORDER BY g, n DESC, item",
+    )
+    got = topk_by_group(df, "s", "k", k=3, width=4096)
+    got = [(r["group"], r["item"], r["count"]) for r in got.orderBy("group", F.desc("count"), "item").collect()]
+    assert got == exact
+    assert "None" in {g for g, _, _ in got}
+
+
+def test_hll_by_group_equals_one_sketch_per_group(df, rows):
+    """Each group's merged HLL equals one sketch fed every non-null
+    value of that group (the null group as ``None``)."""
+    assert scan.direct_scan(agg_keyed(df, "t", group_col="s")) is not None
+    got = {r["group"]: r["n_distinct_est"] for r in hll_distinct_by_group(df, "s", "t", p=12, seed=7).collect()}
+    want = {}
+    exact = dict(_exact(rows, "SELECT coalesce(s, 'None'), count(DISTINCT t) FROM rows GROUP BY 1"))
+    for g in exact:
+        ref = HLL(12, 7)
+        vals = [t for s, t in zip(rows["s"].to_pylist(), rows["t"].to_pylist()) if (s or "None") == g]
+        ref.add_batch(np.asarray([v for v in vals if v is not None], dtype=object))
+        want[g] = ref.estimate()
+    assert got == want
+    assert all(abs(got[g] - n) <= 0.05 * n for g, n in exact.items())
+
+
+def test_grouped_null_group_and_all_null_values(spark, tmp_path):
+    """Over the direct reader, a null group renders ``None``, and a
+    group whose values are all null still appears (as under SQL GROUP
+    BY), with no items in its top-k and a zero distinct estimate."""
+    pq.write_table(
+        pa.table(
+            {
+                "g": ["a", "a", None, "b", "b", None],
+                "v": ["x", "y", "x", None, None, "z"],
+            }
+        ),
+        tmp_path / "g.parquet",
+    )
+    df = spark.read.parquet(str(tmp_path))
+    assert scan.direct_scan(agg_keyed(df, "v", group_col="g")) is not None
+    hll = {r["group"]: r["n_distinct_est"] for r in hll_distinct_by_group(df, "g", "v").collect()}
+    assert set(hll) == {"a", "b", "None"}
+    assert hll["b"] == 0.0
+    assert round(hll["a"]) == round(hll["None"]) == 2
+    top = {(r["group"], r["item"], r["count"]) for r in topk_by_group(df, "g", "v", k=2).collect()}
+    assert top == {("a", "x", 1), ("a", "y", 1), ("None", "x", 1), ("None", "z", 1)}
+
+
+def test_grouped_final_folds_at_most_fan_in(spark):
+    """With more Spark partitions than the estimate (repartition(20)),
+    grouped salts wrap modulo ``n_parts``, so no group hands more than
+    ``fan_in`` blobs to its final."""
+    ev = spark.range(6000).select(
+        (F.col("id") % 3).cast("string").alias("bucket"), (F.col("id") % 7).alias("key")
+    ).repartition(20)
+    partials, n_parts = topk_partials(
+        ev, "key", HKParams(k=4, width=256, depth=4), group_col="bucket"
+    )
+    assert partials.agg(F.max("salt")).collect()[0][0] < n_parts
+    tree = combine.blob_tree(partials, n_parts, 4, keys=("group",))
+    per_group = tree.groupBy("group").count().collect()
+    assert len(per_group) == 3
+    assert max(r["count"] for r in per_group) <= 4

@@ -363,40 +363,57 @@ def test_flat_domain_candidate_pool_by_group(spark):
     assert by_group == {"a": expect, "b": expect}
 
 
+def test_grouped_int_key_ties_order_as_strings(spark):
+    """Grouped integer keys: ties order by the rendered item, as the
+    SQL oracle orders the VARCHAR column ("10" before "9")."""
+    from heavykeeper_rs_spark.operators.topk import topk_by_group
+
+    rows = [("a", 9)] * 3 + [("a", 10)] * 3 + [("a", 8)] + [("b", 2)] * 2 + [("b", 11)] * 2
+    df = spark.createDataFrame(rows, "g string, key bigint")
+    got = topk_by_group(df, "g", "key", k=2, width=1024).collect()
+    assert sorted((r["group"], r["item"], r["count"]) for r in got) == [
+        ("a", "10", 3), ("a", "9", 3), ("b", "11", 2), ("b", "2", 2),
+    ]
+    got = topk_by_group(df, "g", "key", k=1, width=1024).collect()
+    assert sorted((r["group"], r["item"]) for r in got) == [("a", "10"), ("b", "11")]
+
+
 def test_grouped_builder_caps_live_sketches_within_batch():
     """One Arrow batch can carry more distinct groups than
     max_live_groups; the cap must hold INSIDE the batch loop (a
     between-batches check lets live memory spike to O(batch distinct
-    groups)). Asserts flushes happen mid-batch, the live count never
-    exceeds the cap at any yield point, and the merged blobs still
-    give exact counts."""
+    groups)). Drives the grouped mode of ``combine.sketch_partials``
+    with ``topk``'s feed. Asserts flushes happen mid-batch, the live
+    count never exceeds the cap at any yield point, and the merged
+    blobs still give exact counts."""
     import pyarrow as pa
 
     from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams, merge_blobs
-    from heavykeeper_rs_spark.operators.topk import grouped_partial_builder
+    from heavykeeper_rs_spark.operators.combine import _group_partials
+    from heavykeeper_rs_spark.operators.topk import _feed_keys
 
     params = HKParams(k=8, width=1024, depth=4, decay=0.9, seed=1)
     created = 0
 
-    def new_sketch(pid):
+    def new_sketch():
         nonlocal created
         created += 1
         return HeavyKeeper(params)
 
     cap = 8
-    build = grouped_partial_builder(
-        new_sketch, lambda sk, vals: sk.add_batch(vals), max_live_groups=cap
-    )
     n_groups, reps = 100, 3
     groups = [f"g{i:03d}" for i in range(n_groups) for _ in range(reps)]
     vals = [f"v{i % 5}" for i in range(len(groups))]
     batch = pa.RecordBatch.from_pydict(
         {"g": pa.array(groups), "v": pa.array(vals)}
     )
+    stage = _group_partials(
+        iter([batch]), new_sketch, _feed_keys(False, params.seed), cap, salt=0
+    )
     blobs: dict[str, list[bytes]] = {}
     n_flushes = 0
     flushed = 0
-    for out in build(iter([batch])):
+    for out in stage:
         n_flushes += 1
         flushed += out.num_rows
         # live sketches = created - flushed; never above the cap + the

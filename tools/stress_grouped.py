@@ -12,18 +12,22 @@ Checks:
   - results are IDENTICAL across max_live_groups=512 and 4096 (early
     emission is merely more partials, never different answers)
   - a deterministic sample of groups matches exact pandas counts
-  - wall + driver peak RSS are reported for BENCH.md
+  - wall + driver peak RSS are reported for BENCH.md, with a digest
+    of the result for comparing two trees
 
 Usage: python tools/stress_grouped.py [n_rows] [n_groups]
+(the master is ``get_spark()``'s: ``local[$SPARK_GRAFT_CPUS]``)
 """
 from __future__ import annotations
 
+import hashlib
 import json
+import os
 import resource
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
@@ -34,7 +38,7 @@ from heavykeeper_rs_spark.session import get_spark  # noqa: E402
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
     n_groups = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
-    spark = get_spark(app="stress-grouped", master="local[32]", shuffle_partitions=32)
+    spark = get_spark(app="stress-grouped")
 
     # deterministic synthetic: Zipf-ish group sizes, per-group item
     # domain of 8 with a Zipf-ish within-group split — all derived
@@ -78,6 +82,8 @@ def main() -> None:
         }
     assert results[512] == results[4096], "eviction pressure changed results"
     out["identical_across_caps"] = True
+    # digest of the full result, to compare two trees' runs
+    out["result_sha1"] = hashlib.sha1(repr(sorted(results[4096].items())).encode()).hexdigest()
 
     # exact-sample verification: 25 deterministic groups vs pandas
     sample_groups = sorted({g for g, _ in results[4096]})[:25]
