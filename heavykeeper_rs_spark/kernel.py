@@ -1,13 +1,14 @@
-"""NumPy HeavyKeeper top-K sketch kernel.
+"""HeavyKeeper top-K sketch kernel.
 
-A from-scratch, vectorized re-implementation of the *semantics* of the
-reference crate (pmcgleenon/heavykeeper-rs, /root/reference — read
-only).  The reference is a single-threaded Rust library processing one
-item at a time; this kernel processes Arrow-sized batches with NumPy
-array ops and only drops to per-item Python for the statistically rare
-"decay duel survivor" residue. String keys are hashed by the C byte
-kernel in ``native.py``; everything else is NumPy.  Counts,
-fingerprints and bucket layout follow the paper / reference semantics:
+A from-scratch re-implementation of the *semantics* of the reference
+crate (pmcgleenon/heavykeeper-rs). The reference is a single-threaded
+Rust library processing one item at a time; this kernel takes
+Arrow-sized batches, collapses each to its distinct keys with NumPy
+(``preaggregate``), and hands the weighted ``(fingerprint, weight)``
+arrays to the native add loop (``native.hk_add``), which runs the
+reference's per-item add in C, one item after another. String keys
+are hashed by the C byte kernel in ``native.py``. Counts, fingerprints
+and bucket layout follow the paper / reference semantics:
 
 - state: ``depth`` rows x ``width`` buckets, each bucket a
   ``(fingerprint: u64, count: u64)`` cell (src/heavykeeper.rs:14-18)
@@ -22,6 +23,7 @@ fingerprints and bucket layout follow the paper / reference semantics:
   reaches 0 the challenger seizes it with the remaining increment
   (src/heavykeeper.rs:281-354; e.g. 3000 vs a count-1000 cell under
   forced decay yields 2001 = 3000 - 999, src/heavykeeper.rs:766-794).
+  A batch adds its distinct keys heaviest first.
 - a bounded min-heap of K candidates with monotone ("only raise")
   updates and deterministic (count desc, insertion seq asc) ordering
   (src/priority_queue.rs:104-211).
@@ -32,10 +34,11 @@ fingerprints and bucket layout follow the paper / reference semantics:
   strictly more accurate than the plain-TopK ``unwrap_or(0)``.
 
 Statistical fidelity, not bit-equality, is the contract: the duel is
-sampled with exact distributions (geometric inter-decrement gaps and a
-conditioned first-success fast path) so the accuracy floors of
-tests/accuracy_compare.rs hold, while merge order-independence is only
-guaranteed within the published HeavyKeeper error bound (see
+sampled with its exact distribution (geometric gaps between
+decrements) so the accuracy floors of tests/accuracy_compare.rs hold;
+the candidate heap is offered each key's count once per batch, after
+the batch, rather than after every add; and merge order-independence
+is only guaranteed within the published HeavyKeeper error bound (see
 SURVEY.md §2.7).
 """
 
@@ -43,23 +46,23 @@ from __future__ import annotations
 
 import heapq
 import io
-import math
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
 from .errors import InvalidDecay, InvalidDepth, InvalidK, InvalidWidth, SketchCompatError
+from . import native
 from .native import hash_slices
 from .serde import dumps as serde_dumps, loads as serde_loads
 
 _U64 = np.uint64
-# add_batch dense-preagg bound: bincount table never exceeds this many
-# slots (8 B each; the default caps the transient at a few MB per task
-# so 32 concurrent workers' tables stay L3-resident together —
-# per-worker wins above that are paid back in shared memory-bandwidth
-# contention).
+# preaggregate dense-path bound: bincount table never exceeds this many
+# slots (8 B each, plus a 4 B first-occurrence slot; the default caps
+# the transient at a few MB per task so 32 concurrent workers' tables
+# stay L3-resident together — per-worker wins above that are paid back
+# in shared memory-bandwidth contention).
 _DENSE_DOMAIN_CAP = 1 << 22
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
@@ -142,21 +145,6 @@ def hash_items(items: np.ndarray, seed: int) -> np.ndarray:
 
 
 
-def _radix_argsort(key: np.ndarray, nbits: int) -> np.ndarray:
-    """Stable ascending argsort of a packed uint64 key via LSD radix
-    over 16-bit digits — numpy's kind='stable' picks a true radix sort
-    for uint16, so each pass is O(n); ~4x faster than a comparison
-    argsort on the packed uint64 for the residue sizes the kernel sees.
-    ``nbits`` bounds the significant bits of ``key``."""
-    order = np.argsort((key & _U64(0xFFFF)).astype(np.uint16), kind="stable")
-    shift = 16
-    while shift < nbits:
-        digit = ((key >> _U64(shift)) & _U64(0xFFFF)).astype(np.uint16)
-        order = order[np.argsort(digit[order], kind="stable")]
-        shift += 16
-    return order
-
-
 def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
     r_ = _U64(r)
     inv = _U64(64 - r)
@@ -185,6 +173,71 @@ def compose_indices(h1: np.ndarray, depth: int, width: int) -> np.ndarray:
                 h = _rotl64(h + h2, 5)
             out[d] = ((h & mask) if pow2 else (h % _U64(width))).astype(np.intp)
     return out
+
+
+def _as_keys(items) -> np.ndarray:
+    """A key batch as the hashing lanes take it: integer arrays stay
+    native (the u64 lane), anything else becomes an object array."""
+    arr = np.asarray(items)
+    return arr if arr.dtype.kind in "iu" else np.asarray(items, dtype=object)
+
+
+def preaggregate(
+    keys: np.ndarray,
+    weights: np.ndarray | None = None,
+    hash_fn=None,
+    raw_ints: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collapse a batch to its distinct keys: ``(pos, w, fp)``, each
+    distinct key's first position in ``keys``, its total weight and its
+    fingerprint. Keys come heaviest first, ties in first-occurrence
+    order: the one order every layout adds in (a lighter key
+    installing first would make a heavier twin's whole mass duel a
+    hopeless occupant). Keys whose total weight is below 1 drop out (a
+    zero increment is a no-op, src/heavykeeper.rs:286-288).
+
+    ``hash_fn=None``: ``keys`` are fingerprints already (the hashed
+    lanes). Otherwise integer ``keys`` (with ``raw_ints``) collapse
+    before ``hash_fn`` runs, so only distinct values are hashed: one
+    bincount when they fill a small non-negative range (event types,
+    ports, the reference's bounded-Zipf bench fixture), a khash
+    factorize otherwise; any other keys are hashed first. Two distinct
+    raw keys sharing a 64-bit hash within a batch (probability
+    ~n^2/2^65) stay two items with one fingerprint that both add to
+    the same cells: a bounded overcount far below sketch error."""
+    if hash_fn is not None and not (raw_ints and keys.dtype.kind in "iu"):
+        keys, hash_fn = hash_fn(keys), None
+    n = keys.shape[0]
+    wts = None if weights is None else np.asarray(weights, dtype=np.float64)
+    if (
+        hash_fn is not None
+        and n >= 4096
+        and int(keys.min()) >= 0
+        and int(keys.max()) < min(4 * n, _DENSE_DOMAIN_CAP)
+    ):
+        # each value is its own slot; bincount can't safe-cast uint64,
+        # and the range check bounds values below 2^22, so an int64
+        # view is exact
+        vals = keys.astype(np.int64, copy=False)
+        w = np.bincount(vals, weights=wts).astype(np.int64, copy=False)
+        uniq = None
+    else:
+        vals, uniq = pd.factorize(keys, sort=False)  # first-occurrence order
+        w = np.bincount(vals, weights=wts, minlength=uniq.shape[0])
+        w = w.astype(np.int64, copy=False)
+    # first occurrence per slot: reversed scatter (last write wins ==
+    # first element when traversed back-to-front)
+    ipos = np.int32 if n < 1 << 31 else np.int64  # half the scatter traffic
+    first = np.empty(w.shape[0], dtype=ipos)
+    first[vals[::-1]] = np.arange(n - 1, -1, -1, dtype=ipos)
+    keep = np.flatnonzero(w > 0)
+    # first-occurrence order, then a stable sort by weight (two
+    # argsorts cost less than one two-key lexsort)
+    order = keep[np.argsort(first[keep])]
+    order = order[np.argsort(-w[order], kind="stable")]
+    uniq = order if uniq is None else np.asarray(uniq)[order]
+    fp = uniq.astype(np.uint64) if hash_fn is None else hash_fn(uniq)
+    return first[order], w[order], fp
 
 
 @dataclass(frozen=True)
@@ -299,6 +352,37 @@ class TopKQueue:
         ]
 
 
+def _duel_params(sk) -> tuple[float, int]:
+    """``(decay, seed)`` for the native add loop. The ``_force_decay``
+    test hook pins decay to 1.0 (every trial decrements) or 0.0 (none
+    does), like the reference tests' threshold overwrites
+    (src/heavykeeper.rs:766-794). The seed is drawn from ``sk.rng`` on
+    every call, so a sketch whose ``rng`` is replaced draws a new
+    stream."""
+    force = sk._force_decay
+    decay = sk.params.decay if force is None else float(force)
+    return decay, int(sk.rng.integers(1 << 64, dtype=np.uint64))
+
+
+def _pq_admit(
+    pq: TopKQueue, take_keys, est: np.ndarray, evicted: list | None = None
+) -> list | None:
+    """Offer the queue every key whose post-batch count ``est`` beats
+    its minimum (only those can change it), count desc then key, so
+    equal counts get a deterministic insertion sequence. Only those
+    keys materialize (``take_keys(positions)``); keys pushed out of the
+    queue are appended to ``evicted`` when it is given."""
+    sel = np.flatnonzero(est > pq.min_count())
+    if sel.size:
+        keys = np.asarray(take_keys(sel), dtype=object)
+        counts = est[sel]
+        for i in np.lexsort((keys, -counts)):
+            victim = pq.upsert(_pq_key(keys[i]), int(counts[i]))
+            if victim is not None and evicted is not None:
+                evicted.append(victim)
+    return evicted
+
+
 class HeavyKeeper:
     """Mergeable top-K HeavyKeeper sketch over byte-string keys."""
 
@@ -325,20 +409,6 @@ class HeavyKeeper:
         # Test hook: force decay outcomes, mirrors the reference unit
         # tests' threshold overwrites (src/heavykeeper.rs:766-794).
         self._force_decay: bool | None = None
-        self._ubuf = np.empty(0)
-        self._upos = 0
-        self._decay_lut: np.ndarray | None = None
-        self._decay_lut_exact_tail = True
-
-    def _u(self) -> float:
-        """Buffered uniform draw (amortizes Generator call overhead in
-        the scalar duel residue)."""
-        if self._upos >= self._ubuf.shape[0]:
-            self._ubuf = self.rng.random(16384)
-            self._upos = 0
-        u = self._ubuf[self._upos]
-        self._upos += 1
-        return u
 
     # -- construction helpers (reference builder surface, O1/O2/O4) ----
     @classmethod
@@ -374,45 +444,6 @@ class HeavyKeeper:
             )
         return hash_items(items, self.params.seed)
 
-    # ------------------------------------------------------------------
-    def _decay_p_int(self, counts: np.ndarray) -> np.ndarray:
-        """P(decrement) = decay**count for integer counts — the hot-path
-        analog of the reference's precomputed threshold table
-        (src/heavykeeper.rs:95-104): ``decay**c`` becomes one table
-        gather instead of a transcendental per element.
-
-        The table is sized so the clamped tail value is below 1e-30 —
-        a decrement with probability < 1e-30 is unrealizable in any
-        stream this code will ever see, so clamping there is
-        behaviorally exact.  Only for decay so close to 1 that even
-        2**16 entries can't reach 1e-30 does the tail fall back to
-        ``np.power`` (counts beyond the table are then rare anyway)."""
-        if self._force_decay is True:
-            return np.ones(counts.shape, dtype=np.float64)
-        if self._force_decay is False:
-            return np.zeros(counts.shape, dtype=np.float64)
-        lut = self._decay_lut
-        if lut is None:
-            d = self.params.decay
-            if 0.0 < d < 1.0:
-                size = min(65536, int(math.ceil(-30.0 / math.log10(d))) + 1)
-            else:
-                size = 2  # d<=0: [1, 0] is exact for every count; d>=1 can't underflow
-            with np.errstate(under="ignore"):
-                lut = np.power(d, np.arange(size, dtype=np.float64))
-            self._decay_lut = lut
-            self._decay_lut_exact_tail = lut[-1] < 1e-30
-        c = counts.astype(np.int64, copy=False)
-        idx = np.minimum(c, lut.shape[0] - 1)
-        p = lut[idx]
-        if not self._decay_lut_exact_tail:
-            tail = c >= lut.shape[0]
-            if tail.any():
-                with np.errstate(under="ignore"):
-                    p = p.copy()
-                    p[tail] = np.power(self.params.decay, c[tail].astype(np.float64))
-        return p
-
     # -- O5/O6: weighted batch add -------------------------------------
     def add_batch(
         self,
@@ -422,10 +453,9 @@ class HeavyKeeper:
     ) -> list | None:
         """Insert a batch of (item, weight) pairs.
 
-        Batch pre-aggregation collapses Zipf-skewed batches to
-        near-distinct weighted adds — the vectorized analog of the
-        reference's first-class weighted ``add(item, n)``
-        (src/heavykeeper.rs:273-279).
+        ``preaggregate`` collapses Zipf-skewed batches to near-distinct
+        weighted adds — the batch analog of the reference's first-class
+        weighted ``add(item, n)`` (src/heavykeeper.rs:273-279).
 
         ``return_evicted=True`` returns the items that fell OUT of the
         top-K queue during this batch, in eviction order — the batch
@@ -433,85 +463,14 @@ class HeavyKeeper:
         tested at src/heavykeeper.rs:1524-1562). Embedding callers use
         the evicted stream to maintain side structures.
         """
-        arr = np.asarray(items)
-        if arr.dtype.kind not in "iu":
-            arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         if arr.size == 0:
             return [] if return_evicted else None
-        # Pre-aggregate with a hash-table factorize (pandas khash,
-        # ~2.5x cheaper than a uint64 sort-based np.unique). Integer
-        # lanes factorize the RAW keys so only the distinct values are
-        # hashed (6-10x less splitmix work on Zipf batches); object
-        # lanes factorize the 64-bit hash directly since hashing is
-        # the cheaper way to get a fixed-width factorize key there.
-        # Either way the hash IS the sketch fingerprint. On the raw-key
-        # lane two distinct keys can in principle share one 64-bit hash
-        # within a batch (probability ~n^2/2^65 < 1e-10 per batch); the
-        # only effect is last-write-wins on the matched fast path — a
-        # bounded, deterministic undercount far below sketch error, so
-        # no dedup pass is spent on it.
-        if arr.dtype.kind in "iu" and self._hasher is None:
-            # Dense small-domain fast path: when the batch's keys live
-            # in a small non-negative range (event types, ports, ids,
-            # the reference's bounded-Zipf bench fixture), ONE bincount
-            # over the value range replaces the khash factorize, the
-            # weight accumulation AND the first-occurrence scatter —
-            # each unique VALUE is its own representative. The count
-            # table is bounded to 4 rows per batch element (and 2^22
-            # slots absolute), so the transient stays a few MB per
-            # task. Tie-order among equal-weight duelers differs from
-            # the factorize lane (value-ascending vs first-occurrence);
-            # both are deterministic and the estimates are identical in
-            # distribution — exact-equality regression lives in
-            # tests/test_kernel.py::test_dense_preagg_matches_factorize.
-            if arr.size >= 4096:
-                amin = int(arr.min())
-                amax = int(arr.max())
-                if amin >= 0 and amax < min(4 * arr.size, _DENSE_DOMAIN_CAP):
-                    # bincount can't safe-cast uint64; the range check
-                    # above bounds values < 2^22 so an int64 view is exact
-                    arr_d = arr.astype(np.int64) if arr.dtype.kind == "u" else arr
-                    if weights is None:
-                        cnt = np.bincount(arr_d, minlength=amax + 1)
-                    else:
-                        cnt = np.bincount(
-                            arr_d,
-                            weights=np.asarray(weights, dtype=np.float64),
-                            minlength=amax + 1,
-                        )
-                    uk_d = np.flatnonzero(cnt)
-                    w_d = cnt[uk_d].astype(np.int64)
-                    keep_d = w_d > 0
-                    uk_d = uk_d[keep_d]
-                    return self._add_unique(
-                        uk_d,
-                        w_d[keep_d],
-                        fp=self._hash(uk_d),
-                        return_evicted=return_evicted,
-                    )
-            inv, uk = pd.factorize(arr, sort=False)
-            uh = self._hash(np.asarray(uk))
-        else:
-            h_all = self._hash(arr)
-            inv, uh = pd.factorize(h_all, sort=False)
-        k = uh.shape[0]
-        # first-occurrence index per unique: reversed scatter (last
-        # write wins == first element when traversed back-to-front)
-        n = inv.shape[0]
-        first = np.empty(k, dtype=np.int64)
-        first[inv[::-1]] = np.arange(n - 1, -1, -1)
-        if weights is None:
-            w = np.bincount(inv, minlength=k).astype(np.int64)
-        else:
-            w = np.bincount(
-                inv,
-                weights=np.asarray(weights, dtype=np.float64),
-                minlength=k,
-            ).astype(np.int64)
-        keep = w > 0  # inc == 0 is a no-op (src/heavykeeper.rs:286-288)
-        uh = np.asarray(uh, dtype=np.uint64)
-        return self._add_unique(
-            arr[first[keep]], w[keep], fp=uh[keep], return_evicted=return_evicted
+        pos, w, fp = preaggregate(
+            arr, weights, self._hash, raw_ints=self._hasher is None
+        )
+        return self._add_unique_fp(
+            fp, w, lambda sel: arr[pos[sel]], return_evicted=return_evicted
         )
 
     def add_batch_hashed(
@@ -539,42 +498,8 @@ class HeavyKeeper:
                 "add_batch_hashed requires the seeded default hash family; "
                 "a custom-hasher sketch must use add_batch"
             )
-        h = np.asarray(hashes, dtype=np.uint64)
-        if h.size == 0:
-            return
-        # fold (rare) full-64-bit collisions exactly like add_batch
-        inv, uh = pd.factorize(h, sort=False)
-        k = uh.shape[0]
-        if weights is None:
-            w = np.bincount(inv, minlength=k)
-        else:
-            w = np.bincount(
-                inv, weights=np.asarray(weights, dtype=np.float64), minlength=k
-            ).astype(np.int64)
-        first = np.empty(k, dtype=np.int64)
-        first[inv[::-1]] = np.arange(h.shape[0] - 1, -1, -1)
-        keep = w > 0
-        firstk = first[keep]
-        self._add_unique_fp(
-            np.asarray(uh, dtype=np.uint64)[keep],
-            w[keep],
-            lambda sel: key_take(firstk[sel]),
-        )
-
-    def _add_unique(
-        self,
-        keys: np.ndarray,
-        w: np.ndarray,
-        fp: np.ndarray | None = None,
-        return_evicted: bool = False,
-    ) -> list | None:
-        if keys.shape[0] == 0:
-            return [] if return_evicted else None
-        if fp is None:
-            fp = self._hash(keys)
-        return self._add_unique_fp(
-            fp, w, lambda sel: keys[sel], return_evicted=return_evicted
-        )
+        pos, w, fp = preaggregate(np.asarray(hashes, dtype=np.uint64), weights)
+        self._add_unique_fp(fp, w, lambda sel: key_take(pos[sel]))
 
     def _add_unique_fp(
         self,
@@ -583,438 +508,20 @@ class HeavyKeeper:
         take_keys,
         return_evicted: bool = False,
     ) -> list | None:
-        n = fp.shape[0]
-        if n == 0:
-            return [] if return_evicted else None
         p = self.params
-        idxs = compose_indices(fp, p.depth, p.width)
-        # Flatten all depth rows into ONE namespaced pass: cell id =
-        # d*width + idx never collides across rows, the (fps, counts)
-        # state flattens to a view, and every vector op in _add_row runs
-        # once over depth*n elements instead of depth times over n —
-        # same memory traffic, ~4x fewer Python-level numpy dispatches.
-        flat_idx = (
-            idxs + (np.arange(p.depth, dtype=np.intp) * p.width)[:, None]
-        ).reshape(-1)
-        fp_flat = np.tile(fp, p.depth)
-        w_flat = np.tile(w, p.depth)
-        self._add_row(self.fps.reshape(-1), self.counts.reshape(-1), flat_idx, fp_flat, w_flat)
-        # Final re-probe: resulting count per key = max over rows where
-        # the key currently owns the cell (paper Algorithm 1's monotone
-        # heap rule uses the per-add max; probing after the batch is
-        # equivalent up to intra-batch eviction races).
-        fps_f = self.fps.reshape(-1)[flat_idx]
-        cnt_f = self.counts.reshape(-1)[flat_idx]
-        owned = np.where((fps_f == fp_flat) & (cnt_f > 0), cnt_f, 0)
-        est = owned.reshape(p.depth, n).max(axis=0).astype(np.int64)
-        # PQ update, vectorized pre-filter: only keys that can change
-        # the heap (est > heap min) need Python-level upserts.
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(est > mc)
-        evicted: list | None = [] if return_evicted else None
-        if sel.size:
-            # only now do the selected keys materialize (lazy take);
-            # preserve deterministic order: weight-desc then key, so
-            # equal-count ties get a stable insertion sequence
-            keys_sel = np.asarray(take_keys(sel), dtype=object)
-            order = np.lexsort((keys_sel, -est[sel]))
-            upsert = self.pq.upsert
-            if return_evicted:
-                for i in order:
-                    victim = upsert(_pq_key(keys_sel[i]), int(est[sel[i]]))
-                    if victim is not None:
-                        evicted.append(victim)
-            else:
-                for i in order:
-                    upsert(_pq_key(keys_sel[i]), int(est[sel[i]]))
-        return evicted
-
-    def _add_row(
-        self,
-        fps_row: np.ndarray,
-        cnt_row: np.ndarray,
-        idx: np.ndarray,
-        fp: np.ndarray,
-        w: np.ndarray,
-    ) -> None:
-        """One vectorized insert pass over a (flattened) cell array.
-
-        ``idx`` are cell ids into ``fps_row``/``cnt_row`` (the whole
-        depth×width state viewed flat, ids namespaced per row)."""
-        cfp = fps_row[idx]
-        ccnt = cnt_row[idx]
-        # Fast path 1: fingerprint match on a live cell -> count += w
-        # (src/heavykeeper.rs:303-307). Direct scatter-add: batch fps
-        # are unique post-factorize; two distinct keys sharing a 64-bit
-        # fp AND cell would last-write-win here — the documented
-        # ~1e-10/batch trade-off accepted in add_batch.
-        m = (ccnt > 0) & (cfp == fp)
-        if m.any():
-            # direct scatter-add is safe here: fps within a batch are
-            # UNIQUE (hash-factorized upstream), and a match requires
-            # occupant fp == challenger fp, so two matched challengers
-            # can never hit the same cell — no np.add.at buffering
-            cnt_row[idx[m]] += w[m].astype(np.uint64)
-        rem = np.flatnonzero(~m)
-        if rem.size == 0:
-            return
-        # Cross-challenger ORDERING is only needed where a cell is
-        # EMPTY (to decide who installs); at steady state the cell
-        # array is saturated and that subset is ~nil, so sorting ALL
-        # of rem (the old approach) paid a radix argsort over the
-        # whole batch for nothing. Challengers at occupied cells go
-        # straight to the duel machinery in arrival order — which is
-        # the reference's stream order (src/heavykeeper.rs:281-354
-        # processes adds strictly in sequence; weight-desc ordering
-        # was our own batching artifact).
-        rem_empty = ccnt[rem] == 0  # pre-update gather: match-add only
-        #                             touched occupied cells, so this
-        #                             still identifies empties exactly
-        occupied = rem[~rem_empty]
-        losers_at_empty = np.empty(0, dtype=occupied.dtype)
-        er = rem[rem_empty]
-        if er.size:
-            # Among challengers at the same empty cell the HEAVIEST
-            # installs (a lighter installer would make the heavier
-            # one's whole mass duel a hopeless occupant). Packed
-            # single-key sort: (cell << B) | (2^B-1 - w) orders by
-            # (cell asc, w desc); B = 16 bits covers typical weights,
-            # widen to 32 rather than clamp (a clamped tie would
-            # install the LIGHTER one); huge weights/cell spaces fall
-            # back to the exact two-key sort.
-            wr = w[er]
-            wmax = int(wr.max(initial=0))
-            wbits = 16 if wmax < (1 << 16) - 1 else 32
-            emax = int(idx[er].max())  # only idx[er] values are packed
-            if wmax < (1 << wbits) - 1 and emax < (1 << (63 - wbits)):
-                packed = (idx[er].astype(np.uint64) << _U64(wbits)) | (
-                    _U64((1 << wbits) - 1) - wr.astype(np.uint64)
-                )
-                nbits = wbits + emax.bit_length()
-                order = er[_radix_argsort(packed, nbits)]
-            else:
-                order = er[np.lexsort((-wr, idx[er]))]
-            cells = idx[order]
-            is_winner = np.empty(cells.shape[0], dtype=bool)
-            is_winner[0] = True
-            np.not_equal(cells[1:], cells[:-1], out=is_winner[1:])
-            winners = order[is_winner]
-            wcells = cells[is_winner]
-            # Fast path 2: installs into empty cells
-            # (src/heavykeeper.rs:296-301). Winner cells are unique.
-            fps_row[wcells] = fp[winners]
-            cnt_row[wcells] = w[winners].astype(np.uint64)
-            losers_at_empty = order[~is_winner]
-        # Everyone else duels the (possibly just-installed) occupant.
-        duelers = np.concatenate([occupied, losers_at_empty])
-        if duelers.size == 0:
-            return
-        # Re-check fingerprint match (a loser may share the new
-        # occupant's fingerprint on a true hash collision).
-        dcells = idx[duelers]
-        dm = fps_row[dcells] == fp[duelers]
-        if dm.any():
-            # same uniqueness argument as the match fast path above
-            cnt_row[dcells[dm]] += w[duelers[dm]].astype(np.uint64)
-            duelers = duelers[~dm]
-            dcells = dcells[~dm]
-        if duelers.size == 0:
-            return
-        # Vectorized fast-reject: P(>=1 decrement in w trials) =
-        # 1-(1-p)^w with p = decay**count. The overwhelming majority of
-        # duels end here with no state change — only conditioned
-        # survivors take the exact per-item path. For the dominant
-        # w==1 case 1-(1-p)^1 == p exactly, so the log1p/expm1
-        # transcendentals run only over the multi-weight minority.
-        pm = self._decay_p_int(cnt_row[dcells])
-        wd = w[duelers]
-        multi_m = wd != 1
-        if multi_m.any():
-            mi = np.flatnonzero(multi_m)
-            with np.errstate(divide="ignore", invalid="ignore", under="ignore"):
-                log1m = np.log1p(-pm[mi])  # -inf when pm == 1
-                p_mi = -np.expm1(wd[mi].astype(np.float64) * log1m)
-            p_any = pm.copy()
-            p_any[mi] = np.where(pm[mi] >= 1.0, 1.0, p_mi)
-        else:
-            p_any = pm
-        u = self.rng.random(duelers.size)
-        surv = u < p_any
-        if not surv.any():
-            return
-        sv = np.flatnonzero(surv)
-        skeys = duelers[sv]
-        scells = dcells[sv]
-        sw = w[skeys]
-        # Vectorized w==1 survivors: the conditioned duel is exactly one
-        # decrement. Group by cell; cells whose count strictly exceeds
-        # the challenger multiplicity just lose that many counts — no
-        # ownership change, fully vectorized. Cells that would hit zero
-        # (ownership churn) take the exact sequential path.
-        one = sw == 1
-        if one.any():
-            sv_one = np.flatnonzero(one)
-            cells1 = scells[sv_one]
-            uc, inv_c, mult = np.unique(
-                cells1, return_inverse=True, return_counts=True
-            )
-            c_now = cnt_row[uc].astype(np.int64)
-            safe = mult < c_now
-            if safe.any():
-                cnt_row[uc[safe]] = (c_now[safe] - mult[safe]).astype(np.uint64)
-            # churn (mult >= count): each conditioned w==1 challenger
-            # decrements exactly once; challenger #count seizes with
-            # count 1 and every later one re-seizes at count 1 — so the
-            # cell deterministically ends at (fp of LAST challenger, 1).
-            churn_cells = ~safe
-            if churn_cells.any():
-                last = np.zeros(uc.shape[0], dtype=np.int64)
-                np.maximum.at(last, inv_c, np.arange(cells1.shape[0]))
-                tgt = uc[churn_cells]
-                winner_keys = skeys[sv_one[last[churn_cells]]]
-                fps_row[tgt] = fp[winner_keys]
-                cnt_row[tgt] = 1
-            churn = np.zeros(sv_one.shape[0], dtype=bool)  # all handled
-        else:
-            churn = np.zeros(0, dtype=bool)
-        # Vectorized w>1 survivors where a kill is statistically
-        # unreachable (E[decrements]*2 + 10 < count): the conditioned
-        # number of decrements is Binomial(w, p) given >= 1 success;
-        # p barely moves over so few decrements, so the Binomial draw
-        # is distributionally faithful. Duplicate target cells fall
-        # back to the exact path (first occurrence wins the vector
-        # slot).
-        multi = np.flatnonzero(~one)
-        seq_parts = [np.flatnonzero(one)[churn]]
-        if multi.size and self._force_decay is None:
-            mc = scells[multi]
-            mcnt = cnt_row[mc].astype(np.int64)
-            mw = sw[multi].astype(np.float64)
-            mp = self._decay_p_int(mcnt)
-            no_kill = (2.0 * mw * mp + 10.0) < mcnt
-            # first occurrence per cell only
-            _, firstpos = np.unique(mc, return_index=True)
-            is_first = np.zeros(multi.size, dtype=bool)
-            is_first[firstpos] = True
-            vec = no_kill & is_first
-            if vec.any():
-                dv = self.rng.binomial(sw[multi[vec]], mp[vec])
-                dv = np.clip(dv, 1, mcnt[vec] - 1)
-                cnt_row[mc[vec]] = (mcnt[vec] - dv).astype(np.uint64)
-            seq_parts.append(multi[~vec])
-        else:
-            seq_parts.append(multi)
-        seq = np.concatenate(seq_parts)
-        if seq.size == 0:
-            return
-        # Exact residue, conditioned on >= 1 success: waves of unique
-        # cells, each wave a fully-vectorized decrement loop
-        # (_duel_wave); only pathological long duels drop to the scalar
-        # path inside it.
-        self._duel_wave(
-            fps_row,
-            cnt_row,
-            scells[seq],
-            fp[skeys[seq]],
-            sw[seq].astype(np.int64),
-        )
-
-    def _duel_wave(
-        self,
-        fps_row: np.ndarray,
-        cnt_row: np.ndarray,
-        cells: np.ndarray,
-        new_fp: np.ndarray,
-        w: np.ndarray,
-    ) -> None:
-        """Duel residue driver: duplicate target cells are processed in
-        waves (first occurrence per cell each round, preserving the
-        sequential within-cell challenger order); each wave's duels hit
-        unique cells and run through the vectorized ``_duel_vec``."""
-        pos = np.arange(cells.shape[0])
-        while pos.size:
-            _, firstpos = np.unique(cells[pos], return_index=True)
-            take = pos[firstpos]
-            self._duel_vec(fps_row, cnt_row, cells[take], new_fp[take], w[take])
-            if firstpos.size == pos.size:
-                return
-            mask = np.ones(pos.size, dtype=bool)
-            mask[firstpos] = False
-            pos = pos[mask]
-
-    def _duel_vec(
-        self,
-        fps_row: np.ndarray,
-        cnt_row: np.ndarray,
-        cells: np.ndarray,
-        new_fp: np.ndarray,
-        w: np.ndarray,
-        max_iter: int = 24,
-    ) -> None:
-        """Exact conditioned decay duels over UNIQUE cells, vectorized.
-
-        Same distribution as ``_duel_one`` (truncated-geometric first
-        gap, geometric gaps after), but the decrement loop runs across
-        the whole wave at once; 96%+ of residue duels have w<=4 and
-        c<=8, so the loop terminates in a handful of iterations.
-        Stragglers past ``max_iter`` fall back to the scalar path with
-        ``first_success=False`` (their conditioning is already spent).
-        """
-        remaining = w.copy()
-        c = cnt_row[cells].astype(np.int64)
-        # occupant died earlier in this batch -> immediate install
-        dead = c == 0
-        if dead.any():
-            tgt = cells[dead]
-            fps_row[tgt] = new_fp[dead]
-            cnt_row[tgt] = remaining[dead].astype(np.uint64)
-            if dead.all():
-                return
-        active = np.flatnonzero(~dead)
-        force = self._force_decay
-        if force is False:
-            return  # no decrement ever happens (test hook)
-        if force is True:
-            # deterministic: every trial decrements. w >= c kills and
-            # installs with remaining+1 (src/heavykeeper.rs:766-794:
-            # 3000 vs 1000 -> 2001); otherwise count just drops by w.
-            ac, ar, anf = cells[active], remaining[active], new_fp[active]
-            cc = c[active]
-            kill = ar >= cc
-            if kill.any():
-                fps_row[ac[kill]] = anf[kill]
-                cnt_row[ac[kill]] = (ar[kill] - cc[kill] + 1).astype(np.uint64)
-            if (~kill).any():
-                cnt_row[ac[~kill]] = (cc[~kill] - ar[~kill]).astype(np.uint64)
-            return
-        decay = self.params.decay
-        first = True
-        it = 0
-        while active.size:
-            it += 1
-            if it > max_iter:
-                for j in active:
-                    self._duel_one(
-                        fps_row,
-                        cnt_row,
-                        int(cells[j]),
-                        new_fp[j],
-                        int(remaining[j]),
-                        first_success=first,
-                    )
-                return
-            ca = c[active]
-            ra = remaining[active]
-            with np.errstate(under="ignore", divide="ignore", invalid="ignore"):
-                p = self._decay_p_int(ca)
-                log1m = np.log1p(-p)  # -inf when p == 1
-                u = self.rng.random(active.size)
-                if first:
-                    # truncated geometric on [1, remaining]
-                    total = -np.expm1(ra.astype(np.float64) * log1m)
-                    t = np.ceil(np.log1p(-u * total) / log1m)
-                else:
-                    t = np.ceil(np.log1p(-u) / log1m)
-            t = np.where(p >= 1.0, 1.0, t)
-            # p underflowed to 0 -> no decrement can ever occur; after
-            # the conditioned first gap, a gap beyond the remaining
-            # trials means the duel ends with no further decrement
-            dies_out = (p <= 0.0) if first else ((p <= 0.0) | (t > ra))
-            t = np.nan_to_num(t, nan=1.0, posinf=np.float64(1 << 62))
-            t = np.minimum(np.maximum(t, 1.0), ra).astype(np.int64)
-            go = ~dies_out
-            if go.any():
-                gi = active[go]
-                remaining[gi] -= t[go]
-                c[gi] -= 1
-                cnt_row[cells[gi]] = c[gi].astype(np.uint64)
-                kill = c[gi] == 0
-                if kill.any():
-                    ki = gi[kill]
-                    fps_row[cells[ki]] = new_fp[ki]
-                    # the converting trial is the first unit of the new
-                    # count (src/heavykeeper.rs:766-794)
-                    cnt_row[cells[ki]] = (remaining[ki] + 1).astype(np.uint64)
-                alive = go.copy()
-                alive[np.flatnonzero(go)[kill]] = False
-            else:
-                alive = go
-            alive &= ~dies_out
-            still = alive & (remaining[active] > 0) & (c[active] > 0)
-            active = active[still]
-            first = False
-
-    def _duel_one(
-        self,
-        fps_row: np.ndarray,
-        cnt_row: np.ndarray,
-        cell: int,
-        new_fp: np.uint64,
-        w: int,
-        first_success: bool,
-    ) -> None:
-        """Exact decay duel for one challenger (src/heavykeeper.rs:309-328).
-
-        Statistically identical to the reference's per-unit Bernoulli
-        loop but sampled in O(#decrements): inter-decrement gaps are
-        Geometric(p). ``first_success`` means the caller already
-        established (via the vectorized fast-reject) that at least one
-        decrement occurs within w trials, so the first gap is drawn
-        from the conditioned (truncated) geometric.
-        """
-        remaining = w
-        decay = self.params.decay
-        c = int(cnt_row[cell])
-        if c == 0:  # occupant died in an earlier residue duel this batch
-            fps_row[cell] = new_fp
-            cnt_row[cell] = remaining
-            return
-        force = self._force_decay
-        _log1p = math.log1p
-        _expm1 = math.expm1
-        _u = self._u
-        while remaining > 0 and c > 0:
-            if force is True:
-                p = 1.0
-            elif force is False:
-                return
-            else:
-                p = decay**c
-            if p <= 0.0:
-                return
-            if first_success:
-                # truncated geometric on [1, remaining]
-                if p >= 1.0:
-                    t = 1
-                else:
-                    total = -_expm1(remaining * _log1p(-p))
-                    uu = _u() * total
-                    t = int(math.ceil(_log1p(-uu) / _log1p(-p)))
-                    t = min(max(t, 1), remaining)
-                first_success = False
-            else:
-                if p >= 1.0:
-                    t = 1
-                elif p * remaining < 1e-12:
-                    # survival shortcut: P(any success) ~ p*remaining
-                    if _u() < p * remaining:
-                        t = int(_u() * remaining) + 1
-                    else:
-                        return
-                else:
-                    t = int(math.ceil(_log1p(-_u()) / _log1p(-p)))
-                    if t > remaining:
-                        return
-            remaining -= t
-            c -= 1
-            cnt_row[cell] = c
-            if c == 0:
-                # challenger seizes; the converting trial counts as the
-                # first unit of the new count (src/heavykeeper.rs:766-794:
-                # 3000 vs 1000 under forced decay -> 2001)
-                fps_row[cell] = new_fp
-                cnt_row[cell] = remaining + 1
-                return
+        # row d of item i is flat cell d*width + idx[d, i]
+        cells = compose_indices(fp, p.depth, p.width)
+        cells += (np.arange(p.depth, dtype=np.intp) * p.width)[:, None]
+        native.hk_add(self.fps, self.counts, cells, fp, w, *_duel_params(self))
+        # Re-probe: each key's count is the max over the rows where it
+        # owns the cell (paper Algorithm 1's monotone heap rule uses the
+        # per-add max; probing once after the batch is equivalent up to
+        # intra-batch evictions, and offers the heap each key once).
+        fps_f = self.fps.reshape(-1)[cells]
+        cnt_f = self.counts.reshape(-1)[cells]
+        owned = np.where((fps_f == fp) & (cnt_f > 0), cnt_f, 0)
+        est = owned.max(axis=0, initial=0).astype(np.int64)
+        return _pq_admit(self.pq, take_keys, est, [] if return_evicted else None)
 
     # -- O7/O8: point estimates ----------------------------------------
     def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
@@ -1022,9 +529,7 @@ class HeavyKeeper:
         with a matching fingerprint, else 0 (src/heavykeeper.rs:220-246).
         ``use_heap=False`` is bucket_count() (src/heavykeeper.rs:248-271).
         """
-        arr = np.asarray(items)
-        if arr.dtype.kind not in "iu":
-            arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         n = arr.shape[0]
         p = self.params
         fp = self._hash(arr)
@@ -1059,9 +564,7 @@ class HeavyKeeper:
         semantics (src/heavykeeper.rs:220-246); this internal
         estimator serves the merge, where light colliders' early decay
         chips would otherwise bias boundary candidates low."""
-        arr = np.asarray(items)
-        if arr.dtype.kind not in "iu":
-            arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         n = arr.shape[0]
         p = self.params
         fp = self._hash(arr)
@@ -1235,9 +738,7 @@ class HeavyKeeper:
         over rows where the key owns the cell. ``idx`` is sorted
         ascending (flatnonzero order), so ownership probes are one
         searchsorted per depth row."""
-        arr = np.asarray(items)
-        if arr.dtype.kind not in "iu":
-            arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         n = arr.shape[0]
         out = np.zeros(n, dtype=np.int64)
         if n == 0 or idx.size == 0:

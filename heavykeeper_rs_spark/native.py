@@ -1,5 +1,6 @@
-"""Native byte kernels of the text lane: the ASCII tokenizer and the
-seeded string hash, one C pass per byte, called through ``ctypes``.
+"""Native kernels, one C pass each, called through ``ctypes``: the
+text lane's ASCII tokenizer and seeded string hash, and the sketch add
+loops of the HeavyKeeper and Bucketed layouts.
 
 The C source lives here as a string because ``--py-files`` zips ship
 only ``.py`` files. It is compiled on first use in each process into a
@@ -14,15 +15,29 @@ blobs depend on it): seeded FNV-1a over the bytes, then
 yields every ``[a-z]+`` run of the ASCII-lowered text, split at
 document boundaries, hashed over its lowered bytes.
 
+The add loops are the reference's ``add`` (src/heavykeeper.rs:281-354)
+over pre-aggregated ``(fingerprint, weight)`` arrays, one item after
+another in array order. ``cell_add`` gives the weight to an empty cell
+or a matching fingerprint; any other cell fights the exponential-decay
+duel: each unit of weight decrements the cell with probability
+``decay**count``, sampled with geometric gaps between decrements, and
+when the cell reaches 0 the challenger takes it, the converting trial
+counting as its first unit (3000 vs a count-1000 cell at decay 1.0
+leaves 2001, src/heavykeeper.rs:766-794). The draws come from a
+splitmix64 stream seeded by the caller.
+
 The wrappers check every buffer before C sees a pointer: offsets are
 non-decreasing and lie inside ``data``, slices are non-negative and end
-inside ``data``.
+inside ``data``, cell and bucket ids lie inside the state, item arrays
+agree in length, weights are at least 1, and the state arrays are
+writable, C-contiguous ``uint64``.
 """
 
 from __future__ import annotations
 
 import ctypes
 import functools
+import math
 import os
 import shutil
 import subprocess
@@ -31,17 +46,22 @@ import tempfile
 import numpy as np
 
 _CC = ("cc", "-O2", "-shared", "-fPIC")
+_LIBS = ("-lm",)
 
 _SRC = r"""
+#include <math.h>
 #include <stdint.h>
 
 #define FNV_PRIME 0x100000001B3ULL
 
-static uint64_t finish(uint64_t h, int64_t len) {
-    h ^= (uint64_t)len << 56;
+static uint64_t mix(uint64_t h) {
     h = (h ^ (h >> 30)) * 0xBF58476D1CE4E5B9ULL;
     h = (h ^ (h >> 27)) * 0x94D049BB133111EBULL;
     return h ^ (h >> 31);
+}
+
+static uint64_t finish(uint64_t h, int64_t len) {
+    return mix(h ^ ((uint64_t)len << 56));
 }
 
 void hash_slices(const int64_t *starts, const int64_t *lens, int64_t n,
@@ -85,6 +105,90 @@ int64_t ascii_tokens(const int64_t *offsets, int64_t ndocs,
     }
     return n;
 }
+
+typedef struct {
+    const double *lut;  /* lut[c] = decay**c for c < nlut */
+    int64_t nlut;
+    double decay;
+    uint64_t rng;       /* splitmix64 state */
+} duel_t;
+
+/* A uniform draw in (0, 1]. */
+static double uniform(duel_t *d) {
+    return (double)((mix(d->rng += 0x9E3779B97F4A7C15ULL) >> 11) + 1) * 0x1p-53;
+}
+
+/* decay**c: the table, then pow() past its end unless the table
+   already ran down to 0 */
+static double decrement_p(const duel_t *d, uint64_t c) {
+    if (c < (uint64_t)d->nlut) return d->lut[c];
+    return d->lut[d->nlut - 1] > 0.0 ? pow(d->decay, (double)c) : 0.0;
+}
+
+static void cell_add(uint64_t *fps, uint64_t *cnt, int64_t cell,
+                     uint64_t fp, int64_t w, duel_t *d) {
+    uint64_t c = cnt[cell];
+    if (c == 0 || fps[cell] == fp) {
+        fps[cell] = fp;
+        cnt[cell] = c + (uint64_t)w;
+        return;
+    }
+    for (;;) {
+        double p = decrement_p(d, c);
+        if (p <= 0.0) break;
+        /* t = trials up to and including the next decrement, drawn
+           Geometric(p); there is none within w trials iff
+           u <= (1-p)**w, which for w == 1 needs no log */
+        double u = uniform(d), t = 1.0;
+        if (w == 1) {
+            if (u <= 1.0 - p) break;
+        } else if (p < 1.0) {
+            t = floor(log(u) / log1p(-p)) + 1.0;
+            if (t > (double)w) break;
+        }
+        w -= (int64_t)t;
+        if (--c == 0) {
+            fps[cell] = fp;
+            cnt[cell] = (uint64_t)w + 1;
+            return;
+        }
+    }
+    cnt[cell] = c;
+}
+
+/* Item i adds to cell idx[r*n + i] of each row r < depth. */
+void hk_add(uint64_t *fps, uint64_t *cnt, const int64_t *idx, int64_t depth,
+            int64_t n, const uint64_t *fp, const int64_t *w,
+            const double *lut, int64_t nlut, double decay, uint64_t seed) {
+    duel_t d = {lut, nlut, decay, seed};
+    for (int64_t i = 0; i < n; i++)
+        for (int64_t r = 0; r < depth; r++)
+            cell_add(fps, cnt, idx[r * n + i], fp[i], w[i], &d);
+}
+
+/* Item i adds to one cell of bucket[i] (cells bucket[i]*depth ...
+   +depth-1): its first matching cell, else its first empty cell, else
+   its first minimum cell. */
+void bucketed_add(uint64_t *fps, uint64_t *cnt, const int64_t *bucket,
+                  int64_t depth, int64_t n, const uint64_t *fp,
+                  const int64_t *w, const double *lut, int64_t nlut,
+                  double decay, uint64_t seed) {
+    duel_t d = {lut, nlut, decay, seed};
+    for (int64_t i = 0; i < n; i++) {
+        int64_t lo = bucket[i] * depth, cell = -1, empty = -1, low = lo;
+        for (int64_t j = lo; j < lo + depth && cell < 0; j++) {
+            if (cnt[j] == 0) {
+                if (empty < 0) empty = j;
+            } else if (fps[j] == fp[i]) {
+                cell = j;
+            } else if (cnt[j] < cnt[low]) {
+                low = j;
+            }
+        }
+        cell_add(fps, cnt, cell >= 0 ? cell : empty >= 0 ? empty : low, fp[i],
+                 w[i], &d);
+    }
+}
 """
 
 
@@ -96,7 +200,7 @@ def _build() -> ctypes.CDLL:
         so = os.path.join(tmp, "hk.so")
         with open(src, "w") as f:
             f.write(_SRC)
-        cmd = [*_CC, "-o", so, src]
+        cmd = [*_CC, "-o", so, src, *_LIBS]
         try:
             subprocess.run(cmd, check=True, capture_output=True, text=True)
         except FileNotFoundError as e:
@@ -113,6 +217,10 @@ def _build() -> ctypes.CDLL:
     lib.hash_slices.restype = None
     lib.ascii_tokens.argtypes = [p, i64, p, i64, u64, p, p, p]
     lib.ascii_tokens.restype = i64
+    f64 = ctypes.c_double
+    for add in (lib.hk_add, lib.bucketed_add):
+        add.argtypes = [p, p, p, i64, i64, p, p, p, i64, f64, u64]
+        add.restype = None
     return lib
 
 
@@ -190,3 +298,77 @@ def ascii_tokens(
         *args, hashes.ctypes.data, starts.ctypes.data, lens.ctypes.data
     )
     return hashes, starts, lens
+
+
+@functools.lru_cache(maxsize=16)
+def _decay_lut(decay: float) -> np.ndarray:
+    """``decay**c`` for small integer counts: the analog of the
+    reference's precomputed threshold table (src/heavykeeper.rs:95-104).
+    It runs until ``decay**c`` underflows to 0, so a count past its end
+    can never decrement; when 65536 entries cannot get there (decay
+    very close to 1) C takes ``pow()`` past the end."""
+    if 0.0 < decay < 1.0:
+        size = min(65536, int(math.ceil(-1076.0 / math.log2(decay))) + 1)
+    else:
+        size = 2
+    with np.errstate(under="ignore"):
+        lut = np.power(decay, np.arange(size, dtype=np.float64))
+    lut.setflags(write=False)  # cached: shared by every caller
+    return lut
+
+
+def _items(cells, fp, w, depth, n_cells):
+    """Checked contiguous ``(cells, fp, w)``: ``depth`` cell ids per
+    item, each in ``[0, n_cells)``, and weights >= 1."""
+    fp = np.ascontiguousarray(fp, dtype=np.uint64)
+    w = np.ascontiguousarray(w, dtype=np.int64)
+    cells = np.ascontiguousarray(cells, dtype=np.int64)
+    n = fp.size
+    if fp.ndim != 1 or w.shape != fp.shape or cells.size != depth * n:
+        raise ValueError("fp, w and the cell ids must agree in length")
+    if n and (w.min() < 1 or cells.min() < 0 or cells.max() >= n_cells):
+        raise ValueError("weights must be >= 1 and cell ids inside the state")
+    return cells, fp, w
+
+
+def _state(fps: np.ndarray, counts: np.ndarray) -> None:
+    for a in (fps, counts):
+        if not (
+            isinstance(a, np.ndarray)
+            and a.dtype == np.uint64
+            and a.flags.c_contiguous
+            and a.flags.writeable
+        ):
+            raise ValueError("sketch state must be writable C-contiguous uint64")
+    if fps.shape != counts.shape:
+        raise ValueError("fingerprint and count arrays differ in shape")
+
+
+def _run(add, fps, counts, cells, depth, fp, w, decay, seed) -> None:
+    lut = _decay_lut(float(decay))
+    add(
+        fps.ctypes.data, counts.ctypes.data, cells.ctypes.data, depth,
+        fp.shape[0], fp.ctypes.data, w.ctypes.data, lut.ctypes.data,
+        lut.shape[0], float(decay), int(seed),
+    )
+
+
+def hk_add(fps, counts, cells, fp, w, decay: float, seed: int) -> None:
+    """Add item ``i`` (fingerprint ``fp[i]``, weight ``w[i]``) to cells
+    ``cells[r, i]`` of the flattened state for each row ``r``, items in
+    array order. ``cells`` is ``(depth, n)`` or, for depth 1, ``(n,)``."""
+    _state(fps, counts)
+    depth = np.shape(cells)[0] if np.ndim(cells) == 2 else 1
+    cells, fp, w = _items(cells, fp, w, depth, fps.size)
+    _run(_lib().hk_add, fps, counts, cells, depth, fp, w, decay, seed)
+
+
+def bucketed_add(fps, counts, bucket, fp, w, decay: float, seed: int) -> None:
+    """Add item ``i`` to bucket ``bucket[i]`` of the ``(width, depth)``
+    Bucketed state, items in array order: its first matching cell, else
+    its first empty cell, else its first minimum cell."""
+    _state(fps, counts)
+    if fps.ndim != 2:
+        raise ValueError("bucketed state must be (width, depth)")
+    bucket, fp, w = _items(bucket, fp, w, 1, fps.shape[0])
+    _run(_lib().bucketed_add, fps, counts, bucket, fps.shape[1], fp, w, decay, seed)

@@ -23,23 +23,25 @@ API).
   heavy XOR lobby (src/cuckoo.rs:471-549); merges are deterministic —
   no probabilistic decay during merge.
 
-Execution strategy: hashing/bucket-index/fingerprint-match phases are
-vectorized over the (pre-aggregated) batch; the conflict residue
-(empty-slot claims, decay duels, cuckoo promotion) is per-key Python
-with the same geometric-sampling shortcut as the canonical kernel.
-The canonical depth-row HeavyKeeper (kernel.py) remains the
-throughput-tuned default; these variants trade some batch-kernel speed
-for their accuracy profiles (BASELINE.md: Bucketed/Cuckoo recall 0.985
-/ 1.000 vs 0.942).
+Execution strategy: a batch collapses to its distinct keys, heaviest
+first (``kernel.preaggregate``, shared with the canonical kernel).
+Bucketed adds them in the native loop (``native.bucketed_add``: first
+match, else first empty, else the first minimum cell's decay duel, one
+item after another). Cuckoo probes heavy hits vectorized, then runs
+the misses in waves of unique primary buckets: each wave's lobby step
+is the native loop (``native.hk_add`` over the lobby cells), and its
+promotions and kick chains are vectorized, with a per-item tail. The
+canonical depth-row HeavyKeeper (kernel.py) remains the default; these
+variants trade some speed for their accuracy profiles (BASELINE.md:
+Bucketed/Cuckoo recall 0.985 / 1.000 vs 0.942).
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 
+from . import native
 from .errors import SketchCompatError
 from .serde import dumps as serde_dumps, loads as serde_loads
 from .kernel import (
@@ -47,14 +49,15 @@ from .kernel import (
     HeavyKeeper,
     HKParams,
     TopKQueue,
-    _DENSE_DOMAIN_CAP,
-    _as_bytes,
+    _as_keys,
+    _duel_params,
     _item_heap,
     _key_array,
+    _pq_admit,
     _pq_key,
-    _radix_argsort,
     _sniff_legacy_pickle,
     hash_items,
+    preaggregate,
 )
 from .sketches import bloom, cms, hll, kll, tdigest
 
@@ -71,7 +74,7 @@ def _mix64(x: np.ndarray | np.uint64) -> np.ndarray | np.uint64:
 
 
 class _VariantBase:
-    """Shared plumbing: params, PQ, RNG, duel sampling, serialization."""
+    """Shared plumbing: params, PQ, RNG, batch add, serialization."""
 
     variant: bytes = b"????"
 
@@ -94,9 +97,8 @@ class _VariantBase:
         self.params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
         self.pq = TopKQueue(k)
         self.rng = rng if rng is not None else np.random.default_rng(seed)
+        # test hook: pins decay to 1.0 (True) or 0.0 (False)
         self._force_decay: bool | None = None
-        self._decay_lut: np.ndarray | None = None
-        self._decay_lut_exact_tail = True
 
     # -- hashing ----------------------------------------------------------
     def _hash(self, items: np.ndarray) -> np.ndarray:
@@ -108,158 +110,21 @@ class _VariantBase:
             return (h & _U64(w - 1)).astype(np.int64)
         return (h % _U64(w)).astype(np.int64)
 
-    def _preagg(self, items: np.ndarray, weights: np.ndarray | None):
-        # mirror kernel.add_batch: int64 lanes stay native (splitmix
-        # fast path — no object conversion), hash-table factorize
-        # instead of sort-based unique
-        arr = np.asarray(items)
-        if arr.dtype.kind not in "iu":
-            arr = np.asarray(items, dtype=object)
-        if arr.size == 0:
-            return arr, np.zeros(0, np.int64), np.zeros(0, np.uint64)
-        if arr.dtype.kind in "iu" and arr.size >= 4096:
-            # dense small-domain fast path (kernel.add_batch's twin):
-            # one bincount replaces factorize + weight fold + first-
-            # occurrence scatter, and only the UNIQUE values are hashed
-            amin = int(arr.min())
-            amax = int(arr.max())
-            if amin >= 0 and amax < min(4 * arr.size, _DENSE_DOMAIN_CAP):
-                # bincount can't safe-cast uint64; the range check above
-                # bounds values < 2^22 so an int64 view is exact
-                arr_d = arr.astype(np.int64) if arr.dtype.kind == "u" else arr
-                if weights is None:
-                    cnt = np.bincount(arr_d, minlength=amax + 1)
-                else:
-                    cnt = np.bincount(
-                        arr_d,
-                        weights=np.asarray(weights, dtype=np.float64),
-                        minlength=amax + 1,
-                    )
-                uk_d = np.flatnonzero(cnt)
-                w_d = cnt[uk_d].astype(np.int64)
-                keep_d = w_d > 0
-                uk_d = uk_d[keep_d]
-                return uk_d, w_d[keep_d], self._hash(uk_d)
-        h_all = self._hash(arr)
-        inv, uh = pd.factorize(h_all, sort=False)
-        k = uh.shape[0]
-        n = inv.shape[0]
-        first = np.empty(k, dtype=np.int64)
-        first[inv[::-1]] = np.arange(n - 1, -1, -1)
-        if weights is None:
-            w = np.bincount(inv, minlength=k).astype(np.int64)
-        else:
-            w = np.bincount(
-                inv, weights=np.asarray(weights, dtype=np.float64), minlength=k
-            ).astype(np.int64)
-        keep = w > 0
-        uh = np.asarray(uh, dtype=np.uint64)
-        return arr[first[keep]], w[keep], uh[keep]
+    def add_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
+        arr = _as_keys(items)
+        pos, w, fp = preaggregate(arr, weights, self._hash)
+        self._add_core(fp, w, lambda sel: arr[pos[sel]])
 
-    # -- decay duel (exact distributionally; O(#decrements)) ---------------
-    def _duel(
-        self, get_count, set_count, take_cell, w: int, first_success: bool = False
-    ) -> int | None:
-        """Duel the cell whose count is read/written via callbacks.
-        Returns the winner's count if the challenger took the cell,
-        else None. Mirrors decay_and_maybe_evict
-        (src/bucketed.rs:452-476, src/cuckoo.rs:709-731).
-        ``first_success`` = the caller's vectorized fast-reject already
-        established >= 1 decrement occurs within w trials, so the first
-        gap draws from the truncated geometric (kernel._duel_one
-        conditioning)."""
-        remaining = w
-        decay = self.params.decay
-        rng = self.rng
-        force = self._force_decay
-        while remaining > 0:
-            c = get_count()
-            if c == 0:
-                take_cell(remaining)
-                return remaining
-            if force is True:
-                p = 1.0
-            elif force is False:
-                return None
-            else:
-                p = decay**c
-            if p <= 0.0:
-                return None
-            if first_success:
-                if p >= 1.0:
-                    t = 1
-                else:
-                    total = -math.expm1(remaining * math.log1p(-p))
-                    uu = rng.random() * total
-                    t = int(math.ceil(math.log1p(-uu) / math.log1p(-p)))
-                    t = min(max(t, 1), remaining)
-                first_success = False
-            elif p >= 1.0:
-                t = 1
-            elif p * remaining < 1e-12:
-                if rng.random() < p * remaining:
-                    t = int(rng.integers(1, remaining + 1))
-                else:
-                    return None
-            else:
-                t = int(math.ceil(math.log1p(-rng.random()) / math.log1p(-p)))
-                if t > remaining:
-                    return None
-            remaining -= t
-            set_count(c - 1)
-            if c - 1 == 0:
-                take_cell(remaining + 1)
-                return remaining + 1
-        return None
-
-    # -- zero-object hashed lane (round 4: ported from the canonical
-    # kernel so the distributed builders feed str/bytes keys to the
-    # variant layouts without materializing Python objects either) ----
     def add_batch_hashed(self, hashes, weights, key_take) -> None:
-        """Insert pre-hashed distinct keys WITHOUT materializing them
+        """Insert pre-hashed keys WITHOUT materializing them
         (kernel.HeavyKeeper.add_batch_hashed contract): ``hashes`` must
         come from this sketch's seeded ``hash_items`` family —
         ``hash_string_buffers`` produces identical values straight off
-        the Arrow buffers — and ``key_take(indices)`` materializes only
-        the keys that actually enter the top-K queue."""
-        h = np.asarray(hashes, dtype=np.uint64)
-        if h.size == 0:
-            return
-        inv, uh = pd.factorize(h, sort=False)
-        k = uh.shape[0]
-        w = np.bincount(
-            inv, weights=np.asarray(weights, dtype=np.float64), minlength=k
-        ).astype(np.int64)
-        first = np.empty(k, dtype=np.int64)
-        first[inv[::-1]] = np.arange(h.shape[0] - 1, -1, -1)
-        keep = w > 0
-        firstk = first[keep]
-        self._add_core(
-            np.asarray(uh, dtype=np.uint64)[keep],
-            w[keep],
-            lambda sel: key_take(firstk[sel]),
-        )
-
-    # -- PQ ---------------------------------------------------------------
-    def _pq_update_batch(self, keys: np.ndarray, counts: np.ndarray) -> None:
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(counts > mc)
-        if sel.size:
-            order = sel[np.lexsort((np.asarray(keys[sel]), -counts[sel]))]
-            for i in order:
-                self.pq.upsert(_pq_key(keys[i]), int(counts[i]))
-
-    def _pq_update_batch_lazy(self, key_take, counts: np.ndarray) -> None:
-        """PQ update that materializes ONLY the candidate keys (the
-        hashed-lane analog of ``_pq_update_batch``)."""
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(counts > mc)
-        if sel.size:
-            ks = np.asarray(key_take(sel), dtype=object)
-            csel = counts[sel]
-            order = np.lexsort((ks, -csel))
-            for j in order:
-                self.pq.upsert(_pq_key(ks[j]), int(csel[j]))
+        the Arrow buffers — ``weights=None`` counts each hash once, and
+        ``key_take(indices)`` materializes only the keys that actually
+        enter the top-K queue."""
+        pos, w, fp = preaggregate(np.asarray(hashes, dtype=np.uint64), weights)
+        self._add_core(fp, w, lambda sel: key_take(pos[sel]))
 
     def contains(self, item) -> bool:
         return bool(self.estimate(np.asarray([item], dtype=object))[0] > 0)
@@ -287,33 +152,23 @@ class _VariantBase:
             raise SketchCompatError("variant", type(self).__name__, type(other).__name__)
         self.params.check_compatible(other.params)
 
-    # -- vectorized duel machinery (borrowed from the kernel) ----------
-    # HeavyKeeper._duel_vec only touches params.decay / rng /
-    # _force_decay / _duel_one / _decay_p_int, all of which exist
-    # here; _duel_one is adapted onto the callback-based _duel below.
-    from .kernel import HeavyKeeper as _HK
-
-    _duel_vec = _HK._duel_vec
-    _decay_p_int = _HK._decay_p_int
-    del _HK
-
-    def _duel_one(
-        self, fps_row, cnt_row, cell, new_fp, w, first_success: bool
-    ) -> None:
-        cell = int(cell)
-        self._duel(
-            lambda: int(cnt_row[cell]),
-            lambda c: cnt_row.__setitem__(cell, c),
-            lambda c: (
-                fps_row.__setitem__(cell, new_fp),
-                cnt_row.__setitem__(cell, c),
-            ),
-            int(w),
-            first_success=first_success,
-        )
-
     def _state_dict(self) -> dict:
         raise NotImplementedError
+
+    @staticmethod
+    def _state_array(d: dict, name: str, shape: tuple) -> np.ndarray:
+        """A deserialized state array, refused unless it is C-contiguous
+        ``uint64`` of the shape the params give: the native add loop
+        writes these cells with no bounds checks of NumPy's."""
+        a = d.get(name)
+        if not (
+            isinstance(a, np.ndarray)
+            and a.dtype == np.uint64
+            and a.shape == shape
+            and a.flags.c_contiguous
+        ):
+            raise ValueError(f"{name}: expected C-contiguous uint64 of shape {shape}")
+        return a
 
     def serialize(self) -> bytes:
         d = {
@@ -348,162 +203,28 @@ class BucketedTopK(_VariantBase):
         return {"fps": self.fps, "counts": self.counts}
 
     def _load_state(self, d: dict) -> None:
-        self.fps = d["fps"]
-        self.counts = d["counts"]
-
-    def add_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
-        keys, w, fp = self._preagg(items, weights)
-        self._add_core(fp, w, lambda sel: keys[sel])
+        shape = (self.params.width, self.params.depth)
+        self.fps = self._state_array(d, "fps", shape)
+        self.counts = self._state_array(d, "counts", shape)
 
     def _add_core(self, fp: np.ndarray, w: np.ndarray, key_take) -> None:
-        n = fp.shape[0]
-        if n == 0:
-            return
-        idx = self._index(fp)
-        depth = self.params.depth
-        flat_c = self.counts.reshape(-1)
-        flat_f = self.fps.reshape(-1)
-        # vector phase: fingerprint matches (first matching slot)
-        bf = self.fps[idx]
-        bc = self.counts[idx]
-        m = (bf == fp[:, None]) & (bc > 0)
-        has = m.any(axis=1)
-        slot = m.argmax(axis=1)
-        if has.any():
-            np.add.at(flat_c, idx[has] * depth + slot[has], w[has].astype(np.uint64))
-        # residue: empty-claims and min-cell duels, processed in
-        # vectorized waves (first-per-bucket each wave, heaviest
-        # first). Unlike kernel._add_row — which now sorts ONLY
-        # empty-cell challengers — this layout keeps the full sort:
-        # the wave loop dedups buckets via sorted-run adjacency
-        # (cells[1:] != cells[:-1]), which requires bucket-grouped
-        # order; an unsorted variant would need np.unique per wave
-        # and give the sort cost right back.
-        rem = np.flatnonzero(~has)
-        wr = w[rem]
-        if rem.size and int(wr.max(initial=0)) < (1 << 20) and int(idx.max()) < (1 << 42):
-            packed = (idx[rem].astype(np.uint64) << np.uint64(21)) | (
-                np.uint64((1 << 21) - 1) - wr.astype(np.uint64)
-            )
-            order = rem[_radix_argsort(packed, 21 + int(idx.max()).bit_length())]
-        else:
-            order = rem[np.lexsort((-wr, idx[rem]))]
-        waves = 0
-        while order.size:
-            cells = idx[order]
-            is_first = np.empty(cells.shape[0], dtype=bool)
-            is_first[0] = True
-            np.not_equal(cells[1:], cells[:-1], out=is_first[1:])
-            winners = order[is_first]
-            waves += 1
-            if waves > 32 or winners.size < 8:
-                # long tail: per-key exact path
-                for j in order:
-                    self._add_one(int(idx[j]), fp[j], int(w[j]))
-                break
-            self._wave(winners, idx, fp, w)
-            rest = order[~is_first]
-            # rest keeps (bucket, -w) order for the next wave
-            order = rest
-        # PQ: resulting count per key (re-probe the single bucket)
-        bf = self.fps[idx]
-        bc = self.counts[idx]
-        m = (bf == fp[:, None]) & (bc > 0)
-        est = np.where(m.any(axis=1), bc[np.arange(n), m.argmax(axis=1)], 0).astype(
-            np.int64
-        )
-        self._pq_update_batch_lazy(key_take, est)
+        b = self._index(fp)
+        native.bucketed_add(self.fps, self.counts, b, fp, w, *_duel_params(self))
+        _pq_admit(self.pq, key_take, self._bucket_count(fp, b))
 
-    def _wave(self, winners: np.ndarray, idx: np.ndarray, fp: np.ndarray, w: np.ndarray) -> None:
-        """One vectorized wave: unique-bucket winners get re-match /
-        first-empty install / min-cell duel fast-reject; only duel
-        survivors take the per-key exact path."""
-        b = idx[winners]
+    def _bucket_count(self, fp: np.ndarray, b: np.ndarray) -> np.ndarray:
+        """Count of each fingerprint's matching cell in its bucket ``b``
+        (0 when none matches)."""
         bf = self.fps[b]
         bc = self.counts[b]
-        # re-match (state may have changed since the batch match phase)
-        m = (bf == fp[winners][:, None]) & (bc > 0)
-        hasm = m.any(axis=1)
-        if hasm.any():
-            flat_c = self.counts.reshape(-1)
-            np.add.at(
-                flat_c,
-                b[hasm] * self.params.depth + m.argmax(axis=1)[hasm],
-                w[winners[hasm]].astype(np.uint64),
-            )
-        rem = ~hasm
-        # first-empty install (winner buckets are unique this wave)
-        em = bc == 0
-        has_e = em.any(axis=1) & rem
-        if has_e.any():
-            eslot = em.argmax(axis=1)
-            tb = b[has_e]
-            ts = eslot[has_e]
-            src = winners[has_e]
-            self.fps[tb, ts] = fp[src]
-            self.counts[tb, ts] = w[src].astype(np.uint64)
-        # min-cell duel with vectorized fast-reject; survivors run the
-        # exact conditioned duel VECTORIZED against their bucket's min
-        # cell (buckets unique this wave -> unique flat cells)
-        duel = rem & ~has_e
-        if duel.any():
-            dw = w[winners[duel]].astype(np.float64)
-            minslot = bc[duel].argmin(axis=1)
-            if self._force_decay is None:
-                pm = self._decay_p_int(bc[duel].min(axis=1))
-                with np.errstate(divide="ignore", under="ignore"):
-                    p_any = -np.expm1(dw * np.log1p(-np.minimum(pm, 1 - 1e-16)))
-                surv = self.rng.random(int(duel.sum())) < p_any
-            else:
-                surv = np.ones(int(duel.sum()), dtype=bool)
-            if surv.any():
-                sv = np.flatnonzero(duel)[surv]
-                cells = b[sv] * self.params.depth + minslot[surv]
-                self._duel_vec(
-                    self.fps.reshape(-1),
-                    self.counts.reshape(-1),
-                    cells,
-                    fp[winners[sv]],
-                    w[winners[sv]].astype(np.int64),
-                )
-
-    def _add_one(
-        self, b: int, fp: np.uint64, w: int, first_success: bool = False
-    ) -> None:
-        crow = self.counts[b]
-        frow = self.fps[b]
-        live = crow > 0
-        # re-check match (an earlier residue key may have installed fp)
-        mslots = np.flatnonzero(live & (frow == fp))
-        if mslots.size:
-            crow[mslots[0]] += np.uint64(w)
-            return
-        empties = np.flatnonzero(~live)
-        if empties.size:
-            i = empties[0]
-            frow[i] = fp
-            crow[i] = w
-            return
-        mi = int(crow.argmin())
-
-        self._duel(
-            lambda: int(crow[mi]),
-            lambda c: crow.__setitem__(mi, c),
-            lambda c: (frow.__setitem__(mi, fp), crow.__setitem__(mi, c)),
-            w,
-            first_success=first_success,
-        )
+        m = (bf == fp[:, None]) & (bc > 0)
+        hit = bc[np.arange(fp.shape[0]), m.argmax(axis=1)]
+        return np.where(m.any(axis=1), hit, 0).astype(np.int64)
 
     def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         fp = self._hash(arr)
-        idx = self._index(fp)
-        bf = self.fps[idx]
-        bc = self.counts[idx]
-        m = (bf == fp[:, None]) & (bc > 0)
-        out = np.where(
-            m.any(axis=1), bc[np.arange(arr.shape[0]), m.argmax(axis=1)], 0
-        ).astype(np.int64)
+        out = self._bucket_count(fp, self._index(fp))
         if use_heap and self.pq.counts:
             get = self.pq.counts.get
             for i in range(arr.shape[0]):
@@ -596,23 +317,15 @@ class CuckooTopK(_VariantBase):
         }
 
     def _load_state(self, d: dict) -> None:
-        self.lobby_fp = d["lobby_fp"]
-        self.lobby_c = d["lobby_c"]
-        self.heavy_fp = d["heavy_fp"]
-        self.heavy_c = d["heavy_c"]
-        self.max_kicks = d["max_kicks"]
-
-    @classmethod
-    def deserialize(cls, blob: bytes):
-        if blob[:4] != cls.variant:
-            raise ValueError(f"not a {cls.__name__} blob")
-        _sniff_legacy_pickle(blob[4:6])
-        d = serde_loads(blob[4:])
-        sk = cls(**d["params"], max_kicks=d["max_kicks"])
-        sk._load_state(d)
-        for item, c, _seq in sorted(d["cand"], key=lambda t: t[2]):
-            sk.pq.upsert(item, c)
-        return sk
+        width, depth = self.params.width, self.params.depth
+        self.lobby_fp = self._state_array(d, "lobby_fp", (width,))
+        self.lobby_c = self._state_array(d, "lobby_c", (width,))
+        self.heavy_fp = self._state_array(d, "heavy_fp", (width, depth))
+        self.heavy_c = self._state_array(d, "heavy_c", (width, depth))
+        max_kicks = d.get("max_kicks")
+        if type(max_kicks) is not int or max_kicks < 1:
+            raise ValueError(f"max_kicks must be an int >= 1, got {max_kicks!r}")
+        self.max_kicks = max_kicks
 
     def _pair(self, fp: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """bucket_pair (src/cuckoo.rs:569-580), vectorized."""
@@ -623,10 +336,6 @@ class CuckooTopK(_VariantBase):
         same = b2 == b1
         b2 = np.where(same, (b2 + 1) % self.params.width, b2)
         return b1, b2
-
-    def add_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
-        keys, w, fp = self._preagg(items, weights)
-        self._add_core(fp, w, lambda sel: keys[sel])
 
     def _add_core(self, fp: np.ndarray, w: np.ndarray, key_take) -> None:
         n = fp.shape[0]
@@ -667,14 +376,12 @@ class CuckooTopK(_VariantBase):
                 est[sel2] = flat_c[slots2].astype(np.int64)
                 hit[sel2] = True
         # residue: lobby duels + promotion. Processed in waves of
-        # unique primary buckets (heaviest-first within a bucket), each
-        # wave vectorized: heavy recheck, lobby fast-path update, duel
-        # fast-reject, and the promote *decision*; only actual
-        # promotions and conditioned duel survivors drop to the scalar
-        # path (rare in steady state).
+        # unique primary buckets (heaviest-first within a bucket, the
+        # batch order), each wave's lobby step one native loop and its
+        # promote *decision* vectorized; colliding promotions and the
+        # small last waves take the scalar path.
         rem = np.flatnonzero(~hit)
         if rem.size:
-            rem = rem[np.argsort(-w[rem], kind="stable")]
             # all waves in ONE grouping pass: occurrence-rank r of each
             # item's primary bucket within the (weight-ordered) residue
             # — wave k processes every item with r == k, i.e. the k-th
@@ -701,7 +408,7 @@ class CuckooTopK(_VariantBase):
                         )
                     break
                 self._add_wave(idx, b1, b2, fp, w, est)
-        self._pq_update_batch_lazy(key_take, est)
+        _pq_admit(self.pq, key_take, est)
 
     def _add_wave(
         self,
@@ -717,7 +424,6 @@ class CuckooTopK(_VariantBase):
         the vector phases just batch the common outcomes."""
         depth = self.params.depth
         bb1, bb2, f, ww = b1[sub], b2[sub], fp[sub], w[sub]
-        n = sub.shape[0]
         # No heavy recheck needed: the batch's vector phase already
         # probed both buckets, fps are unique post-preagg, and an fp
         # can only ENTER heavy when its own item is processed — earlier
@@ -727,46 +433,10 @@ class CuckooTopK(_VariantBase):
         # distinct pre-aggregated keys could defeat this, in which case
         # the second key duels the lobby instead of incrementing the
         # heavy cell — the sketch stays within its error model.
-        # lobby fast path (src/cuckoo.rs:635-644): empty or same fp
-        lcnt = self.lobby_c[bb1]
-        fast = (lcnt == 0) | (self.lobby_fp[bb1] == f)
-        if fast.any():
-            tb = bb1[fast]
-            self.lobby_fp[tb] = f[fast]
-            self.lobby_c[tb] += ww[fast].astype(np.uint64)
-        # lobby duel (occupied by another fp): vectorized fast-reject,
-        # conditioned survivors duel VECTORIZED against their lobby cell
-        # (primary buckets are unique this wave)
-        duel = np.flatnonzero(~fast)
-        winners: np.ndarray | list = []
-        if duel.size:
-            force = self._force_decay
-            if force is True:
-                p_any = np.ones(duel.size)
-            elif force is False:
-                p_any = np.zeros(duel.size)
-            else:
-                pm = self._decay_p_int(self.lobby_c[bb1[duel]])
-                with np.errstate(under="ignore", divide="ignore", invalid="ignore"):
-                    p_any = -np.expm1(ww[duel].astype(np.float64) * np.log1p(-pm))
-                p_any = np.where(pm >= 1.0, 1.0, p_any)
-            u = self.rng.random(duel.size)
-            sv = duel[np.flatnonzero(u < p_any)]
-            if sv.size:
-                cells = bb1[sv]
-                self._duel_vec(
-                    self.lobby_fp,
-                    self.lobby_c,
-                    cells,
-                    f[sv],
-                    ww[sv].astype(np.int64),
-                )
-                won = (self.lobby_fp[cells] == f[sv]) & (self.lobby_c[cells] > 0)
-                winners = sv[won]
+        # Lobby step (src/cuckoo.rs:635-651): empty or same fp adds,
+        # anything else duels the lobby cell.
+        holders = self._lobby_add(bb1, f, ww)
         # promote decision, vectorized over lobby holders
-        holders = np.flatnonzero(fast)
-        if isinstance(winners, np.ndarray) and winners.size:
-            holders = np.concatenate([holders, winners])
         if holders.size == 0:
             return
         hb1, hb2 = bb1[holders], bb2[holders]
@@ -899,30 +569,22 @@ class CuckooTopK(_VariantBase):
         if idx is not None:
             self.heavy_c.reshape(-1)[idx] += np.uint64(w)
             return int(self.heavy_c.reshape(-1)[idx])
-        # lobby update at primary (src/cuckoo.rs:635-651)
-        if self.lobby_c[b1] == 0 or self.lobby_fp[b1] == fp:
-            self.lobby_fp[b1] = fp
-            self.lobby_c[b1] += np.uint64(w)
-            lc = int(self.lobby_c[b1])
-        else:
-            won = self._duel(
-                lambda: int(self.lobby_c[b1]),
-                lambda c: self.lobby_c.__setitem__(b1, c),
-                lambda c: (
-                    self.lobby_fp.__setitem__(b1, fp),
-                    self.lobby_c.__setitem__(b1, c),
-                ),
-                w,
-            )
-            if won is None:
-                return 0
-            lc = won
+        if not self._lobby_add(np.asarray([b1]), np.asarray([fp]), np.asarray([w])).size:
+            return 0
+        lc = int(self.lobby_c[b1])
         if self._promote(fp, lc, b1, b2):
             if self.lobby_fp[b1] == fp:
                 self.lobby_fp[b1] = 0
                 self.lobby_c[b1] = 0
             return lc
         return 0
+
+    def _lobby_add(self, b: np.ndarray, fp: np.ndarray, w: np.ndarray) -> np.ndarray:
+        """Add each item to the lobby cell of its primary bucket ``b``
+        (the native add loop at depth 1), in array order; returns the
+        positions of the items that hold their lobby afterwards."""
+        native.hk_add(self.lobby_fp, self.lobby_c, b, fp, w, *_duel_params(self))
+        return np.flatnonzero((self.lobby_fp[b] == fp) & (self.lobby_c[b] > 0))
 
     def _find_heavy(self, fp: np.uint64, b1: int, b2: int) -> int | None:
         for b in (b1, b2) if b1 != b2 else (b1,):
@@ -1055,7 +717,7 @@ class CuckooTopK(_VariantBase):
             fp, count, from_b = ofp, tc, target
 
     def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        arr = np.asarray(items, dtype=object)
+        arr = _as_keys(items)
         n = arr.shape[0]
         fp = self._hash(arr)
         b1, b2 = self._pair(fp)
@@ -1102,7 +764,7 @@ class CuckooTopK(_VariantBase):
         # — fingerprint already heavy in self, no lobby involvement —
         # is handled vectorized; everything else (installs, evictions,
         # kick chains, lobby folds) takes the exact sequential path.
-        w, d = self.params.width, self.params.depth
+        d = self.params.depth
         nz = other.heavy_c.reshape(-1) > 0
         if nz.any():
             ofps = other.heavy_fp.reshape(-1)[nz]

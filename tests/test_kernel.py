@@ -372,17 +372,6 @@ class TestStringBufferHash:
             )
 
 
-def test_radix_argsort_matches_comparison_sort():
-    from heavykeeper_rs_spark.kernel import _radix_argsort
-
-    rng = np.random.default_rng(0)
-    for nbits, n in ((21, 1), (35, 1000), (50, 50_000), (14, 37)):
-        key = rng.integers(0, 1 << nbits, n, dtype=np.uint64)
-        got = _radix_argsort(key, nbits)
-        want = np.argsort(key, kind="stable")
-        assert np.array_equal(got, want), (nbits, n)
-
-
 def test_dense_preagg_matches_factorize():
     """The dense small-domain bincount preagg in add_batch must agree
     with the khash-factorize lane: identical exact counts on an
@@ -433,7 +422,7 @@ def test_dense_preagg_matches_factorize():
     c.add_batch(ukeys)
     assert dict(c.list()) == truth
 
-    # the variants share the dense _preagg twin
+    # the variants share the same preaggregate
     from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
 
     for cls in (BucketedTopK, CuckooTopK):
@@ -652,3 +641,30 @@ class TestSparseMergeFastPath:
             HeavyKeeper.deserialize(bad)
         with pytest.raises(ValueError, match="ascending"):
             merge_blobs([first, bad])
+
+
+def test_same_seed_gives_identical_blobs_and_rng_reassignment_reseeds():
+    """The native add loop draws its seed from ``sk.rng`` on each add:
+    the same seed gives byte-identical blobs on every layout, and the
+    per-partition RNG that ``agg._seeded`` assigns after construction
+    still changes a contested sketch."""
+    from heavykeeper_rs_spark.operators.agg import _seeded
+    from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
+
+    data = np.random.default_rng(5).zipf(1.3, 50_000).astype(np.int64)
+    makers = [
+        lambda: HeavyKeeper(HKParams(k=10, width=32, depth=2, decay=0.9, seed=7)),
+        lambda: BucketedTopK(10, 16, 2, seed=7),
+        lambda: CuckooTopK(10, 16, 2, seed=7),
+    ]
+
+    def blob(make, pid=None):
+        sk = make() if pid is None else _seeded(make(), pid)
+        for chunk in np.array_split(data, 4):
+            sk.add_batch(chunk)
+        return sk.serialize()
+
+    for make in makers:
+        assert blob(make) == blob(make)
+        assert blob(make, 1) == blob(make, 1)
+        assert blob(make, 1) != blob(make, 2)

@@ -198,52 +198,12 @@ class TestDebugDump:
         assert d["mem_bytes"] == sk.mem_bytes(item_heap_fn=lambda _k: 0)
 
 
-class TestDuelVecDistribution:
-    """The wave-vectorized duel (_duel_vec) must match the scalar
-    _duel_one distribution: same survival rate and same mean surviving
-    count for a contested cell."""
-
-    def test_vectorized_matches_scalar_distribution(self):
-        import numpy as np
-        from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams
-
-        c0, w, decay, n = 6, 3, 0.9, 4000
-        results = {}
-        for mode in ("vec", "scalar"):
-            counts, seized = [], 0
-            sk = HeavyKeeper(HKParams(k=2, width=8, depth=1, decay=decay, seed=7))
-            rng = np.random.default_rng(123)
-            for _ in range(n):
-                fps = np.zeros(8, dtype=np.uint64)
-                cnt = np.zeros(8, dtype=np.uint64)
-                fps[3] = 11111
-                cnt[3] = c0
-                sk.rng = rng
-                if mode == "vec":
-                    sk._duel_vec(
-                        fps, cnt,
-                        np.asarray([3]), np.asarray([22222], dtype=np.uint64),
-                        np.asarray([w], dtype=np.int64),
-                    )
-                else:
-                    sk._duel_one(fps, cnt, 3, np.uint64(22222), w, first_success=True)
-                counts.append(int(cnt[3]))
-                if fps[3] == 22222:
-                    seized += 1
-            results[mode] = (np.mean(counts), seized / n)
-        mv, sv = results["vec"]
-        ms, ss = results["scalar"]
-        # conditioned duels: both paths should agree within MC noise
-        assert abs(mv - ms) < 0.15, (mv, ms)
-        assert abs(sv - ss) < 0.03, (sv, ss)
-
-
 def test_heavy_twin_challengers_order_by_weight_not_position():
-    """Two challengers BOTH above the 16-bit radix digit on the same
-    cell: the sort must widen its weight digit, not clamp — a clamped
-    tie would let the lighter key (earlier in batch order) install
-    first and the heavier key's whole mass die in a hopeless duel
-    (round-5 self-review finding)."""
+    """Two challengers on the same empty cell, the lighter one first in
+    the batch and both weights above 2^16: the batch adds heaviest
+    first, so the heavier key installs and the lighter one loses its
+    duel; the other order would let the heavier key's whole mass die
+    in a hopeless duel (round-5 self-review finding)."""
     import numpy as np
 
     from heavykeeper_rs_spark.kernel import (

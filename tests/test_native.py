@@ -62,3 +62,119 @@ def test_compile_error_carries_stderr(monkeypatch):
     monkeypatch.setattr(native, "_SRC", "this is not C;\n")
     with pytest.raises(RuntimeError, match=r"(?s)cc -O2 -shared -fPIC.*error"):
         native._build()
+
+
+# ------------------------------------------------------------ add loops
+def _per_unit(c: int, w: int, decay: float, rng) -> tuple[bool, int]:
+    """The reference's duel, one unit at a time (src/heavykeeper.rs:
+    309-328): each unit decrements the occupant with probability
+    decay**count; at 0 the challenger takes the cell with the units
+    left, the converting one included. Returns (occupant kept, count)."""
+    for left in range(w, 0, -1):
+        if rng.random() < decay**c:
+            c -= 1
+            if c == 0:
+                return False, left
+    return True, c
+
+
+class TestCellAdd:
+    @pytest.mark.parametrize("c0,w", [(6, 3), (6, 1), (2, 50)])
+    def test_matches_per_unit_bernoulli(self, c0, w):
+        """Geometric gaps between decrements sample the same duel as the
+        per-unit Bernoulli loop: survival rate and mean count agree
+        within Monte Carlo noise (5 standard errors)."""
+        n, decay = 20_000, 0.9
+        fps = np.ones(n, dtype=np.uint64)
+        cnt = np.full(n, c0, dtype=np.uint64)
+        native.hk_add(
+            fps, cnt, np.arange(n), np.full(n, 2, dtype=np.uint64),
+            np.full(n, w), decay, 7,
+        )
+        kept_c, count_c = fps == 1, cnt.astype(np.float64)
+        rng = np.random.default_rng(11)
+        ref = [_per_unit(c0, w, decay, rng) for _ in range(n)]
+        kept_r = np.asarray([k for k, _ in ref])
+        count_r = np.asarray([c for _, c in ref], dtype=np.float64)
+        for a, b in ((kept_c, kept_r), (count_c, count_r)):
+            se = np.sqrt(a.var() / n + b.var() / n)
+            assert abs(a.mean() - b.mean()) <= 5 * se + 1e-9, (a.mean(), b.mean())
+
+    def test_forced_decay_takeover_counts_converting_trial(self):
+        # 3000 against a count-1000 cell at decay 1.0 leaves 2001
+        # (src/heavykeeper.rs:766-794); at decay 0.0 nothing decrements
+        for decay, want in ((1.0, (7, 2001)), (0.0, (5, 1000))):
+            fps = np.asarray([5], dtype=np.uint64)
+            cnt = np.asarray([1000], dtype=np.uint64)
+            native.hk_add(fps, cnt, [0], [7], [3000], decay, 1)
+            assert (int(fps[0]), int(cnt[0])) == want
+
+    def test_bucketed_picks_match_then_empty_then_min(self):
+        fps = np.asarray([[1, 0, 3], [4, 5, 6]], dtype=np.uint64)
+        cnt = np.asarray([[9, 0, 2], [7, 3, 8]], dtype=np.uint64)
+        # bucket 0: fp 3 matches its cell, fp 8 takes the empty cell;
+        # bucket 1 is full, so fp 9 duels its minimum (fp 5 at 3)
+        native.bucketed_add(fps, cnt, [0, 0, 1], [3, 8, 9], [4, 1, 10], 1.0, 1)
+        assert fps.tolist() == [[1, 8, 3], [4, 9, 6]]
+        assert cnt.tolist() == [[9, 1, 6], [7, 8, 8]]
+
+
+def _state(shape=(2, 4)):
+    return np.zeros(shape, dtype=np.uint64), np.zeros(shape, dtype=np.uint64)
+
+
+def _readonly(a):
+    a.setflags(write=False)
+    return a
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        dict(cells=[[0], [8]]),
+        dict(cells=[[-1], [0]]),
+        dict(fp=[1, 2]),
+        dict(w=[0]),
+        dict(fps=_readonly(_state()[0])),
+        dict(counts=np.zeros((2, 8), dtype=np.uint64)[:, ::2]),
+        dict(fps=np.zeros((2, 4), dtype=np.int64)),
+        dict(counts=np.zeros((4, 2), dtype=np.uint64)),
+    ],
+    ids=[
+        "cell-past-end", "cell-negative", "length-mismatch", "weight-below-1",
+        "read-only", "non-contiguous", "wrong-dtype", "shape-mismatch",
+    ],
+)
+def test_hk_add_refuses_bad_buffers(case):
+    fps, counts = _state()
+    args = dict(fps=fps, counts=counts, cells=[[0], [4]], fp=[1], w=[1])
+    args.update(case)
+    with pytest.raises(ValueError):
+        native.hk_add(**args, decay=0.9, seed=1)
+    assert not fps.any() and not counts.any()  # C never ran
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        dict(bucket=[2]),
+        dict(bucket=[-1]),
+        dict(w=[1, 1]),
+        dict(w=[-3]),
+        dict(counts=_readonly(_state()[1])),
+        dict(fps=np.zeros((2, 8), dtype=np.uint64)[:, ::2]),
+        dict(counts=np.zeros((2, 4), dtype=np.float64)),
+        dict(fps=np.zeros(8, dtype=np.uint64), counts=np.zeros(8, dtype=np.uint64)),
+    ],
+    ids=[
+        "bucket-past-end", "bucket-negative", "length-mismatch", "weight-below-1",
+        "read-only", "non-contiguous", "wrong-dtype", "not-2d",
+    ],
+)
+def test_bucketed_add_refuses_bad_buffers(case):
+    fps, counts = _state()
+    args = dict(fps=fps, counts=counts, bucket=[1], fp=[1], w=[1])
+    args.update(case)
+    with pytest.raises(ValueError):
+        native.bucketed_add(**args, decay=0.9, seed=1)
+    assert not fps.any() and not counts.any()  # C never ran

@@ -364,3 +364,65 @@ def test_variant_hashed_lane_identity():
             b.add_batch_hashed(h, np.ones(len(chunk)), lambda sel, c=chunk: c[sel])
         assert a.list() == b.list(), cls.__name__
         assert a.serialize() == b.serialize(), cls.__name__
+
+
+def test_variant_hashed_lane_counts_each_hash_once_without_weights():
+    """``weights=None`` counts each hash once on every layout, as the
+    token feed relies on (the variants used to raise on it)."""
+    from heavykeeper_rs_spark.kernel import hash_items
+
+    keys = obj(*["a"] * 5 + ["b"] * 3 + ["c"])
+    for cls in (BucketedTopK, CuckooTopK):
+        a = cls(4, 64, 2, seed=3)
+        a.add_batch(keys)
+        b = cls(4, 64, 2, seed=3)
+        b.add_batch_hashed(hash_items(keys, 3), None, lambda sel: keys[sel])
+        assert b.list() == a.list() == [(b"a", 5), (b"b", 3), (b"c", 1)], cls.__name__
+
+
+def _reencoded(sk, **state):
+    from heavykeeper_rs_spark.serde import dumps, loads
+
+    blob = sk.serialize()
+    d = loads(blob[4:])
+    d.update(state)
+    return blob[:4] + dumps(d)
+
+
+@pytest.mark.parametrize(
+    "make,state",
+    [
+        (lambda: BucketedTopK(4, 64, 2),
+         dict(fps=np.zeros((3, 3), np.uint64), counts=np.zeros((3, 3), np.uint64))),
+        (lambda: BucketedTopK(4, 64, 2), dict(counts=np.zeros((64, 2), np.int64))),
+        (lambda: BucketedTopK(4, 64, 2), dict(fps=None)),
+        (lambda: CuckooTopK(4, 64, 2), dict(lobby_c=np.zeros(3, np.uint64))),
+        (lambda: CuckooTopK(4, 64, 2), dict(heavy_fp=np.zeros((64, 3), np.uint64))),
+        (lambda: CuckooTopK(4, 64, 2), dict(max_kicks=0)),
+    ],
+    ids=[
+        "bucketed-3x3", "bucketed-int64", "bucketed-missing",
+        "cuckoo-3-cell-lobby", "cuckoo-heavy-shape", "cuckoo-max-kicks",
+    ],
+)
+def test_hostile_state_refused_at_deserialize(make, state):
+    """The native add loop writes the cells unchecked, so a blob whose
+    state arrays disagree with its params must fail at ``deserialize``,
+    before any add can run on it."""
+    from heavykeeper_rs_spark.variants import deserialize_any
+
+    sk = make()
+    sk.add_batch(obj("x", "y", "x"))
+    with pytest.raises(ValueError):
+        deserialize_any(_reencoded(sk, **state))
+
+
+def test_variant_bucket_count_reads_int_keys_on_the_int_lane():
+    """``estimate(use_heap=False)`` (the merge fallback) hashes integer
+    keys on the same lane the add path used; it used to hash them as
+    strings and read 0 for every int-keyed sketch."""
+    keys = np.asarray([5, 5, 5, 7], dtype=np.int64)
+    for cls in (BucketedTopK, CuckooTopK):
+        sk = cls(4, 64, 2)
+        sk.add_batch(keys)
+        assert sk.estimate(np.asarray([5, 7]), use_heap=False).tolist() == [3, 1]

@@ -70,12 +70,13 @@ bounded = (np.searchsorted(cdf, rng.random(N), side="left") + 1).astype(np.int64
 # best-of-3 on the headline fixture: this box's single-core swings
 # with co-tenant load (see BENCH.md cpu_control notes), and the
 # headline is what rounds compare
-run(
+ref = run(
     "REFERENCE fixture: bounded Zipf(1e6,1.2) w=4096 d=4 K=100",
     bounded,
     HKParams(k=100, width=4096, depth=4),
     reps=3,
 )
+print(f"{'REFERENCE fixture / reference single thread (21 M/s)':55s} {ref / 21.0:6.3f}")
 
 # adversarial variant: unbounded Zipf tail mixed over u64 — more
 # distinct keys (~10% of stream) than cells, duels never stop
@@ -162,17 +163,11 @@ run_tokens(
     HKParams(k=100, width=16384, depth=4),
 )
 
-# same-session A/B with cpu-control bracket (round-5 verdict #2):
-# best-of-3 each, interleaved-free back-to-back, controls pre/post —
-# the parity claim (cuckoo >= 0.9x bucketed) is only valid when the
-# two controls agree
-ctl_pre = cpu_control("pre")
-b = run("bucketed variant, reference fixture w=4096 K=100", bounded[: N // 2],
-        HKParams(k=100, width=4096, depth=4), cls=BucketedTopK, reps=3)
-c = run("cuckoo variant, reference fixture w=4096 K=100", bounded[: N // 2],
-        HKParams(k=100, width=4096, depth=4), cls=CuckooTopK, reps=3)
-ctl_post = cpu_control("post")
-print(
-    f"{'cuckoo/bucketed parity (controls pre/post above)':55s} "
-    f"{c / b:6.3f}"
-)
+# the variant layouts on the reference fixture, bracketed by CPU
+# controls: compare runs only when the pre/post controls agree
+cpu_control("pre")
+run("bucketed variant, reference fixture w=4096 K=100", bounded[: N // 2],
+    HKParams(k=100, width=4096, depth=4), cls=BucketedTopK, reps=3)
+run("cuckoo variant, reference fixture w=4096 K=100", bounded[: N // 2],
+    HKParams(k=100, width=4096, depth=4), cls=CuckooTopK, reps=3)
+cpu_control("post")
