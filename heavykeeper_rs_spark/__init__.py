@@ -18,6 +18,7 @@ Public surface:
 - plans.checkpoint — resumable per-partition lineage + metrics
 - streaming.topk_stream — Structured Streaming front-end
 - sources.synth — deterministic webtext / Zipf generators
+- worker — stat-checked zipimport invalidation for Spark Python workers
 """
 
 __version__ = "0.1.0"
@@ -33,3 +34,22 @@ from .errors import (  # noqa: F401
 )
 from .kernel import HeavyKeeper, HKParams, TopKQueue  # noqa: F401
 from .variants import BucketedTopK, CuckooTopK  # noqa: F401
+
+
+def _in_spark_task() -> bool:
+    import sys
+
+    if "pyspark" not in sys.modules:
+        return False
+    from pyspark import TaskContext
+
+    return TaskContext.get() is not None
+
+
+# Every library UDF reaches a Spark Python worker by unpickling a function
+# of this package, so this import runs once per worker process, inside the
+# task that first needs it.
+if _in_spark_task():
+    from . import worker
+
+    worker.install()

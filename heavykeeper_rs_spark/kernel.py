@@ -369,10 +369,17 @@ def _pq_admit(
 ) -> list | None:
     """Offer the queue every key whose post-batch count ``est`` beats
     its minimum (only those can change it), count desc then key, so
-    equal counts get a deterministic insertion sequence. Only those
-    keys materialize (``take_keys(positions)``); keys pushed out of the
-    queue are appended to ``evicted`` when it is given."""
+    equal counts get a deterministic insertion sequence. Of more than
+    ``k`` such keys, only those reaching the k-th largest ``est`` are
+    offered: the offers before any lighter key leave the queue full
+    with every count at least that threshold, so the queue would refuse
+    it. Only offered keys materialize (``take_keys(positions)``); keys
+    pushed out of the queue are appended to ``evicted`` when it is
+    given."""
     sel = np.flatnonzero(est > pq.min_count())
+    if sel.size > pq.k:
+        cut = est[sel]
+        sel = sel[cut >= np.partition(cut, sel.size - pq.k)[sel.size - pq.k]]
     if sel.size:
         keys = np.asarray(take_keys(sel), dtype=object)
         counts = est[sel]
@@ -577,9 +584,9 @@ class HeavyKeeper:
             np.maximum(out, np.where(m, row, 0), out=out)
         return out
 
-    def contains(self, item: bytes | str) -> bool:
+    def contains(self, item: bytes | str | int) -> bool:
         """O9 (src/heavykeeper.rs:177-199)."""
-        return bool(self.estimate(np.asarray([item], dtype=object))[0] > 0)
+        return bool(self.estimate([item])[0] > 0)
 
     def query(self, item: bytes | str) -> bool:
         """O10: deprecated alias of ``contains`` (kept for parity with

@@ -127,7 +127,7 @@ class _VariantBase:
         self._add_core(fp, w, lambda sel: key_take(pos[sel]))
 
     def contains(self, item) -> bool:
-        return bool(self.estimate(np.asarray([item], dtype=object))[0] > 0)
+        return bool(self.estimate([item])[0] > 0)
 
     def query(self, item) -> bool:
         """O10: deprecated alias of ``contains`` (src/bucketed.rs:299,

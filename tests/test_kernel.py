@@ -668,3 +668,69 @@ def test_same_seed_gives_identical_blobs_and_rng_reassignment_reseeds():
         assert blob(make) == blob(make)
         assert blob(make, 1) == blob(make, 1)
         assert blob(make, 1) != blob(make, 2)
+
+
+def _pq_admit_reference(pq, take_keys, est, evicted=None):
+    """The admission loop before the k-th-largest cut: every key that
+    beats the queue minimum is materialized and offered."""
+    from heavykeeper_rs_spark.kernel import _pq_key
+
+    sel = np.flatnonzero(est > pq.min_count())
+    if sel.size:
+        ks = np.asarray(take_keys(sel), dtype=object)
+        counts = est[sel]
+        for i in np.lexsort((ks, -counts)):
+            victim = pq.upsert(_pq_key(ks[i]), int(counts[i]))
+            if victim is not None and evicted is not None:
+                evicted.append(victim)
+    return evicted
+
+
+def test_pq_admit_cut_matches_reference_loop(monkeypatch):
+    """Offering only the keys that reach the k-th largest estimate
+    leaves every layout's queue (counts, insertion sequences, evicted
+    stream) and blob exactly as offering every key does."""
+    from heavykeeper_rs_spark import kernel, variants
+    from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
+
+    cut = kernel._pq_admit
+    rng = np.random.default_rng(2024)
+    for trial in range(300):
+        k = int(rng.integers(1, 61))
+        width = int(rng.choice([8, 16, 48, 64, 256]))
+        depth = int(rng.integers(1, 5))
+        universe = int(rng.integers(5, 400))
+        batches = [
+            np.minimum(rng.zipf(1.1 + rng.random(), int(rng.integers(1, 1500))), universe)
+            for _ in range(int(rng.integers(1, 6)))
+        ]
+        if trial % 2:
+            batches = [np.asarray([f"s{v}" for v in b], dtype=object) for b in batches]
+        layout = trial % 3
+        runs = []
+        for admit in (_pq_admit_reference, cut):
+            monkeypatch.setattr(kernel, "_pq_admit", admit)
+            monkeypatch.setattr(variants, "_pq_admit", admit)
+            if layout == 0:
+                sk = HeavyKeeper(HKParams(k=k, width=width, depth=depth, seed=trial))
+                evicted = [sk.add_batch(b, return_evicted=True) for b in batches]
+            else:
+                cls = BucketedTopK if layout == 1 else CuckooTopK
+                sk = cls(k, width, depth, seed=trial)
+                evicted = [sk.add_batch(b) for b in batches]
+            runs.append((dict(sk.pq.counts), dict(sk.pq.seqs), evicted, sk.serialize()))
+        assert runs[0] == runs[1], (trial, k, width, depth, layout)
+
+
+@pytest.mark.parametrize("layout", ["heavykeeper", "bucketed", "cuckoo"])
+def test_contains_finds_int_keys(layout):
+    from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
+
+    sk = {
+        "heavykeeper": lambda: HeavyKeeper(HKParams(k=1, width=64, depth=2)),
+        "bucketed": lambda: BucketedTopK(1, 64, 2),
+        "cuckoo": lambda: CuckooTopK(1, 64, 2),
+    }[layout]()
+    sk.add_batch(np.array([5, 5, 7]))
+    assert sk.contains(5) and sk.contains(7)
+    assert not sk.contains(9)
