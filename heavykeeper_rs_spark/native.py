@@ -1,6 +1,7 @@
 """Native kernels, one C pass each, called through ``ctypes``: the
 text lane's ASCII tokenizer and seeded string hash, and the sketch add
-loops of the HeavyKeeper and Bucketed layouts.
+loops of the HeavyKeeper, Bucketed and Cuckoo layouts with Cuckoo's
+merge.
 
 The C source lives here as a string because ``--py-files`` zips ship
 only ``.py`` files. It is compiled on first use in each process into a
@@ -26,11 +27,22 @@ counting as its first unit (3000 vs a count-1000 cell at decay 1.0
 leaves 2001, src/heavykeeper.rs:766-794). The draws come from a
 splitmix64 stream seeded by the caller.
 
+The Cuckoo loops (src/cuckoo.rs:635-707) derive both candidate buckets
+of each fingerprint themselves (``cuckoo_pairs``, the one
+``bucket_pair``). ``cuckoo_add`` gives a heavy hit its weight, else
+duels the lobby cell of the primary bucket with ``cell_add``, and
+promotes a lobby holder into an empty heavy slot or over the lighter
+minimum slot, whose victim walks a kick chain of at most ``max_kicks``
+hops. ``cuckoo_merge_heavy`` merges another sketch's heavy cells with
+no decay: first the cells already heavy here, then the rest in order,
+placed as a promotion is.
+
 The wrappers check every buffer before C sees a pointer: offsets are
 non-decreasing and lie inside ``data``, slices are non-negative and end
 inside ``data``, cell and bucket ids lie inside the state, item arrays
 agree in length, weights are at least 1, and the state arrays are
-writable, C-contiguous ``uint64``.
+writable, C-contiguous ``uint64`` (Cuckoo's: lobby ``(width,)``, heavy
+``(width, depth)``, ``max_kicks >= 1``).
 """
 
 from __future__ import annotations
@@ -145,6 +157,8 @@ static void cell_add(uint64_t *fps, uint64_t *cnt, int64_t cell,
         } else if (p < 1.0) {
             t = floor(log(u) / log1p(-p)) + 1.0;
             if (t > (double)w) break;
+        } else if (w == 0) {
+            break;  /* p == 1: one unit per decrement, none left */
         }
         w -= (int64_t)t;
         if (--c == 0) {
@@ -189,6 +203,152 @@ void bucketed_add(uint64_t *fps, uint64_t *cnt, const int64_t *bucket,
                  w[i], &d);
     }
 }
+
+/* Cuckoo layout: bucket b has lobby cell b and heavy slots
+   b*depth ... b*depth+depth-1. */
+typedef struct {
+    uint64_t *lfp, *lc, *hfp, *hc;
+    int64_t width, depth, max_kicks;
+} cuckoo_t;
+
+static int64_t bucket_of(uint64_t h, int64_t width) {
+    uint64_t w = (uint64_t)width;
+    return (int64_t)((w & (w - 1)) == 0 ? h & (w - 1) : h % w);
+}
+
+/* bucket_pair (src/cuckoo.rs:569-580) */
+static void pair(uint64_t fp, int64_t width, int64_t *b1, int64_t *b2) {
+    *b1 = *b2 = bucket_of(fp, width);
+    if (width == 1) return;
+    *b2 = bucket_of(mix(fp ^ 0x9E3779B97F4A7C15ULL), width);
+    if (*b2 == *b1) *b2 = (*b2 + 1) % width;
+}
+
+void cuckoo_pairs(const uint64_t *fp, int64_t n, int64_t width, int64_t *b1,
+                  int64_t *b2) {
+    for (int64_t i = 0; i < n; i++) pair(fp[i], width, &b1[i], &b2[i]);
+}
+
+/* The live heavy slot holding fp in b1, else in b2; -1 when none. */
+static int64_t find_heavy(const cuckoo_t *s, uint64_t fp, int64_t b1,
+                          int64_t b2) {
+    for (int64_t b = b1;; b = b2) {
+        for (int64_t j = b * s->depth; j < (b + 1) * s->depth; j++)
+            if (s->hc[j] && s->hfp[j] == fp) return j;
+        if (b == b2) return -1;
+    }
+}
+
+/* The first minimum slot of bucket b: its first empty slot if any. */
+static int64_t min_slot(const cuckoo_t *s, int64_t b) {
+    int64_t m = b * s->depth;
+    for (int64_t j = m + 1; j < (b + 1) * s->depth; j++)
+        if (s->hc[j] < s->hc[m]) m = j;
+    return m;
+}
+
+/* Bounded kick chain (src/cuckoo.rs:678-707): the victim (fp, c)
+   displaced from bucket `from` moves to its other bucket's minimum
+   slot if that is empty or strictly lighter, displacing its occupant
+   in turn; whatever is displaced after max_kicks hops is dropped. */
+static void relocate(cuckoo_t *s, uint64_t fp, uint64_t c, int64_t from) {
+    for (int64_t k = 0; k < s->max_kicks && c; k++) {
+        int64_t b1, b2;
+        pair(fp, s->width, &b1, &b2);
+        int64_t to = from == b1 ? b2 : b1;
+        if (to == from) return;
+        int64_t j = min_slot(s, to);
+        uint64_t tfp = s->hfp[j], tc = s->hc[j];
+        if (tc && c <= tc) return;
+        s->hfp[j] = fp;
+        s->hc[j] = c;
+        fp = tfp;
+        c = tc;
+        from = to;
+    }
+}
+
+/* Promotion (src/cuckoo.rs:653-676): the first empty slot of b1, then
+   of b2; else the minimum slot over both buckets (b2's only when
+   strictly smaller), taken only when c is strictly heavier, its victim
+   relocated. Returns whether (fp, c) was placed. */
+static int place(cuckoo_t *s, uint64_t fp, uint64_t c, int64_t b1,
+                 int64_t b2) {
+    int64_t j = min_slot(s, b1);
+    if (b2 != b1) {
+        int64_t j2 = min_slot(s, b2);
+        if (s->hc[j2] < s->hc[j]) j = j2;
+    }
+    uint64_t vfp = s->hfp[j], vc = s->hc[j];
+    if (vc && c <= vc) return 0;
+    s->hfp[j] = fp;
+    s->hc[j] = c;
+    relocate(s, vfp, vc, j / s->depth);
+    return 1;
+}
+
+/* Item i (src/cuckoo.rs:635-707): a heavy hit takes the weight; else
+   it duels the lobby cell of its primary bucket, and a lobby holder is
+   promoted, leaving the lobby empty. est[i] is the item's heavy count
+   after the add, 0 when it is not heavy. */
+void cuckoo_add(uint64_t *lfp, uint64_t *lc, uint64_t *hfp, uint64_t *hc,
+                int64_t width, int64_t depth, int64_t max_kicks, int64_t n,
+                const uint64_t *fp, const int64_t *w, const double *lut,
+                int64_t nlut, double decay, uint64_t seed, int64_t *est) {
+    cuckoo_t s = {lfp, lc, hfp, hc, width, depth, max_kicks};
+    duel_t d = {lut, nlut, decay, seed};
+    for (int64_t i = 0; i < n; i++) {
+        int64_t b1, b2, j;
+        pair(fp[i], width, &b1, &b2);
+        est[i] = 0;
+        if ((j = find_heavy(&s, fp[i], b1, b2)) >= 0) {
+            hc[j] += (uint64_t)w[i];
+            est[i] = (int64_t)hc[j];
+            continue;
+        }
+        cell_add(lfp, lc, b1, fp[i], w[i], &d);
+        if (lc[b1] && lfp[b1] == fp[i] && place(&s, fp[i], lc[b1], b1, b2)) {
+            est[i] = (int64_t)lc[b1];
+            lfp[b1] = lc[b1] = 0;
+        }
+    }
+}
+
+/* Another sketch's live heavy cells (fp[i], c[i]) merged in, with no
+   decay (src/cuckoo.rs:471-517). First every cell already heavy here,
+   with no lobby entry at its primary bucket, adds to its slot, so mass
+   on both sides sums before any eviction; then each other cell, in
+   order, takes a lobby entry of its own along, adds to its slot if it
+   is heavy by now, else is placed as a promotion is. c is consumed:
+   the first pass zeroes the cells it merged. */
+void cuckoo_merge_heavy(uint64_t *lfp, uint64_t *lc, uint64_t *hfp,
+                        uint64_t *hc, int64_t width, int64_t depth,
+                        int64_t max_kicks, int64_t n, const uint64_t *fp,
+                        uint64_t *c) {
+    cuckoo_t s = {lfp, lc, hfp, hc, width, depth, max_kicks};
+    int64_t b1, b2, j;
+    for (int64_t i = 0; i < n; i++) {
+        pair(fp[i], width, &b1, &b2);
+        if (!(lc[b1] && lfp[b1] == fp[i]) &&
+            (j = find_heavy(&s, fp[i], b1, b2)) >= 0) {
+            hc[j] += c[i];
+            c[i] = 0;
+        }
+    }
+    for (int64_t i = 0; i < n; i++) {
+        if (!c[i]) continue;
+        pair(fp[i], width, &b1, &b2);
+        uint64_t cnt = c[i];
+        if (lc[b1] && lfp[b1] == fp[i]) {
+            cnt += lc[b1];
+            lfp[b1] = lc[b1] = 0;
+        }
+        if ((j = find_heavy(&s, fp[i], b1, b2)) >= 0)
+            hc[j] += cnt;
+        else
+            place(&s, fp[i], cnt, b1, b2);
+    }
+}
 """
 
 
@@ -221,6 +381,11 @@ def _build() -> ctypes.CDLL:
     for add in (lib.hk_add, lib.bucketed_add):
         add.argtypes = [p, p, p, i64, i64, p, p, p, i64, f64, u64]
         add.restype = None
+    lib.cuckoo_pairs.argtypes = [p, i64, i64, p, p]
+    lib.cuckoo_add.argtypes = [p, p, p, p, i64, i64, i64, i64, p, p, p, i64, f64, u64, p]
+    lib.cuckoo_merge_heavy.argtypes = [p, p, p, p, i64, i64, i64, i64, p, p]
+    for f in (lib.cuckoo_pairs, lib.cuckoo_add, lib.cuckoo_merge_heavy):
+        f.restype = None
     return lib
 
 
@@ -317,17 +482,26 @@ def _decay_lut(decay: float) -> np.ndarray:
     return lut
 
 
+def _weighted(fp, w, dtype=np.int64):
+    """Checked contiguous ``(fp, w)`` of equal length, weights >= 1."""
+    fp = np.ascontiguousarray(fp, dtype=np.uint64)
+    w = np.ascontiguousarray(w, dtype=dtype)
+    if fp.ndim != 1 or w.shape != fp.shape:
+        raise ValueError("fp and w must be 1-D and agree in length")
+    if fp.size and w.min() < 1:
+        raise ValueError("weights must be >= 1")
+    return fp, w
+
+
 def _items(cells, fp, w, depth, n_cells):
     """Checked contiguous ``(cells, fp, w)``: ``depth`` cell ids per
     item, each in ``[0, n_cells)``, and weights >= 1."""
-    fp = np.ascontiguousarray(fp, dtype=np.uint64)
-    w = np.ascontiguousarray(w, dtype=np.int64)
+    fp, w = _weighted(fp, w)
     cells = np.ascontiguousarray(cells, dtype=np.int64)
-    n = fp.size
-    if fp.ndim != 1 or w.shape != fp.shape or cells.size != depth * n:
+    if cells.size != depth * fp.size:
         raise ValueError("fp, w and the cell ids must agree in length")
-    if n and (w.min() < 1 or cells.min() < 0 or cells.max() >= n_cells):
-        raise ValueError("weights must be >= 1 and cell ids inside the state")
+    if fp.size and (cells.min() < 0 or cells.max() >= n_cells):
+        raise ValueError("cell ids must lie inside the state")
     return cells, fp, w
 
 
@@ -372,3 +546,75 @@ def bucketed_add(fps, counts, bucket, fp, w, decay: float, seed: int) -> None:
         raise ValueError("bucketed state must be (width, depth)")
     bucket, fp, w = _items(bucket, fp, w, 1, fps.shape[0])
     _run(_lib().bucketed_add, fps, counts, bucket, fps.shape[1], fp, w, decay, seed)
+
+
+def cuckoo_pairs(fp, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """The two candidate buckets ``(b1, b2)`` of each fingerprint in a
+    Cuckoo sketch of ``width`` buckets (src/cuckoo.rs:569-580): ``b1 =
+    fp mod width``, ``b2`` the same of the splitmix64 finalizer of ``fp
+    ^ 0x9E3779B97F4A7C15``, moved one bucket on when it equals ``b1``;
+    ``(b1, b1)`` at width 1. Persisted HKC1 blobs depend on it."""
+    fp = np.ascontiguousarray(fp, dtype=np.uint64)
+    if fp.ndim != 1 or int(width) < 1:
+        raise ValueError("fp must be 1-D and width >= 1")
+    b1 = np.empty(fp.size, dtype=np.int64)
+    b2 = np.empty(fp.size, dtype=np.int64)
+    _lib().cuckoo_pairs(fp.ctypes.data, fp.size, int(width), b1.ctypes.data, b2.ctypes.data)
+    return b1, b2
+
+
+def _cuckoo(lobby_fp, lobby_c, heavy_fp, heavy_c, max_kicks: int) -> tuple:
+    """The checked Cuckoo state as C arguments: lobby ``(width,)``,
+    heavy ``(width, depth)``, ``max_kicks >= 1``."""
+    _state(lobby_fp, lobby_c)
+    _state(heavy_fp, heavy_c)
+    if not (
+        lobby_fp.ndim == 1
+        and heavy_fp.ndim == 2
+        and heavy_fp.shape[0] == lobby_fp.shape[0]
+        and heavy_fp.size > 0
+    ):
+        raise ValueError("cuckoo state must be lobby (width,) and heavy (width, depth)")
+    if int(max_kicks) < 1:
+        raise ValueError(f"max_kicks must be >= 1, got {max_kicks!r}")
+    return (
+        lobby_fp.ctypes.data, lobby_c.ctypes.data, heavy_fp.ctypes.data,
+        heavy_c.ctypes.data, *heavy_fp.shape, int(max_kicks),
+    )
+
+
+def cuckoo_add(
+    lobby_fp, lobby_c, heavy_fp, heavy_c, max_kicks: int, fp, w,
+    decay: float, seed: int,
+) -> np.ndarray:
+    """Add item ``i`` (fingerprint ``fp[i]``, weight ``w[i]``) to the
+    Cuckoo state, items in array order: a heavy hit in ``b1``, else
+    ``b2``, takes the weight; else the item duels the lobby cell of
+    ``b1``, and a lobby holder is promoted (first empty slot of ``b1``,
+    then ``b2``, else the minimum slot over both when strictly heavier,
+    its victim relocated through at most ``max_kicks`` hops). Returns
+    each item's heavy count after its add, 0 when it is not heavy."""
+    state = _cuckoo(lobby_fp, lobby_c, heavy_fp, heavy_c, max_kicks)
+    fp, w = _weighted(fp, w)
+    est = np.zeros(fp.size, dtype=np.int64)
+    lut = _decay_lut(float(decay))
+    _lib().cuckoo_add(
+        *state, fp.size, fp.ctypes.data, w.ctypes.data, lut.ctypes.data,
+        lut.shape[0], float(decay), int(seed), est.ctypes.data,
+    )
+    return est
+
+
+def cuckoo_merge_heavy(
+    lobby_fp, lobby_c, heavy_fp, heavy_c, max_kicks: int, fp, counts
+) -> None:
+    """Merge another Cuckoo sketch's live heavy cells ``(fp[i],
+    counts[i])`` into the state, with no decay: first every cell already
+    heavy here whose fingerprint holds no lobby cell at its primary
+    bucket adds to its slot; then each remaining cell, in array order,
+    folds in its own lobby entry and adds to its heavy slot, else is
+    placed as ``cuckoo_add`` promotes a lobby holder."""
+    state = _cuckoo(lobby_fp, lobby_c, heavy_fp, heavy_c, max_kicks)
+    fp, counts = _weighted(fp, counts, np.uint64)
+    counts = counts.copy()  # C zeroes the cells its first pass merged
+    _lib().cuckoo_merge_heavy(*state, fp.size, fp.ctypes.data, counts.ctypes.data)

@@ -109,6 +109,15 @@ class TestCellAdd:
             native.hk_add(fps, cnt, [0], [7], [3000], decay, 1)
             assert (int(fps[0]), int(cnt[0])) == want
 
+    @pytest.mark.parametrize("w", [1, 2, 999])
+    def test_forced_decay_lighter_challenger_only_decrements(self, w):
+        # at decay 1.0 each unit of a lighter challenger takes one off
+        # the cell; it used to run past its weight and wrap the count
+        fps = np.asarray([5], dtype=np.uint64)
+        cnt = np.asarray([1000], dtype=np.uint64)
+        native.hk_add(fps, cnt, [0], [7], [w], 1.0, 1)
+        assert (int(fps[0]), int(cnt[0])) == (5, 1000 - w)
+
     def test_bucketed_picks_match_then_empty_then_min(self):
         fps = np.asarray([[1, 0, 3], [4, 5, 6]], dtype=np.uint64)
         cnt = np.asarray([[9, 0, 2], [7, 3, 8]], dtype=np.uint64)
@@ -178,3 +187,55 @@ def test_bucketed_add_refuses_bad_buffers(case):
     with pytest.raises(ValueError):
         native.bucketed_add(**args, decay=0.9, seed=1)
     assert not fps.any() and not counts.any()  # C never ran
+
+
+def _cuckoo_state(width=4, depth=2):
+    return dict(
+        lobby_fp=np.zeros(width, dtype=np.uint64),
+        lobby_c=np.zeros(width, dtype=np.uint64),
+        heavy_fp=np.zeros((width, depth), dtype=np.uint64),
+        heavy_c=np.zeros((width, depth), dtype=np.uint64),
+    )
+
+
+@pytest.mark.parametrize("op", ["add", "merge"])
+@pytest.mark.parametrize(
+    "case",
+    [
+        dict(lobby_c=np.zeros(4, dtype=np.int64)),
+        dict(heavy_fp=np.zeros((4, 2), dtype=np.float64)),
+        dict(lobby_fp=np.zeros(5, dtype=np.uint64), lobby_c=np.zeros(5, dtype=np.uint64)),
+        dict(heavy_fp=np.zeros(8, dtype=np.uint64), heavy_c=np.zeros(8, dtype=np.uint64)),
+        dict(heavy_c=np.zeros((4, 3), dtype=np.uint64)),
+        dict(heavy_fp=np.zeros((0, 2), dtype=np.uint64), heavy_c=np.zeros((0, 2), dtype=np.uint64),
+             lobby_fp=np.zeros(0, dtype=np.uint64), lobby_c=np.zeros(0, dtype=np.uint64)),
+        dict(heavy_c=_readonly(np.zeros((4, 2), dtype=np.uint64))),
+        dict(lobby_fp=np.zeros(8, dtype=np.uint64)[::2]),
+        dict(max_kicks=0),
+        dict(w=[0]),
+        dict(w=[1, 1]),
+    ],
+    ids=[
+        "lobby-dtype", "heavy-dtype", "lobby-width", "heavy-not-2d", "heavy-shape-mismatch",
+        "width-0", "read-only", "non-contiguous", "max-kicks-0", "weight-0", "length-mismatch",
+    ],
+)
+def test_cuckoo_refuses_bad_buffers(op, case):
+    """Both Cuckoo loops check the state and the items before C runs:
+    a refused call leaves every state array untouched."""
+    args = dict(_cuckoo_state(), max_kicks=4, fp=[1], w=[1])
+    args.update(case)
+    before = {k: np.copy(args[k]) for k in ("lobby_fp", "lobby_c", "heavy_fp", "heavy_c")}
+    w = args.pop("w")
+    with pytest.raises(ValueError):
+        if op == "add":
+            native.cuckoo_add(**args, w=w, decay=1.0, seed=1)
+        else:
+            native.cuckoo_merge_heavy(**args, counts=w)
+    for k, a in before.items():
+        assert np.array_equal(args[k], a), k  # C never ran
+
+
+def test_cuckoo_pairs_refuses_width_0():
+    with pytest.raises(ValueError):
+        native.cuckoo_pairs(np.asarray([1], dtype=np.uint64), 0)

@@ -217,21 +217,262 @@ def test_accuracy_floor_zipf12(cls):
     assert hit >= 0.50, hit
 
 
-def test_pair_one_matches_vectorized_pair():
-    """_relocate's scalar bucket_pair must stay bit-identical to the
-    vectorized _pair — drift would relocate victims into buckets where
-    lookups never find them."""
-    import numpy as np
+#: (b1, b2) of 16 fingerprints at widths 4096, 4000 and 1, as the
+#: vectorized NumPy bucket_pair computed them; persisted HKC1 blobs
+#: place their heavy cells by these values
+_PAIR_FPS = [
+    0x0, 0x1, 0xFFFFFFFFFFFFFFFF, 0x9E3779B97F4A7C15, 0xFFF, 0x1000, 0xF9F, 0xFA0,
+    0xB412A680A05B073, 0x3C244268AA865E2E, 0x8B81F9AD4DA924D9, 0xDDB5657FF0F6CD25,
+    0x40B2ED0E579AB6F5, 0xBD08422DA056114D, 0x25ED1A8D762FEED5, 0x88D6AB791086CEDE,
+]
+_PAIRS = {
+    4096: [(0, 3503), (1, 3104), (4095, 196), (3093, 0), (4095, 1580), (0, 3341),
+           (3999, 1476), (4000, 61), (115, 116), (3630, 3631), (1241, 2713),
+           (3365, 1637), (1781, 2387), (333, 3390), (3797, 3828), (3806, 2705)],
+    4000: [(0, 3535), (1, 3936), (3615, 452), (2485, 0), (95, 2092), (96, 77),
+           (3999, 3396), (0, 1181), (2323, 1331), (430, 46), (2809, 2810), (773, 774),
+           (2901, 1459), (1773, 3710), (2837, 1268), (2430, 3921)],
+    1: [(0, 0)] * 16,
+}
 
-    from heavykeeper_rs_spark.variants import CuckooTopK
 
-    rng = np.random.default_rng(7)
-    fps = rng.integers(0, 2**63, 2000).astype(np.uint64)
-    for width in (4096, 4000, 1):
-        sk = CuckooTopK(4, width, 4)
-        b1v, b2v = sk._pair(fps)
-        for i in range(len(fps)):
-            assert (int(b1v[i]), int(b2v[i])) == sk._pair_one(fps[i]), (width, i)
+@pytest.mark.parametrize("width", sorted(_PAIRS))
+def test_cuckoo_bucket_pair_known_answers(width):
+    """bucket_pair pinned: b1 = fp mod width, b2 from the salted
+    splitmix64 finalizer, moved on by one when it equals b1 (entries
+    8-11 at 4096 and 10-11 at 4000), (b1, b1) at width 1."""
+    b1, b2 = CuckooTopK(4, width, 4)._pair(np.asarray(_PAIR_FPS, dtype=np.uint64))
+    assert list(zip(b1.tolist(), b2.tolist())) == _PAIRS[width]
+
+
+# -- Python reference of the Cuckoo add and merge: the per-item sequence
+# (src/cuckoo.rs:635-707 and 471-549) the native loop must equal bit for
+# bit. The lobby duel is modelled only where it is deterministic: decay
+# 1.0 (every unit decrements) and 0.0 (none does).
+
+_M64 = (1 << 64) - 1
+
+
+def _ref_pair(fp: int, width: int) -> tuple[int, int]:
+    b1 = fp % width
+    if width == 1:
+        return b1, b1
+    x = fp ^ 0x9E3779B97F4A7C15
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
+    b2 = (x ^ (x >> 31)) % width
+    return b1, (b2 + 1) % width if b2 == b1 else b2
+
+
+class _RefCuckoo:
+    def __init__(self, sk: CuckooTopK) -> None:
+        self.width, self.depth = sk.params.width, sk.params.depth
+        self.max_kicks = sk.max_kicks
+        self.lfp = sk.lobby_fp.tolist()
+        self.lc = sk.lobby_c.tolist()
+        self.hfp = sk.heavy_fp.tolist()
+        self.hc = sk.heavy_c.tolist()
+
+    def assert_equals(self, sk: CuckooTopK) -> None:
+        assert sk.lobby_fp.tolist() == self.lfp
+        assert sk.lobby_c.tolist() == self.lc
+        assert sk.heavy_fp.tolist() == self.hfp
+        assert sk.heavy_c.tolist() == self.hc
+
+    def _buckets(self, b1, b2):
+        return (b1, b2) if b1 != b2 else (b1,)
+
+    def _find_heavy(self, fp, b1, b2):
+        for b in self._buckets(b1, b2):
+            for i in range(self.depth):
+                if self.hc[b][i] > 0 and self.hfp[b][i] == fp:
+                    return b, i
+        return None
+
+    def _argmin(self, b):
+        return self.hc[b].index(min(self.hc[b]))
+
+    def _set(self, b, i, fp, c):
+        self.hfp[b][i], self.hc[b][i] = fp, c
+
+    def _min_heavy(self, b1, b2):
+        i1 = self._argmin(b1)
+        c1 = self.hc[b1][i1]
+        if b2 == b1:
+            return b1, i1, c1
+        i2 = self._argmin(b2)
+        c2 = self.hc[b2][i2]
+        return (b2, i2, c2) if c2 < c1 else (b1, i1, c1)
+
+    def _relocate(self, fp, count, from_b):
+        for _ in range(self.max_kicks):
+            if count == 0:
+                return
+            p, a = _ref_pair(fp, self.width)
+            target = a if from_b == p else p
+            if target == from_b:
+                return
+            i = self._argmin(target)
+            tc = self.hc[target][i]
+            if tc == 0:
+                self._set(target, i, fp, count)
+                return
+            if count <= tc:
+                return
+            ofp = self.hfp[target][i]
+            self._set(target, i, fp, count)
+            fp, count, from_b = ofp, tc, target
+
+    def _place(self, fp, count, b1, b2) -> bool:
+        for b in self._buckets(b1, b2):
+            if 0 in self.hc[b]:
+                self._set(b, self.hc[b].index(0), fp, count)
+                return True
+        vb, vi, vc = self._min_heavy(b1, b2)
+        if count <= vc:
+            return False
+        vfp, vcount = self.hfp[vb][vi], self.hc[vb][vi]
+        self._set(vb, vi, fp, count)
+        self._relocate(vfp, vcount, vb)
+        return True
+
+    def add(self, fp: int, w: int, decay: float) -> int:
+        b1, b2 = _ref_pair(fp, self.width)
+        at = self._find_heavy(fp, b1, b2)
+        if at is not None:
+            self.hc[at[0]][at[1]] += w
+            return self.hc[at[0]][at[1]]
+        c = self.lc[b1]
+        if c == 0 or self.lfp[b1] == fp:
+            self.lfp[b1], self.lc[b1] = fp, c + w
+        elif decay == 1.0 and w >= c:  # the c-th unit converts the cell
+            self.lfp[b1], self.lc[b1] = fp, w - c + 1
+        elif decay == 1.0:
+            self.lc[b1] = c - w
+        if not (self.lc[b1] > 0 and self.lfp[b1] == fp):
+            return 0
+        lc = self.lc[b1]
+        if self._place(fp, lc, b1, b2):
+            self.lfp[b1], self.lc[b1] = 0, 0
+            return lc
+        return 0
+
+    def merge(self, other: CuckooTopK) -> None:
+        cells = [
+            (fp, c)
+            for fp, c in zip(other.heavy_fp.reshape(-1).tolist(), other.heavy_c.reshape(-1).tolist())
+            if c > 0
+        ]
+        tail = []
+        for fp, c in cells:  # mass on both sides sums first
+            p, a = _ref_pair(fp, self.width)
+            lobby = self.lc[p] > 0 and self.lfp[p] == fp
+            at = None if lobby else self._find_heavy(fp, p, a)
+            if at is None:
+                tail.append((fp, c))
+            else:
+                self.hc[at[0]][at[1]] += c
+        for fp, count in tail:
+            p, a = _ref_pair(fp, self.width)
+            if self.lc[p] > 0 and self.lfp[p] == fp:
+                count += self.lc[p]
+                self.lfp[p], self.lc[p] = 0, 0
+            at = self._find_heavy(fp, p, a)
+            if at is not None:
+                self.hc[at[0]][at[1]] += count
+            else:
+                self._place(fp, count, p, a)
+        for fp, c in zip(other.lobby_fp.tolist(), other.lobby_c.tolist()):
+            if c == 0:
+                continue
+            p, a = _ref_pair(fp, self.width)
+            at = self._find_heavy(fp, p, a)
+            if at is not None:
+                self.hc[at[0]][at[1]] += c
+            elif self.lc[p] > 0 and self.lfp[p] == fp:
+                self.lc[p] += c
+            elif self.lc[p] == 0 or c > self.lc[p]:
+                self.lfp[p], self.lc[p] = fp, c
+
+
+def _contested_keys(rng, n, string_keys):
+    """A skewed batch over a universe larger than the small sketches."""
+    keys = rng.zipf(1.3, n) % 400
+    return obj(*[f"s{k}" for k in keys]) if string_keys else keys.astype(np.int64)
+
+
+def _fuzz_sketch(rng):
+    width = int(rng.integers(1, 65))
+    depth = int(rng.integers(1, 5))
+    return CuckooTopK(8, width, depth, seed=int(rng.integers(1 << 30)),
+                      max_kicks=int(rng.integers(1, 9)))
+
+
+@pytest.mark.parametrize("string_keys", [False, True], ids=["int", "str"])
+def test_cuckoo_add_matches_python_reference(string_keys):
+    """The native add equals the per-item reference bit for bit on the
+    lobby and heavy arrays and the post-add estimates, across widths
+    1-64, depths 1-4 and max_kicks 1-8, at both deterministic decays,
+    starting from contested states built by the native loop."""
+    from heavykeeper_rs_spark import native
+    from heavykeeper_rs_spark.kernel import _duel_params, preaggregate
+
+    rng = np.random.default_rng(20261019 + string_keys)
+    for trial in range(120):
+        sk = _fuzz_sketch(rng)
+        for _ in range(int(rng.integers(0, 3))):  # a contested start
+            sk.add_batch(_contested_keys(rng, 300, string_keys))
+        sk._force_decay = bool(trial % 2)
+        for _ in range(2):
+            keys = _contested_keys(rng, int(rng.integers(1, 400)), string_keys)
+            weights = rng.integers(1, 6, keys.shape[0])
+            _, w, fp = preaggregate(keys, weights, sk._hash)
+            ref = _RefCuckoo(sk)
+            want = [ref.add(f, x, float(sk._force_decay)) for f, x in zip(fp.tolist(), w.tolist())]
+            got = native.cuckoo_add(*sk._native_state(), fp, w, *_duel_params(sk))
+            assert got.tolist() == want, trial
+            ref.assert_equals(sk)
+
+
+@pytest.mark.parametrize("string_keys", [False, True], ids=["int", "str"])
+def test_cuckoo_merge_matches_python_reference(string_keys):
+    """The native heavy-cell merge, with the vectorized lobby fold
+    after it, equals the sequential reference bit for bit, at the
+    sketches' own decay (a merge never decays)."""
+    rng = np.random.default_rng(19 + string_keys)
+    for trial in range(120):
+        a = _fuzz_sketch(rng)
+        p = a.params
+        b = CuckooTopK(p.k, p.width, p.depth, p.decay, p.seed, max_kicks=a.max_kicks,
+                       rng=np.random.default_rng(trial))
+        for sk in (a, b):
+            for _ in range(int(rng.integers(1, 4))):
+                sk.add_batch(_contested_keys(rng, 300, string_keys))
+        if trial % 2:  # a blob may also hold a heavy fp in its lobby
+            fp = a.heavy_fp[a.heavy_c > 0][:3]
+            b1, _ = a._pair(fp)
+            a.lobby_fp[b1], a.lobby_c[b1] = fp, 2
+        ref = _RefCuckoo(a)
+        ref.merge(b)
+        a.merge(b)
+        ref.assert_equals(a)
+
+
+def test_cuckoo_heavy_cells_sit_in_their_bucket_pair():
+    """After contested adds and merges, every live heavy fingerprint
+    sits in one of its two candidate buckets, where estimate looks."""
+    rng = np.random.default_rng(5)
+    for trial in range(40):
+        a = _fuzz_sketch(rng)
+        p = a.params
+        b = CuckooTopK(p.k, p.width, p.depth, p.decay, p.seed, max_kicks=a.max_kicks,
+                       rng=np.random.default_rng(trial))
+        for sk in (a, b):
+            sk.add_batch(_contested_keys(rng, 500, trial % 2 == 1))
+        for sk in (b, a.merge(b)):
+            bucket, _ = np.nonzero(sk.heavy_c)
+            b1, b2 = sk._pair(sk.heavy_fp[sk.heavy_c > 0])
+            assert ((bucket == b1) | (bucket == b2)).all(), trial
 
 
 def test_merge_tree_engages_past_fan_in(spark):
@@ -399,10 +640,16 @@ def _reencoded(sk, **state):
         (lambda: CuckooTopK(4, 64, 2), dict(lobby_c=np.zeros(3, np.uint64))),
         (lambda: CuckooTopK(4, 64, 2), dict(heavy_fp=np.zeros((64, 3), np.uint64))),
         (lambda: CuckooTopK(4, 64, 2), dict(max_kicks=0)),
+        (lambda: BucketedTopK(4, 64, 2),
+         dict(params=dict(k=4, width=64, depth=2, decay=0.9, seed=12345, rng=5))),
+        (lambda: CuckooTopK(4, 64, 2),
+         dict(params=dict(k=4, width=64, depth=2, decay=0.9, seed=12345, extra=1))),
+        (lambda: CuckooTopK(4, 64, 2), dict(params=dict(k=4, width=64, depth=2, decay=0.9))),
     ],
     ids=[
         "bucketed-3x3", "bucketed-int64", "bucketed-missing",
         "cuckoo-3-cell-lobby", "cuckoo-heavy-shape", "cuckoo-max-kicks",
+        "bucketed-params-rng", "cuckoo-params-unknown-key", "cuckoo-params-no-seed",
     ],
 )
 def test_hostile_state_refused_at_deserialize(make, state):
