@@ -27,11 +27,17 @@ and bucket layout follow the paper / reference semantics:
 - a bounded min-heap of K candidates with monotone ("only raise")
   updates and deterministic (count desc, insertion seq asc) ordering
   (src/priority_queue.rs:104-211).
-- merge: per-cell equal fingerprints add, empty copies, otherwise keep
-  self (src/heavykeeper.rs:406-457); candidate merge uses the
-  *pre-merge* bucket_count of the non-tracking side as fallback — the
-  BucketedTopK improvement (src/bucketed.rs:377-401) — which is
-  strictly more accurate than the plain-TopK ``unwrap_or(0)``.
+- merge: one body (``HeavyKeeper._merge_cells``) unions the other
+  side's LIVE cells — equal fingerprints add, an empty cell copies,
+  otherwise self is kept (src/heavykeeper.rs:406-457) — whether they
+  come from a sketch (``merge``) or straight from a blob of either
+  layout (``merge_blobs``, parsed by the one ``_parse_blob``). The
+  candidates follow ``merge_candidates``, the one rule of all three
+  layouts: each key's value comes from the pre-merge cells of the side
+  that does not track it — the BucketedTopK fallback
+  (src/bucketed.rs:377-401), strictly more accurate than the
+  plain-TopK ``unwrap_or(0)`` — and it is offered only after the cell
+  union, at the larger of that value and its merged cells.
 
 Statistical fidelity, not bit-equality, is the contract: the duel is
 sampled with its exact distribution (geometric gaps between
@@ -46,13 +52,21 @@ from __future__ import annotations
 
 import heapq
 import io
+import numbers
 import struct
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
-from .errors import InvalidDecay, InvalidDepth, InvalidK, InvalidWidth, SketchCompatError
+from .errors import (
+    BuilderError,
+    InvalidDecay,
+    InvalidDepth,
+    InvalidK,
+    InvalidWidth,
+    SketchCompatError,
+)
 from . import native
 from .native import hash_slices
 from .serde import dumps as serde_dumps, loads as serde_loads
@@ -67,6 +81,8 @@ _DENSE_DOMAIN_CAP = 1 << 22
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
+# magic, layout version (1 dense, 2 sparse), k, width, depth, decay, seed
+_HEADER = struct.Struct("<4sBqqqdq")
 
 
 def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
@@ -255,15 +271,18 @@ class HKParams:
     seed: int = _DEFAULT_SEED
 
     def __post_init__(self) -> None:
-        if not isinstance(self.k, int) or self.k < 1:
-            raise InvalidK(f"k must be >= 1, got {self.k!r}")
-        if not isinstance(self.width, int) or self.width < 1:
-            raise InvalidWidth(f"width must be >= 1, got {self.width!r}")
-        if not isinstance(self.depth, int) or self.depth < 1:
-            raise InvalidDepth(f"depth must be >= 1, got {self.depth!r}")
-        d = float(self.decay)
-        if not (0.0 <= d <= 1.0) or not np.isfinite(d):
-            raise InvalidDecay(f"decay must be in [0, 1] and finite, got {self.decay!r}")
+        if type(self.k) is not int or self.k < 1:
+            raise InvalidK(f"k must be an int >= 1, got {self.k!r}")
+        if type(self.width) is not int or self.width < 1:
+            raise InvalidWidth(f"width must be an int >= 1, got {self.width!r}")
+        if type(self.depth) is not int or self.depth < 1:
+            raise InvalidDepth(f"depth must be an int >= 1, got {self.depth!r}")
+        d = self.decay
+        if isinstance(d, bool) or not isinstance(d, numbers.Real) or not 0.0 <= d <= 1.0:
+            raise InvalidDecay(f"decay must be in [0, 1] and finite, got {d!r}")
+        # a blob carries the seed as a signed 64-bit field
+        if type(self.seed) is not int or not 0 <= self.seed < 1 << 63:
+            raise BuilderError(f"seed must be an int in [0, 2**63), got {self.seed!r}")
 
     def check_compatible(self, other: "HKParams") -> None:
         for f in ("width", "depth", "decay", "k", "seed"):
@@ -388,6 +407,63 @@ def _pq_admit(
             if victim is not None and evicted is not None:
                 evicted.append(victim)
     return evicted
+
+
+def _owned(fps_at: np.ndarray, cnt_at: np.ndarray, fp: np.ndarray) -> np.ndarray:
+    """The one per-row ownership probe: each gathered cell's count
+    where it holds the key's fingerprint with a live count, else 0.
+    The add path and the merge take its max over rows, ``estimate`` its
+    min over the owned rows."""
+    return np.where((fps_at == fp) & (cnt_at > 0), cnt_at, _U64(0))
+
+
+def _heap_counts(pq: TopKQueue, arr: np.ndarray, out: np.ndarray) -> np.ndarray:
+    """``out`` with every tracked key's queue count in place of its
+    cell estimate (count(), src/heavykeeper.rs:220-246)."""
+    if pq.counts:
+        get = pq.counts.get
+        for i in range(arr.shape[0]):
+            c = get(_pq_key(arr[i]))
+            if c is not None:
+                out[i] = c
+    return out
+
+
+def merge_candidates(pq: TopKQueue, other: list, locate, mine, theirs, union) -> None:
+    """The one candidate-merge rule of all three layouts: fold the
+    other side's queue ``other`` — ``(key, count)`` pairs in sequence
+    order — into ``pq`` around the cell union ``union()``.
+
+    Every candidate's value is its count on the tracking side(s) plus,
+    for a key tracked on one side only, the other side's PRE-merge cell
+    estimate — the bucket_count fallback of src/bucketed.rs:377-401.
+    ``locate(keys)`` hashes the keys once; ``mine(at)`` and
+    ``theirs(at)`` read this side's and the other side's cell estimates
+    of the located keys. Admission waits until after ``union()``, and
+    each key is offered at the larger of its value and this side's
+    merged cells, heaviest first (ties: the other side's keys in
+    sequence order, then this side's). Admitting first, as a sequential
+    merge would, lets a boundary key enter with a stale fallback and
+    lose its place by the strictly-greater rule before the cells that
+    prove its mass have merged — in a merge tree that loss depends on
+    task completion order. The merged cells accumulate exactly in every
+    row the key never lost and never exceed its true count, so the
+    monotone queue rules hold."""
+    counts = pq.counts
+    other_keys = dict(other)
+    own = [k for k in counts if k not in other_keys]
+    keys = [k for k, _ in other] + own
+    if not keys:
+        union()
+        return
+    at = locate(_key_array(keys))
+    pre, ext, n = mine(at), theirs(at), len(other)
+    pending = [c + (counts[k] if k in counts else int(pre[i])) for i, (k, c) in enumerate(other)]
+    pending += [counts[k] + int(ext[n + j]) for j, k in enumerate(own)]
+    union()
+    final = np.maximum(np.asarray(pending, dtype=np.int64), mine(at))
+    for i in np.argsort(-final, kind="stable"):
+        pq.upsert(keys[i], int(final[i]))
 
 
 class HeavyKeeper:
@@ -515,20 +591,45 @@ class HeavyKeeper:
         take_keys,
         return_evicted: bool = False,
     ) -> list | None:
-        p = self.params
-        # row d of item i is flat cell d*width + idx[d, i]
-        cells = compose_indices(fp, p.depth, p.width)
-        cells += (np.arange(p.depth, dtype=np.intp) * p.width)[:, None]
+        cells = self._cells(fp)
         native.hk_add(self.fps, self.counts, cells, fp, w, *_duel_params(self))
         # Re-probe: each key's count is the max over the rows where it
         # owns the cell (paper Algorithm 1's monotone heap rule uses the
         # per-add max; probing once after the batch is equivalent up to
         # intra-batch evictions, and offers the heap each key once).
-        fps_f = self.fps.reshape(-1)[cells]
-        cnt_f = self.counts.reshape(-1)[cells]
-        owned = np.where((fps_f == fp) & (cnt_f > 0), cnt_f, 0)
-        est = owned.max(axis=0, initial=0).astype(np.int64)
+        est = self._cell_max((fp, cells))
         return _pq_admit(self.pq, take_keys, est, [] if return_evicted else None)
+
+    def _cells(self, fp: np.ndarray) -> np.ndarray:
+        """Flat cell ids ``(depth, n)``: row d of key i is cell
+        ``d * width + idx[d, i]``."""
+        p = self.params
+        cells = compose_indices(fp, p.depth, p.width)
+        cells += (np.arange(p.depth, dtype=np.intp) * p.width)[:, None]
+        return cells
+
+    def _locate(self, items: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """``(fp, cells)`` of a key batch: hashed and composed once,
+        then probed as often as a caller needs (``_probe``)."""
+        fp = self._hash(items)
+        return fp, self._cells(fp)
+
+    def _probe(self, at: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+        """``_owned`` over this sketch's cells of located keys."""
+        fp, cells = at
+        return _owned(self.fps.reshape(-1)[cells], self.counts.reshape(-1)[cells], fp)
+
+    def _cell_max(self, at: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+        """MAX over rows whose cell this key owns (0 if none).
+
+        Every owned cell accumulates ONLY its key's own weight, so each
+        is a lower bound on the true count and the least-chipped row is
+        the best sound estimate. The public ``count()``/``estimate``
+        keep the reference's MIN semantics (src/heavykeeper.rs:220-246);
+        this internal estimator serves the add path's heap offers and
+        the merge, where light colliders' early decay chips would
+        otherwise bias boundary candidates low."""
+        return self._probe(at).max(axis=0).astype(np.int64)
 
     # -- O7/O8: point estimates ----------------------------------------
     def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
@@ -537,52 +638,11 @@ class HeavyKeeper:
         ``use_heap=False`` is bucket_count() (src/heavykeeper.rs:248-271).
         """
         arr = _as_keys(items)
-        n = arr.shape[0]
-        p = self.params
-        fp = self._hash(arr)
-        idxs = compose_indices(fp, p.depth, p.width)
-        out = np.zeros(n, dtype=np.int64)
-        seen = np.zeros(n, dtype=bool)
-        for d in range(p.depth):
-            idx = idxs[d]
-            m = (self.fps[d, idx] == fp) & (self.counts[d, idx] > 0)
-            row = self.counts[d, idx].astype(np.int64)
-            upd_new = m & ~seen
-            out[upd_new] = row[upd_new]
-            upd_min = m & seen
-            np.minimum(out, np.where(upd_min, row, np.iinfo(np.int64).max), out=out)
-            seen |= m
-        if use_heap and self.pq.counts:
-            get = self.pq.counts.get
-            for i in range(n):
-                c = get(_pq_key(arr[i]))
-                if c is not None:
-                    out[i] = c
-        return out
-
-    def _cell_max(self, items: np.ndarray) -> np.ndarray:
-        """MAX over rows whose cell this key owns (0 if none).
-
-        The add path's PQ maintenance already uses max-over-owned
-        (``_add_unique_fp``): every owned cell accumulates ONLY its
-        key's own weight, so each is a lower bound on the true count
-        and the least-chipped row is the best sound estimate. The
-        public ``count()``/``estimate`` keep the reference's MIN
-        semantics (src/heavykeeper.rs:220-246); this internal
-        estimator serves the merge, where light colliders' early decay
-        chips would otherwise bias boundary candidates low."""
-        arr = _as_keys(items)
-        n = arr.shape[0]
-        p = self.params
-        fp = self._hash(arr)
-        idxs = compose_indices(fp, p.depth, p.width)
-        out = np.zeros(n, dtype=np.int64)
-        for d in range(p.depth):
-            idx = idxs[d]
-            m = (self.fps[d, idx] == fp) & (self.counts[d, idx] > 0)
-            row = self.counts[d, idx].astype(np.int64)
-            np.maximum(out, np.where(m, row, 0), out=out)
-        return out
+        owned = self._probe(self._locate(arr))
+        live = owned > 0
+        low = np.where(live, owned, _U64(np.iinfo(np.uint64).max)).min(axis=0)
+        out = np.where(live.any(axis=0), low, 0).astype(np.int64)
+        return _heap_counts(self.pq, arr, out) if use_heap else out
 
     def contains(self, item: bytes | str | int) -> bool:
         """O9 (src/heavykeeper.rs:177-199)."""
@@ -612,154 +672,59 @@ class HeavyKeeper:
     # -- O13: merge ------------------------------------------------------
     def merge(self, other: "HeavyKeeper") -> "HeavyKeeper":
         """In-place union; see module docstring for semantics & parity."""
-        self.params.check_compatible(other.params)
         if self._hasher is not other._hasher:
             raise SketchCompatError("hasher", self._hasher, other._hasher)
-        # Candidate values from the pre-merge sides, using bucket_count
-        # fallback in both directions (src/bucketed.rs:377-401) — but
-        # DEFER the PQ admissions until after the cell union, so every
-        # candidate competes with its freshest value. Admitting first
-        # (as a sequential merge naturally would) lets a boundary key
-        # enter with a stale fallback and get evicted by the strictly-
-        # greater rule before the cells that prove its true mass have
-        # merged — in a merge TREE that loss is order-dependent and
-        # irreversible (caught by the round-5 sf1 rehearsal: a global-
-        # rank-9 key's presence in the merged PQ varied with task
-        # completion order while its merged cells were exact).
-        pending: dict = {}
-        other_items = list(other.pq.counts.items())
-        if other_items:
-            keys = _key_array([k for k, _ in other_items])
-            # PQ value when tracked, else max-over-owned cells (the
-            # add path's own PQ estimator — see _cell_max)
-            cells = self._cell_max(keys)
-            get = self.pq.counts.get
-            for (item, ocount), cc in zip(other_items, cells):
-                sc = get(item)
-                pending[item] = int(ocount) + int(sc if sc is not None else cc)
-        mine = [k for k in self.pq.counts if k not in other.pq.counts]
-        if mine:
-            keys = _key_array(mine)
-            oc = other._cell_max(keys)
-            for item, extra in zip(mine, oc):
-                pending[item] = self.pq.counts[item] + int(extra)
-        # Cell union (src/heavykeeper.rs:437-448): equal fp -> add;
-        # self empty -> copy other; else keep self.
-        with np.errstate(over="ignore"):
-            same = (self.fps == other.fps) & (self.counts > 0) & (other.counts > 0)
-            self.counts[same] += other.counts[same]
-            empty = self.counts == 0
-            self.fps[empty] = other.fps[empty]
-            self.counts[empty] = other.counts[empty]
-        # Admit/update every candidate at max(fallback sum, merged-cell
-        # estimate): the merged cells accumulate exactly in every row
-        # the key never lost, so they are the authority for contested
-        # boundary keys; the estimate never exceeds the true count, so
-        # the monotone PQ rules are preserved.
-        if pending:
-            allk = list(pending)
-            probe = self._cell_max(_key_array(allk))
-            order = sorted(
-                range(len(allk)),
-                key=lambda i: -max(pending[allk[i]], int(probe[i])),
-            )
-            for i in order:
-                item = allk[i]
-                self.pq.upsert(item, max(pending[item], int(probe[i])))
-        return self
+        idx = np.flatnonzero(other.counts)
+        # the queue's dict order is its admission (sequence) order
+        return self._merge_cells(
+            other.params,
+            idx,
+            other.fps.reshape(-1)[idx],
+            other.counts.reshape(-1)[idx],
+            list(other.pq.counts.items()),
+        )
 
-    def _merge_parsed_sparse(
+    def _merge_cells(
         self,
-        other_params: "HKParams",
+        params: HKParams,
         idx: np.ndarray,
         ofps: np.ndarray,
         ocnt: np.ndarray,
         cand: list,
     ) -> "HeavyKeeper":
-        """In-place merge of a PARSED sparse (v2) blob — bit-identical
-        semantics to ``merge(HeavyKeeper.deserialize(blob))`` but the
-        cell union touches only the other side's LIVE cells (O(nnz))
-        instead of masking the whole depth x width state (O(cells)).
-        A v2 blob stores exactly the count>0 cells, and for count==0
-        cells every dense-union branch is a no-op (same-fp needs
-        other.count>0; empty-copy would copy zeros), so restricting to
-        the stored cells reproduces the dense result exactly. The
-        deferred-admission PQ logic is the same code path; probing the
-        other side's cells (``_sparse_cell_max``) replaces
-        ``other._cell_max`` with a searchsorted over the sorted live
-        cell ids. merge_blobs uses this for v2 blobs — the driver/
-        reducer fold over partials was O(n_blobs x cells) and is the
-        dominant combine cost for wide exact-regime sketches."""
-        self.params.check_compatible(other_params)
-        if self._hasher is not None:
-            raise SketchCompatError("hasher", self._hasher, None)
-        # other.pq reconstruction: candidates admitted in seq order
-        # (never more than k, so no evictions — same dict order as
-        # deserialize + pq.counts.items())
-        other_items = [(it, int(c)) for it, c, _ in sorted(cand, key=lambda t: t[2])]
-        other_counts = dict(other_items)
-        pending: dict = {}
-        if other_items:
-            keys = _key_array([k for k, _ in other_items])
-            cells = self._cell_max(keys)
-            get = self.pq.counts.get
-            for (item, ocount), cc in zip(other_items, cells):
-                sc = get(item)
-                pending[item] = int(ocount) + int(sc if sc is not None else cc)
-        mine = [k for k in self.pq.counts if k not in other_counts]
-        if mine:
-            keys = _key_array(mine)
-            oc = self._sparse_cell_max(keys, idx, ofps, ocnt)
-            for item, extra in zip(mine, oc):
-                pending[item] = self.pq.counts[item] + int(extra)
-        # cell union restricted to the other side's live cells
-        if idx.size:
-            fps_flat = self.fps.reshape(-1)
-            cnt_flat = self.counts.reshape(-1)
-            cur_fp = fps_flat[idx]
-            cur_cnt = cnt_flat[idx]
-            with np.errstate(over="ignore"):
-                same = (cur_cnt > 0) & (cur_fp == ofps)
-                if same.any():
-                    cnt_flat[idx[same]] = cur_cnt[same] + ocnt[same]
-                empty = cur_cnt == 0
-                if empty.any():
-                    fps_flat[idx[empty]] = ofps[empty]
-                    cnt_flat[idx[empty]] = ocnt[empty]
-        if pending:
-            allk = list(pending)
-            probe = self._cell_max(_key_array(allk))
-            order = sorted(
-                range(len(allk)),
-                key=lambda i: -max(pending[allk[i]], int(probe[i])),
-            )
-            for i in order:
-                item = allk[i]
-                self.pq.upsert(item, max(pending[item], int(probe[i])))
-        return self
+        """The one merge body: fold in another sketch given as its live
+        cells — flat ids ``idx`` strictly ascending, fingerprints
+        ``ofps`` and counts ``ocnt`` > 0 — and its candidates ``cand``,
+        ``(key, count)`` pairs in sequence order. A count-0 cell of the
+        other side changes nothing in the union (an equal fingerprint
+        adds nothing, an empty cell stays empty), so touching only the
+        live cells costs O(nnz), not O(depth x width). The other side's
+        cells are probed with one ``searchsorted`` over ``idx``."""
+        self.params.check_compatible(params)
+        fps, cnt = self.fps.reshape(-1), self.counts.reshape(-1)
 
-    def _sparse_cell_max(
-        self, items: np.ndarray, idx: np.ndarray, ofps: np.ndarray, ocnt: np.ndarray
-    ) -> np.ndarray:
-        """``_cell_max`` against a parsed sparse cell set: max count
-        over rows where the key owns the cell. ``idx`` is sorted
-        ascending (flatnonzero order), so ownership probes are one
-        searchsorted per depth row."""
-        arr = _as_keys(items)
-        n = arr.shape[0]
-        out = np.zeros(n, dtype=np.int64)
-        if n == 0 or idx.size == 0:
-            return out
-        p = self.params
-        fp = self._hash(arr)
-        idxs = compose_indices(fp, p.depth, p.width)
-        for d in range(p.depth):
-            flat = idxs[d] + d * p.width
-            pos = np.searchsorted(idx, flat)
-            pos_c = np.minimum(pos, idx.shape[0] - 1)
-            hit = (idx[pos_c] == flat) & (ofps[pos_c] == fp) & (ocnt[pos_c] > 0)
-            np.maximum(out, np.where(hit, ocnt[pos_c].astype(np.int64), 0), out=out)
-        return out
+        def theirs(at):
+            fp, cells = at
+            if not idx.size:
+                return np.zeros(fp.shape[0], dtype=np.int64)
+            pos = np.minimum(np.searchsorted(idx, cells), idx.size - 1)
+            rows = np.where(idx[pos] == cells, _owned(ofps[pos], ocnt[pos], fp), _U64(0))
+            return rows.max(axis=0).astype(np.int64)
+
+        def union():
+            # src/heavykeeper.rs:437-448: equal fp -> add; self empty ->
+            # copy other; else keep self
+            cur_fp, cur_cnt = fps[idx], cnt[idx]
+            same = (cur_cnt > 0) & (cur_fp == ofps)
+            if same.any():
+                cnt[idx[same]] = cur_cnt[same] + ocnt[same]
+            empty = cur_cnt == 0
+            if empty.any():
+                fps[idx[empty]] = ofps[empty]
+                cnt[idx[empty]] = ocnt[empty]
+
+        merge_candidates(self.pq, cand, self._locate, self._cell_max, theirs, union)
+        return self
 
     # -- O14: memory audit ------------------------------------------------
     def mem_bytes(self, item_heap_fn=None) -> int:
@@ -836,17 +801,13 @@ class HeavyKeeper:
         # otherwise ship depth*width*16 bytes per partial through every
         # shuffle; sparse ships 24 bytes per LIVE cell instead.
         if nz_flat.size * 3 < cells:
-            buf.write(
-                struct.pack("<4sBqqqdq", _MAGIC, 2, p.k, p.width, p.depth, p.decay, p.seed)
-            )
+            buf.write(_HEADER.pack(_MAGIC, 2, p.k, p.width, p.depth, p.decay, p.seed))
             buf.write(struct.pack("<q", nz_flat.size))
             buf.write(nz_flat.astype(np.int64).tobytes())
             buf.write(self.fps.reshape(-1)[nz_flat].tobytes())
             buf.write(self.counts.reshape(-1)[nz_flat].tobytes())
         else:
-            buf.write(
-                struct.pack("<4sBqqqdq", _MAGIC, 1, p.k, p.width, p.depth, p.decay, p.seed)
-            )
+            buf.write(_HEADER.pack(_MAGIC, 1, p.k, p.width, p.depth, p.decay, p.seed))
             buf.write(self.fps.tobytes())
             buf.write(self.counts.tobytes())
         buf.write(serde_dumps(cand))
@@ -854,29 +815,13 @@ class HeavyKeeper:
 
     @classmethod
     def deserialize(cls, blob: bytes) -> "HeavyKeeper":
-        hs = struct.calcsize("<4sBqqqdq")
-        magic, ver, k, width, depth, decay, seed = struct.unpack("<4sBqqqdq", blob[:hs])
-        if magic != _MAGIC or ver not in (1, 2):
-            raise ValueError("not a HeavyKeeper v1/v2 blob")
-        params = HKParams(k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed))
+        params, idx, fps, cnt, cand = _parse_blob(blob)
         sk = cls(params)
-        if ver == 2:  # sparse
-            _, idx, fps_nz, cnt_nz, cand = _parse_blob_sparse(blob)
-            sk.fps.reshape(-1)[idx] = fps_nz
-            sk.counts.reshape(-1)[idx] = cnt_nz
-        else:
-            cells = depth * width
-            off = hs
-            sk.fps = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
-            off += 8 * cells
-            sk.counts = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
-            off += 8 * cells
-            _sniff_legacy_pickle(blob[off : off + 2])
-            cand = serde_loads(blob[off:])
-        for item, c, seq in sorted(cand, key=lambda t: t[2]):
+        sk.fps.reshape(-1)[idx] = fps
+        sk.counts.reshape(-1)[idx] = cnt
+        for item, c in cand:
             sk.pq.upsert(item, c)
         return sk
-
 
 
 def _sniff_legacy_pickle(head: bytes) -> None:
@@ -1007,51 +952,86 @@ def _key_array(keys: list) -> np.ndarray:
     return np.asarray(keys, dtype=object)
 
 
-def _parse_blob_sparse(blob: bytes):
-    """(params, idx, fps, cnt, cand) views of a sparse (v2) blob, or
-    None for dense/v1 blobs — the one v2 parser: ``deserialize``
-    scatters its triplets, the merge fast path reads them in place.
-    Cell ids must be strictly ascending (as ``serialize`` writes them):
-    ``_sparse_cell_max`` looks them up with ``searchsorted``, so a
-    duplicated or out-of-order id raises instead of merging wrongly."""
-    hs = struct.calcsize("<4sBqqqdq")
-    magic, ver, k, width, depth, decay, seed = struct.unpack("<4sBqqqdq", blob[:hs])
-    if magic != _MAGIC or ver != 2:
-        return None
-    params = HKParams(
-        k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed)
-    )
+def _load_cand(cand, k: int) -> list:
+    """The checked candidate section of every layout's blob: a list of
+    at most ``k`` ``(key, count, seq)`` triples with distinct bytes or
+    int keys, int counts >= 0 and int seqs (bools are not ints).
+    Returns the ``(key, count)`` pairs in sequence order, the order the
+    queue admitted them; anything else raises ValueError, so a hostile
+    section never reaches a queue or a merge."""
+    if not isinstance(cand, list) or len(cand) > k:
+        raise ValueError(f"candidate section must be a list of at most k={k} triples")
+    if not cand:
+        return []
+    if set(map(type, cand)) != {list} or set(map(len, cand)) != {3}:
+        raise ValueError("candidate section must hold (key, count, seq) triples")
+    keys, counts, seqs = zip(*cand)
+    key_types = set(map(type, keys))
+    ints = [x for x in keys if type(x) is int] or [0]
+    if not (
+        key_types <= {bytes, int}
+        and set(map(type, counts + seqs)) == {int}
+        and 0 <= min(counts) <= max(counts) < 1 << 63
+        and -(1 << 63) <= min(ints) <= max(ints) < 1 << 64
+    ):
+        raise ValueError("candidates must be (bytes|int key, int count >= 0, int seq)")
+    if len(set(keys)) < len(keys):
+        raise ValueError("duplicate candidate keys")
+    return [(key, c) for key, c, _ in sorted(cand, key=lambda t: t[2])]
+
+
+def _parse_blob(blob: bytes):
+    """``(params, idx, fps, cnt, cand)`` of an HKS1 blob of either
+    layout — the one parser: ``deserialize`` scatters the cells, and
+    ``merge_blobs`` hands them to ``_merge_cells`` in place. ``idx``
+    holds the flat ids of the live cells, strictly ascending, ``fps``
+    and ``cnt`` their fingerprints and counts, and ``cand`` the checked
+    candidates (``_load_cand``). A dense (v1) blob stores every cell,
+    and its live ones are found with ``flatnonzero``; a sparse (v2)
+    blob stores only those, and a cell id list that is not strictly
+    ascending or in range, or a stored zero count, raises ValueError
+    (``_merge_cells`` binary-searches the ids)."""
+    hs = _HEADER.size
+    if len(blob) < hs + 8:
+        raise ValueError("truncated HeavyKeeper blob")
+    magic, ver, k, width, depth, decay, seed = _HEADER.unpack_from(blob)
+    if magic != _MAGIC or ver not in (1, 2):
+        raise ValueError("not a HeavyKeeper v1/v2 blob")
+    params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
     cells = depth * width
-    off = hs
-    (nnz,) = struct.unpack_from("<q", blob, off)
-    off += 8
-    if nnz < 0 or off + 24 * nnz > len(blob):
-        raise ValueError("bad sparse cell count")
-    idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
-    off += 8 * nnz
-    if nnz > 1 and not (idx[1:] > idx[:-1]).all():
-        raise ValueError("sparse cell ids not strictly ascending")
-    if nnz and (idx[0] < 0 or idx[-1] >= cells):
-        raise ValueError("sparse cell index out of range")
-    fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-    off += 8 * nnz
-    cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-    off += 8 * nnz
+    if ver == 1:
+        off = hs + 16 * cells
+        if off > len(blob):
+            raise ValueError("truncated dense HeavyKeeper blob")
+        cnt = np.frombuffer(blob, np.uint64, cells, hs + 8 * cells)
+        idx = np.flatnonzero(cnt)
+        fps = np.frombuffer(blob, np.uint64, cells, hs)[idx]
+        cnt = cnt[idx]
+    else:
+        (nnz,) = struct.unpack_from("<q", blob, hs)
+        off = hs + 8 + 24 * nnz
+        if nnz < 0 or off > len(blob):
+            raise ValueError("bad sparse cell count")
+        idx, fps, cnt = (
+            np.frombuffer(blob, dt, nnz, hs + 8 + 8 * nnz * j)
+            for j, dt in enumerate((np.int64, np.uint64, np.uint64))
+        )
+        if nnz > 1 and not (idx[1:] > idx[:-1]).all():
+            raise ValueError("sparse cell ids not strictly ascending")
+        if nnz and (idx[0] < 0 or idx[-1] >= cells):
+            raise ValueError("sparse cell index out of range")
+        if not cnt.all():
+            raise ValueError("sparse cell with a zero count")
     _sniff_legacy_pickle(blob[off : off + 2])
-    cand = serde_loads(blob[off:])
-    return params, idx, fps_nz, cnt_nz, cand
+    return params, idx, fps, cnt, _load_cand(serde_loads(blob[off:]), params.k)
 
 
 def merge_blobs(blobs: list[bytes]) -> bytes:
-    """Associative reduce over serialized sketches (combine stage).
-    Sparse (v2) blobs merge through the O(nnz) fast path — identical
-    semantics to pairwise ``merge`` (see ``_merge_parsed_sparse``)."""
+    """Associative reduce over serialized sketches (combine stage):
+    every blob after the first is parsed and folded in by the one merge
+    body, ``_merge_cells``, which touches only its live cells."""
     it = iter(blobs)
     acc = HeavyKeeper.deserialize(next(it))
     for b in it:
-        parsed = _parse_blob_sparse(b)
-        if parsed is None:
-            acc.merge(HeavyKeeper.deserialize(b))
-        else:
-            acc._merge_parsed_sparse(*parsed)
+        acc._merge_cells(*_parse_blob(b))
     return acc.serialize()

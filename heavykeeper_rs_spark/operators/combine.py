@@ -18,9 +18,10 @@ and the driver folds the few survivors:
             (``tree_fold`` runs combine + final for ``sketch_partials``)
 
 Blobs of every sketch kind carry a 4-byte magic, so ``merge`` needs no
-kind argument: HeavyKeeper blobs take the kernel's O(nnz) sparse merge,
-every other kind decodes through ``variants.deserialize_any`` and folds
-with ``.merge``.
+kind argument: HeavyKeeper blobs fold through ``kernel.merge_blobs``,
+which merges each blob's live cells straight from the blob, every other
+kind decodes through ``variants.deserialize_any`` and folds with
+``.merge``.
 """
 
 from __future__ import annotations
@@ -78,11 +79,15 @@ def partition_rng(seed: int, pid: int) -> np.random.Generator:
 def merge(blobs: list[bytes]) -> bytes:
     """Associative reduce of same-kind sketch blobs into one blob.
 
-    HeavyKeeper (``HKS1``) blobs go through ``kernel.merge_blobs`` and
-    keep its O(nnz) sparse fast path; every other kind is decoded by
-    the magic-sniffing ``deserialize_any`` and folded with ``.merge``.
-    Blobs of different kinds raise ValueError — they are never silently
-    merged."""
+    HeavyKeeper (``HKS1``) blobs go through ``kernel.merge_blobs``: one
+    parser for both cell layouts and one merge body over each blob's
+    live cells, O(nnz) per blob whether it is dense or sparse. Every
+    other kind is decoded by the magic-sniffing ``deserialize_any`` and
+    folded with ``.merge``. The three HeavyKeeper layouts merge their
+    candidates by the one rule ``kernel.merge_candidates`` and decode
+    them through one checked decoder. Blobs of different kinds, and
+    blobs whose cells, candidates or params are malformed, raise
+    ValueError — they are never silently merged."""
     kinds = {bytes(b[:4]) for b in blobs}
     if len(kinds) > 1:
         raise ValueError(f"cannot merge sketch blobs of mixed kinds {sorted(kinds)}")

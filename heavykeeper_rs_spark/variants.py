@@ -6,11 +6,9 @@ API).
 - BucketedTopK (src/bucketed.rs): one hash → one bucket of ``depth``
   contiguous cells. add: fingerprint match → saturating add; else
   first empty cell → install; else decay-duel the bucket's MINIMUM
-  cell (src/bucketed.rs:187-258, 452-476). Merge: PQ first with
-  pre-merge bucket_count fallback both directions
-  (src/bucketed.rs:377-401), then per-bucket union by fingerprint with
-  min-count eviction when full and the incoming count is larger
-  (src/bucketed.rs:403-445).
+  cell (src/bucketed.rs:187-258, 452-476). Merge: per-bucket union by
+  fingerprint with min-count eviction when full and the incoming count
+  is larger (src/bucketed.rs:403-445).
 - CuckooTopK (src/cuckoo.rs): per bucket one probabilistic-decay
   "lobby" cell plus ``depth`` non-decaying heavy slots; a heavy item
   lives in one of two cuckoo candidate buckets
@@ -22,6 +20,16 @@ API).
   (src/cuckoo.rs:653-707). Merge folds lobby↔heavy so an item lives in
   heavy XOR lobby (src/cuckoo.rs:471-549); merges are deterministic —
   no probabilistic decay during merge.
+
+Both merge their candidates by ``kernel.merge_candidates``, the rule
+the canonical kernel uses: a key tracked on one side only takes the
+other side's pre-merge cell estimate as its fallback, as the reference
+does, but admission is now DEFERRED until after the cell union, at the
+larger of that value and the merged cells — unlike
+src/bucketed.rs:377-401, which upserts each candidate immediately,
+before the union, so a boundary key can be evicted on a stale value in
+a merge tree. Blobs decode their candidates through the same checked
+``kernel._load_cand``.
 
 Execution strategy: a batch collapses to its distinct keys, heaviest
 first (``kernel.preaggregate``, shared with the canonical kernel), and
@@ -53,12 +61,14 @@ from .kernel import (
     TopKQueue,
     _as_keys,
     _duel_params,
+    _heap_counts,
     _item_heap,
-    _key_array,
+    _load_cand,
     _pq_admit,
     _pq_key,
     _sniff_legacy_pickle,
     hash_items,
+    merge_candidates,
     preaggregate,
 )
 from .sketches import bloom, cms, hll, kll, tdigest
@@ -141,32 +151,28 @@ class _VariantBase:
     def list(self) -> list[tuple[bytes, int]]:
         return self.pq.items_sorted()
 
+    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
+        arr = _as_keys(items)
+        out = self._cell_estimate(self._hash(arr))
+        return _heap_counts(self.pq, arr, out) if use_heap else out
+
     def _check_compat(self, other: "_VariantBase") -> None:
         if type(self) is not type(other):
             raise SketchCompatError("variant", type(self).__name__, type(other).__name__)
         self.params.check_compatible(other.params)
 
+    def merge(self, other):
+        """In-place union: the layout's cell union inside the shared
+        candidate rule (``kernel.merge_candidates``)."""
+        self._check_compat(other)
+        merge_candidates(
+            self.pq, list(other.pq.counts.items()), self._hash,
+            self._cell_estimate, other._cell_estimate, lambda: self._union(other),
+        )
+        return self
+
     def _state_dict(self) -> dict:
         raise NotImplementedError
-
-    def _cell_counts(self, items: list) -> np.ndarray | list:
-        """Cell estimates (no heap) of the keys of ``(key, count)`` pairs."""
-        if not items:
-            return []
-        return self.estimate(_key_array([k for k, _ in items]), use_heap=False)
-
-    def _merge_candidates(self, other: "_VariantBase") -> None:
-        """PQ first, with pre-merge cell fallbacks both ways
-        (src/bucketed.rs:377-401): a key tracked on one side only adds
-        the other side's cell estimate, read before any cell merges."""
-        other_items = list(other.pq.counts.items())
-        self_only = [(k, c) for k, c in self.pq.counts.items() if k not in other.pq.counts]
-        self_only = [(k, c + int(e)) for (k, c), e in zip(self_only, other._cell_counts(self_only))]
-        for (item, oc), fb in zip(other_items, self._cell_counts(other_items)):
-            mine = self.pq.counts.get(item)
-            self.pq.upsert(item, (mine if mine is not None else int(fb)) + int(oc))
-        for item, c in self_only:
-            self.pq.upsert(item, c)
 
     def mem_bytes(self, item_heap_fn=None) -> int:
         heap = item_heap_fn if item_heap_fn is not None else _item_heap
@@ -207,7 +213,7 @@ class _VariantBase:
             raise ValueError(f"params: expected exactly the fields {sorted(_PARAMS)}")
         sk = cls(**params)
         sk._load_state(d)
-        for item, c, _seq in sorted(d["cand"], key=lambda t: t[2]):
+        for item, c in _load_cand(d.get("cand"), sk.params.k):
             sk.pq.upsert(item, c)
         return sk
 
@@ -233,6 +239,9 @@ class BucketedTopK(_VariantBase):
         native.bucketed_add(self.fps, self.counts, b, fp, w, *_duel_params(self))
         _pq_admit(self.pq, key_take, self._bucket_count(fp, b))
 
+    def _cell_estimate(self, fp: np.ndarray) -> np.ndarray:
+        return self._bucket_count(fp, self._index(fp))
+
     def _bucket_count(self, fp: np.ndarray, b: np.ndarray) -> np.ndarray:
         """Count of each fingerprint's matching cell in its bucket ``b``
         (0 when none matches)."""
@@ -242,22 +251,8 @@ class BucketedTopK(_VariantBase):
         hit = bc[np.arange(fp.shape[0]), m.argmax(axis=1)]
         return np.where(m.any(axis=1), hit, 0).astype(np.int64)
 
-    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        arr = _as_keys(items)
-        fp = self._hash(arr)
-        out = self._bucket_count(fp, self._index(fp))
-        if use_heap and self.pq.counts:
-            get = self.pq.counts.get
-            for i in range(arr.shape[0]):
-                c = get(_pq_key(arr[i]))
-                if c is not None:
-                    out[i] = c
-        return out
-
-    def merge(self, other: "BucketedTopK") -> "BucketedTopK":
-        self._check_compat(other)
-        self._merge_candidates(other)
-        # cell union, vectorized per other-slot column (scan semantics of
+    def _union(self, other: "BucketedTopK") -> None:
+        # vectorized per other-slot column (scan semantics of
         # src/bucketed.rs:403-445 preserved: match, else first empty,
         # else evict min when strictly larger)
         width = self.params.width
@@ -284,7 +279,6 @@ class BucketedTopK(_VariantBase):
                 ev = rest2 & (oc > minc)
                 self.fps[rows[ev], mslot[ev]] = ofp[ev]
                 self.counts[rows[ev], mslot[ev]] = oc[ev]
-        return self
 
 
 class CuckooTopK(_VariantBase):
@@ -344,27 +338,19 @@ class CuckooTopK(_VariantBase):
             cell[hit] = b[hit] * d + m.argmax(axis=1)[hit]
         return cell
 
-    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        arr = _as_keys(items)
-        fp = self._hash(arr)
+    def _cell_estimate(self, fp: np.ndarray) -> np.ndarray:
         b1, b2 = self._pair(fp)
         cell = self._heavy_cell(fp, b1, b2)
         lob = np.where(self.lobby_fp[b1] == fp, self.lobby_c[b1], 0)
-        out = np.where(cell >= 0, self.heavy_c.reshape(-1)[cell], lob).astype(np.int64)
-        if use_heap and self.pq.counts:
-            get = self.pq.counts.get
-            for i in range(arr.shape[0]):
-                c = get(_pq_key(arr[i]))
-                if c is not None:
-                    out[i] = c
-        return out
+        return np.where(cell >= 0, self.heavy_c.reshape(-1)[cell], lob).astype(np.int64)
 
-    def merge(self, other: "CuckooTopK") -> "CuckooTopK":
-        """Deterministic merge — no decay (src/cuckoo.rs:408-553)."""
-        self._check_compat(other)
+    def _check_compat(self, other: "CuckooTopK") -> None:
+        super()._check_compat(other)
         if self.max_kicks != other.max_kicks:
             raise SketchCompatError("max_kicks", self.max_kicks, other.max_kicks)
-        self._merge_candidates(other)
+
+    def _union(self, other: "CuckooTopK") -> None:
+        """Deterministic merge — no decay (src/cuckoo.rs:408-553)."""
         live = other.heavy_c.reshape(-1) > 0
         native.cuckoo_merge_heavy(
             *self._native_state(), other.heavy_fp.reshape(-1)[live], other.heavy_c.reshape(-1)[live]
@@ -386,7 +372,6 @@ class CuckooTopK(_VariantBase):
         take = ~same & ((self.lobby_c[rp] == 0) | (rc > self.lobby_c[rp]))
         self.lobby_fp[rp[take]] = rf[take]
         self.lobby_c[rp[take]] = rc[take]
-        return self
 
 
 #: blob magic -> sketch class, for every kind the library serializes

@@ -13,7 +13,15 @@ from heavykeeper_rs_spark.errors import (
     InvalidWidth,
     SketchCompatError,
 )
-from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams, TopKQueue, hash_items
+from heavykeeper_rs_spark.kernel import (
+    HeavyKeeper,
+    HKParams,
+    TopKQueue,
+    _key_array,
+    compose_indices,
+    hash_items,
+    merge_blobs,
+)
 
 
 def keys(*xs):
@@ -482,30 +490,70 @@ def test_fluent_builder_parity():
         BucketedTopK.builder().k(2).width(64).depth(2).hasher(lambda i, s: i).build()
 
 
+# -- Python reference of the HeavyKeeper merge: the cell union over both
+# sides' full (depth, width) arrays, with its own per-row probe that
+# hashes the keys at every call. merge_blobs and the merge() chain must
+# equal it bit for bit.
+
+
+def _ref_cell_max(sk, items):
+    p = sk.params
+    fp = sk._hash(items)
+    idxs = compose_indices(fp, p.depth, p.width)
+    out = np.zeros(items.shape[0], dtype=np.int64)
+    for d in range(p.depth):
+        idx = idxs[d]
+        m = (sk.fps[d, idx] == fp) & (sk.counts[d, idx] > 0)
+        np.maximum(out, np.where(m, sk.counts[d, idx].astype(np.int64), 0), out=out)
+    return out
+
+
+def _reference_merge(acc, other):
+    pending = {}
+    other_items = list(other.pq.counts.items())
+    if other_items:
+        cells = _ref_cell_max(acc, _key_array([k for k, _ in other_items]))
+        for (item, ocount), cc in zip(other_items, cells):
+            sc = acc.pq.counts.get(item)
+            pending[item] = int(ocount) + int(sc if sc is not None else cc)
+    mine = [k for k in acc.pq.counts if k not in other.pq.counts]
+    if mine:
+        for item, extra in zip(mine, _ref_cell_max(other, _key_array(mine))):
+            pending[item] = acc.pq.counts[item] + int(extra)
+    same = (acc.fps == other.fps) & (acc.counts > 0) & (other.counts > 0)
+    acc.counts[same] += other.counts[same]
+    empty = acc.counts == 0
+    acc.fps[empty] = other.fps[empty]
+    acc.counts[empty] = other.counts[empty]
+    if pending:
+        allk = list(pending)
+        probe = _ref_cell_max(acc, _key_array(allk))
+        best = [max(pending[k], int(c)) for k, c in zip(allk, probe)]
+        for i in sorted(range(len(allk)), key=lambda i: -best[i]):
+            acc.pq.upsert(allk[i], best[i])
+    return acc
+
+
 class TestSparseMergeFastPath:
-    """r8: merge_blobs routes sparse (v2) blobs through the O(nnz)
-    fast path (_merge_parsed_sparse); it must be BIT-identical to the
-    dense pairwise merge on cells, candidates and a serialize round-
-    trip, across exact and contested regimes."""
+    """merge_blobs and the HeavyKeeper.merge chain run the one merge
+    body over the other side's live cells; both must equal the dense
+    reference on cells, candidates, ``list()`` and serialized bytes,
+    over sparse (v2), dense (v1) and mixed blob sets, exact and
+    contested regimes."""
 
-    def _dense_merge(self, blobs):
-        acc = HeavyKeeper.deserialize(blobs[0])
+    @staticmethod
+    def _check(blobs):
+        ref = HeavyKeeper.deserialize(blobs[0])
+        chain = HeavyKeeper.deserialize(blobs[0])
         for b in blobs[1:]:
-            acc.merge(HeavyKeeper.deserialize(b))
-        return acc
-
-    def _check(self, blobs):
-        from heavykeeper_rs_spark.kernel import _parse_blob_sparse, merge_blobs
-
-        assert all(_parse_blob_sparse(b) is not None for b in blobs[1:]), (
-            "fixture must produce sparse (v2) blobs for the fast path"
-        )
-        fast = HeavyKeeper.deserialize(merge_blobs(blobs))
-        slow = self._dense_merge(blobs)
-        assert np.array_equal(fast.fps, slow.fps)
-        assert np.array_equal(fast.counts, slow.counts)
-        assert fast.pq.counts == slow.pq.counts
-        assert fast.list() == slow.list()
+            _reference_merge(ref, HeavyKeeper.deserialize(b))
+            chain.merge(HeavyKeeper.deserialize(b))
+        assert merge_blobs(blobs) == chain.serialize() == ref.serialize()
+        for got in (HeavyKeeper.deserialize(merge_blobs(blobs)), chain):
+            assert np.array_equal(got.fps, ref.fps)
+            assert np.array_equal(got.counts, ref.counts)
+            assert got.pq.counts == ref.pq.counts
+            assert got.list() == ref.list()
 
     def test_exact_regime_disjoint_and_shared_keys(self):
         rng = np.random.default_rng(7)
@@ -517,6 +565,7 @@ class TestSparseMergeFastPath:
                 keys = keys + 400  # overlap + disjoint mix
             sk.add_batch(keys)
             blobs.append(sk.serialize())
+        assert all(b[4] == 2 for b in blobs)
         self._check(blobs)
 
     def test_contested_regime_string_keys(self):
@@ -524,8 +573,8 @@ class TestSparseMergeFastPath:
         blobs = []
         for p in range(4):
             # width*depth = 3072 cells vs ~300 keys: collisions (and
-            # decay duels) happen, but nnz*3 < cells keeps the blobs
-            # sparse so the fast path runs
+            # decay duels) happen while nnz*3 < cells keeps the blobs
+            # sparse
             sk = HeavyKeeper(
                 HKParams(k=8, width=1024, depth=3, decay=0.9, seed=99),
                 rng=np.random.default_rng(p),
@@ -534,27 +583,15 @@ class TestSparseMergeFastPath:
                 [f"k{int(v)}" for v in rng.zipf(1.3, 4000) % 300], dtype=object
             )
             sk.add_batch(keys)
-            b = sk.serialize()
-            # contested regime fills most cells: force the sparse
-            # layout by checking; skip if dense (fixture guard)
-            blobs.append(b)
-        from heavykeeper_rs_spark.kernel import _parse_blob_sparse
-
-        if any(_parse_blob_sparse(b) is None for b in blobs[1:]):
-            import pytest
-
-            pytest.skip("fixture produced dense blobs; fast path not exercised")
+            blobs.append(sk.serialize())
+        assert all(b[4] == 2 for b in blobs)
         self._check(blobs)
 
     @pytest.mark.parametrize("trial", range(24))
     def test_fuzz_against_dense_chain(self, trial):
         """Random sparse, dense or mixed blob sets (int or string keys,
         exact or contested, empty partials included), merged in a
-        random order: ``merge_blobs`` must equal the dense
-        ``HeavyKeeper.merge`` chain over the same order, whichever
-        rows landed in which partial."""
-        from heavykeeper_rs_spark.kernel import _parse_blob_sparse, merge_blobs
-
+        random order, whichever rows landed in which partial."""
         rng = np.random.default_rng(1000 + trial)
         params = HKParams(
             k=int(rng.integers(2, 40)),
@@ -580,21 +617,50 @@ class TestSparseMergeFastPath:
             if len(keys):
                 sk.add_batch(keys)
             blobs.append(sk.serialize())
-        assert [_parse_blob_sparse(b) is None for b in blobs] == [k == "dense" for k in kinds]
-        blobs = [blobs[i] for i in rng.permutation(n_blobs)]
-        fast = HeavyKeeper.deserialize(merge_blobs(blobs))
-        slow = self._dense_merge(blobs)
-        assert np.array_equal(fast.fps, slow.fps)
-        assert np.array_equal(fast.counts, slow.counts)
-        assert fast.pq.counts == slow.pq.counts
-        assert fast.list() == slow.list()
-        assert merge_blobs(blobs) == slow.serialize()
+        assert [b[4] for b in blobs] == [1 if k == "dense" else 2 for k in kinds]
+        self._check([blobs[i] for i in rng.permutation(n_blobs)])
 
     def test_empty_sparse_blob(self):
         a = HeavyKeeper(HKParams(k=4, width=1024, depth=2))
         a.add_batch(np.asarray([1, 2, 3], dtype=np.int64))
         empty = HeavyKeeper(HKParams(k=4, width=1024, depth=2)).serialize()
         self._check([a.serialize(), empty])
+        self._check([empty, a.serialize()])
+
+    def test_other_side_probe_reads_only_the_key_cells(self):
+        """A live cell holding a tracked key's fingerprint away from the
+        key's own cell (the next id the binary search lands on) adds
+        nothing to the key's fallback."""
+        p = HKParams(k=4, width=64, depth=1)
+        key = next(
+            f"a{i}" for i in range(100)
+            if HeavyKeeper(p)._cells(hash_items(keys(f"a{i}"), p.seed))[0, 0] < 63
+        )
+        a, forged = HeavyKeeper(p), HeavyKeeper(p)
+        a.add_batch(keys(*[key] * 5))
+        fp = hash_items(keys(key), p.seed)[0]
+        forged.fps[0, 63], forged.counts[0, 63] = fp, 7
+        self._check([a.serialize(), forged.serialize()])
+        assert HeavyKeeper.deserialize(merge_blobs([a.serialize(), forged.serialize()])).list() == [
+            (key.encode(), 5)
+        ]
+
+    def test_stale_candidate_count_rises_to_its_merged_cells(self):
+        """A candidate whose queue count lags its cells is offered at its
+        merged cells, not at the stale count plus the other side's."""
+        from heavykeeper_rs_spark.serde import dumps
+
+        p = HKParams(k=4, width=1024, depth=2)
+        a = HeavyKeeper(p)
+        a.add_batch(keys(*["x"] * 10))
+        blob = a.serialize()
+        section = dumps([(b"x", 10, 0)])
+        assert blob.endswith(section)
+        stale = blob[: -len(section)] + dumps([(b"x", 1, 0)])
+        self._check([stale, HeavyKeeper(p).serialize()])
+        assert HeavyKeeper.deserialize(merge_blobs([stale, HeavyKeeper(p).serialize()])).list() == [
+            (b"x", 10)
+        ]
 
     @staticmethod
     def _reorder_cells(blob: bytes, case: str) -> bytes:
@@ -617,24 +683,20 @@ class TestSparseMergeFastPath:
         return blob[:off] + b"".join(p.tobytes() for p in parts) + blob[off + 24 * nnz :]
 
     def _sparse_pair(self):
-        from heavykeeper_rs_spark.kernel import _parse_blob_sparse
-
         p = HKParams(k=16, width=8192, depth=2)
         a, b = HeavyKeeper(p), HeavyKeeper(p)
         a.add_batch(np.arange(0, 200, dtype=np.int64))
         b.add_batch(np.arange(100, 300, dtype=np.int64))
         blobs = [a.serialize(), b.serialize()]
-        assert all(_parse_blob_sparse(x) is not None for x in blobs)
+        assert all(x[4] == 2 for x in blobs)
         return blobs
 
     @pytest.mark.parametrize("case", ["duplicated", "reversed"])
     def test_unordered_cell_ids_raise(self, case):
-        """Cell ids must be strictly ascending: ``_sparse_cell_max``
+        """Cell ids must be strictly ascending: the merge body
         binary-searches them, so a blob with a duplicated or reversed
         id list would merge to a different sketch than deserialize +
-        merge. Both decoders must refuse it."""
-        from heavykeeper_rs_spark.kernel import merge_blobs
-
+        merge. The one parser refuses it for both."""
         first, second = self._sparse_pair()
         bad = self._reorder_cells(second, case)
         with pytest.raises(ValueError, match="ascending"):

@@ -7,8 +7,9 @@ import collections
 import numpy as np
 import pytest
 
-from heavykeeper_rs_spark.errors import SketchCompatError
-from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
+from heavykeeper_rs_spark.errors import BuilderError, SketchCompatError
+from heavykeeper_rs_spark.kernel import HeavyKeeper, HKParams, merge_blobs
+from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK, deserialize_any
 
 
 def obj(*xs):
@@ -52,16 +53,6 @@ class TestBucketed:
         assert a.estimate(obj("x"), use_heap=False)[0] == 10
         assert a.estimate(obj("z"), use_heap=False)[0] == 8  # evicted min y
         assert a.estimate(obj("y"), use_heap=False)[0] == 0
-
-    def test_merge_pq_sums(self):
-        # src/bucketed.rs:973-1000
-        a = BucketedTopK(5, 256, 4)
-        b = BucketedTopK(5, 256, 4)
-        a.add_batch(obj(*(["x"] * 7 + ["y"] * 2)))
-        b.add_batch(obj(*(["x"] * 3 + ["z"] * 4)))
-        a.merge(b)
-        d = dict(a.list())
-        assert d[b"x"] == 10 and d[b"y"] == 2 and d[b"z"] == 4
 
     def test_merge_slot_order_independence(self):
         # src/bucketed.rs:898-937: same items placed in different slot
@@ -195,6 +186,26 @@ class TestCuckoo:
         assert (back.heavy_c == sk.heavy_c).all()
         assert back.max_kicks == sk.max_kicks
         assert back.list() == sk.list()
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda: HeavyKeeper(HKParams(k=5, width=256, depth=4)),
+        lambda: BucketedTopK(5, 256, 4),
+        lambda: CuckooTopK(5, 256, 4),
+    ],
+    ids=["HeavyKeeper", "BucketedTopK", "CuckooTopK"],
+)
+def test_merge_pq_sums(make):
+    """src/bucketed.rs:973-1000, on every layout under the shared
+    candidate rule: a key tracked on both sides sums, a key tracked on
+    one side keeps its count plus the other side's (empty) cells."""
+    a, b = make(), make()
+    a.add_batch(obj(*(["x"] * 7 + ["y"] * 2)))
+    b.add_batch(obj(*(["x"] * 3 + ["z"] * 4)))
+    a.merge(b)
+    assert a.list() == [(b"x", 10), (b"z", 4), (b"y", 2)]
 
 
 @pytest.mark.parametrize("cls", [BucketedTopK, CuckooTopK])
@@ -673,3 +684,135 @@ def test_variant_bucket_count_reads_int_keys_on_the_int_lane():
         sk = cls(4, 64, 2)
         sk.add_batch(keys)
         assert sk.estimate(np.asarray([5, 7]), use_heap=False).tolist() == [3, 1]
+
+
+_LAYOUTS = ["hks1-v1", "hks1-v2", "hkb1", "hkc1"]
+
+
+def _layout_sketch(layout):
+    """A small sketch of ``layout`` tracking three keys, k=4: HKS1 at a
+    width that makes its blob dense (v1) or sparse (v2), or a variant."""
+    make = {
+        "hks1-v1": lambda: HeavyKeeper(HKParams(k=4, width=4, depth=2, seed=7)),
+        "hks1-v2": lambda: HeavyKeeper(HKParams(k=4, width=1024, depth=2, seed=7)),
+        "hkb1": lambda: BucketedTopK(4, 64, 2, seed=7),
+        "hkc1": lambda: CuckooTopK(4, 64, 2, seed=7),
+    }[layout]
+    sk = make()
+    sk.add_batch(obj("x", "y", "x", "z", "x", "y"))
+    if layout.startswith("hks1"):
+        assert sk.serialize()[4] == int(layout[-1])
+    return sk
+
+
+_MISSING = object()
+
+
+def _with_cand(layout, cand):
+    """``layout``'s blob with its candidate section replaced by ``cand``
+    (``_MISSING``: no section)."""
+    from heavykeeper_rs_spark.serde import dumps, loads
+
+    sk = _layout_sketch(layout)
+    blob = sk.serialize()
+    if layout.startswith("hks1"):
+        own = [(k, int(c), int(sk.pq.seqs[k])) for k, c in sk.pq.counts.items()]
+        head = blob[: len(blob) - len(dumps(own))]
+        return head if cand is _MISSING else head + dumps(cand)
+    d = loads(blob[4:])
+    del d["cand"]
+    if cand is not _MISSING:
+        d["cand"] = cand
+    return blob[:4] + dumps(d)
+
+
+def _assert_refused(layout, bad):
+    """``bad`` raises ValueError wherever a blob is decoded or merged,
+    also as the second blob of a merge."""
+    from heavykeeper_rs_spark.operators import combine
+
+    good = _layout_sketch(layout).serialize()
+    with pytest.raises(ValueError):
+        deserialize_any(bad)
+    with pytest.raises(ValueError):
+        combine.merge([good, bad])
+    if layout.startswith("hks1"):
+        with pytest.raises(ValueError):
+            merge_blobs([good, bad])
+
+
+_BAD_CAND = {
+    "missing": _MISSING,
+    "int": 5,
+    "negative-count": [(b"x", -3, 0)],
+    "float-count": [(b"x", 2.5, 0)],
+    "bool-count": [(b"x", True, 0)],
+    "str-count": [(b"x", "a", 1)],
+    "str-key": [("x", 3, 0)],
+    "pair": [(b"x", 3)],
+    "float-seq": [(b"x", 3, 0.5)],
+    "duplicate-key": [(b"x", 3, 0), (b"x", 2, 1)],
+    "over-k": [(bytes([i]), 1, i) for i in range(5)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_CAND))
+@pytest.mark.parametrize("layout", _LAYOUTS)
+def test_hostile_candidates_refused(layout, case):
+    """Every layout decodes its candidate section through one checked
+    decoder: at most k (bytes|int key, int count >= 0, int seq) triples
+    with distinct keys, anything else a ValueError, never a queue entry
+    or a merge."""
+    _assert_refused(layout, _with_cand(layout, _BAD_CAND[case]))
+
+
+def test_good_candidate_section_round_trips():
+    """The checked decoder keeps what serialize writes, in sequence
+    order: an int key, a count of 0 and out-of-order seqs."""
+    blob = _with_cand("hkb1", [(7, 0, 5), (b"x", 3, 2)])
+    assert deserialize_any(blob).pq.counts == {b"x": 3, 7: 0}
+    assert list(deserialize_any(blob).pq.counts) == [b"x", 7]
+
+
+_BAD_PARAMS = {
+    "k-bool": dict(k=True),
+    "width-bool": dict(width=True),
+    "depth-bool": dict(depth=True),
+    "seed-str": dict(seed="x"),
+    "seed-float": dict(seed=1.5),
+    "seed-bool": dict(seed=True),
+    "seed-negative": dict(seed=-1),
+    "seed-2**63": dict(seed=1 << 63),
+    "decay-str": dict(decay="0.5"),
+}
+
+
+@pytest.mark.parametrize(
+    "layout,case",
+    [(v, c) for v in ("hkb1", "hkc1") for c in sorted(_BAD_PARAMS)]
+    # the HKS1 header packs ints: only a negative seed is expressible
+    + [("hks1-v1", "seed-negative"), ("hks1-v2", "seed-negative")],
+)
+def test_hostile_params_refused(layout, case):
+    """``HKParams`` refuses bools for k/width/depth, a decay that is not
+    a number, and any seed that is not an int in [0, 2**63), with a
+    BuilderError (a ValueError), at construction and in every layout's
+    blob."""
+    import struct
+
+    from heavykeeper_rs_spark.serde import dumps, loads
+
+    bad_field = _BAD_PARAMS[case]
+    with pytest.raises(BuilderError):
+        HKParams(**{**dict(k=4, width=64, depth=2), **bad_field})
+    blob = _layout_sketch(layout).serialize()
+    if layout.startswith("hks1"):
+        head = struct.Struct("<4sBqqqdq")
+        fields = list(head.unpack_from(blob))
+        fields[-1] = bad_field["seed"]
+        bad = head.pack(*fields) + blob[head.size :]
+    else:
+        d = loads(blob[4:])
+        d["params"] = {**d["params"], **bad_field}
+        bad = blob[:4] + dumps(d)
+    _assert_refused(layout, bad)

@@ -2,7 +2,8 @@
 
 Usage: python tools/bench_kernel.py [n_keys]
 Prints M keys/s per fixture so rounds are comparable to BASELINE.md's
-Melem/s figures (reference Rust hot loop: ~21 M/s single-thread).
+Melem/s figures (reference Rust hot loop: ~21 M/s single-thread), and
+the driver's merge-fold time over partial blobs of each layout.
 """
 
 import sys
@@ -129,39 +130,101 @@ run_dict(
 )
 
 
-def run_tokens(name, n_docs, params):
-    """The token lane as topk_tokens feeds it: 65536-doc Arrow batches
-    of ASCII text through _feed_tokens_arrow (one C tokenize + hash
-    pass, then add_batch_hashed). Reports MB/s of text on one core."""
+def token_docs(n_docs, n_vocab):
+    """``n_docs`` ASCII documents of 40 Zipf(1.1) words over an
+    ``n_vocab``-word vocabulary, as an Arrow string array."""
     import pyarrow as pa
-
-    from heavykeeper_rs_spark.operators.topk import _feed_tokens_arrow
 
     letters = np.frombuffer(b"abcdefghijklmnopqrstuvwxyz", dtype=np.uint8)
     vocab = [
         letters[rng.integers(0, 26, int(n))].tobytes().decode()
-        for n in rng.integers(2, 11, 20_000)
+        for n in rng.integers(2, 11, n_vocab)
     ]
     ranks = np.minimum(rng.zipf(1.1, (n_docs, 40)), len(vocab)) - 1
     docs = [" ".join(vocab[r] for r in row).capitalize() + "." for row in ranks]
-    col = pa.array(docs, type=pa.string())
-    text_bytes = sum(map(len, docs))  # ASCII: one byte per char
-    _feed_tokens_arrow(HeavyKeeper(params), col.slice(0, 10), 64, params.seed)  # build
+    return pa.array(docs, type=pa.string())
+
+
+def feed_tokens(sk, col):
+    """The token lane as topk_tokens feeds it: 65536-doc Arrow batches
+    through _feed_tokens_arrow (one C tokenize + hash pass, then
+    add_batch_hashed)."""
+    from heavykeeper_rs_spark.operators.topk import _feed_tokens_arrow
+
+    for i in range(0, len(col), 65536):
+        _feed_tokens_arrow(sk, col.slice(i, 65536), 64, sk.params.seed)
+
+
+def run_tokens(name, col, params):
+    """Token-lane throughput in MB/s of text on one core."""
+    text_bytes = len(col.buffers()[2])  # ASCII: one byte per char
+    feed_tokens(HeavyKeeper(params), col.slice(0, 10))  # build
     best = 0.0
     for _ in range(3):
-        sk = HeavyKeeper(params)
         t0 = time.time()
-        for i in range(0, len(col), 65536):
-            _feed_tokens_arrow(sk, col.slice(i, 65536), 64, params.seed)
+        feed_tokens(HeavyKeeper(params), col)
         best = max(best, text_bytes / (time.time() - t0) / 1e6)
     print(f"{name:55s} {best:6.1f} MB/s")
 
 
 run_tokens(
     "ASCII text via _feed_tokens_arrow (token lane)",
-    N // 25,
+    token_docs(N // 25, 20_000),
     HKParams(k=100, width=16384, depth=4),
 )
+
+
+def partial_blobs(make, parts, feed):
+    """One serialized sketch per part, as the partial stage emits them:
+    ``make(pid)`` per part, fed by ``feed(sketch, part)``."""
+    blobs = []
+    for pid, part in enumerate(parts):
+        sk = make(pid)
+        feed(sk, part)
+        blobs.append(sk.serialize())
+    return blobs
+
+
+def feed_keys(sk, keys):
+    for i in range(0, len(keys), B):
+        sk.add_batch(keys[i : i + B])
+
+
+def merge_fold(name, blobs):
+    """Best-of-3 driver fold of ``blobs`` through ``combine.merge`` (the
+    one merge of every sketch path: decode, merge, re-encode)."""
+    from heavykeeper_rs_spark.operators.combine import merge
+
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        merge(blobs)
+        best = min(best, time.perf_counter() - t0)
+    layout = {1: "dense", 2: "sparse"}.get(blobs[0][4], "") if blobs[0][:4] == b"HKS1" else ""
+    print(f"{name:55s} {best * 1e3:6.1f} ms {layout}")
+
+
+def split_docs(col, n):
+    step = -(-len(col) // n)
+    return [col.slice(i, step) for i in range(0, len(col), step)]
+
+
+hk_dense = partial_blobs(
+    lambda pid: HeavyKeeper(HKParams(k=256, width=4096, depth=4), np.random.default_rng(pid)),
+    np.array_split(bounded, 16), feed_keys,
+)
+hk_sparse = partial_blobs(
+    lambda pid: HeavyKeeper(HKParams(k=256, width=16384, depth=4), np.random.default_rng(pid)),
+    # webtext's 4096-word vocabulary: sparse partials (fill ~0.1)
+    split_docs(token_docs(N // 25, 4096), 16), feed_tokens,
+)
+variant_blobs = {
+    cls: partial_blobs(
+        lambda pid, cls=cls: cls(100, 4096, 4, rng=np.random.default_rng(pid)),
+        np.array_split(bounded[: N // 2], 8), feed_keys,
+    )
+    for cls in (BucketedTopK, CuckooTopK)
+}
 
 # the variant layouts on the reference fixture, bracketed by CPU
 # controls: compare runs only when the pre/post controls agree
@@ -170,4 +233,11 @@ run("bucketed variant, reference fixture w=4096 K=100", bounded[: N // 2],
     HKParams(k=100, width=4096, depth=4), cls=BucketedTopK, reps=3)
 run("cuckoo variant, reference fixture w=4096 K=100", bounded[: N // 2],
     HKParams(k=100, width=4096, depth=4), cls=CuckooTopK, reps=3)
+# the driver's final fold on the job's critical path: 16 partials of the
+# zipf_u64 shape (dense, fill ~1.0) and of the webtext_tokens shape
+# (sparse), 8 of each variant
+merge_fold("merge fold: 16 HKS1, reference fixture w=4096 K=256", hk_dense)
+merge_fold("merge fold: 16 HKS1, token lane w=16384 K=256", hk_sparse)
+merge_fold("merge fold: 8 bucketed, reference fixture w=4096 K=100", variant_blobs[BucketedTopK])
+merge_fold("merge fold: 8 cuckoo, reference fixture w=4096 K=100", variant_blobs[CuckooTopK])
 cpu_control("post")
