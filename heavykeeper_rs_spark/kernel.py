@@ -3,11 +3,13 @@
 A from-scratch re-implementation of the *semantics* of the reference
 crate (pmcgleenon/heavykeeper-rs). The reference is a single-threaded
 Rust library processing one item at a time; this kernel takes
-Arrow-sized batches, collapses each to its distinct keys with NumPy
-(``preaggregate``), and hands the weighted ``(fingerprint, weight)``
-arrays to the native add loop (``native.hk_add``), which runs the
-reference's per-item add in C, one item after another. String keys
-are hashed by the C byte kernel in ``native.py``. Counts, fingerprints
+Arrow-sized batches, collapses each to its distinct keys in one native
+hash pass (``preaggregate``, the one batch collapse of every layout and
+lane), and hands the weighted ``(fingerprint, weight)`` arrays to the
+native add loop (``native.hk_add``), which runs the reference's
+per-item add in C, one item after another. String keys are hashed by
+the C byte kernel in ``native.py``, every row, with no dictionary
+pass. Counts, fingerprints
 and bucket layout follow the paper / reference semantics:
 
 - state: ``depth`` rows x ``width`` buckets, each bucket a
@@ -57,7 +59,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from .errors import (
     BuilderError,
@@ -72,12 +73,6 @@ from .native import hash_slices
 from .serde import dumps as serde_dumps, loads as serde_loads
 
 _U64 = np.uint64
-# preaggregate dense-path bound: bincount table never exceeds this many
-# slots (8 B each, plus a 4 B first-occurrence slot; the default caps
-# the transient at a few MB per task so 32 concurrent workers' tables
-# stay L3-resident together — per-worker wins above that are paid back
-# in shared memory-bandwidth contention).
-_DENSE_DOMAIN_CAP = 1 << 22
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
@@ -210,49 +205,25 @@ def preaggregate(
     order: the one order every layout adds in (a lighter key
     installing first would make a heavier twin's whole mass duel a
     hopeless occupant). Keys whose total weight is below 1 drop out (a
-    zero increment is a no-op, src/heavykeeper.rs:286-288).
+    zero increment is a no-op, src/heavykeeper.rs:286-288). One native
+    pass (``native.collapse``) sums the weights in row order.
 
     ``hash_fn=None``: ``keys`` are fingerprints already (the hashed
-    lanes). Otherwise integer ``keys`` (with ``raw_ints``) collapse
-    before ``hash_fn`` runs, so only distinct values are hashed: one
-    bincount when they fill a small non-negative range (event types,
-    ports, the reference's bounded-Zipf bench fixture), a khash
-    factorize otherwise; any other keys are hashed first. Two distinct
-    raw keys sharing a 64-bit hash within a batch (probability
+    lanes). Otherwise integer ``keys`` (with ``raw_ints``; narrower
+    ints widened to 64 bits) collapse before ``hash_fn`` runs, so only
+    distinct values are hashed; any other keys are hashed first. Two
+    distinct raw keys sharing a 64-bit hash within a batch (probability
     ~n^2/2^65) stay two items with one fingerprint that both add to
     the same cells: a bounded overcount far below sketch error."""
     if hash_fn is not None and not (raw_ints and keys.dtype.kind in "iu"):
         keys, hash_fn = hash_fn(keys), None
-    n = keys.shape[0]
-    wts = None if weights is None else np.asarray(weights, dtype=np.float64)
-    if (
-        hash_fn is not None
-        and n >= 4096
-        and int(keys.min()) >= 0
-        and int(keys.max()) < min(4 * n, _DENSE_DOMAIN_CAP)
-    ):
-        # each value is its own slot; bincount can't safe-cast uint64,
-        # and the range check bounds values below 2^22, so an int64
-        # view is exact
-        vals = keys.astype(np.int64, copy=False)
-        w = np.bincount(vals, weights=wts).astype(np.int64, copy=False)
-        uniq = None
-    else:
-        vals, uniq = pd.factorize(keys, sort=False)  # first-occurrence order
-        w = np.bincount(vals, weights=wts, minlength=uniq.shape[0])
-        w = w.astype(np.int64, copy=False)
-    # first occurrence per slot: reversed scatter (last write wins ==
-    # first element when traversed back-to-front)
-    ipos = np.int32 if n < 1 << 31 else np.int64  # half the scatter traffic
-    first = np.empty(w.shape[0], dtype=ipos)
-    first[vals[::-1]] = np.arange(n - 1, -1, -1, dtype=ipos)
+    if keys.dtype.itemsize < 8:
+        keys = keys.astype(np.int64 if keys.dtype.kind == "i" else np.uint64)
+    uniq, first, total = native.collapse(keys, weights)
+    w = total.astype(np.int64)
     keep = np.flatnonzero(w > 0)
-    # first-occurrence order, then a stable sort by weight (two
-    # argsorts cost less than one two-key lexsort)
-    order = keep[np.argsort(first[keep])]
-    order = order[np.argsort(-w[order], kind="stable")]
-    uniq = order if uniq is None else np.asarray(uniq)[order]
-    fp = uniq.astype(np.uint64) if hash_fn is None else hash_fn(uniq)
+    order = keep[np.argsort(-w[keep], kind="stable")]
+    fp = uniq[order] if hash_fn is None else hash_fn(uniq[order].view(keys.dtype))
     return first[order], w[order], fp
 
 
@@ -564,15 +535,13 @@ class HeavyKeeper:
     ) -> None:
         """Insert pre-hashed keys WITHOUT materializing them.
 
-        The zero-object string lane: the distributed builders
-        dictionary-encode the Arrow batch (C pass), hash the distinct
-        values straight off the Arrow buffers
-        (``hash_string_buffers``), and hand this method (hash, weight)
-        int lanes plus ``key_take(indices) -> object ndarray`` — only
-        the handful of keys that actually enter the top-K queue are
-        ever converted to Python objects. ``weights=None`` counts each
-        hash once: the token feed hands every occurrence's hash
-        straight in. ``hashes`` must come from this sketch's hash
+        The zero-object string lane: the distributed builders hash
+        every row (or token occurrence) straight off the Arrow buffers
+        (``hash_string_buffers``), with no dictionary pass, and hand
+        this method the hashes, their weights (``None`` counts each
+        once) and ``key_take(rows) -> object ndarray``: only the keys
+        that enter the top-K queue become Python objects.
+        ``hashes`` must come from this sketch's hash
         function (the seeded default family; a custom hasher cannot
         guarantee that, so it is refused).
         """
@@ -945,11 +914,15 @@ def _item_heap(item) -> int:
 
 
 def _key_array(keys: list) -> np.ndarray:
-    """Rebuild a key array whose dtype matches the insert path's
-    hashing (int64 lanes for integer keys, object otherwise)."""
-    if keys and all(isinstance(k, (int, np.integer)) for k in keys):
+    """Rebuild a key array that hashes as the insert path did: integer
+    keys as int64, or, when one does not fit, all as ``uint64`` of ``k
+    mod 2**64`` (the bits both int lanes hash); others as objects."""
+    if not (keys and all(isinstance(k, (int, np.integer)) for k in keys)):
+        return np.asarray(keys, dtype=object)
+    try:
         return np.asarray(keys, dtype=np.int64)
-    return np.asarray(keys, dtype=object)
+    except OverflowError:
+        return np.asarray([int(k) % (1 << 64) for k in keys], dtype=np.uint64)
 
 
 def _load_cand(cand, k: int) -> list:

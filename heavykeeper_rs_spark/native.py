@@ -1,7 +1,7 @@
 """Native kernels, one C pass each, called through ``ctypes``: the
-text lane's ASCII tokenizer and seeded string hash, and the sketch add
-loops of the HeavyKeeper, Bucketed and Cuckoo layouts with Cuckoo's
-merge.
+text lane's ASCII tokenizer and seeded string hash, the batch collapse,
+and the sketch add loops of the HeavyKeeper, Bucketed and Cuckoo
+layouts with Cuckoo's merge.
 
 The C source lives here as a string because ``--py-files`` zips ship
 only ``.py`` files. It is compiled on first use in each process into a
@@ -15,6 +15,11 @@ blobs depend on it): seeded FNV-1a over the bytes, then
 ``h ^= len << 56``, then the splitmix64 finalizer. The tokenizer
 yields every ``[a-z]+`` run of the ASCII-lowered text, split at
 document boundaries, hashed over its lowered bytes.
+
+``collapse``, the one batch collapse (behind ``kernel.preaggregate``),
+passes once over 64-bit words through an open-addressing table that
+doubles at load 1/2: each distinct word, its first position and its
+weight summed in row order.
 
 The add loops are the reference's ``add`` (src/heavykeeper.rs:281-354)
 over pre-aggregated ``(fingerprint, weight)`` arrays, one item after
@@ -39,7 +44,8 @@ placed as a promotion is.
 
 The wrappers check every buffer before C sees a pointer: offsets are
 non-decreasing and lie inside ``data``, slices are non-negative and end
-inside ``data``, cell and bucket ids lie inside the state, item arrays
+inside ``data``, collapse words are 1-D ``int64``/``uint64`` with as
+many weights, cell and bucket ids lie inside the state, item arrays
 agree in length, weights are at least 1, and the state arrays are
 writable, C-contiguous ``uint64`` (Cuckoo's: lobby ``(width,)``, heavy
 ``(width, depth)``, ``max_kicks >= 1``).
@@ -63,6 +69,7 @@ _LIBS = ("-lm",)
 _SRC = r"""
 #include <math.h>
 #include <stdint.h>
+#include <stdlib.h>
 
 #define FNV_PRIME 0x100000001B3ULL
 
@@ -116,6 +123,45 @@ int64_t ascii_tokens(const int64_t *offsets, int64_t ndocs,
         }
     }
     return n;
+}
+
+typedef struct { uint64_t word; int64_t id; } slot_t;  /* id 0: empty */
+
+/* The slot holding word x, else the empty slot where it goes. */
+static uint64_t slot_of(const slot_t *t, uint64_t mask, uint64_t x) {
+    uint64_t s = mix(x) & mask;
+    while (t[s].id && t[s].word != x) s = (s + 1) & mask;
+    return s;
+}
+
+/* The distinct words of x in first-occurrence order: words[d], first[d]
+   its first position, sum[d] its weights added in row order from 0.0
+   (w == NULL counts rows). The table doubles at load 1/2. Returns the
+   distinct count, or -1 when the table cannot be allocated. */
+int64_t collapse(const uint64_t *x, const double *w, int64_t n,
+                 uint64_t *words, int64_t *first, double *sum) {
+    uint64_t mask = 1023;
+    int64_t d = 0;
+    slot_t *t = calloc(mask + 1, sizeof *t);
+    for (int64_t i = 0; t && i < n; i++) {
+        uint64_t s = slot_of(t, mask, x[i]);
+        if (!t[s].id) {
+            t[s] = (slot_t){words[d] = x[i], d + 1};
+            first[d] = i;
+            sum[d++] = 0.0;
+        }
+        sum[t[s].id - 1] += w ? w[i] : 1.0;
+        if ((uint64_t)d * 2 > mask + 1) {
+            free(t);
+            mask = 2 * mask + 1;
+            if ((t = calloc(mask + 1, sizeof *t)))
+                for (int64_t j = 0; j < d; j++)
+                    t[slot_of(t, mask, words[j])] = (slot_t){words[j], j + 1};
+        }
+    }
+    if (!t) return -1;
+    free(t);
+    return d;
 }
 
 typedef struct {
@@ -377,6 +423,8 @@ def _build() -> ctypes.CDLL:
     lib.hash_slices.restype = None
     lib.ascii_tokens.argtypes = [p, i64, p, i64, u64, p, p, p]
     lib.ascii_tokens.restype = i64
+    lib.collapse.argtypes = [p, p, i64, p, p, p]
+    lib.collapse.restype = i64
     f64 = ctypes.c_double
     for add in (lib.hk_add, lib.bucketed_add):
         add.argtypes = [p, p, p, i64, i64, p, p, p, i64, f64, u64]
@@ -463,6 +511,36 @@ def ascii_tokens(
         *args, hashes.ctypes.data, starts.ctypes.data, lens.ctypes.data
     )
     return hashes, starts, lens
+
+
+def collapse(
+    words: np.ndarray, weights: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(distinct, first, total)`` of a batch of 64-bit words (raw
+    int64/uint64 keys, or fingerprints), one entry per distinct word in
+    first-occurrence order: the word as ``uint64``, its first position
+    and its ``float64`` weight summed in row order (``weights=None``
+    counts rows). One pass through a hash table sized by the distinct
+    count; a table that cannot be allocated raises ``MemoryError``."""
+    if not (
+        isinstance(words, np.ndarray) and words.ndim == 1
+        and words.dtype in (np.int64, np.uint64)
+    ):
+        raise ValueError("words must be a 1-D int64 or uint64 array")
+    words = np.ascontiguousarray(words).view(np.uint64)
+    if weights is not None:
+        weights = np.ascontiguousarray(weights, dtype=np.float64)
+        if weights.shape != words.shape:
+            raise ValueError("words and weights must be 1-D and agree in length")
+    # pages past the distinct count are never touched
+    out = [np.empty(words.size, dtype=t) for t in (np.uint64, np.int64, np.float64)]
+    d = _lib().collapse(
+        words.ctypes.data, None if weights is None else weights.ctypes.data,
+        words.size, *(a.ctypes.data for a in out),
+    )
+    if d < 0:
+        raise MemoryError("native collapse could not allocate its hash table")
+    return tuple(a[:d] for a in out)
 
 
 @functools.lru_cache(maxsize=16)

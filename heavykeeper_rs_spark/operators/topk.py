@@ -42,6 +42,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -51,7 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import HeavyKeeper, HKParams
+from ..kernel import HeavyKeeper, HKParams, arrow_string_buffers, hash_string_buffers
 from ..variants import BucketedTopK, CuckooTopK
 from . import combine
 from .combine import partition_rng, sketch_partials, tree_fold
@@ -107,15 +108,6 @@ def local_result_df(spark: SparkSession, data: list, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema=st)
 
 
-def _dict_encodable(t: pa.DataType) -> bool:
-    return (
-        pa.types.is_string(t)
-        or pa.types.is_large_string(t)
-        or pa.types.is_binary(t)
-        or pa.types.is_large_binary(t)
-    )
-
-
 def _make_sketch(variant: str, params: HKParams, rng):
     if variant == "topk":
         return HeavyKeeper(params, rng=rng)
@@ -140,52 +132,31 @@ def _key_column(df: DataFrame, col: str):
     return F.col(col).cast(StringType())
 
 
-def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int):
-    """Feed a non-null Arrow string/binary column into a sketch.
-
-    Dictionary-encode (C pass), hash the DISTINCT values straight off
-    the Arrow buffers (``hash_string_buffers``) and insert via
-    ``add_batch_hashed`` — zero per-key Python objects; only the few
-    keys that enter the top-K queue materialize (lazy ``take``). This
-    is the string-lane fix for the round-2 per-core gap (object-array
-    SipHash bound), on ALL layouts: the variants share the hash_items
-    family, and hash_string_buffers produces identical values off the
-    buffers."""
-    import pyarrow.compute as pc
-
-    from ..kernel import arrow_string_buffers, hash_string_buffers
-
-    d = pc.dictionary_encode(col)
-    idx = d.indices.to_numpy(zero_copy_only=False)
-    nd = len(d.dictionary)
-    if w is None:
-        wagg = np.bincount(idx, minlength=nd).astype(np.int64)
-    else:
-        wagg = np.bincount(idx, weights=w, minlength=nd).astype(np.int64)
-    dic = d.dictionary
-    offsets, data = arrow_string_buffers(dic)
-    h = hash_string_buffers(offsets, data, seed)
-
-    def key_take(sel: np.ndarray) -> np.ndarray:
-        if len(sel) == nd:  # every key enters the queue (it has room): no take
-            return np.asarray(dic.to_pylist(), dtype=object)[sel]
-        return np.asarray(dic.take(pa.array(sel)).to_pylist(), dtype=object)
-
-    sk.add_batch_hashed(h, wagg, key_take)
+def _feed_hashed(sk, col: pa.Array, w: np.ndarray | None, seed: int) -> None:
+    """Feed a non-null Arrow string/binary column: every row hashed
+    straight off its buffers (as ``hash_items`` hashes the same keys)
+    into ``add_batch_hashed``."""
+    offsets, data = arrow_string_buffers(col)
+    sk.add_batch_hashed(
+        hash_string_buffers(offsets, data, seed),
+        w,
+        lambda sel: np.asarray(col.take(pa.array(sel)).to_pylist(), dtype=object),
+    )
 
 
 # Kernel feed granularity: Spark hands mapInArrow 65536-row batches
-# (session.py maxRecordsPerBatch); the NumPy kernel's per-pass dispatch
-# overhead amortizes and its Zipf pre-aggregation ratio improves with
-# batch size (measured 7.3 -> 11.7 -> 14.6 M keys/s on the reference
-# fixture at 64k -> 256k -> 1M rows — distinct-per-batch grows
-# sublinearly on Zipf, so bigger feeds do proportionally less duel
-# work), so the builder coalesces input batches to this many rows
-# before each kernel pass. An int64 key lane buffers 8 MB at this
-# setting; the byte cap bounds task memory when the key column carries
-# long strings.
+# (session.py maxRecordsPerBatch). Each kernel pass collapses its batch
+# to the distinct keys (``preaggregate``) before the add loop, and on
+# Zipf input the distinct count grows sublinearly with the batch, so
+# bigger feeds hand the add loop proportionally fewer items and pay the
+# per-pass sort and heap offers less often (an earlier NumPy kernel
+# measured 7.3 -> 11.7 -> 14.6 M keys/s on the reference fixture at 64k
+# -> 256k -> 1M rows); the builder coalesces input batches to this many
+# rows before each pass. An int64 key lane buffers 8 MB at this
+# setting; the byte cap bounds task memory for long string keys.
 _COALESCE_ROWS = 1048576
 _COALESCE_BYTES = 128 << 20
+_BYTE_TYPES = (pa.string(), pa.large_string(), pa.binary(), pa.large_binary())
 
 
 def _feed_keys(weighted: bool, seed: int):
@@ -194,8 +165,6 @@ def _feed_keys(weighted: bool, seed: int):
     feeds each coalesced column through its lane."""
 
     def feed(sk, batches: Iterator[pa.RecordBatch]) -> None:
-        import pyarrow.compute as pc
-
         kbuf: list[pa.Array] = []
         wbuf: list[np.ndarray] = []
         rows = 0
@@ -209,14 +178,10 @@ def _feed_keys(weighted: bool, seed: int):
             w = None
             if weighted:
                 w = wbuf[0] if len(wbuf) == 1 else np.concatenate(wbuf)
-            if _dict_encodable(kcol.type):
-                _feed_str_col(sk, kcol, w, seed)
-            elif w is not None:
-                sk.add_batch(kcol.to_numpy(zero_copy_only=False), w.astype(np.int64))
-            else:
-                # int64 columns come through as native int lanes
-                # (the u64 fast path)
-                sk.add_batch(kcol.to_numpy(zero_copy_only=False))
+            if kcol.type in _BYTE_TYPES:
+                _feed_hashed(sk, kcol, w, seed)
+            else:  # int64 keys: the u64 lane
+                sk.add_batch(kcol.to_numpy(zero_copy_only=False), w)
             kbuf, wbuf, rows, nbytes = [], [], 0, 0
 
         for batch in batches:
@@ -380,9 +345,6 @@ def _feed_tokens_arrow(sk, col, max_token_len: int, seed: int) -> bool:
     a document holds any non-ASCII byte — exotic case folding ('K'→'k')
     then differs from the byte fold, so the exact str semantics take
     over."""
-    import pyarrow.compute as pc
-
-    from ..kernel import arrow_string_buffers
     from ..native import ascii_tokens
 
     if col.null_count:
@@ -404,22 +366,14 @@ def _feed_tokens_arrow(sk, col, max_token_len: int, seed: int) -> bool:
 
 
 def _feed(sk, rex, chunk: list[str], max_token_len: int) -> None:
-    toks = rex.findall("\n".join(chunk).lower())
-    if not toks:
-        return
-    arr = np.asarray(toks, dtype=object)
-    # factorize on CPython's cached str hashes first (khash — much
-    # cheaper than SipHash over every occurrence), then the kernel only
-    # SipHashes the distinct tokens; length filter runs on uniques
-    inv, uniq = pd.factorize(arr)
-    uniq = np.asarray(uniq, dtype=object)
-    w = np.bincount(inv, minlength=uniq.shape[0]).astype(np.int64)
+    """The regex fallback of ``_feed_text``: the tokens of ``chunk``
+    no longer than ``max_token_len`` code points as one Arrow string
+    array, fed through ``_feed_hashed``."""
+    toks = pa.array(rex.findall("\n".join(chunk).lower()), type=pa.string())
     if max_token_len:
-        lens = np.fromiter(map(len, uniq), dtype=np.int64, count=uniq.shape[0])
-        keep = lens <= max_token_len
-        uniq, w = uniq[keep], w[keep]
-    if uniq.size:
-        sk.add_batch(uniq, weights=w)
+        toks = toks.filter(pc.less_equal(pc.utf8_length(toks), max_token_len))
+    if len(toks):
+        _feed_hashed(sk, toks, None, sk.params.seed)
 
 
 def _feed_text(sk, col: pa.Array, rex: re.Pattern, max_token_len: int, seed: int) -> None:
@@ -599,8 +553,6 @@ def probe_distinct(col: pa.Array, probe, dtype) -> np.ndarray:
     one dictionary-encode pass (C), each distinct value probed once,
     and a null row gets ``dtype``'s zero. The per-batch loop of every
     broadcast probe (``estimate``, ``joins.bloom_prefilter``)."""
-    import pyarrow.compute as pc
-
     d = pc.dictionary_encode(col)
     idx = d.indices.to_numpy(zero_copy_only=False)  # float with NaN on null
     out = np.zeros(len(col), dtype=dtype)

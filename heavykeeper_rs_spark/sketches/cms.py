@@ -20,6 +20,7 @@ from ..serde import dumps as serde_dumps, loads as serde_loads
 import numpy as np
 
 from ..kernel import compose_indices, hash_items
+from ..native import collapse
 
 _KIND = b"CMS1"
 
@@ -38,14 +39,8 @@ class CountMin:
         if len(values) == 0:
             return
         arr = np.asarray(values, dtype=object)
-        h = hash_items(arr, self.seed)
-        uh, inv = np.unique(h, return_inverse=True)
-        if weights is None:
-            w = np.bincount(inv, minlength=len(uh)).astype(np.int64)
-        else:
-            w = np.bincount(
-                inv, weights=np.asarray(weights, dtype=np.float64), minlength=len(uh)
-            ).astype(np.int64)
+        uh, _, total = collapse(hash_items(arr, self.seed), weights)
+        w = total.astype(np.int64)
         idxs = compose_indices(uh, self.depth, self.width)
         for d in range(self.depth):
             np.add.at(self.table[d], idxs[d], w)

@@ -381,23 +381,20 @@ class TestStringBufferHash:
 
 
 def test_dense_preagg_matches_factorize():
-    """The dense small-domain bincount preagg in add_batch must agree
-    with the khash-factorize lane: identical exact counts on an
-    uncontended fixture (where order effects cannot matter), identical
-    (unique, weight) multisets on weighted and cancelling inputs."""
-    from heavykeeper_rs_spark.kernel import _DENSE_DOMAIN_CAP
-
+    """One batch and the same keys in eight small batches must agree:
+    identical exact counts on an uncontended fixture (where
+    order effects cannot matter), identical (unique, weight) multisets
+    on weighted and cancelling inputs."""
     rng = np.random.default_rng(42)
     n = 20_000
-    keys = rng.integers(0, 500, n, dtype=np.int64)  # dense-eligible
+    keys = rng.integers(0, 500, n, dtype=np.int64)  # a small dense range
     wide = HKParams(k=600, width=8192, depth=4, decay=0.9, seed=7)
 
     dense = HeavyKeeper(wide)
     dense.add_batch(keys)
-    assert int(keys.max()) < min(4 * n, _DENSE_DOMAIN_CAP)  # took dense
 
     fact = HeavyKeeper(wide)
-    for chunk in np.array_split(keys, 8):  # < 4096 rows -> factorize
+    for chunk in np.array_split(keys, 8):
         assert chunk.size < 4096
         fact.add_batch(chunk)
 
@@ -411,20 +408,19 @@ def test_dense_preagg_matches_factorize():
     # on both lanes
     wk = np.asarray([1, 1, 2, 3, 3, 4], dtype=np.int64)
     ww = np.asarray([5, -5, 0, 2, 2, 7], dtype=np.int64)
-    wk_big = np.tile(wk, 1024)  # cross the 4096-row dense threshold
+    wk_big = np.tile(wk, 1024)  # more than 4096 rows
     ww_big = np.tile(ww, 1024)
     a = HeavyKeeper(wide)
     a.add_batch(wk_big, ww_big)
     assert dict(a.list()) == {3: 4096, 4: 7168}
 
-    # large / negative domains must fall back (and stay correct)
+    # large / negative domains stay correct
     neg = np.r_[np.full(5000, -3, dtype=np.int64), np.arange(5000, dtype=np.int64)]
     b = HeavyKeeper(wide)
     b.add_batch(neg)
     assert b.estimate(np.asarray([-3], dtype=np.int64))[0] == 5000
 
-    # uint64 batches take the dense lane too (bincount can't safe-cast
-    # uint64 — the lane must int64-view them; regression for a crash)
+    # uint64 batches
     ukeys = keys.astype(np.uint64)
     c = HeavyKeeper(wide)
     c.add_batch(ukeys)
@@ -435,7 +431,7 @@ def test_dense_preagg_matches_factorize():
 
     for cls in (BucketedTopK, CuckooTopK):
         vd = cls(600, 8192, 4, seed=7)
-        vd.add_batch(ukeys)  # uint64: exercises the int64-view guard
+        vd.add_batch(ukeys)
         vd2 = cls(600, 8192, 4, seed=7)
         vd2.add_batch(keys)
         assert dict(vd2.list()) == truth, cls.__name__
@@ -444,6 +440,94 @@ def test_dense_preagg_matches_factorize():
             vf.add_batch(chunk)
         assert dict(vd.list()) == truth, cls.__name__
         assert dict(vf.list()) == truth, cls.__name__
+
+
+# -- Python reference of the batch collapse as it was before one native
+# pass: a dense bincount over a small non-negative int range of at
+# least 4096 rows, a khash factorize otherwise, a reversed
+# first-occurrence scatter and two argsorts. preaggregate must equal it
+# bit for bit.
+
+
+def _preaggregate_reference(keys, weights=None, hash_fn=None, raw_ints=True):
+    import pandas as pd
+
+    if hash_fn is not None and not (raw_ints and keys.dtype.kind in "iu"):
+        keys, hash_fn = hash_fn(keys), None
+    n = keys.shape[0]
+    wts = None if weights is None else np.asarray(weights, dtype=np.float64)
+    if (
+        hash_fn is not None
+        and n >= 4096
+        and int(keys.min()) >= 0
+        and int(keys.max()) < min(4 * n, 1 << 22)
+    ):
+        vals = keys.astype(np.int64, copy=False)
+        w = np.bincount(vals, weights=wts).astype(np.int64, copy=False)
+        uniq = None
+    else:
+        vals, uniq = pd.factorize(keys, sort=False)
+        w = np.bincount(vals, weights=wts, minlength=uniq.shape[0])
+        w = w.astype(np.int64, copy=False)
+    ipos = np.int32 if n < 1 << 31 else np.int64
+    first = np.empty(w.shape[0], dtype=ipos)
+    first[vals[::-1]] = np.arange(n - 1, -1, -1, dtype=ipos)
+    keep = np.flatnonzero(w > 0)
+    order = keep[np.argsort(first[keep])]
+    order = order[np.argsort(-w[order], kind="stable")]
+    uniq = order if uniq is None else np.asarray(uniq)[order]
+    fp = uniq.astype(np.uint64) if hash_fn is None else hash_fn(uniq)
+    return first[order], w[order], fp
+
+
+def _collapse_cases(rng):
+    """``(name, keys, weights, hash_fn, raw_ints)`` batches covering
+    every range the reference splits on."""
+    h = lambda a: hash_items(a, 7)  # noqa: E731
+    n = int(rng.integers(4096, 20_000))
+    small = rng.integers(0, 300, n, dtype=np.int64)
+    wide = rng.integers(-(1 << 62), 1 << 62, n, dtype=np.int64)
+    neg = rng.integers(-50, 50, n, dtype=np.int64)
+    big = (np.uint64(1 << 63) + rng.integers(0, 40, n).astype(np.uint64)).astype(np.uint64)
+    frac = rng.random(n) * 3 - 0.5
+    cancel = np.where(rng.random(n) < 0.5, -1.0, 1.0) * rng.integers(1, 4, n)
+    zipf = np.minimum(rng.zipf(1.2, n), 5000).astype(np.int64)
+    strs = np.asarray([f"k{v}" for v in zipf[:3000]], dtype=object)
+    return [
+        ("small-dense", small, None, h, True),
+        ("small-dense-short", small[:4000], None, h, True),
+        ("wide", wide, None, h, True),
+        ("negative", neg, None, h, True),
+        ("uint64-high", big, None, h, True),
+        ("int32", small.astype(np.int32) - 150, None, h, True),
+        ("uint16", small.astype(np.uint16), None, h, True),
+        ("fingerprints", hash_items(zipf, 7), None, None, True),
+        ("fractional", small, frac, h, True),
+        ("cancelling", neg, cancel, h, True),
+        ("fp-cancelling", hash_items(neg, 7), cancel, None, True),
+        ("objects", strs, None, h, True),
+        ("hash-first", small, frac, h, False),
+        ("n=0", small[:0], None, h, True),
+        ("n=1", small[:1], np.asarray([2.5]), h, True),
+        ("all-equal", np.full(n, 9, dtype=np.int64), None, h, True),
+        ("all-distinct", rng.permutation(n).astype(np.int64), None, h, True),
+        ("all-distinct-fp", hash_items(rng.permutation(n), 7), frac, None, True),
+    ]
+
+
+def test_preaggregate_matches_reference_bit_for_bit():
+    """The one native collapse gives the reference's ``pos``, ``w`` and
+    ``fp`` on every key range, weight kind and batch size."""
+    from heavykeeper_rs_spark.kernel import preaggregate
+
+    rng = np.random.default_rng(1414)
+    for trial in range(6):
+        for name, ks, wts, h, raw in _collapse_cases(rng):
+            got = preaggregate(ks, wts, h, raw_ints=raw)
+            ref = _preaggregate_reference(ks, wts, h, raw_ints=raw)
+            assert np.array_equal(got[0], ref[0]), (trial, name)
+            for g, r in zip(got[1:], ref[1:]):
+                assert g.dtype == r.dtype and np.array_equal(g, r), (trial, name)
 
 
 def test_query_deprecated_alias():
@@ -796,3 +880,31 @@ def test_contains_finds_int_keys(layout):
     sk.add_batch(np.array([5, 5, 7]))
     assert sk.contains(5) and sk.contains(7)
     assert not sk.contains(9)
+
+
+@pytest.mark.parametrize("layout", ["heavykeeper", "bucketed", "cuckoo"])
+def test_merge_mixed_negative_and_high_uint64_keys(layout):
+    """Integer candidates at or above 2**63 (fed as uint64) merge with
+    negative ones (fed as int64) through ``merge``, ``merge_blobs`` and
+    ``combine.merge`` on every layout: the candidate probe hashes them
+    as ``uint64`` of ``k mod 2**64``, the bits both lanes hashed."""
+    from heavykeeper_rs_spark.operators.combine import merge
+    from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK, deserialize_any
+
+    make = {
+        "heavykeeper": lambda: HeavyKeeper(HKParams(k=8, width=256, depth=2)),
+        "bucketed": lambda: BucketedTopK(8, 256, 2),
+        "cuckoo": lambda: CuckooTopK(8, 256, 2),
+    }[layout]
+    hi = 2**63 + 5
+    a, b = make(), make()
+    a.add_batch(np.asarray([-3] * 5 + [-7] * 2, dtype=np.int64))
+    a.add_batch(np.asarray([hi] * 4, dtype=np.uint64))
+    b.add_batch(np.asarray([hi] * 3 + [2**64 - 2] * 2, dtype=np.uint64))
+    b.add_batch(np.asarray([-3], dtype=np.int64))
+    want = {-3: 6, -7: 2, hi: 7, 2**64 - 2: 2}
+    blobs = [a.serialize(), b.serialize()]
+    assert dict(deserialize_any(merge(blobs)).list()) == want
+    if layout == "heavykeeper":
+        assert dict(HeavyKeeper.deserialize(merge_blobs(blobs)).list()) == want
+    assert dict(a.merge(b).list()) == want

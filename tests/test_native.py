@@ -239,3 +239,37 @@ def test_cuckoo_refuses_bad_buffers(op, case):
 def test_cuckoo_pairs_refuses_width_0():
     with pytest.raises(ValueError):
         native.cuckoo_pairs(np.asarray([1], dtype=np.uint64), 0)
+
+
+# ------------------------------------------------------------ collapse
+@pytest.mark.parametrize(
+    "words,weights",
+    [
+        (np.zeros((2, 2), dtype=np.uint64), None),
+        (np.zeros(4, dtype=np.int32), None),
+        (np.zeros(4, dtype=np.float64), None),
+        ([1, 2, 3], None),
+        (np.zeros(4, dtype=np.uint64), np.ones(3)),
+        (np.zeros(4, dtype=np.uint64), np.ones((4, 1))),
+    ],
+    ids=["not-1d", "int32", "float64", "list", "weight-length", "weight-2d"],
+)
+def test_collapse_refuses_bad_buffers(words, weights):
+    with pytest.raises(ValueError):
+        native.collapse(words, weights)
+
+
+def test_collapse_first_occurrence_order_and_row_order_sums():
+    x = np.asarray([5, -3, 5, 7, -3, 5], dtype=np.int64)
+    words, first, total = native.collapse(x)
+    assert words.tolist() == [5, 2**64 - 3, 7]
+    assert first.tolist() == [0, 1, 3] and total.tolist() == [3.0, 2.0, 1.0]
+    w = np.asarray([0.1, 1.0, 0.2, 4.0, -1.0, 0.3])
+    _, _, total = native.collapse(x, w)
+    assert total.tolist() == [0.0 + 0.1 + 0.2 + 0.3, 0.0, 4.0]
+    # past the first table size: the table grows and keeps every word
+    r = np.random.default_rng(0).integers(0, 1 << 63, 5000).astype(np.uint64)
+    words, first, total = native.collapse(np.r_[r, r[::-1]])
+    assert np.array_equal(words, r) and np.array_equal(first, np.arange(5000))
+    assert (total == 2.0).all()
+    assert all(a.size == 0 for a in native.collapse(np.zeros(0, dtype=np.uint64)))

@@ -248,6 +248,67 @@ class TestArrowTokenizer:
         }
 
 
+_LANE_KEYS = [f"k{v}" for v in np.minimum(np.random.default_rng(3).zipf(1.3, 3000), 400)]
+_LANE_DOCS = [
+    "The cat sat; the DOG sat too.", "", None, "a" * 70 + " tail cat",
+    "dog2dog 42 cat", "Zebra zebra ZEBRA",
+]
+
+
+@pytest.mark.parametrize("layout", ["topk", "bucketed", "cuckoo"])
+@pytest.mark.parametrize(
+    "lane",
+    ["string", "binary", "int64", "weighted-string", "weighted-int64",
+     "tokens-ascii", "tokens-non-ascii", "tokens-custom-re"],
+)
+def test_every_lane_equals_the_object_lane(lane, layout):
+    """Every feed (``_feed_keys`` over Arrow string, binary, int64 and
+    weighted columns; ``_feed_tokens`` through its ASCII lane and its
+    regex fallback) gives the same blob bytes as feeding the same rows,
+    as Python objects, through ``add_batch``."""
+    import re
+
+    import pyarrow as pa
+
+    from heavykeeper_rs_spark.kernel import HKParams
+    from heavykeeper_rs_spark.operators.topk import _feed_keys, _feed_tokens, _make_sketch
+
+    params = HKParams(k=16, width=64, depth=3, seed=11)
+    rng = np.random.default_rng(5)
+    n = len(_LANE_KEYS)
+    weights = rng.integers(1, 9, n)
+    if lane.startswith("tokens"):
+        token_re = "[a-z0-9]+" if lane == "tokens-custom-re" else "[a-z]+"
+        docs = _LANE_DOCS + (["caf\u00e9 cat"] if lane == "tokens-non-ascii" else [])
+        batches = [pa.record_batch([pa.array(docs, type=pa.string())], ["__text"])]
+        feed = _feed_tokens(token_re, 64, params.seed)
+        rows = [t for d in docs if d for t in re.findall(token_re, d.lower()) if len(t) <= 64]
+        wts = None
+    else:
+        keys = {
+            "binary": [k.encode() for k in _LANE_KEYS],
+            "int64": [int(k[1:]) - 200 for k in _LANE_KEYS],
+            "weighted-int64": [int(k[1:]) - 200 for k in _LANE_KEYS],
+        }.get(lane, _LANE_KEYS)
+        keys = keys[:7] + [None] + keys[7:]  # a null key row is dropped
+        wcol = [int(w) for w in weights[:7]] + [3] + [int(w) for w in weights[7:]]
+        wcol[20] = None  # a null weight row is dropped
+        cols = [pa.array(keys)]
+        if lane.startswith("weighted"):
+            cols.append(pa.array(wcol, type=pa.int64()))
+        table = pa.table(cols, names=["__key", "__w"][: len(cols)])
+        batches = table.to_batches(max_chunksize=1000)
+        feed = _feed_keys(len(cols) == 2, params.seed)
+        live = [i for i, k in enumerate(keys) if k is not None and (len(cols) == 1 or wcol[i] is not None)]
+        rows = [keys[i] for i in live]
+        wts = None if len(cols) == 1 else np.asarray([wcol[i] for i in live])
+    lane_sk = _make_sketch(layout, params, np.random.default_rng(1))
+    feed(lane_sk, iter(batches))
+    obj_sk = _make_sketch(layout, params, np.random.default_rng(1))
+    obj_sk.add_batch(rows, wts)
+    assert lane_sk.list() and lane_sk.serialize() == obj_sk.serialize()
+
+
 def test_topk_cube_and_grouping_sets(spark):
     """CUBE over two columns: every subset's per-group top-K is exact
     in the uncontended regime, including the grand total."""

@@ -595,7 +595,7 @@ def test_distributed_probe_all_variants(spark):
 def test_variant_hashed_lane_identity():
     """add_batch_hashed must produce the BIT-IDENTICAL sketch to
     add_batch for the same keys (round 4: the zero-object lane now
-    feeds the variant layouts too). Both lanes factorize the same hash
+    feeds the variant layouts too). Both lanes collapse the same hash
     sequence, so fp order, weights and rng consumption all coincide."""
     from heavykeeper_rs_spark.kernel import hash_items
     from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK

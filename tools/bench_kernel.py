@@ -2,8 +2,9 @@
 
 Usage: python tools/bench_kernel.py [n_keys]
 Prints M keys/s per fixture so rounds are comparable to BASELINE.md's
-Melem/s figures (reference Rust hot loop: ~21 M/s single-thread), and
-the driver's merge-fold time over partial blobs of each layout.
+Melem/s figures (reference Rust hot loop: ~21 M/s single-thread), the
+batch collapse's ms per 1 Mi-key batch, and the driver's merge-fold
+time over partial blobs of each layout.
 """
 
 import sys
@@ -99,23 +100,27 @@ domains = np.asarray(
 run("domain strings (10k distinct) width=16384 K=100", domains, HKParams(k=100, width=16384, depth=4))
 
 
-def run_dict(name, strs, params):
-    """What the distributed path actually does for string columns:
-    Arrow dictionary_encode per batch, distinct values hashed straight
-    off the Arrow buffers, zero-object insert (operators.topk
-    _feed_str_col)."""
+def key_batches(strs):
+    """A string column as Spark hands it to the partial stage: 65536-row
+    Arrow record batches of ``__key``."""
     import pyarrow as pa
-    import time as _t
 
-    from heavykeeper_rs_spark.operators.topk import _feed_str_col
+    table = pa.table([pa.array(list(strs), type=pa.string())], names=["__key"])
+    return table.to_batches(max_chunksize=65536)
 
-    col = pa.array(list(strs), type=pa.string())
+
+def run_dict(name, strs, params):
+    """What the distributed path actually does for string columns
+    (operators.topk _feed_keys): batches coalesced to B rows, every row
+    hashed straight off the Arrow buffers, zero-object insert."""
+    from heavykeeper_rs_spark.operators.topk import _feed_keys
+
+    batches = key_batches(strs)
     sk = HeavyKeeper(params)
-    t0 = _t.time()
-    for i in range(0, len(col), B):
-        _feed_str_col(sk, col.slice(i, B), None, params.seed)
-    dt = _t.time() - t0
-    print(f"{name:55s} {len(col)/dt/1e6:6.2f} M keys/s")
+    t0 = time.time()
+    _feed_keys(False, params.seed)(sk, iter(batches))
+    dt = time.time() - t0
+    print(f"{name:55s} {len(strs)/dt/1e6:6.2f} M keys/s")
 
 
 run_dict(
@@ -167,9 +172,10 @@ def run_tokens(name, col, params):
     print(f"{name:55s} {best:6.1f} MB/s")
 
 
+tok_col = token_docs(N // 25, 20_000)
 run_tokens(
     "ASCII text via _feed_tokens_arrow (token lane)",
-    token_docs(N // 25, 20_000),
+    tok_col,
     HKParams(k=100, width=16384, depth=4),
 )
 
@@ -204,6 +210,39 @@ def merge_fold(name, blobs):
     print(f"{name:55s} {best * 1e3:6.1f} ms {layout}")
 
 
+def best_ms(name, fn, reps=5):
+    """Best-of-``reps`` wall time of ``fn()`` in ms."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    print(f"{name:55s} {best * 1e3:6.1f} ms")
+
+
+def collapse_lines():
+    """The batch collapse (``kernel.preaggregate``) on one B-key batch
+    of the reference fixture (raw int64 keys, as ``add_batch`` hands
+    them) and of token-lane occurrence hashes, and the whole string
+    lane (hash, collapse, add) on B distinct strings."""
+    from heavykeeper_rs_spark.kernel import arrow_string_buffers, preaggregate
+    from heavykeeper_rs_spark.native import ascii_tokens
+    from heavykeeper_rs_spark.operators.topk import _feed_keys
+
+    params = HKParams(k=100, width=4096, depth=4)
+    keys = bounded[:B]
+    hash_fn = HeavyKeeper(params)._hash
+    best_ms("collapse: 1 Mi keys, reference fixture", lambda: preaggregate(keys, None, hash_fn))
+    offsets, data = arrow_string_buffers(tok_col.slice(0, B // 40 + 1))
+    hashes = ascii_tokens(offsets, data, 64, params.seed)[0][:B]
+    best_ms("collapse: 1 Mi token-lane hashes", lambda: preaggregate(hashes, None))
+    distinct = key_batches(f"user-{i:08d}" for i in rng.permutation(B))
+    best_ms(
+        "string lane: 1 Mi distinct strings via _feed_keys",
+        lambda: _feed_keys(False, params.seed)(HeavyKeeper(params), iter(distinct)),
+    )
+
+
 def split_docs(col, n):
     step = -(-len(col) // n)
     return [col.slice(i, step) for i in range(0, len(col), step)]
@@ -226,9 +265,11 @@ variant_blobs = {
     for cls in (BucketedTopK, CuckooTopK)
 }
 
-# the variant layouts on the reference fixture, bracketed by CPU
-# controls: compare runs only when the pre/post controls agree
+# the batch collapse, the variant layouts on the reference fixture and
+# the merge folds, bracketed by CPU controls: compare runs only when
+# the pre/post controls agree
 cpu_control("pre")
+collapse_lines()
 run("bucketed variant, reference fixture w=4096 K=100", bounded[: N // 2],
     HKParams(k=100, width=4096, depth=4), cls=BucketedTopK, reps=3)
 run("cuckoo variant, reference fixture w=4096 K=100", bounded[: N // 2],
