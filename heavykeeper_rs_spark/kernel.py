@@ -40,6 +40,14 @@ and bucket layout follow the paper / reference semantics:
   (src/bucketed.rs:377-401), strictly more accurate than the
   plain-TopK ``unwrap_or(0)`` — and it is offered only after the cell
   union, at the larger of that value and its merged cells.
+- one API body: ``_TopKSketch`` holds the reference surface of all
+  three layouts (README.md:48-51) — ``add_batch`` (with
+  ``return_evicted``), ``add_batch_hashed``, ``estimate``,
+  ``contains``, ``query``, ``contains_top_k``, ``list``,
+  ``mem_bytes``, ``builder`` and the merge precondition. This
+  ``HeavyKeeper`` and the two layouts of ``variants.py`` subclass it
+  and supply only their cells: a native add loop (``_add_core``), a
+  cell estimate (``_count``), a merge and a blob codec.
 
 Statistical fidelity, not bit-equality, is the contract: the duel is
 sampled with its exact distribution (geometric gaps between
@@ -154,6 +162,20 @@ def hash_items(items: np.ndarray, seed: int) -> np.ndarray:
     offsets, data = _object_string_buffers(arr)
     return hash_string_buffers(offsets, data, seed)
 
+
+def hash_as_text(values, seed: int) -> np.ndarray:
+    """``hash_items`` of ``values`` as objects: the key hash of the
+    CountMin, HLL and Bloom sketches, which hash an integer as its
+    decimal text. A 1-D integer ndarray gets that text from one Arrow
+    cast instead of one ``str`` per value; anything else, bool included
+    (Arrow writes ``true``, ``str`` writes ``True``), is packed as
+    objects."""
+    if isinstance(values, np.ndarray) and values.ndim == 1 and values.dtype.kind in "iu":
+        import pyarrow as pa
+
+        text = pa.array(values).cast(pa.string())
+        return hash_string_buffers(*arrow_string_buffers(text), seed)
+    return hash_items(np.asarray(values, dtype=object), seed)
 
 
 def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
@@ -437,24 +459,19 @@ def merge_candidates(pq: TopKQueue, other: list, locate, mine, theirs, union) ->
         pq.upsert(keys[i], int(final[i]))
 
 
-class HeavyKeeper:
-    """Mergeable top-K HeavyKeeper sketch over byte-string keys."""
+class _TopKSketch:
+    """The reference API of all three layouts, written once (README.md:
+    48-51: every variant exposes the same API). A layout supplies only
+    its cells: ``_add_core(fp, w)`` runs its native add loop over the
+    collapsed batch and returns each key's post-batch count,
+    ``_count(fp)`` is its bucket_count(), ``_state_dict()`` names its
+    state arrays, and it keeps its own ``merge`` and blob codec."""
 
-    def __init__(
-        self,
-        params: HKParams,
-        rng: np.random.Generator | None = None,
-        hasher=None,
-    ) -> None:
+    #: O3 custom hash family; only HeavyKeeper takes one
+    _hasher = None
+
+    def __init__(self, params: HKParams, rng: np.random.Generator | None = None) -> None:
         self.params = params
-        # O3 (src/heavykeeper.rs:123-131 with_hasher): optional custom
-        # vectorized hash fn (items ndarray, seed) -> uint64 ndarray.
-        # Merging requires both sides to use the same hash family, and
-        # a custom-hasher sketch refuses serialize() (a blob can't
-        # carry code; the reference has the same same-hasher contract).
-        self._hasher = hasher
-        self.fps = np.zeros((params.depth, params.width), dtype=np.uint64)
-        self.counts = np.zeros((params.depth, params.width), dtype=np.uint64)
         self.pq = TopKQueue(params.k)
         # Deterministic per-instance RNG; distributed callers pass
         # Generator(PCG64(seed ^ partition_id)) — analog of the seeded
@@ -464,32 +481,11 @@ class HeavyKeeper:
         # tests' threshold overwrites (src/heavykeeper.rs:766-794).
         self._force_decay: bool | None = None
 
-    # -- construction helpers (reference builder surface, O1/O2/O4) ----
-    @classmethod
-    def new(cls, k: int, width: int, depth: int, decay: float = 0.9) -> "HeavyKeeper":
-        return cls(HKParams(k=k, width=width, depth=depth, decay=decay))
-
-    @classmethod
-    def with_seed(
-        cls, k: int, width: int, depth: int, decay: float, seed: int
-    ) -> "HeavyKeeper":
-        return cls(HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed))
-
     @classmethod
     def builder(cls) -> "SketchBuilder":
-        """Fluent construction (src/heavykeeper.rs:107-109)."""
+        """Fluent construction (src/heavykeeper.rs:107-109,
+        src/bucketed.rs:131, src/cuckoo.rs:190)."""
         return SketchBuilder(cls)
-
-    @classmethod
-    def with_hasher(
-        cls, k: int, width: int, depth: int, decay: float, seed: int, hasher
-    ) -> "HeavyKeeper":
-        """O3: user-supplied vectorized hash family
-        ``(items: ndarray, seed: int) -> uint64 ndarray``."""
-        return cls(
-            HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed),
-            hasher=hasher,
-        )
 
     def _hash(self, items: np.ndarray) -> np.ndarray:
         if self._hasher is not None:
@@ -509,13 +505,14 @@ class HeavyKeeper:
 
         ``preaggregate`` collapses Zipf-skewed batches to near-distinct
         weighted adds — the batch analog of the reference's first-class
-        weighted ``add(item, n)`` (src/heavykeeper.rs:273-279).
+        weighted ``add(item, n)`` (src/heavykeeper.rs:273-279). An
+        empty batch changes nothing, the RNG stream included.
 
         ``return_evicted=True`` returns the items that fell OUT of the
         top-K queue during this batch, in eviction order — the batch
         analog of ``add_with_evicted`` (src/heavykeeper.rs:281-354,
-        tested at src/heavykeeper.rs:1524-1562). Embedding callers use
-        the evicted stream to maintain side structures.
+        src/bucketed.rs:187-258, src/cuckoo.rs:246-273). Embedding
+        callers use the evicted stream to maintain side structures.
         """
         arr = _as_keys(items)
         if arr.size == 0:
@@ -523,8 +520,11 @@ class HeavyKeeper:
         pos, w, fp = preaggregate(
             arr, weights, self._hash, raw_ints=self._hasher is None
         )
-        return self._add_unique_fp(
-            fp, w, lambda sel: arr[pos[sel]], return_evicted=return_evicted
+        return _pq_admit(
+            self.pq,
+            lambda sel: arr[pos[sel]],
+            self._add_core(fp, w),
+            [] if return_evicted else None,
         )
 
     def add_batch_hashed(
@@ -551,23 +551,137 @@ class HeavyKeeper:
                 "a custom-hasher sketch must use add_batch"
             )
         pos, w, fp = preaggregate(np.asarray(hashes, dtype=np.uint64), weights)
-        self._add_unique_fp(fp, w, lambda sel: key_take(pos[sel]))
+        _pq_admit(self.pq, lambda sel: key_take(pos[sel]), self._add_core(fp, w))
 
-    def _add_unique_fp(
+    # -- O7/O8: point estimates ----------------------------------------
+    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
+        """Vectorized count(): the queue's value if tracked, else the
+        layout's cell estimate (src/heavykeeper.rs:220-246).
+        ``use_heap=False`` is bucket_count() (src/heavykeeper.rs:248-271).
+        """
+        arr = _as_keys(items)
+        out = self._count(self._hash(arr))
+        return _heap_counts(self.pq, arr, out) if use_heap else out
+
+    def contains(self, item: bytes | str | int) -> bool:
+        """O9 (src/heavykeeper.rs:177-199)."""
+        return bool(self.estimate([item])[0] > 0)
+
+    def query(self, item: bytes | str) -> bool:
+        """O10: deprecated alias of ``contains`` (kept for parity with
+        the reference, src/heavykeeper.rs:201-209, src/bucketed.rs:299,
+        src/cuckoo.rs:326 — deprecated there since 0.6.9)."""
+        import warnings
+
+        warnings.warn(
+            "query() is a deprecated alias; use contains()",
+            DeprecationWarning,
+            stacklevel=2,
+        )
+        return self.contains(item)
+
+    def contains_top_k(self, item: bytes | str | int) -> bool:
+        """O11 (src/heavykeeper.rs:211-218)."""
+        return _pq_key(item) in self.pq.counts
+
+    # -- O12: ordered candidates ----------------------------------------
+    def list(self) -> list[tuple[bytes, int]]:
+        return self.pq.items_sorted()
+
+    # -- O13: merge ------------------------------------------------------
+    def _check_compat(self, other: "_TopKSketch") -> None:
+        """Merge precondition of every layout: the same layout, the
+        same hash family and the same params."""
+        if type(self) is not type(other):
+            raise SketchCompatError("variant", type(self).__name__, type(other).__name__)
+        if self._hasher is not other._hasher:
+            raise SketchCompatError("hasher", self._hasher, other._hasher)
+        self.params.check_compatible(other.params)
+
+    # -- O14: memory audit ------------------------------------------------
+    def mem_bytes(self, item_heap_fn=None) -> int:
+        """Analog of mem_bytes(item_heap) (src/heavykeeper.rs:388-403).
+
+        Like the reference, the caller may supply ``item_heap_fn(item)
+        -> int`` returning the bytes an item owns beyond its inline
+        representation (the Rust API takes ``item_heap: Fn(&T) ->
+        usize``, e.g. ``String::capacity``; ``|_| 0`` for heap-free
+        T). When omitted, keys are costed at ``len(key) + 96`` — the
+        key's own bytes plus a fixed per-tracked-item overhead
+        covering this implementation's dict/heap entries, mirroring
+        the reference's ``size_of::<Bucket>()`` + queue bookkeeping
+        terms. Integer keys (the u64 lane) own no bytes beyond the
+        overhead, like the reference's ``|_| 0``."""
+        heap = item_heap_fn if item_heap_fn is not None else _item_heap
+        items = sum(int(heap(k)) + 96 for k in self.pq.counts)
+        cells = sum(a.nbytes for a in self._state_dict().values() if isinstance(a, np.ndarray))
+        return int(cells + items)
+
+    # -- candidate section of every blob ---------------------------------
+    def _cand_section(self) -> list:
+        """``(key, count, seq)`` per tracked key, the section
+        ``_load_cand`` checks on the way back in."""
+        return [(k, int(c), int(self.pq.seqs[k])) for k, c in self.pq.counts.items()]
+
+    def _load_queue(self, cand: list) -> None:
+        """Refill the queue from decoded ``(key, count)`` pairs in
+        sequence order."""
+        for item, c in cand:
+            self.pq.upsert(item, c)
+
+
+class HeavyKeeper(_TopKSketch):
+    """Mergeable top-K HeavyKeeper sketch over byte-string keys."""
+
+    def __init__(
         self,
-        fp: np.ndarray,
-        w: np.ndarray,
-        take_keys,
-        return_evicted: bool = False,
-    ) -> list | None:
+        params: HKParams,
+        rng: np.random.Generator | None = None,
+        hasher=None,
+    ) -> None:
+        super().__init__(params, rng)
+        # O3 (src/heavykeeper.rs:123-131 with_hasher): optional custom
+        # vectorized hash fn (items ndarray, seed) -> uint64 ndarray.
+        # Merging requires both sides to use the same hash family, and
+        # a custom-hasher sketch refuses serialize() (a blob can't
+        # carry code; the reference has the same same-hasher contract).
+        self._hasher = hasher
+        self.fps = np.zeros((params.depth, params.width), dtype=np.uint64)
+        self.counts = np.zeros((params.depth, params.width), dtype=np.uint64)
+
+    # -- construction helpers (reference builder surface, O1/O2/O4) ----
+    @classmethod
+    def new(cls, k: int, width: int, depth: int, decay: float = 0.9) -> "HeavyKeeper":
+        return cls(HKParams(k=k, width=width, depth=depth, decay=decay))
+
+    @classmethod
+    def with_seed(
+        cls, k: int, width: int, depth: int, decay: float, seed: int
+    ) -> "HeavyKeeper":
+        return cls(HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed))
+
+    @classmethod
+    def with_hasher(
+        cls, k: int, width: int, depth: int, decay: float, seed: int, hasher
+    ) -> "HeavyKeeper":
+        """O3: user-supplied vectorized hash family
+        ``(items: ndarray, seed: int) -> uint64 ndarray``."""
+        return cls(
+            HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed),
+            hasher=hasher,
+        )
+
+    def _state_dict(self) -> dict:
+        return {"fps": self.fps, "counts": self.counts}
+
+    def _add_core(self, fp: np.ndarray, w: np.ndarray) -> np.ndarray:
         cells = self._cells(fp)
         native.hk_add(self.fps, self.counts, cells, fp, w, *_duel_params(self))
         # Re-probe: each key's count is the max over the rows where it
         # owns the cell (paper Algorithm 1's monotone heap rule uses the
         # per-add max; probing once after the batch is equivalent up to
         # intra-batch evictions, and offers the heap each key once).
-        est = self._cell_max((fp, cells))
-        return _pq_admit(self.pq, take_keys, est, [] if return_evicted else None)
+        return self._cell_max((fp, cells))
 
     def _cells(self, fp: np.ndarray) -> np.ndarray:
         """Flat cell ids ``(depth, n)``: row d of key i is cell
@@ -594,55 +708,23 @@ class HeavyKeeper:
         Every owned cell accumulates ONLY its key's own weight, so each
         is a lower bound on the true count and the least-chipped row is
         the best sound estimate. The public ``count()``/``estimate``
-        keep the reference's MIN semantics (src/heavykeeper.rs:220-246);
-        this internal estimator serves the add path's heap offers and
-        the merge, where light colliders' early decay chips would
-        otherwise bias boundary candidates low."""
+        keep the reference's MIN semantics (``_count``); this internal
+        estimator serves the add path's heap offers and the merge,
+        where light colliders' early decay chips would otherwise bias
+        boundary candidates low."""
         return self._probe(at).max(axis=0).astype(np.int64)
 
-    # -- O7/O8: point estimates ----------------------------------------
-    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        """Vectorized count(): PQ value if tracked, else min over rows
-        with a matching fingerprint, else 0 (src/heavykeeper.rs:220-246).
-        ``use_heap=False`` is bucket_count() (src/heavykeeper.rs:248-271).
-        """
-        arr = _as_keys(items)
-        owned = self._probe(self._locate(arr))
+    def _count(self, fp: np.ndarray) -> np.ndarray:
+        """MIN over rows with a matching fingerprint, else 0
+        (src/heavykeeper.rs:248-271)."""
+        owned = self._probe((fp, self._cells(fp)))
         live = owned > 0
         low = np.where(live, owned, _U64(np.iinfo(np.uint64).max)).min(axis=0)
-        out = np.where(live.any(axis=0), low, 0).astype(np.int64)
-        return _heap_counts(self.pq, arr, out) if use_heap else out
+        return np.where(live.any(axis=0), low, 0).astype(np.int64)
 
-    def contains(self, item: bytes | str | int) -> bool:
-        """O9 (src/heavykeeper.rs:177-199)."""
-        return bool(self.estimate([item])[0] > 0)
-
-    def query(self, item: bytes | str) -> bool:
-        """O10: deprecated alias of ``contains`` (kept for parity with
-        the reference, src/heavykeeper.rs:201-209 — deprecated there
-        since 0.6.9)."""
-        import warnings
-
-        warnings.warn(
-            "query() is a deprecated alias; use contains()",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        return self.contains(item)
-
-    def contains_top_k(self, item: bytes | str | int) -> bool:
-        """O11 (src/heavykeeper.rs:211-218)."""
-        return _pq_key(item) in self.pq.counts
-
-    # -- O12: ordered candidates ----------------------------------------
-    def list(self) -> list[tuple[bytes, int]]:
-        return self.pq.items_sorted()
-
-    # -- O13: merge ------------------------------------------------------
     def merge(self, other: "HeavyKeeper") -> "HeavyKeeper":
         """In-place union; see module docstring for semantics & parity."""
-        if self._hasher is not other._hasher:
-            raise SketchCompatError("hasher", self._hasher, other._hasher)
+        self._check_compat(other)
         idx = np.flatnonzero(other.counts)
         # the queue's dict order is its admission (sequence) order
         return self._merge_cells(
@@ -695,24 +777,6 @@ class HeavyKeeper:
         merge_candidates(self.pq, cand, self._locate, self._cell_max, theirs, union)
         return self
 
-    # -- O14: memory audit ------------------------------------------------
-    def mem_bytes(self, item_heap_fn=None) -> int:
-        """Analog of mem_bytes(item_heap) (src/heavykeeper.rs:388-403).
-
-        Like the reference, the caller may supply ``item_heap_fn(item)
-        -> int`` returning the bytes an item owns beyond its inline
-        representation (the Rust API takes ``item_heap: Fn(&T) ->
-        usize``, e.g. ``String::capacity``; ``|_| 0`` for heap-free
-        T). When omitted, keys are costed at ``len(key) + 96`` — the
-        key's own bytes plus a fixed per-tracked-item overhead
-        covering this implementation's dict/heap entries, mirroring
-        the reference's ``size_of::<Bucket>()`` + queue bookkeeping
-        terms. Integer keys (the u64 lane) own no bytes beyond the
-        overhead, like the reference's ``|_| 0``."""
-        heap = item_heap_fn if item_heap_fn is not None else _item_heap
-        items = sum(int(heap(k)) + 96 for k in self.pq.counts)
-        return int(self.fps.nbytes + self.counts.nbytes + items)
-
     # -- O15: debug dump ---------------------------------------------------
     def describe(self) -> dict:
         nz = int((self.counts > 0).sum())
@@ -759,9 +823,6 @@ class HeavyKeeper:
                 "default family for distributed/persisted sketches"
             )
         p = self.params
-        cand = [
-            (k, int(c), int(self.pq.seqs[k])) for k, c in self.pq.counts.items()
-        ]
         buf = io.BytesIO()
         nz_flat = np.flatnonzero(self.counts.reshape(-1))
         cells = p.depth * p.width
@@ -779,7 +840,7 @@ class HeavyKeeper:
             buf.write(_HEADER.pack(_MAGIC, 1, p.k, p.width, p.depth, p.decay, p.seed))
             buf.write(self.fps.tobytes())
             buf.write(self.counts.tobytes())
-        buf.write(serde_dumps(cand))
+        buf.write(serde_dumps(self._cand_section()))
         return buf.getvalue()
 
     @classmethod
@@ -788,8 +849,7 @@ class HeavyKeeper:
         sk = cls(params)
         sk.fps.reshape(-1)[idx] = fps
         sk.counts.reshape(-1)[idx] = cnt
-        for item, c in cand:
-            sk.pq.upsert(item, c)
+        sk._load_queue(cand)
         return sk
 
 

@@ -31,11 +31,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..functions.text import doc_fingerprint
+from ..kernel import _splitmix64_arr, arrow_string_buffers
 from .scan import fan_out
 
 # Mersenne prime 2^31-1: (a*h+b) with a,b,h < p fits in int64, so the
@@ -171,30 +173,6 @@ def _minhash_params(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
 _U64 = np.uint64
 
 
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        x = (x ^ (x >> _U64(30))) * _U64(0xBF58476D1CE4E5B9)
-        x = (x ^ (x >> _U64(27))) * _U64(0x94D049BB133111EB)
-        return x ^ (x >> _U64(31))
-
-
-def _string_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets int64 absolute, data uint8) views of an Arrow string
-    array — zero-copy access to every document's bytes at once."""
-    import pyarrow.compute as pc
-
-    if col.null_count:
-        col = pc.fill_null(col, "")
-    if pa.types.is_large_string(col.type) or pa.types.is_large_binary(col.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    off = np.frombuffer(col.buffers()[1], dtype=odt)
-    offsets = off[col.offset : col.offset + len(col) + 1].astype(np.int64)
-    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
-    return offsets, data
-
-
 def _window_hashes(
     offsets: np.ndarray, data: np.ndarray, k: int, seed: int, mod: int | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -238,7 +216,7 @@ def _window_hashes(
             for j in range(8, k):
                 v = ((v << _U64(13)) | (v >> _U64(51))) ^ padded[pos + j]
         v ^= _U64((seed * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-        h = _splitmix64(v)
+        h = _splitmix64_arr(v)
         if mod is not None:
             h = (h % _U64(mod)).astype(np.int64)
     return h, n_sh
@@ -262,7 +240,7 @@ def _sig_and_bands(
     arithmetic must never be forked."""
     n = len(text_col_arr)
     rows_per_band = n_hashes // bands
-    offsets, data = _string_buffers(text_col_arr)
+    offsets, data = arrow_string_buffers(pc.fill_null(text_col_arr, ""))
     h_all, n_sh = _window_hashes(offsets, data, shingle, seed, mod=_MERSENNE)
     # dedup (doc, shingle): doc index in the high bits keeps
     # first-appearance order grouped (and non-decreasing) by doc
@@ -290,7 +268,7 @@ def _sig_and_bands(
         for r in range(bands):
             f = np.full(n, _U64(0x9E3779B97F4A7C15))
             for c in range(r * rows_per_band, (r + 1) * rows_per_band):
-                f = _splitmix64(f ^ sig[:, c])
+                f = _splitmix64_arr(f ^ sig[:, c])
             out_hash[:, r] = f.astype(np.int64)
     return sig, out_hash
 
@@ -601,7 +579,7 @@ def simhash_signatures(
             n = len(ids)
             if n == 0:
                 continue
-            offsets, data = _string_buffers(batch.column(1))
+            offsets, data = arrow_string_buffers(pc.fill_null(batch.column(1), ""))
             h, counts = _window_hashes(offsets, data, shingle, seed)
             starts = np.zeros(n, dtype=np.int64)
             np.cumsum(counts[:-1], out=starts[1:])

@@ -67,6 +67,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel import arrow_string_buffers
 from .dedup import _minhash_params, _sig_and_bands
 from .scan import fan_out
 
@@ -256,11 +257,7 @@ def _sig_matrix(col: pa.Array, n: int, n_hashes: int) -> np.ndarray:
     one contiguous region; ragged or null rows mean the index is
     corrupt and the call FAILS FAST with ValueError."""
     row_bytes = n_hashes * 8
-    off_dt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    off = np.frombuffer(col.buffers()[1], dtype=off_dt)[
-        col.offset : col.offset + n + 1
-    ].astype(np.int64)
-    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
+    off, data = arrow_string_buffers(col)
     if col.null_count == 0 and (np.diff(off) == row_bytes).all():
         flat = data[off[0] : off[-1]]
         return np.ascontiguousarray(flat).view(np.uint64).reshape(n, n_hashes)

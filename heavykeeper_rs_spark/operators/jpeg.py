@@ -659,13 +659,6 @@ def _ac_first_block(reader, ac_lut, row, ss, se, al, state):
         k += 1
 
 
-def _refine_nonzero(reader, row, k, p1):
-    """Correction bit for an already-nonzero coefficient (row may be a
-    NumPy row or a plain list — the hot path passes a list)."""
-    if reader.get(1) and (abs(int(row[k])) & p1) == 0:
-        row[k] += p1 if row[k] >= 0 else -p1
-
-
 def _ac_refine_block(reader, ac_lut, row, ss, se, al, state):
     # r8: the refinement walk reads/writes coefficients element-wise
     # up to (se - ss + 1) times per block — through NumPy scalars that

@@ -17,7 +17,7 @@ from ..serde import dumps as serde_dumps, loads as serde_loads
 
 import numpy as np
 
-from ..kernel import hash_items
+from ..kernel import hash_as_text
 
 _KIND = b"BLM1"
 
@@ -39,7 +39,7 @@ class Bloom:
         return cls(m_bits=max(m, 64), k=k, seed=seed)
 
     def _positions(self, values: np.ndarray) -> np.ndarray:
-        h = hash_items(np.asarray(values, dtype=object), self.seed)
+        h = hash_as_text(values, self.seed)
         h1 = (h & np.uint64(0xFFFFFFFF)).astype(np.int64)
         h2 = (h >> np.uint64(32)).astype(np.int64) | 1  # odd -> full period
         i = np.arange(self.k, dtype=np.int64)[:, None]

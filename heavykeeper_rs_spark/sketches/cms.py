@@ -19,7 +19,7 @@ from ..serde import dumps as serde_dumps, loads as serde_loads
 
 import numpy as np
 
-from ..kernel import compose_indices, hash_items
+from ..kernel import compose_indices, hash_as_text
 from ..native import collapse
 
 _KIND = b"CMS1"
@@ -38,8 +38,7 @@ class CountMin:
     def add_batch(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
         if len(values) == 0:
             return
-        arr = np.asarray(values, dtype=object)
-        uh, _, total = collapse(hash_items(arr, self.seed), weights)
+        uh, _, total = collapse(hash_as_text(values, self.seed), weights)
         w = total.astype(np.int64)
         idxs = compose_indices(uh, self.depth, self.width)
         for d in range(self.depth):
@@ -47,8 +46,7 @@ class CountMin:
         self.total += int(w.sum())
 
     def estimate(self, values: np.ndarray) -> np.ndarray:
-        arr = np.asarray(values, dtype=object)
-        h = hash_items(arr, self.seed)
+        h = hash_as_text(values, self.seed)
         idxs = compose_indices(h, self.depth, self.width)
         est = self.table[0][idxs[0]].copy()
         for d in range(1, self.depth):

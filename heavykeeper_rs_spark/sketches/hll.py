@@ -18,7 +18,7 @@ from ..serde import dumps as serde_dumps, loads as serde_loads
 
 import numpy as np
 
-from ..kernel import hash_items
+from ..kernel import hash_as_text
 
 _KIND = b"HLL1"
 
@@ -35,7 +35,7 @@ class HLL:
     def add_batch(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
         if len(values) == 0:
             return
-        h = hash_items(np.asarray(values, dtype=object), self.seed)
+        h = hash_as_text(values, self.seed)
         idx = (h >> np.uint64(64 - self.p)).astype(np.int64)
         suffix = h << np.uint64(self.p) | np.uint64(1 << (self.p - 1))
         # rho = leading zeros of suffix + 1, computed via bit_length:

@@ -1,7 +1,9 @@
 """BucketedTopK and CuckooTopK — the reference's two alternative sketch
-layouts, re-implemented from scratch with the same batch API as
-kernel.HeavyKeeper (README.md:48-51: all three variants expose the same
-API).
+layouts, re-implemented from scratch. README.md:48-51: all three
+variants expose the same API, and here it is one body: both subclass
+``kernel._TopKSketch``, as ``kernel.HeavyKeeper`` does, and supply only
+their cells (``_add_core``, ``_count``, ``_state_dict``), their cell
+union and their HKB1/HKC1 serde codec.
 
 - BucketedTopK (src/bucketed.rs): one hash → one bucket of ``depth``
   contiguous cells. add: fingerprint match → saturating add; else
@@ -58,18 +60,11 @@ from .kernel import (
     _MAGIC,
     HeavyKeeper,
     HKParams,
-    TopKQueue,
-    _as_keys,
     _duel_params,
-    _heap_counts,
-    _item_heap,
     _load_cand,
-    _pq_admit,
-    _pq_key,
     _sniff_legacy_pickle,
-    hash_items,
+    _TopKSketch,
     merge_candidates,
-    preaggregate,
 )
 from .sketches import bloom, cms, hll, kll, tdigest
 
@@ -77,17 +72,11 @@ _U64 = np.uint64
 _PARAMS = frozenset(f.name for f in dataclasses.fields(HKParams))
 
 
-class _VariantBase:
-    """Shared plumbing: params, PQ, RNG, batch add, serialization."""
+class _VariantBase(_TopKSketch):
+    """The two variant layouts' shared constructor, merge and serde
+    codec; the API itself is ``kernel._TopKSketch``'s."""
 
     variant: bytes = b"????"
-
-    @classmethod
-    def builder(cls):
-        """Fluent construction (src/bucketed.rs:131, src/cuckoo.rs:190)."""
-        from .kernel import SketchBuilder
-
-        return SketchBuilder(cls)
 
     def __init__(
         self,
@@ -98,68 +87,7 @@ class _VariantBase:
         seed: int = 12345,
         rng: np.random.Generator | None = None,
     ) -> None:
-        self.params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
-        self.pq = TopKQueue(k)
-        self.rng = rng if rng is not None else np.random.default_rng(seed)
-        # test hook: pins decay to 1.0 (True) or 0.0 (False)
-        self._force_decay: bool | None = None
-
-    # -- hashing ----------------------------------------------------------
-    def _hash(self, items: np.ndarray) -> np.ndarray:
-        return hash_items(items, self.params.seed)
-
-    def _index(self, h: np.ndarray) -> np.ndarray:
-        w = self.params.width
-        if w & (w - 1) == 0:
-            return (h & _U64(w - 1)).astype(np.int64)
-        return (h % _U64(w)).astype(np.int64)
-
-    def add_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
-        arr = _as_keys(items)
-        pos, w, fp = preaggregate(arr, weights, self._hash)
-        self._add_core(fp, w, lambda sel: arr[pos[sel]])
-
-    def add_batch_hashed(self, hashes, weights, key_take) -> None:
-        """Insert pre-hashed keys WITHOUT materializing them
-        (kernel.HeavyKeeper.add_batch_hashed contract): ``hashes`` must
-        come from this sketch's seeded ``hash_items`` family —
-        ``hash_string_buffers`` produces identical values straight off
-        the Arrow buffers — ``weights=None`` counts each hash once, and
-        ``key_take(indices)`` materializes only the keys that actually
-        enter the top-K queue."""
-        pos, w, fp = preaggregate(np.asarray(hashes, dtype=np.uint64), weights)
-        self._add_core(fp, w, lambda sel: key_take(pos[sel]))
-
-    def contains(self, item) -> bool:
-        return bool(self.estimate([item])[0] > 0)
-
-    def query(self, item) -> bool:
-        """O10: deprecated alias of ``contains`` (src/bucketed.rs:299,
-        src/cuckoo.rs:326 — deprecated in the reference since 0.6.9)."""
-        import warnings
-
-        warnings.warn(
-            "query() is a deprecated alias; use contains()",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        return self.contains(item)
-
-    def contains_top_k(self, item) -> bool:
-        return _pq_key(item) in self.pq.counts
-
-    def list(self) -> list[tuple[bytes, int]]:
-        return self.pq.items_sorted()
-
-    def estimate(self, items: np.ndarray, use_heap: bool = True) -> np.ndarray:
-        arr = _as_keys(items)
-        out = self._cell_estimate(self._hash(arr))
-        return _heap_counts(self.pq, arr, out) if use_heap else out
-
-    def _check_compat(self, other: "_VariantBase") -> None:
-        if type(self) is not type(other):
-            raise SketchCompatError("variant", type(self).__name__, type(other).__name__)
-        self.params.check_compatible(other.params)
+        super().__init__(HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed), rng)
 
     def merge(self, other):
         """In-place union: the layout's cell union inside the shared
@@ -167,17 +95,9 @@ class _VariantBase:
         self._check_compat(other)
         merge_candidates(
             self.pq, list(other.pq.counts.items()), self._hash,
-            self._cell_estimate, other._cell_estimate, lambda: self._union(other),
+            self._count, other._count, lambda: self._union(other),
         )
         return self
-
-    def _state_dict(self) -> dict:
-        raise NotImplementedError
-
-    def mem_bytes(self, item_heap_fn=None) -> int:
-        heap = item_heap_fn if item_heap_fn is not None else _item_heap
-        cells = sum(a.nbytes for a in self._state_dict().values() if isinstance(a, np.ndarray))
-        return int(cells + sum(int(heap(k)) + 96 for k in self.pq.counts))
 
     @staticmethod
     def _state_array(d: dict, name: str, shape: tuple) -> np.ndarray:
@@ -197,7 +117,7 @@ class _VariantBase:
     def serialize(self) -> bytes:
         d = {
             "params": self.params.__dict__,
-            "cand": [(k, int(c), int(self.pq.seqs[k])) for k, c in self.pq.counts.items()],
+            "cand": self._cand_section(),
             **self._state_dict(),
         }
         return self.variant + serde_dumps(d)
@@ -213,8 +133,7 @@ class _VariantBase:
             raise ValueError(f"params: expected exactly the fields {sorted(_PARAMS)}")
         sk = cls(**params)
         sk._load_state(d)
-        for item, c in _load_cand(d.get("cand"), sk.params.k):
-            sk.pq.upsert(item, c)
+        sk._load_queue(_load_cand(d.get("cand"), sk.params.k))
         return sk
 
 
@@ -234,12 +153,18 @@ class BucketedTopK(_VariantBase):
         self.fps = self._state_array(d, "fps", shape)
         self.counts = self._state_array(d, "counts", shape)
 
-    def _add_core(self, fp: np.ndarray, w: np.ndarray, key_take) -> None:
+    def _index(self, h: np.ndarray) -> np.ndarray:
+        w = self.params.width
+        if w & (w - 1) == 0:
+            return (h & _U64(w - 1)).astype(np.int64)
+        return (h % _U64(w)).astype(np.int64)
+
+    def _add_core(self, fp: np.ndarray, w: np.ndarray) -> np.ndarray:
         b = self._index(fp)
         native.bucketed_add(self.fps, self.counts, b, fp, w, *_duel_params(self))
-        _pq_admit(self.pq, key_take, self._bucket_count(fp, b))
+        return self._bucket_count(fp, b)
 
-    def _cell_estimate(self, fp: np.ndarray) -> np.ndarray:
+    def _count(self, fp: np.ndarray) -> np.ndarray:
         return self._bucket_count(fp, self._index(fp))
 
     def _bucket_count(self, fp: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -323,9 +248,8 @@ class CuckooTopK(_VariantBase):
     def _native_state(self) -> tuple:
         return self.lobby_fp, self.lobby_c, self.heavy_fp, self.heavy_c, self.max_kicks
 
-    def _add_core(self, fp: np.ndarray, w: np.ndarray, key_take) -> None:
-        est = native.cuckoo_add(*self._native_state(), fp, w, *_duel_params(self))
-        _pq_admit(self.pq, key_take, est)
+    def _add_core(self, fp: np.ndarray, w: np.ndarray) -> np.ndarray:
+        return native.cuckoo_add(*self._native_state(), fp, w, *_duel_params(self))
 
     def _heavy_cell(self, fp: np.ndarray, b1: np.ndarray, b2: np.ndarray) -> np.ndarray:
         """Flat id of the live heavy slot holding each fingerprint, in
@@ -338,7 +262,7 @@ class CuckooTopK(_VariantBase):
             cell[hit] = b[hit] * d + m.argmax(axis=1)[hit]
         return cell
 
-    def _cell_estimate(self, fp: np.ndarray) -> np.ndarray:
+    def _count(self, fp: np.ndarray) -> np.ndarray:
         b1, b2 = self._pair(fp)
         cell = self._heavy_cell(fp, b1, b2)
         lob = np.where(self.lobby_fp[b1] == fp, self.lobby_c[b1], 0)

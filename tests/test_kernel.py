@@ -836,7 +836,7 @@ def test_pq_admit_cut_matches_reference_loop(monkeypatch):
     """Offering only the keys that reach the k-th largest estimate
     leaves every layout's queue (counts, insertion sequences, evicted
     stream) and blob exactly as offering every key does."""
-    from heavykeeper_rs_spark import kernel, variants
+    from heavykeeper_rs_spark import kernel
     from heavykeeper_rs_spark.variants import BucketedTopK, CuckooTopK
 
     cut = kernel._pq_admit
@@ -856,14 +856,12 @@ def test_pq_admit_cut_matches_reference_loop(monkeypatch):
         runs = []
         for admit in (_pq_admit_reference, cut):
             monkeypatch.setattr(kernel, "_pq_admit", admit)
-            monkeypatch.setattr(variants, "_pq_admit", admit)
             if layout == 0:
                 sk = HeavyKeeper(HKParams(k=k, width=width, depth=depth, seed=trial))
-                evicted = [sk.add_batch(b, return_evicted=True) for b in batches]
             else:
                 cls = BucketedTopK if layout == 1 else CuckooTopK
                 sk = cls(k, width, depth, seed=trial)
-                evicted = [sk.add_batch(b) for b in batches]
+            evicted = [sk.add_batch(b, return_evicted=True) for b in batches]
             runs.append((dict(sk.pq.counts), dict(sk.pq.seqs), evicted, sk.serialize()))
         assert runs[0] == runs[1], (trial, k, width, depth, layout)
 

@@ -25,6 +25,39 @@ def obj(xs):
     return np.asarray(xs, dtype=object)
 
 
+_INT_BATCHES = {
+    "int64": np.arange(-3, 4000, 7, dtype=np.int64) * 1_000_003,
+    "negative": -np.arange(1, 500, dtype=np.int64),
+    "uint64-high": np.asarray([2**63, 2**64 - 1, 0, 2**63 + 5] * 40, dtype=np.uint64),
+    "int8": np.asarray([-128, 0, 127, 5] * 30, dtype=np.int8),
+    "bool": np.asarray([True, False, True] * 50),
+    "mixed": [1, True, "1", b"1", 2**70, -4, np.uint64(2**63)] * 20,
+}
+
+
+@pytest.mark.parametrize("batch", sorted(_INT_BATCHES))
+def test_family_int_values_hash_as_their_text(batch):
+    """CountMin, HLL and Bloom hash a value as its text; the Arrow cast
+    an integer ndarray takes gives the blobs and answers the same
+    values as Python objects give."""
+    from heavykeeper_rs_spark.kernel import hash_as_text, hash_items
+
+    values = _INT_BATCHES[batch]
+    as_obj = obj(list(values))
+    assert hash_as_text(values, 9).tolist() == hash_items(as_obj, 9).tolist()
+    for make in (lambda: CountMin(256, 3), lambda: HLL(10), lambda: Bloom(1 << 12, 3)):
+        a, b = make(), make()
+        a.add_batch(values)
+        b.add_batch(as_obj)
+        assert a.serialize() == b.serialize()
+    cms = CountMin(256, 3)
+    cms.add_batch(as_obj)
+    assert cms.estimate(values).tolist() == cms.estimate(as_obj).tolist()
+    bloom = Bloom(1 << 12, 3)
+    bloom.add_batch(as_obj[::2])
+    assert bloom.contains(values).tolist() == bloom.contains(as_obj).tolist()
+
+
 # ------------------------------------------------------------------ HLL
 class TestHLL:
     def test_estimate_within_bound(self):

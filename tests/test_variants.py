@@ -816,3 +816,52 @@ def test_hostile_params_refused(layout, case):
         d["params"] = {**d["params"], **bad_field}
         bad = blob[:4] + dumps(d)
     _assert_refused(layout, bad)
+
+
+_MAKERS = {
+    "heavykeeper": lambda: HeavyKeeper(HKParams(k=4, width=64, depth=2, seed=7)),
+    "bucketed": lambda: BucketedTopK(4, 64, 2, seed=7),
+    "cuckoo": lambda: CuckooTopK(4, 64, 2, seed=7),
+}
+
+
+@pytest.mark.parametrize("right", sorted(_MAKERS))
+@pytest.mark.parametrize("left", sorted(_MAKERS))
+def test_merge_refuses_another_layout(left, right):
+    """Two layouts with equal params never merge: their cells mean
+    different things (HeavyKeeper's (depth, width) rows against a
+    variant's (width, depth) buckets). Same-layout pairs merge."""
+    a, b = _MAKERS[left](), _MAKERS[right]()
+    for sk in (a, b):
+        sk.add_batch(obj("x", "y", "x", "z", "x", "y"))
+    if left != right:
+        with pytest.raises(SketchCompatError):
+            a.merge(b)
+        assert a.list() == [(b"x", 3), (b"y", 2), (b"z", 1)]
+    else:
+        assert a.merge(b) is a
+        assert a.list() == [(b"x", 6), (b"y", 4), (b"z", 2)]
+
+
+@pytest.mark.parametrize("layout", sorted(_MAKERS))
+def test_add_batch_return_evicted_and_empty_batch(layout):
+    """Every layout's ``add_batch(..., return_evicted=True)`` returns
+    the keys pushed out of the queue by this batch, in eviction order,
+    and an empty batch leaves the cells, the queue and the RNG stream
+    untouched."""
+    sk = _MAKERS[layout]()
+    assert sk.add_batch(obj("a", "a", "b", "c", "d"), return_evicted=True) == []
+    assert sk.add_batch(obj(*["e"] * 9 + ["f"] * 8), return_evicted=True) == [b"b", b"c"]
+    assert sorted(sk.pq.counts) == [b"a", b"d", b"e", b"f"]
+    rng = np.random.default_rng(3)
+    for _ in range(20):
+        keys = np.minimum(rng.zipf(1.3, int(rng.integers(1, 300))), 60)
+        before = set(sk.pq.counts)
+        evicted = sk.add_batch(keys, return_evicted=True)
+        assert len(set(evicted)) == len(evicted)
+        assert set(evicted) == before - set(sk.pq.counts)
+    blob, state = sk.serialize(), sk.rng.bit_generator.state
+    assert sk.add_batch(np.asarray([], dtype=np.int64)) is None
+    assert sk.add_batch(np.asarray([], dtype=object), return_evicted=True) == []
+    assert sk.serialize() == blob
+    assert sk.rng.bit_generator.state == state
