@@ -166,15 +166,7 @@ def hash_items(items: np.ndarray, seed: int) -> np.ndarray:
 def hash_as_text(values, seed: int) -> np.ndarray:
     """``hash_items`` of ``values`` as objects: the key hash of the
     CountMin, HLL and Bloom sketches, which hash an integer as its
-    decimal text. A 1-D integer ndarray gets that text from one Arrow
-    cast instead of one ``str`` per value; anything else, bool included
-    (Arrow writes ``true``, ``str`` writes ``True``), is packed as
-    objects."""
-    if isinstance(values, np.ndarray) and values.ndim == 1 and values.dtype.kind in "iu":
-        import pyarrow as pa
-
-        text = pa.array(values).cast(pa.string())
-        return hash_string_buffers(*arrow_string_buffers(text), seed)
+    decimal text."""
     return hash_items(np.asarray(values, dtype=object), seed)
 
 
@@ -623,12 +615,6 @@ class _TopKSketch:
         ``_load_cand`` checks on the way back in."""
         return [(k, int(c), int(self.pq.seqs[k])) for k, c in self.pq.counts.items()]
 
-    def _load_queue(self, cand: list) -> None:
-        """Refill the queue from decoded ``(key, count)`` pairs in
-        sequence order."""
-        for item, c in cand:
-            self.pq.upsert(item, c)
-
 
 class HeavyKeeper(_TopKSketch):
     """Mergeable top-K HeavyKeeper sketch over byte-string keys."""
@@ -849,7 +835,8 @@ class HeavyKeeper(_TopKSketch):
         sk = cls(params)
         sk.fps.reshape(-1)[idx] = fps
         sk.counts.reshape(-1)[idx] = cnt
-        sk._load_queue(cand)
+        for item, c in cand:
+            sk.pq.upsert(item, c)
         return sk
 
 

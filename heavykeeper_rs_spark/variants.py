@@ -133,7 +133,8 @@ class _VariantBase(_TopKSketch):
             raise ValueError(f"params: expected exactly the fields {sorted(_PARAMS)}")
         sk = cls(**params)
         sk._load_state(d)
-        sk._load_queue(_load_cand(d.get("cand"), sk.params.k))
+        for item, c in _load_cand(d.get("cand"), sk.params.k):
+            sk.pq.upsert(item, c)
         return sk
 
 

@@ -37,14 +37,11 @@ _INT_BATCHES = {
 
 @pytest.mark.parametrize("batch", sorted(_INT_BATCHES))
 def test_family_int_values_hash_as_their_text(batch):
-    """CountMin, HLL and Bloom hash a value as its text; the Arrow cast
-    an integer ndarray takes gives the blobs and answers the same
-    values as Python objects give."""
-    from heavykeeper_rs_spark.kernel import hash_as_text, hash_items
-
+    """CountMin, HLL and Bloom hash a value as its text: an integer
+    ndarray gives the blobs and answers the same values as Python
+    objects give."""
     values = _INT_BATCHES[batch]
     as_obj = obj(list(values))
-    assert hash_as_text(values, 9).tolist() == hash_items(as_obj, 9).tolist()
     for make in (lambda: CountMin(256, 3), lambda: HLL(10), lambda: Bloom(1 << 12, 3)):
         a, b = make(), make()
         a.add_batch(values)

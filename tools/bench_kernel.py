@@ -3,9 +3,8 @@
 Usage: python tools/bench_kernel.py [n_keys]
 Prints M keys/s per fixture so rounds are comparable to BASELINE.md's
 Melem/s figures (reference Rust hot loop: ~21 M/s single-thread), the
-batch collapse's ms per 1 Mi-key batch, ``CountMin.add_batch``'s ms
-per 1 Mi int64 or string values, and the driver's merge-fold time over
-partial blobs of each layout.
+batch collapse's ms per 1 Mi-key batch, and the driver's merge-fold
+time over partial blobs of each layout.
 """
 
 import sys
@@ -244,18 +243,6 @@ def collapse_lines():
     )
 
 
-def family_lines():
-    """``CountMin.add_batch`` (the family sketches' text hash, then the
-    batch collapse) on B int64 values of the reference fixture, and on
-    the same values as Python strings."""
-    from heavykeeper_rs_spark.sketches.cms import CountMin
-
-    ints = bounded[:B]
-    strs = np.asarray([str(x) for x in ints], dtype=object)
-    best_ms("CountMin.add_batch: 1 Mi int64 values", lambda: CountMin().add_batch(ints))
-    best_ms("CountMin.add_batch: the same values as strings", lambda: CountMin().add_batch(strs))
-
-
 def split_docs(col, n):
     step = -(-len(col) // n)
     return [col.slice(i, step) for i in range(0, len(col), step)]
@@ -278,12 +265,11 @@ variant_blobs = {
     for cls in (BucketedTopK, CuckooTopK)
 }
 
-# the batch collapse, CountMin's int and string values, the variant layouts on the reference fixture and
+# the batch collapse, the variant layouts on the reference fixture and
 # the merge folds, bracketed by CPU controls: compare runs only when
 # the pre/post controls agree
 cpu_control("pre")
 collapse_lines()
-family_lines()
 run("bucketed variant, reference fixture w=4096 K=100", bounded[: N // 2],
     HKParams(k=100, width=4096, depth=4), cls=BucketedTopK, reps=3)
 run("cuckoo variant, reference fixture w=4096 K=100", bounded[: N // 2],
