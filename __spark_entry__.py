@@ -21,24 +21,14 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from heavykeeper_rs_spark.functions import text as T
-from heavykeeper_rs_spark.operators.scan import ScanProfile, fan_out
-from heavykeeper_rs_spark.operators.topk import estimate, topk, topk_sketch
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _local_df(spark: SparkSession, data, schema) -> DataFrame:
-    """Driver-side literal results without a Python-RDD job (see
-    operators.topk.local_result_df)."""
-    from heavykeeper_rs_spark.operators.topk import local_result_df
-
-    return local_result_df(spark, data, schema)
+from heavykeeper_rs_spark.operators.scan import fan_out
+from heavykeeper_rs_spark.operators.topk import (
+    estimate,
+    local_result_df,
+    topk,
+    topk_sketch,
+)
+from heavykeeper_rs_spark.sources.tables import load as _t
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -66,27 +56,11 @@ def _hk_topk_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk(ev, "user_id", k=20, width=65536, depth=4, tie_break_key=True)
 
 
-def _hk_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r8: tokenization moved INSIDE the sketch kernel (identical
-    result — ``hk_topk_tokens_inkernel`` has been oracle-green on the
-    same SQL since round 3): the explode path shipped every token
-    occurrence through the JVM->Python Arrow channel (a ~45x row
-    blowup) before the kernel pre-aggregated them again; the in-kernel
-    path tokenizes off the Arrow string buffers map-side, so only
-    sketch blobs ever shuffle (guide §4.1: pass the function the
-    columns it needs — here, the raw text)."""
-    from heavykeeper_rs_spark.operators.topk import topk_tokens
-
-    docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
-    return topk_tokens(
-        docs, "text", k=20, width=65536, depth=4, tie_break_key=True
-    )
-
-
 def _hk_topk_tokens_inkernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship scale path: tokenization INSIDE the sketch kernel (no
-    explode, no token shuffle) — must agree exactly with the explode
-    oracle in the exact regime."""
+    """Flagship scale path, behind both ``hk_topk_tokens`` names:
+    tokenization INSIDE the sketch kernel (no explode, no token
+    shuffle) — must agree exactly with the explode oracle in the exact
+    regime."""
     from heavykeeper_rs_spark.operators.topk import topk_tokens
 
     docs = _t(spark, sf_dir, "documents")
@@ -97,31 +71,10 @@ def _hk_topk_tokens_inkernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hk_weighted_topk_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted add (src/heavykeeper.rs:273): top parts by total quantity."""
-    # r8: aggregate before the Python boundary (guide §2.3) — the raw
-    # feed shipped 6M (pk, q) rows into per-partition sketches whose
-    # ~200k-distinct-key fill made every partial a DENSE 21 MB blob
-    # (126 MB collected per run); one JVM partial-agg pass reduces the
-    # kernel's input to one exact (pk, SUM(q)) row per part, the same
-    # weighted-add stream the sketch defines, so partials are sparse
-    # (~23 MB total) and the scan+agg parallelizes across all cores.
-    # Same exact-regime result: add(item, w) accumulates sums either
-    # way. COST-BASED: below ~32 MB of input the extra exchange costs
-    # more than the dense-blob problem it solves (sf0.1 measured
-    # 0.61 s direct vs 0.74 s pre-agg; sf1 measured 4.5 s direct vs
-    # 1.3 s pre-agg), so small inputs keep the direct map-side feed —
-    # the same estimates-in, plan-out shape AQE itself uses.
-    # 'unknown' size reads as large: at real scale the large-input
-    # plan is the right default
-    size = ScanProfile(_t(spark, sf_dir, "lineitem")).bytes
-    if size is not None and size < 32 * (1 << 20):
-        li = _t(spark, sf_dir, "lineitem").select(
-            F.col("l_partkey").cast("long").alias("pk"),
-            F.col("l_quantity").cast("long").alias("q"),
-        )
-    else:
-        li = _t(spark, sf_dir, "lineitem").groupBy(
-            F.col("l_partkey").cast("long").alias("pk")
-        ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
+    # pre-aggregate: the kernel gets one row per part, so its blobs stay sparse
+    li = _t(spark, sf_dir, "lineitem").groupBy(
+        F.col("l_partkey").cast("long").alias("pk")
+    ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
     return topk(
         # depth 5: at 10x-rehearsal scale (~20k parts) the probability a
         # boundary key collides with a heavier key in EVERY row is
@@ -151,7 +104,7 @@ def _hk_estimate_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(sk.pq.counts) < k:
         from heavykeeper_rs_spark.operators.topk import _item_str
 
-        distinct = _local_df(
+        distinct = local_result_df(
             spark,
             [(_item_str(it),) for it in sk.pq.counts],
             "event_type string",
@@ -486,7 +439,7 @@ def _hk_topk_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = ev.select(key.alias("flow_key"))
     sk = topk_sketch(flows, "flow_key", k=20, width=4096, depth=4)
     rows = sorted(sk.list(), key=lambda t: (-t[1], t[0]))[:10]
-    return _local_df(spark,
+    return local_result_df(spark,
         [(it.hex().upper(), int(c)) for it, c in rows],
         "flow_hex string, count bigint",
     )
@@ -730,8 +683,8 @@ def _embedding_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, f"{d}/ivf", q, k=10, n_probe=8, centroids=cents
         ).select(F.col("id").alias("vec_id"), "cosine")
         rows = out.collect()  # materialize before the index dir vanishes
-    return _local_df(spark, [(r["vec_id"], r["cosine"]) for r in rows],
-                     "vec_id bigint, cosine double")
+    return local_result_df(spark, [(r["vec_id"], r["cosine"]) for r in rows],
+                           "vec_id bigint, cosine double")
 
 
 def _bloom_semi_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,7 +757,7 @@ def _bloom_semi_join_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = bloom_prefilter(orders, "o_custkey", cust, "c_custkey", fpp=0.01).count()
     total = orders.count()
     fp_ok = pre >= exact and (pre - exact) <= max(0.05 * (total - exact), 50.0)
-    return _local_df(
+    return local_result_df(
         spark,
         [(exact, bool(fp_ok))],
         "n_exact bigint, fp_bounded boolean",
@@ -846,7 +799,7 @@ def _stratified_sample_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     frac_ok = abs(counts.get("train", 0) / total - 0.8) < 0.1
-    return _local_df(
+    return local_result_df(
         spark,
         [(
             total, int(n_uni), int(strata_total), int(split_total),
@@ -868,7 +821,7 @@ def _vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(_t(spark, sf_dir, "documents").select("text"))
     vocab, cov = build_vocab(docs, "text", 10, width=1 << 17)
     n = vocab.count()
-    return _local_df(
+    return local_result_df(
         spark, [(n, round(cov, 6))], "vocab_size bigint, coverage double"
     )
 
@@ -893,7 +846,7 @@ def _length_buckets_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
         abs(counts.get(i, 0) - total / 4) <= 0.25 * total / 4 + 5
         for i in range(4)
     )
-    return _local_df(
+    return local_result_df(
         spark,
         [(total, len(bounds) + 1, bool(balanced and sorted(bounds) == bounds))],
         "n_docs bigint, n_buckets bigint, buckets_ok boolean",
@@ -956,7 +909,7 @@ def _hk_contested_accuracy_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hits
         else 1.0
     )
-    return _local_df(spark,
+    return local_result_df(spark,
         [(len(truth), bool(recall >= 0.75), bool(are < 0.25))],
         "n_top bigint, recall_ok boolean, are_ok boolean",
     )
@@ -1071,7 +1024,7 @@ def _sketch_bounds_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
         for q, e in zip(tqs, test_)
     )
 
-    return _local_df(
+    return local_result_df(
         spark,
         [(
             int(hll_exact), bool(hll_ok),
@@ -1199,7 +1152,7 @@ def _sketch_by_group_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sk_n, sk_ratio, sk_top1, sk_ok = _skewed_group_topk_check(spark, ev)
 
-    return _local_df(
+    return local_result_df(
         spark,
         [(
             len(hll_exact), bool(hll_ok), bool(td_ok),
@@ -1290,13 +1243,12 @@ def _streaming_hll_check(spark: SparkSession, sf_dir: str) -> tuple[int, bool]:
             "user_id",
             "ts",
             make=lambda wstart, shard: HLL(14, 12345),
-            deserialize=HLL.deserialize,
             window="12 hours",
             watermark="1 minute",
             n_shards=4,
         ),
     )
-    merged = merge_window_blobs(rows, deserialize=HLL.deserialize)
+    merged = merge_window_blobs(rows)
     truth_rows = (
         ev.select(
             (
@@ -1343,14 +1295,13 @@ def _streaming_sliding_check(spark: SparkSession, sf_dir: str) -> tuple[int, boo
             "event_type",
             "ts",
             make=lambda wstart, shard: CountMin(1024, 4, 7),
-            deserialize=CountMin.deserialize,
             window="12 hours",
             slide="6 hours",
             watermark="1 minute",
             n_shards=4,
         ),
     )
-    merged = merge_window_blobs(rows, deserialize=CountMin.deserialize)
+    merged = merge_window_blobs(rows)
     truth_rows = (
         ev.select(
             F.unix_timestamp(
@@ -1396,7 +1347,7 @@ def _streaming_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     hn, hok = _streaming_hll_check(spark, sf_dir)
     sn, sok = _streaming_sliding_check(spark, sf_dir)
     lt, lk, ld, lok = _streaming_late_drop_check(spark, sf_dir)
-    return _local_df(
+    return local_result_df(
         spark,
         [(int(tn), bool(tok), int(hn), bool(hok), int(sn), bool(sok),
           int(lt), int(lk), int(ld), bool(lok))],
@@ -1563,7 +1514,7 @@ def _pipeline_ops_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _length_buckets_ok(spark, sf_dir).collect()[0]
     media_ok = _media_pipeline_ok(spark)
     warc_match_n = _warc_pipeline_ok(spark, sf_dir)
-    return _local_df(
+    return local_result_df(
         spark,
         [(
             int(a["n_exact"]), bool(a["fp_bounded"]),
@@ -1712,7 +1663,7 @@ def _media_pipeline_ok(spark: SparkSession) -> bool:
 
     tiff_img = synth_image(12, 16, 3, seed=19)
     rows.append((9, encode_tiff(tiff_img, compression="lzw", predictor=True)))
-    df = _local_df(spark, rows, "mid bigint, blob binary")
+    df = local_result_df(spark, rows, "mid bigint, blob binary")
     got = {
         r["id"]: r
         for r in resize_features(df, "mid", "blob", 4, 4, decoder=image_decoder).collect()
@@ -1744,7 +1695,7 @@ def _media_pipeline_ok(spark: SparkSession) -> bool:
     flac_blob = encode_flac(pcm, rate=16000)
     wavs = [(1, synth_wav(440.0)), (2, synth_wav(220.0, channels=2)),
             (3, b"RIFFbad"), (4, flac_blob)]
-    wdf = _local_df(spark, wavs, "mid bigint, blob binary")
+    wdf = local_result_df(spark, wavs, "mid bigint, blob binary")
     wgot = {
         r["id"]: r
         for r in extract_features(wdf, "mid", "blob", decoder=audio_decoder).collect()
@@ -1888,7 +1839,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # HeavyKeeper sketch surface (SURVEY §2.1)
         "hk_topk_event_type": _hk_topk_event_type,
         "hk_topk_user": _hk_topk_user,
-        "hk_topk_tokens": _hk_topk_tokens,
+        "hk_topk_tokens": _hk_topk_tokens_inkernel,
         "hk_topk_tokens_inkernel": _hk_topk_tokens_inkernel,
         "hk_weighted_topk_part": _hk_weighted_topk_part,
         "hk_estimate_event_types": _hk_estimate_event_types,

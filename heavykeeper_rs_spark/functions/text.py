@@ -6,13 +6,13 @@ reference word_count example's semantics — lowercase alpha runs, max
 64 bytes (examples/word_count.rs:131-165) — as a declarative
 expression so Catalyst can push/pipe it.
 
-Each helper returns a Column (or DataFrame transformer) and has an
-exact ANSI-SQL twin used by the DuckDB oracle in __spark_entry__.py.
+Each helper returns a Column and has an exact ANSI-SQL twin used by
+the DuckDB oracle in __spark_entry__.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # lowercase alpha runs; length cap 64 mirrors examples/word_count.rs:9-15
@@ -31,10 +31,6 @@ def tokens(col: str | Column) -> Column:
         F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0),
         lambda t: F.length(t) <= MAX_TOKEN_LEN,
     )
-
-
-def explode_tokens(df: DataFrame, col: str, out: str = "token") -> DataFrame:
-    return df.select(F.explode(tokens(col)).alias(out))
 
 
 def token_count(col: str | Column) -> Column:
@@ -199,13 +195,3 @@ def lang_from_scores(scores_col: str | Column) -> Column:
             expr
         )
     return expr
-
-
-def lang_id(col: str | Column) -> Column:
-    """Tiny deterministic language-ID heuristic over stopword families.
-
-    Convenience single-expression form; for wide scans prefer
-    ``select(lang_scores(..).alias("s")).select(lang_from_scores("s"))``
-    so the token fold is computed once per row.
-    """
-    return lang_from_scores(lang_scores(col))

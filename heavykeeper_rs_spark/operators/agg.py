@@ -240,7 +240,6 @@ def sketch_blobs_by_group(
     value_col: str,
     make: Callable[[], object],
     numeric: bool = False,
-    deserialize: Callable[[bytes], object] | None = None,
     fan_in: int = 64,
     max_live_groups: int = 4096,
 ) -> DataFrame:
@@ -255,8 +254,7 @@ def sketch_blobs_by_group(
 
     Blobs merge through the magic-sniffing registry
     (``variants.deserialize_any``), which decodes every built-in
-    family; ``deserialize`` is accepted for signature compatibility and
-    not consulted.
+    family.
     """
     def final(group: str, blobs: list[bytes]) -> pd.DataFrame:
         blob = combine.merge(blobs)

@@ -97,12 +97,6 @@ def _footers(files: list[str]) -> list[list[int]] | None:
     return out
 
 
-def footer_row_groups(files: list[str]) -> int | None:
-    """Total row groups of the parquet ``files`` (see ``_footers``)."""
-    footers = _footers(files)
-    return None if footers is None else sum(map(len, footers))
-
-
 class ScanProfile:
     """What the library knows about the size of one DataFrame's input."""
 

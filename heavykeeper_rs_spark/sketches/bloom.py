@@ -68,13 +68,6 @@ class Bloom:
         self.n_added += other.n_added
         return self
 
-    def fp_rate_estimate(self) -> float:
-        """Observed fill-based FP estimate: (set_bits/m)^k."""
-        set_bits = int(np.bitwise_count(self.words).sum()) if hasattr(np, "bitwise_count") else int(
-            sum(bin(int(wv)).count("1") for wv in self.words)
-        )
-        return float((set_bits / self.m) ** self.k)
-
     def serialize(self) -> bytes:
         return _KIND + serde_dumps(
             {"m": self.m, "k": self.k, "seed": self.seed, "words": self.words,

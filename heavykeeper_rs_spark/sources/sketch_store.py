@@ -37,15 +37,14 @@ def save_sketch(spark: SparkSession, sk, path: str, meta: dict | None = None) ->
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def load_sketch(spark: SparkSession, path: str, deserialize=None):
+def load_sketch(spark: SparkSession, path: str):
     """Revive a sketch saved by ``save_sketch``; returns (sketch, meta).
-    ``deserialize`` defaults to the magic-sniffing registry
-    (``variants.deserialize_any``), which knows every built-in family."""
+    The magic-sniffing registry (``variants.deserialize_any``) knows
+    every built-in family."""
     rows = spark.read.parquet(path).collect()
     if len(rows) != 1:
         raise ValueError(f"sketch store at {path} has {len(rows)} rows, expected 1")
-    de = deserialize or deserialize_any
-    return de(bytes(rows[0]["sketch"])), json.loads(rows[0]["meta"])
+    return deserialize_any(bytes(rows[0]["sketch"])), json.loads(rows[0]["meta"])
 
 
 def save_grouped_sketches(blobs_df: DataFrame, path: str) -> None:
@@ -58,7 +57,7 @@ def load_grouped_sketches(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_group(spark: SparkSession, path: str, group: str, deserialize=None):
+def load_group(spark: SparkSession, path: str, group: str):
     """Revive ONE group's sketch from a grouped store — a pushed-down
     point lookup (the scan prunes to the matching row group)."""
     from pyspark.sql import functions as F
@@ -73,5 +72,4 @@ def load_group(spark: SparkSession, path: str, group: str, deserialize=None):
             f"sketch store {path} holds multiple blobs for group {group!r} "
             "(double-written store?) — refusing to pick one arbitrarily"
         )
-    de = deserialize or deserialize_any
-    return de(bytes(rows[0]["sketch"]))
+    return deserialize_any(bytes(rows[0]["sketch"]))

@@ -182,7 +182,6 @@ def stateful_windowed_topk_stream(
         col,
         ts_col,
         make,
-        VARIANTS[variant].deserialize,
         window=window,
         watermark=watermark,
         n_shards=n_shards,
@@ -195,7 +194,6 @@ def stateful_windowed_sketch_stream(
     col: str,
     ts_col: str,
     make,
-    deserialize=None,
     window: str = "1 hour",
     watermark: str = "10 minutes",
     n_shards: int = 4,
@@ -208,9 +206,9 @@ def stateful_windowed_sketch_stream(
     to sketches whose ``add_batch`` accepts weights.
 
     ``make(window_start, shard)`` builds a fresh sketch for a state
-    group; ``deserialize(blob)`` revives one (default: the
-    magic-sniffing ``variants.deserialize_any``). Keys are (window_start,
-    shard); each group owns one serialized sketch in the state store.
+    group; the magic-sniffing ``variants.deserialize_any`` revives one.
+    Keys are (window_start, shard); each group owns one serialized
+    sketch in the state store.
     Rows later than ``watermark`` are dropped by Spark's watermark;
     when the watermark passes a window's end, the group's
     EventTimeTimeout fires and the state emits one last row with
@@ -249,7 +247,7 @@ def stateful_windowed_sketch_stream(
             return
         if state.exists:
             rows_seen, blob = state.get
-            sk = (deserialize or deserialize_any)(blob)
+            sk = deserialize_any(blob)
         else:
             rows_seen = 0
             sk = make(wstart, shard)
@@ -340,17 +338,15 @@ def window_rows_seen(rows: list) -> int:
     )
 
 
-def merge_window_blobs(rows: list, deserialize=None) -> dict[int, "HeavyKeeper"]:
+def merge_window_blobs(rows: list) -> dict[int, "HeavyKeeper"]:
     """Fold windowed-stream output rows into one sketch per window —
     the blob selection is ``_select_lives`` (see its docstring for the
-    consumer contract). ``deserialize`` defaults to the magic-sniffing
-    registry (``variants.deserialize_any``), which decodes every
-    built-in family."""
+    consumer contract). The magic-sniffing registry
+    (``variants.deserialize_any``) decodes every built-in family."""
     per_window: dict[int, list[bytes]] = {}
     for k, lives in _select_lives(rows).items():
         per_window.setdefault(k[0], []).extend(b for _, b in lives)
-    de = deserialize or deserialize_any
-    return {w: de(combine.merge(blobs)) for w, blobs in per_window.items()}
+    return {w: deserialize_any(combine.merge(blobs)) for w, blobs in per_window.items()}
 
 
 def merge_shard_blobs(rows: list):

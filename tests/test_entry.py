@@ -25,6 +25,31 @@ def test_every_query_has_oracle_or_is_documented(spark):
     assert rows_only <= {"simhash_near_dup_pairs", "embedding_near_dup"}
 
 
+def test_token_leaf_names_share_one_plan():
+    qs = entrymod.queries()
+    assert qs["hk_topk_tokens"] is qs["hk_topk_tokens_inkernel"]
+
+
+def test_weighted_leaf_reads_lineitem_once(spark):
+    """The weighted leaf picks its plan without probing the input's
+    size, so its only ``parquet`` job is its own read's schema job."""
+    sc = spark.sparkContext
+    group = "test-weighted-leaf-reads"
+    sc.setJobGroup(group, "hk_weighted_topk_part")
+    try:
+        leaf = entrymod.queries()["hk_weighted_topk_part"]
+        leaf(spark, "/root/testdata/sf0.01").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+    st = sc.statusTracker()
+    # a job's name is its result stage's, the last one it created
+    names = [st.getStageInfo(max(st.getJobInfo(j).stageIds)).name
+             for j in st.getJobIdsForGroup(group)]
+    assert sum(n.startswith("parquet at") for n in names) == 1, names
+
+
 @pytest.mark.slow
 def test_all_queries_run_at_sf0001(spark):
     for name, fn in entrymod.queries().items():

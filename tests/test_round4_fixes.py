@@ -298,7 +298,7 @@ class TestSketchStore:
             assert meta["variant"] == variant
             assert back.list() == sk.list()
 
-    def test_other_family_with_explicit_deserialize(self, spark, tmp_path):
+    def test_other_family_roundtrip(self, spark, tmp_path):
         from heavykeeper_rs_spark.operators.agg import hll_build
         from heavykeeper_rs_spark.sketches.hll import HLL
         from heavykeeper_rs_spark.sources.sketch_store import (
@@ -310,7 +310,8 @@ class TestSketchStore:
         sk = hll_build(ev, "user_id")
         p = str(tmp_path / "hll")
         save_sketch(spark, sk, p)
-        back, _ = load_sketch(spark, p, deserialize=HLL.deserialize)
+        back, _ = load_sketch(spark, p)
+        assert isinstance(back, HLL)
         assert abs(back.estimate() - sk.estimate()) < 1e-9
 
     def test_grouped_store_and_point_lookup(self, spark, tmp_path):
@@ -334,7 +335,8 @@ class TestSketchStore:
             r[0] for r in ev.select("event_type").distinct().collect()
         }
         g = sorted(groups)[0]
-        sk = load_group(spark, p, g, deserialize=CountMin.deserialize)
+        sk = load_group(spark, p, g)
+        assert isinstance(sk, CountMin)
         truth = (
             ev.filter(ev.event_type == g).groupBy("user_id").count().collect()
         )
@@ -390,12 +392,11 @@ class TestGroupedHeavyKeeperBlobTable:
             "event_type",
             "user_id",
             make=lambda: HeavyKeeper(HKParams(k=3, width=1024, depth=4)),
-            deserialize=HeavyKeeper.deserialize,
         )
         p = str(tmp_path / "hk_by_type")
         save_grouped_sketches(blobs, p)
         g = ev.select("event_type").first()[0]
-        sk = load_group(spark, p, g, deserialize=HeavyKeeper.deserialize)
+        sk = load_group(spark, p, g)
         truth = (
             ev.filter(ev.event_type == g)
             .groupBy("user_id")

@@ -11,7 +11,7 @@ import pytest
 
 from heavykeeper_rs_spark.kernel import HKParams
 from heavykeeper_rs_spark.operators import scan
-from heavykeeper_rs_spark.operators.scan import ScanProfile, fan_out, footer_row_groups
+from heavykeeper_rs_spark.operators.scan import ScanProfile, fan_out
 from heavykeeper_rs_spark.operators.topk import topk_partials
 
 
@@ -87,13 +87,14 @@ def test_footer_reader_remote_uri(monkeypatch, tmp_path):
     _write(str(tmp_path / "bucket" / "t" / "b.parquet"), 200, row_group_size=100)
     local = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     monkeypatch.setattr(scan, "_filesystem", lambda uri: (local, uri.split("://", 1)[1]))
-    assert footer_row_groups(["s3://bucket/t/a.parquet", "s3://bucket/t/b.parquet"]) == 5
+    footers = scan._footers(["s3://bucket/t/a.parquet", "s3://bucket/t/b.parquet"])
+    assert [len(f) for f in footers] == [3, 2]
 
 
 def test_unreadable_scheme_fails_safe(spark, monkeypatch, tmp_path):
     uri = "hdfs://localhost:1/t/x.parquet"
     with pytest.warns(RuntimeWarning, match=uri):
-        assert footer_row_groups([uri]) is None
+        assert scan._footers([uri]) is None
     # the same file behind an unreadable scheme: no fan-out, one warning
     path = str(tmp_path / "one.parquet")
     _write(path, 2000)

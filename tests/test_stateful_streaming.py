@@ -354,7 +354,6 @@ def test_sliding_window_cms_stream_vs_batch(spark, tmp_path):
         "event_type",
         "ts",
         make=lambda wstart, shard: CountMin(1024, 4, 7),
-        deserialize=CountMin.deserialize,
         window="12 hours",
         slide="6 hours",
         watermark="1 minute",
@@ -368,7 +367,7 @@ def test_sliding_window_cms_stream_vs_batch(spark, tmp_path):
         .start()
     )
     q.awaitTermination(300)
-    merged = merge_window_blobs(rows, deserialize=CountMin.deserialize)
+    merged = merge_window_blobs(rows)
 
     # batch truth: per sliding window (2 windows per event), per type
     truth_rows = (
@@ -434,17 +433,11 @@ def test_weighted_windowed_stream_vs_batch(spark, tmp_path):
             _np.random.default_rng(_np.random.PCG64((params.seed << 9) ^ (ws + sh))),
         )
 
-    def deser(b):
-        from heavykeeper_rs_spark.kernel import HeavyKeeper
-
-        return HeavyKeeper.deserialize(b)
-
     out = stateful_windowed_sketch_stream(
         stream,
         "event_type",
         "ts",
         make=make,
-        deserialize=deser,
         window="12 hours",
         watermark="1 minute",
         n_shards=2,

@@ -36,7 +36,7 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from heavykeeper_rs_spark.kernel import HKParams  # noqa: E402
-from heavykeeper_rs_spark.operators.scan import direct_scan, fan_out  # noqa: E402
+from heavykeeper_rs_spark.operators.scan import direct_scan  # noqa: E402
 from heavykeeper_rs_spark.operators.topk import (  # noqa: E402
     token_keyed,
     token_partials,
@@ -73,7 +73,7 @@ def _token_stage(df, params):
 
 
 def _weighted_parts(spark, sf_dir):
-    # the entry's pre-aggregated feed (taken above 32 MB of lineitem)
+    # the entry's feed: one pre-aggregated (pk, SUM(q)) row per part
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
         F.col("l_partkey").cast("long").alias("pk")
     ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
@@ -91,13 +91,10 @@ SKETCH_STAGES = {
     ),
     "hk_weighted_topk_part": _weighted_parts,
     "hk_topk_tokens": lambda spark, sf: _token_stage(
-        fan_out(spark.read.parquet(f"{sf}/documents.parquet").select("text")),
-        _params(65536, 4),
-    ),
-    "hk_topk_tokens_inkernel": lambda spark, sf: _token_stage(
         spark.read.parquet(f"{sf}/documents.parquet"), _params(65536, 4)
     ),
 }
+SKETCH_STAGES["hk_topk_tokens_inkernel"] = SKETCH_STAGES["hk_topk_tokens"]
 
 
 def plan_df(name: str, spark, sf_dir: str):
