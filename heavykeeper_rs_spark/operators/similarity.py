@@ -480,7 +480,7 @@ def _reservoir_sample(df: DataFrame, vec_col: str, n: int, seed: int) -> np.ndar
     probability) — unlike ``limit(n)``, which takes the head of the
     first partition(s) and trains the quantizer on one shard's
     distribution. One extra column-pruned pass, no count job."""
-    from pyspark import TaskContext
+    from .combine import partition_id
 
     # array<double> end-to-end: collecting an array<float> back out of
     # a mapInArrow stage trips Spark's ArrowColumnVector getFloat
@@ -495,8 +495,7 @@ def _reservoir_sample(df: DataFrame, vec_col: str, n: int, seed: int) -> np.ndar
     )
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+        pid = partition_id()
         rng = np.random.default_rng(np.random.PCG64((seed << 13) ^ (pid * 0x9E3779B9)))
         reservoir: list = []
         seen = 0

@@ -27,8 +27,8 @@ def _emit_keys(mv, key_size: int) -> pa.RecordBatch:
     """(flow_key binary) RecordBatch over a buffer whose length is a
     whole number of ``key_size`` records — zero-copy: ``py_buffer``
     holds the memoryview (which holds the chunk / Arrow buffer), no
-    tobytes copy. The single fixed-width slicer every trace lane
-    (batch, streamed, byte-range split) shares."""
+    tobytes copy. The single fixed-width slicer both trace kernels
+    (whole-file blobs and byte ranges) share."""
     n = len(mv) // key_size
     flat = pa.py_buffer(mv)
     offsets = pa.array(np.arange(0, (n + 1) * key_size, key_size, dtype=np.int32))
@@ -90,60 +90,26 @@ def read_flow_trace_stream(
 ) -> DataFrame:
     """Streamed trace reader: same rows as ``read_flow_trace`` with
     task memory bounded by ``chunk_bytes`` instead of the whole file
-    (the multi-GB-trace shape). Tasks receive file PATHS listed on the
-    driver and read fixed-width records chunk-by-chunk, carrying the
-    partial record at each chunk boundary forward; a truncated final
-    record is dropped (read_exact semantics, examples/ip_files.rs:27-33).
-    Default ``open()`` covers local/NFS paths; pass ``opener`` for
-    object stores."""
-    import glob as _glob
-    import os
+    (the multi-GB-trace shape). It is ``read_flow_trace_split`` with one
+    whole-file slice per file: tasks receive local file paths listed on
+    the driver and read record-aligned chunks; a truncated final record
+    is dropped (read_exact semantics, examples/ip_files.rs:27-33).
+    ``opener`` (default ``open(path, "rb")``) only changes how a listed
+    local path is opened: listing and sizing use the local filesystem,
+    so it does not make object stores readable. A whole-file slice
+    never seeks, so the handle needs only ``read`` and ``close``."""
+    import sys
 
-    raw = path[7:] if path.startswith("file://") else path
-    pat = os.path.join(raw, glob) if os.path.isdir(raw) else raw
-    files = sorted(_glob.glob(pat))
-    if not files:
-        raise FileNotFoundError(f"no trace files match {pat}")
-    par = parallelism or min(len(files), spark.sparkContext.defaultParallelism)
-    # deterministic one-file-per-task placement: neither path-hash nor
-    # repartition(n)'s randomized round-robin spreads a few 1-row
-    # partitions evenly (see warc._one_file_per_task_df)
-    from .warc import _one_file_per_task_df
-
-    pdf = _one_file_per_task_df(spark, files, par)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def emit(mv) -> pa.RecordBatch:
-            return _emit_keys(mv, key_size)
-
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                fh = opener(p) if opener is not None else open(p, "rb")
-                try:
-                    carry = b""
-                    while True:
-                        chunk = fh.read(chunk_bytes)
-                        if not chunk:
-                            break
-                        mv = memoryview(chunk)
-                        if carry:
-                            # complete ONLY the carried record — never
-                            # re-copy the whole chunk through a concat
-                            need = key_size - len(carry)
-                            if len(chunk) < need:
-                                carry = carry + chunk
-                                continue
-                            yield emit(memoryview(carry + bytes(mv[:need])))
-                            mv = mv[need:]
-                            carry = b""
-                        usable = (len(mv) // key_size) * key_size
-                        if usable:
-                            yield emit(mv[:usable])
-                        carry = bytes(mv[usable:])
-                finally:
-                    fh.close()
-
-    return pdf.mapInArrow(kernel, _KEY_SCHEMA)
+    return read_flow_trace_split(
+        spark,
+        path,
+        key_size,
+        glob,
+        split_bytes=sys.maxsize,
+        chunk_bytes=chunk_bytes,
+        opener=opener,
+        parallelism=parallelism,
+    )
 
 
 def read_flow_trace_split(
@@ -159,80 +125,45 @@ def read_flow_trace_split(
     """Intra-file parallel trace reader: ONE oversized ``.dat`` becomes
     many byte-range tasks (the WARC analog is ``read_warc_indexed``,
     but fixed-width records need no index — any multiple of
-    ``key_size`` is a record boundary). The driver lists files with
-    sizes and plans record-aligned slices of ≤ ``split_bytes``; each
-    task seeks to its slice and streams it in ``chunk_bytes`` reads,
-    so task memory stays bounded AND a 100 GB trace engages the whole
-    cluster instead of one task. A truncated final record is dropped
-    (read_exact semantics, examples/ip_files.rs:27-33). Rows match
-    ``read_flow_trace`` exactly (as a multiset; row order follows
-    slice order). ``opener`` must return a seekable handle."""
-    import glob as _glob
+    ``key_size`` is a record boundary). The driver lists local files
+    with sizes and plans record-aligned slices of ≤ ``split_bytes``;
+    each task streams its slice in ``chunk_bytes`` reads through the
+    byte-range kernel the WARC readers share, so task memory stays
+    bounded AND a 100 GB trace engages the whole cluster instead of one
+    task. A truncated final record is dropped (read_exact semantics,
+    examples/ip_files.rs:27-33). Rows match ``read_flow_trace`` exactly
+    (as a multiset; row order follows slice order). ``opener`` only
+    changes how a listed local path is opened; slices after a file's
+    first seek, so its handle must be seekable."""
     import os
 
-    from pyspark.sql import functions as F
+    from .warc import _list_local, _range_task_df
 
-    raw = path[7:] if path.startswith("file://") else path
-    pat = os.path.join(raw, glob) if os.path.isdir(raw) else raw
-    files = sorted(_glob.glob(pat))
-    if not files:
-        raise FileNotFoundError(f"no trace files match {pat}")
-    recs_per_split = max(1, split_bytes // key_size)
-    slices: list[tuple[str, int, int]] = []  # (path, start_record, n_records)
+    files = _list_local(path, glob, "trace")
+    step = max(1, split_bytes // key_size) * key_size
+    slices: list[tuple[str, int, int]] = []  # (path, start, end) in bytes
     for f in files:
-        n_rec = os.path.getsize(f) // key_size
-        for s in range(0, n_rec, recs_per_split):
-            slices.append((f, s, min(recs_per_split, n_rec - s)))
+        size = os.path.getsize(f) // key_size * key_size
+        slices += [(f, s, min(s + step, size)) for s in range(0, size, step)]
     if not slices:
         # only empty/sub-record files: an empty result with the schema
         return spark.createDataFrame([], _KEY_SCHEMA)
     par = parallelism or min(len(slices), spark.sparkContext.defaultParallelism)
-    # deterministic one-slice-per-task placement (see _rows_per_task_df)
-    from .warc import _rows_per_task_df
 
-    pdf = _rows_per_task_df(
-        spark,
-        {
-            "path": [p for p, _, _ in slices],
-            "start_rec": [s for _, s, _ in slices],
-            "n_rec": [c for _, _, c in slices],
-        },
-        par,
-    )
-
-    # chunk reads stay record-aligned so every emitted buffer is a
-    # whole number of records — no carry logic needed
+    # chunk reads stay record-aligned, so only a short read leaves a
+    # partial record to carry into the next one
     chunk_aligned = max(key_size, (chunk_bytes // key_size) * key_size)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def emit(mv) -> pa.RecordBatch:
-            return _emit_keys(mv, key_size)
+    def decode(read) -> Iterator[pa.RecordBatch]:
+        buf = b""
+        while chunk := read(chunk_aligned):
+            buf = buf + chunk if buf else chunk
+            usable = (len(buf) // key_size) * key_size
+            if usable:
+                yield _emit_keys(memoryview(buf)[:usable], key_size)
+                buf = buf[usable:]
 
-        for batch in batches:
-            for p, start, cnt in zip(
-                batch.column(0).to_pylist(),
-                batch.column(1).to_pylist(),
-                batch.column(2).to_pylist(),
-            ):
-                fh = opener(p) if opener is not None else open(p, "rb")
-                try:
-                    fh.seek(start * key_size)
-                    remaining = cnt * key_size
-                    buf = b""
-                    while remaining:
-                        chunk = fh.read(min(chunk_aligned, remaining))
-                        if not chunk:
-                            break  # file shrank under us: drop the tail
-                        remaining -= len(chunk)
-                        buf = buf + chunk if buf else chunk
-                        usable = (len(buf) // key_size) * key_size
-                        if usable:
-                            yield emit(memoryview(buf)[:usable])
-                            buf = buf[usable:]
-                finally:
-                    fh.close()
-
-    return pdf.mapInArrow(kernel, _KEY_SCHEMA)
+    return _range_task_df(spark, slices, par, opener, decode, _KEY_SCHEMA)
 
 
 def write_flow_trace(keys: list[bytes], path: str) -> None:

@@ -65,31 +65,6 @@ _WRAP_POST = b"</body></html>"
 _LITERAL_WORKLIST_MAX = 2048
 
 
-def _gunzip_members(blob: bytes) -> bytes:
-    """Decompress a concatenation of gzip members (Common Crawl's
-    one-member-per-record layout) — or pass plain bytes through.
-
-    A truncated/corrupt member (torn final write in a crawler) stops
-    the decode there and returns what was recovered: at archive scale
-    a damaged tail must cost its own records, never the task."""
-    if blob[:2] != b"\x1f\x8b":
-        return blob
-    out = bytearray()
-    pos = 0
-    while pos < len(blob):
-        d = zlib.decompressobj(wbits=31)
-        try:
-            out.extend(d.decompress(blob[pos:]))
-            out.extend(d.flush())
-        except zlib.error:
-            break
-        consumed = len(blob) - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        pos += consumed
-    return bytes(out)
-
-
 def _strip_http(payload: bytes) -> bytes:
     """Drop the HTTP response envelope of a WARC response record,
     returning the entity body (Common Crawl stores the full HTTP
@@ -154,11 +129,67 @@ def _rows_per_task_df(
     )
 
 
-def _one_file_per_task_df(
-    spark: SparkSession, files: list[str], par: int
+def _list_local(path: str, glob: str, what: str) -> list[str]:
+    """Sorted local files of a path-based reader: ``path`` is a local
+    file, directory (matched with ``glob``) or glob pattern, with an
+    optional ``file://`` prefix. Raises ``FileNotFoundError`` naming
+    ``what`` when nothing matches."""
+    import glob as _glob
+    import os
+
+    raw = path[7:] if path.startswith("file://") else path
+    pat = os.path.join(raw, glob) if os.path.isdir(raw) else raw
+    files = sorted(_glob.glob(pat))
+    if not files:
+        raise FileNotFoundError(f"no {what} files match {pat}")
+    return files
+
+
+def _bounded_reader(read, left: int):
+    """``read(n)`` that returns at most ``left`` bytes in total, then
+    ``b""`` — one task's byte range of an open file."""
+
+    def bounded(n: int):
+        nonlocal left
+        if left <= 0:
+            return b""
+        piece = read(min(n, left))
+        left -= len(piece)
+        return piece
+
+    return bounded
+
+
+def _range_task_df(
+    spark: SparkSession,
+    ranges: "list[tuple[str, int, int]]",
+    par: int,
+    opener,
+    decode,
+    schema: StructType,
 ) -> DataFrame:
-    """(path) work-list DataFrame — see ``_rows_per_task_df``."""
-    return _rows_per_task_df(spark, {"path": files}, par)
+    """The byte-range task kernel every path-based source reader runs.
+    ``ranges`` are (path, start, end) work rows, spread over ``par``
+    tasks by ``_rows_per_task_df``. Each task opens its path with
+    ``opener(path)`` (default ``open(path, "rb")``), seeks only when
+    ``start > 0`` — so a whole-file range works on a handle that has
+    just ``read`` and ``close`` — and passes ``decode`` a ``read(n)``
+    that stops at ``end``. ``decode(read)`` yields the Arrow batches."""
+    cols = dict(zip(("path", "start", "end"), map(list, zip(*ranges))))
+    pdf = _rows_per_task_df(spark, cols, par)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, start, end in zip(*(c.to_pylist() for c in batch.columns)):
+                fh = opener(path) if opener is not None else open(path, "rb")
+                try:
+                    if start > 0:
+                        fh.seek(start)
+                    yield from decode(_bounded_reader(fh.read, end - start))
+                finally:
+                    fh.close()
+
+    return pdf.mapInArrow(kernel, schema)
 
 
 class _StreamParser:
@@ -258,118 +289,54 @@ class _StreamParser:
         return len(self._buf)
 
 
-def parse_warc_records(blob: bytes) -> Iterator[dict]:
-    """Yield {url, warc_ts, payload} for each response record in a
-    (possibly multi-member-gzip) WARC byte stream. Whatever remains
-    incomplete at end of stream (torn tail) is dropped, per the
-    Content-Length rule in ``_StreamParser``."""
-    p = _StreamParser()
-    yield from p.feed(_gunzip_members(blob))
-
-
-def _iter_member_bytes(
-    blob, chunk: int = 4 << 20, feed_start: int = 4096
-) -> Iterator[bytes]:
-    """Yield each gzip member's decompressed bytes one at a time —
-    Common Crawl stores one record per member, so peak memory per
-    archive stays ~(compressed file + one record) instead of the whole
-    decompressed segment. Feed windows start at ``feed_start`` and
-    DOUBLE per feed (capped at ``chunk``): zlib materializes
-    ``unused_data`` — a copy of whatever was fed past the member end —
-    at every member boundary, so a fixed 4 MB window costs
-    O(members x 4 MB) on Common Crawl's tiny one-record members
-    (measured 3.8k rec/s on 200-byte members); the exponential ramp
-    bounds the waste copy to ~the member's own size while still
-    reaching full-window feeds on multi-MB members. Plain
-    (uncompressed) streams yield the buffer whole. A torn final member
-    yields whatever decompressed before the tear — complete records
-    ahead of the damage still parse; the record parser's
-    Content-Length gate drops only the truly torn record (same rule as
-    the streamed path, so batch and stream agree on every layout)."""
-    mv = memoryview(blob)
-    n = len(mv)
-    if n < 2 or bytes(mv[:2]) != b"\x1f\x8b":
-        yield blob
-        return
-    pos = 0
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        out = bytearray()
-        step = feed_start
-        while True:
-            end = min(pos + step, n)
-            try:
-                out.extend(d.decompress(mv[pos:end]))
-            except zlib.error:
-                if out:
-                    yield bytes(out)  # salvage records ahead of the corruption
-                return
-            if d.eof:
-                pos = end - len(d.unused_data)
-                break
-            pos = end
-            if end >= n:
-                # EOF inside a member (torn tail): yield the partial
-                # bytes — Content-Length drops only the torn record
-                if out:
-                    yield bytes(out)
-                return
-            step = min(step * 2, chunk)
-        yield bytes(out)
-
-
 def _stream_gzip_members(
     read, chunk_bytes: int = 4 << 20, feed_start: int = 4096
 ) -> Iterator[bytes]:
-    """Yield decompressed bytes from a (possibly multi-member) gzip
-    stream via bounded ``read(chunk_bytes)`` calls — at no point does
-    the whole compressed file, one whole member, or the decompressed
-    stream sit in memory. Plain (non-gzip) streams pass chunks through.
-    A torn/corrupt member ends the iteration (its partial bytes may
-    already have been yielded; the record parser's Content-Length gate
-    drops whatever they can't complete).
+    """The one WARC decoder: yield the decompressed bytes of a
+    (possibly multi-member) gzip stream read via bounded
+    ``read(chunk_bytes)`` calls, one piece per gzip member (a member
+    that decompresses past ``chunk_bytes`` comes in pieces of about
+    that size). Plain (non-gzip) streams pass their chunks through. At
+    no point does the whole compressed file or the decompressed stream
+    sit in memory. A torn or corrupt member ends the iteration after
+    yielding what decompressed before the damage; the record parser's
+    Content-Length gate drops the record that leaves incomplete.
 
     Decompressor feeds ramp from ``feed_start`` doubling to
     ``chunk_bytes``, resetting at each member boundary: zlib copies
     everything fed past a member's end into ``unused_data``, so
     whole-chunk feeds cost O(members-per-chunk^2 x member size) on
-    Common Crawl's one-record members — the round-5 streamed-reader
-    throughput tax. The ramp bounds the waste to ~one member size."""
-    # the io protocol permits short reads (object-store streams via
-    # opener= do this): accumulate exactly 2 sniff bytes or hit EOF
+    Common Crawl's one-record members. The ramp bounds the waste to
+    about one member's size, and one yield per member (not per feed)
+    keeps the generator overhead of those small members down."""
+    # the io protocol permits short reads: accumulate exactly 2 sniff
+    # bytes or hit EOF
     head = b""
     while len(head) < 2:
         more = read(2 - len(head))
         if not more:
             break
-        head = bytes(head) + bytes(more)
-    if not head:
+        head += bytes(more)
+    if head != b"\x1f\x8b":
+        if head:
+            yield head
+            while chunk := read(chunk_bytes):
+                yield chunk
         return
-    if bytes(head) != b"\x1f\x8b":
-        yield head
-        while True:
-            c = read(chunk_bytes)
-            if not c:
-                return
-            yield c
     d = zlib.decompressobj(wbits=31)
-    buf = memoryview(head + read(chunk_bytes))
-    pos = 0
-    step = feed_start
+    buf, pos, step = memoryview(head), 0, feed_start
+    out = bytearray()
     while True:
         if pos >= len(buf):
             nxt = read(chunk_bytes)
             if not nxt:
-                return  # EOF (a mid-member end is a torn tail: stop)
-            buf = memoryview(nxt)
-            pos = 0
+                break  # EOF (a mid-member end is a torn tail)
+            buf, pos = memoryview(nxt), 0
         end = min(pos + step, len(buf))
         try:
-            out = d.decompress(buf[pos:end])
+            out += d.decompress(buf[pos:end])
         except zlib.error:
-            return
-        if out:
-            yield out
+            break  # corrupt from here on: keep what decoded before it
         if d.eof:
             pos = end - len(d.unused_data)
             d = zlib.decompressobj(wbits=31)
@@ -377,6 +344,68 @@ def _stream_gzip_members(
         else:
             pos = end
             step = min(step * 2, chunk_bytes)
+            if len(out) < chunk_bytes:
+                continue
+        if out:
+            yield out
+            out = bytearray()
+    if out:
+        yield out
+
+
+def _records(
+    read, chunk_bytes: int = 4 << 20, max_record_bytes: int | None = None
+) -> Iterator[dict]:
+    """Response records of one file or byte range: the one gunzip
+    generator into one ``_StreamParser``, so a record that spans gzip
+    members comes through whole and a non-WARC header ends the range."""
+    parser = _StreamParser(max_record_bytes)
+    for piece in _stream_gzip_members(read, chunk_bytes):
+        yield from parser.feed(piece)
+        if parser.dead:
+            return
+
+
+def _slice_reader(blob):
+    """``read(n)`` over an in-memory buffer: zero-copy slices of one
+    memoryview, so a whole archive held by Arrow decodes like a file."""
+    mv = memoryview(blob)
+    pos = 0
+
+    def read(n: int):
+        nonlocal pos
+        piece = mv[pos : pos + n]
+        pos += len(piece)
+        return piece
+
+    return read
+
+
+def parse_warc_records(blob) -> Iterator[dict]:
+    """Yield {url, warc_ts, payload} for each response record in a
+    (possibly multi-member-gzip) WARC byte stream, through the same
+    decoder and parser as every reader. Whatever remains incomplete at
+    end of stream (torn tail) is dropped, per the Content-Length rule
+    in ``_StreamParser``."""
+    return _records(_slice_reader(blob))
+
+
+def _warc_batches(
+    read,
+    batch_records: int,
+    chunk_bytes: int = 4 << 20,
+    max_record_bytes: int | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """``_records`` of one file or byte range in ``batch_records``-sized
+    Arrow batches."""
+    rows: list[dict] = []
+    for rec in _records(read, chunk_bytes, max_record_bytes):
+        rows.append(rec)
+        if len(rows) >= batch_records:
+            yield _warc_batch(rows)
+            rows = []
+    if rows:
+        yield _warc_batch(rows)
 
 
 def read_warc_stream(
@@ -389,53 +418,32 @@ def read_warc_stream(
     parallelism: int | None = None,
     max_record_bytes: int | None = None,
 ) -> DataFrame:
-    """Streamed WARC reader for oversized segments: same rows as
+    """Streamed WARC reader for oversized segments: the same rows as
     ``read_warc`` with task memory bounded by
     (chunk_bytes + one in-flight record + one Arrow batch) instead of
     the whole compressed segment — the 10 GB-archive shape
     (``read_warc`` holds each file's compressed bytes whole via the
     binaryFile source, fine for Common Crawl's ~1 GB segments).
 
-    Tasks receive file PATHS (listed on the driver) and stream them
-    with incremental multi-member gunzip + the incremental record
-    parser. Default ``open()`` covers local/NFS paths; pass ``opener``
-    (``path -> binary file-like``) for object stores. One semantic
-    difference from ``read_warc``: mid-archive garbage at a record
-    boundary stops THAT FILE's remaining records (no per-member
-    resync), which only matters for corrupt non-Common-Crawl layouts.
-    """
-    import glob as _glob
+    The driver lists the local files under ``path`` and plans one
+    whole-file (path, 0, size) range per file; tasks run the byte-range
+    kernel of ``read_warc_indexed``. ``opener`` (``path -> binary
+    file-like``, default ``open(path, "rb")``) only changes how a listed
+    local path is opened: listing and sizing use the local filesystem,
+    so it does not make object stores readable. A whole-file range never
+    seeks, so the handle needs only ``read`` and ``close``."""
     import os
 
-    raw = path[7:] if path.startswith("file://") else path
-    pat = os.path.join(raw, glob) if os.path.isdir(raw) else raw
-    files = sorted(_glob.glob(pat))
-    if not files:
-        raise FileNotFoundError(f"no WARC files match {pat}")
-    par = parallelism or min(
-        len(files), spark.sparkContext.defaultParallelism
+    files = _list_local(path, glob, "WARC")
+    par = parallelism or min(len(files), spark.sparkContext.defaultParallelism)
+    return _range_task_df(
+        spark,
+        [(f, 0, os.path.getsize(f)) for f in files],
+        par,
+        opener,
+        lambda read: _warc_batches(read, batch_records, chunk_bytes, max_record_bytes),
+        WARC_SCHEMA,
     )
-    pdf = _one_file_per_task_df(spark, files, par)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                fh = opener(p) if opener is not None else open(p, "rb")
-                try:
-                    parser = _StreamParser(max_record_bytes=max_record_bytes)
-                    rows: list[dict] = []
-                    for chunk in _stream_gzip_members(fh.read, chunk_bytes):
-                        for rec in parser.feed(chunk):
-                            rows.append(rec)
-                            if len(rows) >= batch_records:
-                                yield _warc_batch(rows)
-                                rows = []
-                    if rows:
-                        yield _warc_batch(rows)
-                finally:
-                    fh.close()
-
-    return pdf.mapInArrow(kernel, WARC_SCHEMA)
 
 
 def build_warc_index(
@@ -577,12 +585,17 @@ def read_warc_indexed(
     file = one task) and a real 50 GB Common Crawl-style segment.
 
     Same rows as ``read_warc``; ranges end exactly at the next range's
-    record-aligned start, so no record is split or double-read. Pass
-    ``opener`` returning a SEEKABLE binary file-like for object stores
-    (range GETs); default ``open()`` covers local/NFS."""
+    record-aligned start, so no record is split or double-read. Each
+    range starts its own parser, so a non-WARC header stops only the
+    rest of its range. Tasks run the byte-range kernel of
+    ``read_warc_stream``. ``opener`` (default ``open(path, "rb")``)
+    only changes how the local archive is opened, for the index scan
+    and for each range; sizing uses the local filesystem, so it does
+    not make object stores readable. Ranges after the first seek, so
+    its handle must be seekable."""
     import os
 
-    from pyspark.sql import functions as F_
+    import numpy as np
 
     raw = path[7:] if path.startswith("file://") else path
     if os.path.isdir(raw):
@@ -605,61 +618,21 @@ def read_warc_indexed(
     par = max(1, min(par, len(offsets)))
     # contiguous ranges of ~equal COMPRESSED bytes, boundaries snapped
     # to record-aligned member offsets
-    import numpy as np
-
     offs = np.asarray(offsets, dtype=np.int64)
     targets = [size * (i + 1) / par for i in range(par - 1)]
     cut_idx = np.unique(np.searchsorted(offs, targets))
     cut_idx = cut_idx[(cut_idx > 0) & (cut_idx < len(offs))]
     starts = [int(offs[0])] + [int(offs[i]) for i in cut_idx]
     ends = starts[1:] + [size]
-    ranges = [(s, e) for s, e in zip(starts, ends) if e > s]
-    # deterministic one-range-per-task placement (see _rows_per_task_df
-    # for why repartition(n) is not that)
-    pdf = _rows_per_task_df(
+    ranges = [(raw, s, e) for s, e in zip(starts, ends) if e > s]
+    return _range_task_df(
         spark,
-        {
-            "path": [raw] * len(ranges),
-            "start": [s for s, _ in ranges],
-            "end": [e for _, e in ranges],
-        },
+        ranges,
         len(ranges),
+        opener,
+        lambda read: _warc_batches(read, batch_records, chunk_bytes, max_record_bytes),
+        WARC_SCHEMA,
     )
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for p, s, e in zip(
-                batch.column(0).to_pylist(),
-                batch.column(1).to_pylist(),
-                batch.column(2).to_pylist(),
-            ):
-                fh = opener(p) if opener is not None else open(p, "rb")
-                try:
-                    fh.seek(s)
-                    left = e - s
-
-                    def read(n, _fh=fh):
-                        nonlocal left
-                        if left <= 0:
-                            return b""
-                        b = _fh.read(min(n, left))
-                        left -= len(b)
-                        return b
-
-                    parser = _StreamParser(max_record_bytes=max_record_bytes)
-                    rows: list[dict] = []
-                    for chunk in _stream_gzip_members(read, chunk_bytes):
-                        for rec in parser.feed(chunk):
-                            rows.append(rec)
-                            if len(rows) >= batch_records:
-                                yield _warc_batch(rows)
-                                rows = []
-                    if rows:
-                        yield _warc_batch(rows)
-                finally:
-                    fh.close()
-
-    return pdf.mapInArrow(kernel, WARC_SCHEMA)
 
 
 def _parse_warc_ts(ts: str | None):
@@ -705,18 +678,8 @@ def _warc_blob_kernel(batch_records: int):
                     continue  # null content: as_buffer() would be None
                 # zero-copy view over the Arrow buffer — no second
                 # whole-file bytes copy into Python per task
-                blob = memoryview(col[i].as_buffer())
-                if len(blob) == 0:
-                    continue
-                rows: list[dict] = []
-                for member in _iter_member_bytes(blob):
-                    for rec in parse_warc_records(member):
-                        rows.append(rec)
-                        if len(rows) >= batch_records:
-                            yield _warc_batch(rows)
-                            rows = []
-                if rows:
-                    yield _warc_batch(rows)
+                read = _slice_reader(col[i].as_buffer())
+                yield from _warc_batches(read, batch_records)
 
     return kernel
 
@@ -725,11 +688,16 @@ def read_warc(
     spark: SparkSession, path: str, glob: str = "*.warc*", batch_records: int = 512
 ) -> DataFrame:
     """(url, warc_ts, html, text) — one row per WARC response record
-    across every matching archive file. Records are decoded member-by-
-    member and emitted in ``batch_records``-sized Arrow batches, so a
-    multi-GB segment never materializes decompressed-whole plus a full
-    row copy in one task (the compressed blob itself is held by the
-    binaryFile source; cap concurrent tasks for very large segments)."""
+    across every matching archive file. Each file decodes through the
+    same gunzip generator and record parser as ``read_warc_stream``:
+    a record that spans gzip members comes through whole, and a
+    non-WARC header stops the rest of that file (no resync guessing).
+    Records are decoded member by member and emitted in
+    ``batch_records``-sized Arrow batches, so a multi-GB segment never
+    materializes decompressed-whole plus a full row copy in one task
+    (the compressed blob itself is held by the binaryFile source, which
+    reads any Hadoop filesystem; cap concurrent tasks for very large
+    segments)."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)

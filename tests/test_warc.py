@@ -189,9 +189,11 @@ def test_mid_payload_truncation_drops_record():
     )
     member = gzip.compress(rec, mtime=0)
     torn = member[: int(len(member) * 0.6)]
-    from heavykeeper_rs_spark.sources.warc import _gunzip_members
+    import io
 
-    partial = _gunzip_members(torn)
+    from heavykeeper_rs_spark.sources.warc import _stream_gzip_members
+
+    partial = b"".join(_stream_gzip_members(io.BytesIO(torn).read))
     assert 0 < len(partial) < len(rec)  # decompression is silently partial
     assert list(parse_warc_records(torn)) == []  # record dropped, no short slice
     # plain (uncompressed) torn stream: same drop
@@ -319,7 +321,8 @@ class TestStreamedReader:
 
 def test_flow_trace_stream_matches_batch(spark, tmp_path):
     """Streamed trace reader: chunk size deliberately NOT a multiple of
-    the record width, so every chunk boundary exercises the carry."""
+    the record width, so the range kernel's reads must floor it to a
+    record multiple; the torn tail is dropped as by the batch reader."""
     import numpy as np
 
     from heavykeeper_rs_spark.sources.trace import (
@@ -785,3 +788,145 @@ class TestWorklistPlacement:
             zip(cols["path"][:6], cols["off"][:6])
         )
         assert small.rdd.getNumPartitions() == 6
+
+
+def _warc_record(url: str, body: bytes) -> bytes:
+    http = b"HTTP/1.1 200 OK\r\n\r\n" + body
+    return (
+        b"WARC/1.0\r\nWARC-Type: response\r\n"
+        + b"WARC-Target-URI: " + url.encode() + b"\r\n"
+        + b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
+        + b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
+        + http + b"\r\n\r\n"
+    )
+
+
+class TestOneDecoder:
+    """Every WARC reader decodes a file or byte range through one gunzip
+    generator into one record parser, so they agree on layouts beyond
+    Common Crawl's one record per member."""
+
+    @staticmethod
+    def _urls(df):
+        return sorted(r["url"] for r in df.collect())
+
+    def test_record_spanning_members_reaches_every_reader(self, spark, tmp_path):
+        """Record 3 is split across two gzip members; the binaryFile
+        reader must return it, as the path readers do."""
+        import gzip
+
+        from heavykeeper_rs_spark.sources.warc import (
+            read_warc_indexed,
+            read_warc_stream,
+        )
+
+        recs = [
+            _warc_record(f"https://sp.test/{i}", b"<html><body>s %d</body></html>" % i)
+            for i in range(6)
+        ]
+        r3 = recs[3]
+        members = [
+            b"".join(recs[:3]),
+            r3[: len(r3) // 2],
+            r3[len(r3) // 2 :],
+            recs[4] + recs[5],
+        ]
+        p = tmp_path / "span.warc.gz"
+        p.write_bytes(b"".join(gzip.compress(m, mtime=0) for m in members))
+        want = [f"https://sp.test/{i}" for i in range(6)]
+        assert self._urls(read_warc(spark, str(tmp_path))) == want
+        assert self._urls(read_warc_stream(spark, str(tmp_path), chunk_bytes=256)) == want
+        indexed = read_warc_indexed(spark, str(p), n_splits=3, save_index=False)
+        assert self._urls(indexed) == want
+
+    def test_non_warc_member_stops_the_file_in_every_reader(self, spark, tmp_path):
+        """A valid gzip member of non-WARC bytes between two good
+        members ends the file's parse in every reader (no resync
+        guessing). The indexed reader's split points are record-aligned
+        member starts, so with two ranges the second range's record
+        still comes through."""
+        import gzip
+
+        from heavykeeper_rs_spark.sources.warc import (
+            build_warc_index,
+            read_warc_indexed,
+            read_warc_stream,
+        )
+
+        good = [
+            _warc_record(f"https://nw.test/{i}", b"<html><body>g</body></html>")
+            for i in range(2)
+        ]
+        junk = b"this is not a WARC header\r\n\r\n" + b"x" * 100
+        p = tmp_path / "junk.warc.gz"
+        p.write_bytes(
+            b"".join(gzip.compress(m, mtime=0) for m in (good[0], junk, good[1]))
+        )
+        want = ["https://nw.test/0"]
+        assert self._urls(read_warc(spark, str(tmp_path))) == want
+        assert self._urls(read_warc_stream(spark, str(tmp_path))) == want
+        one = read_warc_indexed(spark, str(p), n_splits=1, save_index=False)
+        assert self._urls(one) == want
+        assert len(build_warc_index(str(p))) == 2  # the junk member is skipped
+        two = read_warc_indexed(spark, str(p), n_splits=2, save_index=False)
+        assert self._urls(two) == ["https://nw.test/0", "https://nw.test/1"]
+
+    def test_non_seekable_opener_serves_whole_file_readers(self, spark, tmp_path):
+        """Whole-file ranges never seek: a handle with only ``read`` and
+        ``close`` serves both streamed readers, with the batch readers'
+        rows."""
+        import numpy as np
+
+        from heavykeeper_rs_spark.sources.trace import (
+            read_flow_trace,
+            read_flow_trace_stream,
+            write_flow_trace,
+        )
+        from heavykeeper_rs_spark.sources.warc import read_warc_stream
+
+        class ReadOnly:
+            def __init__(self, path):
+                self._fh = open(path, "rb")
+
+            def read(self, n):
+                return self._fh.read(n)
+
+            def close(self):
+                self._fh.close()
+
+        recs = [
+            (f"https://ro.test/{i}", "2025-01-01T00:00:00Z",
+             b"<html><body>ro %d</body></html>" % i)
+            for i in range(12)
+        ]
+        wdir = tmp_path / "warc"
+        wdir.mkdir()
+        write_warc_file(recs[:7], str(wdir / "a.warc.gz"))
+        write_warc_file(recs[7:], str(wdir / "b.warc"), gzip_members=False)
+
+        def rows(df):
+            return sorted(
+                (r["url"], r["warc_ts"], bytes(r["html"]), r["text"])
+                for r in df.collect()
+            )
+
+        batch = rows(read_warc(spark, str(wdir)))
+        streamed = rows(read_warc_stream(spark, str(wdir), chunk_bytes=64, opener=ReadOnly))
+        assert streamed == batch and len(batch) == 12
+
+        tdir = tmp_path / "trace"
+        tdir.mkdir()
+        rng = np.random.default_rng(3)
+        keys = [bytes(rng.integers(0, 256, 13, dtype=np.uint8)) for _ in range(700)]
+        write_flow_trace(keys[:400], str(tdir / "p0.dat"))
+        write_flow_trace(keys[400:], str(tdir / "p1.dat"))
+        with open(tdir / "p1.dat", "ab") as f:
+            f.write(b"\x03" * 4)  # torn tail
+        t_batch = sorted(bytes(r["flow_key"]) for r in read_flow_trace(spark, str(tdir)).collect())
+        t_stream = sorted(
+            bytes(r["flow_key"])
+            for r in read_flow_trace_stream(
+                spark, str(tdir), chunk_bytes=100, opener=ReadOnly
+            ).collect()
+        )
+        assert t_stream == t_batch and len(t_batch) == 700
