@@ -10,7 +10,9 @@ and the driver folds the few survivors:
             stage: it reads plain parquet projections with pyarrow in
             the worker when ``scan.direct_scan`` admits them, else
             through Spark's scan; its grouped mode keeps one sketch per
-            live group and emits ``(group, salt, sketch)`` rows)
+            live group and emits ``(group, salt, sketch)`` rows; the
+            resumable builds of ``plans.checkpoint`` run it with a
+            ``make``/``feed`` that save each blob and re-emit a saved one)
   combine:  ``blob_tree`` — salted multi-level
             ``groupBy(salt).applyInPandas`` merge levels; no reducer
             ever folds more than ``fan_in`` blobs
@@ -46,7 +48,7 @@ from pyspark.sql.types import (
 from ..kernel import _MAGIC as _HK_MAGIC
 from ..kernel import merge_blobs
 from ..variants import deserialize_any
-from .scan import direct_scan, estimate_partitions
+from .scan import _cls, direct_scan, estimate_partitions
 
 BLOB_SCHEMA = StructType(
     [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
@@ -110,18 +112,15 @@ def blob_tree(
     n_parts: int,
     fan_in: int,
     keys: tuple[str, ...] = (),
-    sums: tuple[str, ...] = (),
 ) -> DataFrame:
     """Multi-level salted merge tree with bounded fan-in.
 
-    ``partials`` holds ``(*keys, salt, sketch, *sums)`` rows with
-    ``salt`` starting as the partition id modulo ``n_parts``. Each level
+    ``partials`` holds ``(*keys, salt, sketch)`` rows with ``salt``
+    starting as the partition id modulo ``n_parts``. Each level
     integer-divides ``salt`` by ``fan_in`` and merges within
     ``(*keys, salt)``, shrinking the blob count fan_in-fold, until at
     most ``fan_in`` blobs per key remain for the final. ``keys=
-    ("group",)`` runs one tree per group; ``sums`` names integer side
-    columns that are added up along the tree (e.g. per-partition
-    counters).
+    ("group",)`` runs one tree per group.
 
     fan_in=64 by default in the callers: collecting 64 KiB-to-MiB blobs
     to one place is cheap, while an extra applyInPandas level costs a
@@ -143,7 +142,6 @@ def blob_tree(
     def merge_level(pdf: pd.DataFrame) -> pd.DataFrame:
         row = {c: pdf[c].iloc[:1].to_numpy() for c in (*keys, "salt")}
         row["sketch"] = [merge(list(pdf["sketch"]))]
-        row.update({c: [int(pdf[c].sum())] for c in sums})
         return pd.DataFrame(row)
 
     out = partials
@@ -209,6 +207,11 @@ def sketch_partials(
 
     schema = BLOB_SCHEMA if max_live_groups is None else GROUP_BLOB_SCHEMA
     return source.mapInArrow(fn, schema), n_parts
+
+
+def reads_directly(partials: DataFrame) -> bool:
+    """Whether a ``sketch_partials`` stage reads the direct reader's ``Range`` of tasks."""
+    return _cls(partials._jdf.queryExecution().analyzed().child()) == "Range"
 
 
 def _group_partials(

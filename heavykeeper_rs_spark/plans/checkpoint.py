@@ -4,20 +4,25 @@ North-rule contract: a 10^12-row build must survive preemption. The
 partial (per-partition) sketches ARE the job state, so checkpointing
 them makes the whole aggregation resumable:
 
-- during the partial stage each task atomically writes
-  ``{dir}/partials/part-{pid}.bin`` (temp + rename) plus a metrics
-  JSON line (rows, uniques, seconds, mem_bytes, input lineage token);
-- on re-run, a task whose blob already exists short-circuits: it
-  emits the saved blob without doing any Python sketch work (the scan
-  cost of already-done partitions is bounded by early-exit);
-- blobs are validated against the job's params fingerprint — a
-  checkpoint from a different sketch shape, build mode, or input
-  lineage is refused, not silently merged;
+- the partial stage is ``operators.combine.sketch_partials`` (the direct
+  reader, ``MapInArrow`` over ``Range``, when ``scan.direct_scan``
+  admits the input); each task that saw rows atomically writes
+  ``{dir}/partials/part-{pid}.bin`` (temp + rename), the bytes it
+  emits, plus a metrics JSON line (rows, tracked, mem_bytes, seconds,
+  job token). A task with no rows writes and emits nothing, as in every
+  other sketch path, and re-reads its empty input on resume;
+- on re-run, a task whose blob exists emits the saved bytes undecoded
+  with no sketch work, after reading at most its first batch (one
+  parquet batch on the direct reader);
+- the token fixes sketch shape, build mode, key lane, input lineage and
+  partial layout (task count and reader): another job's checkpoint is
+  refused, not silently merged, and the driver's decode refuses a saved
+  blob of another sketch family;
 - the combine stage is the SAME bounded-fan-in merge tree as the
-  non-checkpointed paths (``operators.combine.blob_tree``, which also
-  sums the resumed/computed counters; no reducer ever folds more than
-  ``fan_in`` blobs — at 10^5 partitions the critical path is
-  O(fan_in · log_fan_in(n)) merges, not one O(n) fold);
+  non-checkpointed paths (``operators.combine.blob_tree``, salted by
+  the partial stage's exact task count on either reader; no reducer
+  ever folds more than ``fan_in`` blobs — at 10^5 partitions the
+  critical path is O(fan_in · log_fan_in(n)) merges, not one O(n) fold);
 - the final merged sketch is written to ``{dir}/final.bin``; a
   completed job resumes in O(1).
 
@@ -40,34 +45,26 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql import functions as F
 
 from ..kernel import HeavyKeeper, HKParams
 from ..operators import combine
 from ..operators.topk import _feed_keys, _feed_tokens, token_keyed, topk_keyed
 
-_CKPT_SCHEMA = StructType(
-    [
-        *combine.BLOB_SCHEMA.fields,
-        StructField("resumed", IntegerType(), False),
-        StructField("computed", IntegerType(), False),
-    ]
-)
-_CKPT_SUMS = ("resumed", "computed")
-
 
 def _params_token(
-    params: HKParams, lineage: str, n_parts: int, mode: str, lane: str
+    params: HKParams, lineage: str, tasks: int, direct: bool, mode: str, lane: str
 ) -> str:
     """Job identity: sketch shape + build mode + key lane + input
     lineage + PARTITION LAYOUT.
 
-    The partition count is part of the identity because partial blobs
-    are keyed by partition id — a rerun that splits the same input
-    differently (changed spark.sql.files.maxPartitionBytes, different
-    parallelism, new files) would otherwise reuse blobs for partitions
-    that now hold different rows, silently dropping/double-counting.
-    A layout change makes the token mismatch and the job refuses the
+    The layout (the partial stage's task count and reader) is part of
+    the identity because partial blobs are keyed by task id — a rerun
+    that splits the same input differently (changed
+    spark.sql.files.maxPartitionBytes, different parallelism, new
+    files, the other reader) would otherwise reuse blobs for tasks that
+    now hold different rows, silently dropping/double-counting. A
+    layout change makes the token mismatch and the job refuses the
     stale checkpoint instead. ``mode`` keeps a tokens build from
     resuming a plain-column build with the same params. ``lane`` is the
     keyed column's Spark type: the int64 lane and the string lane hash
@@ -76,7 +73,7 @@ def _params_token(
     return (
         f"mode={mode};lane={lane};k={params.k};w={params.width};d={params.depth};"
         f"decay={params.decay};seed={params.seed};lineage={lineage};"
-        f"n_parts={n_parts}"
+        f"tasks={tasks};reader={'direct' if direct else 'spark'}"
     )
 
 
@@ -87,12 +84,27 @@ def _atomic_write(path: str, data: bytes) -> None:
     os.replace(tmp, path)
 
 
+def _read(path: str) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
+
+
 @dataclass
 class CheckpointReport:
     total_partitions: int
     resumed_partitions: int
     computed_partitions: int
     final_was_cached: bool
+
+
+@dataclass(frozen=True)
+class _Saved:
+    """A resumed task's partial: its saved blob, emitted undecoded."""
+
+    blob: bytes
+
+    def serialize(self) -> bytes:
+        return self.blob
 
 
 def _saved_partials(ckpt_dir: str) -> int:
@@ -108,97 +120,83 @@ def _checkpointed_sketch(
     mode: str,
     feed: Callable[[HeavyKeeper, Iterator[pa.RecordBatch]], None],
 ) -> tuple[HeavyKeeper, CheckpointReport]:
-    """Shared resumable-build scaffold: per-partition partial blobs on
-    shared storage, bounded-fan-in merge tree, O(1) completed-job
-    resume. ``keyed`` and ``feed(sketch, batches)`` are those of the
-    mode's ``sketch_partials`` stage; a partition's metrics count the
+    """Shared resumable-build scaffold: the mode's ``keyed`` and
+    ``feed`` run in ``combine.sketch_partials``, each task saving its
+    partial blob on shared storage, then the bounded-fan-in merge tree
+    and an O(1) completed-job resume. A partition's metrics count the
     non-null values of its first column as its rows."""
-    os.makedirs(f"{ckpt_dir}/partials", exist_ok=True)
-    n_input_parts = max(keyed.rdd.getNumPartitions(), 1)
-    lane = keyed.schema.fields[0].dataType.simpleString()
-    token = _params_token(params, lineage, n_input_parts, mode, lane)
-    token_path = f"{ckpt_dir}/TOKEN"
-    if os.path.exists(token_path):
-        existing = open(token_path).read()
-        if existing != token:
-            raise ValueError(
-                f"checkpoint dir {ckpt_dir} belongs to a different job: "
-                f"{existing!r} != {token!r}"
-            )
-    else:
-        _atomic_write(token_path, token.encode())
+    pdir = f"{ckpt_dir}/partials"
+    os.makedirs(pdir, exist_ok=True)
 
-    final_path = f"{ckpt_dir}/final.bin"
-    if os.path.exists(final_path):
-        sk = HeavyKeeper.deserialize(open(final_path, "rb").read())
-        n_parts = _saved_partials(ckpt_dir)
-        return sk, CheckpointReport(n_parts, n_parts, 0, True)
+    def make(pid: int):
+        path = f"{pdir}/part-{pid:05d}.bin"
+        if os.path.exists(path):
+            return _Saved(_read(path))
+        return HeavyKeeper(params, rng=combine.partition_rng(params.seed, pid))
 
-    def partial(pid: int, blob: bytes, resumed: int) -> pa.RecordBatch:
-        return pa.RecordBatch.from_pydict(
-            {
-                "salt": pa.array([pid], type=pa.int32()),
-                "sketch": pa.array([blob], type=pa.binary()),
-                "resumed": pa.array([resumed], type=pa.int32()),
-                "computed": pa.array([1 - resumed], type=pa.int32()),
-            }
-        )
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = combine.partition_id()
-        blob_path = f"{ckpt_dir}/partials/part-{pid:05d}.bin"
-        if os.path.exists(blob_path):
-            # resume: emit the saved partial, skip all sketch work
-            yield partial(pid, open(blob_path, "rb").read(), 1)
+    def feed_and_save(sk, batches: Iterator[pa.RecordBatch]) -> None:
+        if isinstance(sk, _Saved):  # resume: skip all sketch work
             return
-        sk = HeavyKeeper(params, rng=combine.partition_rng(params.seed, pid))
+        pid = combine.partition_id()
         t0 = time.time()
         rows = 0
 
         def counted() -> Iterator[pa.RecordBatch]:
             nonlocal rows
             for batch in batches:
-                if batch.num_rows:
-                    rows += batch.num_rows - batch.column(0).null_count
-                    yield batch
+                rows += batch.num_rows - batch.column(0).null_count
+                yield batch
 
         feed(sk, counted())
-        blob = sk.serialize()
-        _atomic_write(blob_path, blob)
+        _atomic_write(f"{pdir}/part-{pid:05d}.bin", sk.serialize())
         metrics = {
             "pid": pid,
             "rows": rows,
             "tracked": len(sk.pq),
             "mem_bytes": sk.mem_bytes(),
             "seconds": round(time.time() - t0, 3),
-            "token": token,
             "ts": time.time(),
+            "token": _read(f"{ckpt_dir}/TOKEN").decode(),
         }
-        _atomic_write(
-            f"{ckpt_dir}/partials/part-{pid:05d}.metrics.json",
-            json.dumps(metrics).encode(),
-        )
-        yield partial(pid, blob, 0)
+        _atomic_write(f"{pdir}/part-{pid:05d}.metrics.json", json.dumps(metrics).encode())
 
-    partials = keyed.mapInArrow(build, _CKPT_SCHEMA)
-    combined = combine.blob_tree(
-        partials, n_input_parts, fan_in, sums=_CKPT_SUMS
-    ).collect()
-    resumed = sum(r["resumed"] for r in combined)
-    computed = sum(r["computed"] for r in combined)
-    blobs = [r["sketch"] for r in combined]
+    partials, _ = combine.sketch_partials(keyed, make, feed_and_save)
+    tasks = partials.rdd.getNumPartitions()
+    lane = keyed.schema.fields[0].dataType.simpleString()
+    direct = combine.reads_directly(partials)
+    token = _params_token(params, lineage, tasks, direct, mode, lane)
+    token_path = f"{ckpt_dir}/TOKEN"
+    if not os.path.exists(token_path):
+        _atomic_write(token_path, token.encode())
+    elif (existing := _read(token_path).decode()) != token:
+        raise ValueError(
+            f"checkpoint dir {ckpt_dir} belongs to a different job: "
+            f"{existing!r} != {token!r}"
+        )
+
+    final_path = f"{ckpt_dir}/final.bin"
+    resumed = _saved_partials(ckpt_dir)
+    if os.path.exists(final_path):
+        sk = HeavyKeeper.deserialize(_read(final_path))
+        return sk, CheckpointReport(resumed, resumed, 0, True)
+
+    # salt by task id: on Spark's reader sketch_partials salts by an estimate
+    partials = partials.withColumn("salt", F.spark_partition_id())
+    tree = combine.blob_tree(partials, tasks, fan_in)
+    blobs = [r["sketch"] for r in tree.select("sketch").collect()]
     # partials come from disk: refuse a valid blob of another family
     sk = HeavyKeeper.deserialize(combine.merge(blobs)) if blobs else HeavyKeeper(params)
     _atomic_write(final_path, sk.serialize())
+    total = _saved_partials(ckpt_dir)
     summary = {
         "token": token,
         "resumed": resumed,
-        "computed": computed,
+        "computed": total - resumed,
         "tracked": len(sk.pq),
         "finished_ts": time.time(),
     }
     _atomic_write(f"{ckpt_dir}/SUMMARY.json", json.dumps(summary).encode())
-    return sk, CheckpointReport(_saved_partials(ckpt_dir), resumed, computed, False)
+    return sk, CheckpointReport(total, resumed, total - resumed, False)
 
 
 def topk_checkpointed(
@@ -246,11 +244,6 @@ def topk_tokens_checkpointed(
 
 
 def read_metrics(ckpt_dir: str) -> list[dict]:
-    out = []
     pdir = f"{ckpt_dir}/partials"
-    if not os.path.isdir(pdir):
-        return out
-    for fn in sorted(os.listdir(pdir)):
-        if fn.endswith(".metrics.json"):
-            out.append(json.loads(open(f"{pdir}/{fn}").read()))
-    return out
+    names = sorted(os.listdir(pdir)) if os.path.isdir(pdir) else []
+    return [json.loads(_read(f"{pdir}/{n}")) for n in names if n.endswith(".metrics.json")]

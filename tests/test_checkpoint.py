@@ -153,13 +153,20 @@ def test_checkpoint_report_counts_every_partition(spark, events, tmp_path):
     assert rep2.computed_partitions == 2
 
 
-def test_checkpoint_merge_is_bounded_fan_in_tree(spark, events, tmp_path):
+def test_checkpoint_merge_is_bounded_fan_in_tree(spark, events, tmp_path, monkeypatch):
     """256 partitions with fan_in=8 must merge through a TREE
     (256 -> 32 -> 4: two applyInPandas levels), never one reducer
     folding O(n_parts) blobs (VERDICT r2 'What's wrong' #2)."""
-    from heavykeeper_rs_spark.operators.combine import blob_tree
-    from heavykeeper_rs_spark.plans.checkpoint import _CKPT_SCHEMA, _CKPT_SUMS
+    from heavykeeper_rs_spark.operators import combine
 
+    trees = []
+    real = combine.blob_tree
+
+    def spy(*args):
+        trees.append(real(*args))
+        return trees[-1]
+
+    monkeypatch.setattr(combine, "blob_tree", spy)
     many = events.repartition(256)
     ckpt = str(tmp_path / "tree")
     sk, rep = topk_checkpointed(
@@ -172,19 +179,11 @@ def test_checkpoint_merge_is_bounded_fan_in_tree(spark, events, tmp_path):
     )
     assert rep2.final_was_cached and rep2.resumed_partitions == 256
     assert sk2.list() == sk.list()
-    # plan shape: ceil(log_8(256)) - 1 = 2 in-cluster merge levels
-    # (the last <= fan_in blobs fold on the driver)
-    import pyarrow as pa
-
-    fake = spark.createDataFrame([], schema=_CKPT_SCHEMA)
-    plan = (
-        blob_tree(fake, 256, 8, sums=_CKPT_SUMS)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    # plan shape of the tree the build ran: ceil(log_8(256)) - 1 = 2
+    # in-cluster merge levels (the last <= fan_in blobs fold on the driver)
+    (tree,) = trees
+    plan = tree._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("FlatMapGroupsInPandas") == 2
-    assert pa is not None
 
 
 def test_tokens_checkpointed_matches_unckpt_and_refuses_mode_swap(
@@ -257,3 +256,133 @@ def test_snapshot_lineage_tokens(spark, tmp_path, monkeypatch):
         topk_checkpointed(
             ev, "event_type", PARAMS, ckpt, lineage="iceberg:cat.db.docs@4243"
         )
+
+
+@pytest.fixture()
+def row_groups(spark, tmp_path):
+    """A plain parquet read of one file of 32 row groups of Zipf int64
+    keys: the direct reader's input (one unit per row group)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = np.random.default_rng(7).zipf(1.3, 32_000) % 5000
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), path, row_group_size=1000)
+    return spark.read.parquet(path)
+
+
+def _bins(ckpt):
+    from pathlib import Path
+
+    return {p.name: p.read_bytes() for p in Path(ckpt, "partials").glob("*.bin")}
+
+
+def test_checkpoint_takes_the_direct_reader(spark, row_groups, tmp_path, monkeypatch):
+    """The checkpointed build runs the one partial stage: on a plain
+    parquet read it reads the files itself (a ``Range`` leaf, no file
+    relation), saves the blobs ``topk_partials`` emits, and a resumed
+    task emits exactly the bytes of its file."""
+    from collections import Counter
+
+    from heavykeeper_rs_spark.operators import combine
+    from heavykeeper_rs_spark.operators.topk import topk_partials
+
+    stages = []
+    real = combine.sketch_partials
+
+    def spy(*args):
+        stages.append(real(*args))
+        return stages[-1]
+
+    monkeypatch.setattr(combine, "sketch_partials", spy)
+    ckpt = str(tmp_path / "direct")
+    sk, rep = topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
+    (partials, n_parts), = stages
+    plan = partials._jdf.queryExecution().optimizedPlan().toString()
+    assert "Range (0, " in plan and "Relation" not in plan
+    assert rep.computed_partitions == rep.total_partitions == n_parts > 1
+    with open(f"{ckpt}/TOKEN") as f:
+        token = f.read()
+    assert token.endswith(f";tasks={n_parts};reader=direct")
+    assert [m["token"] for m in read_metrics(ckpt)] == [token] * n_parts
+    saved = _bins(ckpt)
+    want, _ = topk_partials(row_groups, "k", PARAMS)
+    assert Counter(saved.values()) == Counter(r["sketch"] for r in want.collect())
+    # every file exists now: the stage emits the saved bytes, undecoded
+    assert Counter(r["sketch"] for r in partials.collect()) == Counter(saved.values())
+    os.remove(f"{ckpt}/final.bin")
+    sk2, rep2 = topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
+    assert rep2.resumed_partitions == rep2.total_partitions == n_parts
+    assert sk2.list() == sk.list() and _bins(ckpt) == saved
+
+
+def test_checkpoint_refuses_the_old_token_format(spark, events, tmp_path):
+    """A directory whose token names only a partition count was keyed
+    by Spark's split ids, not by the partial stage's tasks: refused."""
+    ckpt = str(tmp_path / "old")
+    os.makedirs(f"{ckpt}/partials")
+    with open(f"{ckpt}/TOKEN", "w") as f:
+        f.write(
+            "mode=topk;lane=string;k=10;w=2048;d=4;decay=0.9;seed=12345;"
+            "lineage=L;n_parts=6"
+        )
+    with pytest.raises(ValueError, match="different job"):
+        topk_checkpointed(events, "event_type", PARAMS, ckpt, lineage="L")
+
+
+def test_checkpoint_refuses_a_changed_direct_split(spark, row_groups, tmp_path):
+    """Lowering spark.sql.files.maxPartitionBytes repacks the direct
+    reader's units into more tasks; the rerun must refuse the saved
+    partials of the old packing."""
+    from heavykeeper_rs_spark.operators.scan import direct_scan
+    from heavykeeper_rs_spark.operators.topk import topk_keyed
+
+    ckpt = str(tmp_path / "split")
+    topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
+    os.remove(f"{ckpt}/final.bin")
+    before = len(direct_scan(topk_keyed(row_groups, "k")).tasks)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert len(direct_scan(topk_keyed(row_groups, "k")).tasks) != before
+        with pytest.raises(ValueError, match="different job"):
+            topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture()
+def sparse(spark):
+    """8 rows over 16 partitions: at least half the partitions are empty."""
+    return spark.createDataFrame([(f"k{i % 3}",) for i in range(8)], "k string").repartition(16)
+
+
+def test_empty_partitions_write_no_partial(spark, sparse, tmp_path):
+    from heavykeeper_rs_spark.operators.topk import topk_sketch
+
+    live = sparse.select(F.spark_partition_id()).distinct().count()
+    assert live < 16
+    ckpt = str(tmp_path / "sparse")
+    sk, rep = topk_checkpointed(sparse, "k", PARAMS, ckpt, lineage="L")
+    assert rep.total_partitions == rep.computed_partitions == live
+    assert len(read_metrics(ckpt)) == live
+    with open(f"{ckpt}/TOKEN") as f:
+        assert f.read().endswith(";tasks=16;reader=spark")
+    os.remove(f"{ckpt}/final.bin")
+    sk2, rep2 = topk_checkpointed(sparse, "k", PARAMS, ckpt, lineage="L")
+    assert rep2.resumed_partitions == rep2.total_partitions == live
+    assert rep2.computed_partitions == 0
+    plain = topk_sketch(sparse, "k", k=10, width=2048, depth=4)
+    assert sk2.list() == sk.list() == plain.list()
+
+
+def test_empty_input_builds_an_empty_sketch(spark, tmp_path):
+    empty = spark.createDataFrame([], "k string")
+    ckpt = str(tmp_path / "empty")
+    sk, rep = topk_checkpointed(empty, "k", PARAMS, ckpt, lineage="L")
+    assert sk.list() == [] and rep.total_partitions == rep.computed_partitions == 0
+    assert not rep.final_was_cached and os.path.exists(f"{ckpt}/final.bin")
+    sk2, rep2 = topk_checkpointed(empty, "k", PARAMS, ckpt, lineage="L")
+    assert rep2.final_was_cached and rep2.total_partitions == 0 and sk2.list() == []

@@ -4,7 +4,9 @@
 Builds the same-shaped fixtures — sharded per-record-gzip WARC
 (default 48k records x ~8 KB) and 13-byte flow-trace shards (default
 27.5M keys) — in a temp dir, then times each reader end-to-end
-(collect-side row counting via groupBy().count()) on local[8].
+(collect-side row counting via groupBy().count()) on
+local[$SPARK_GRAFT_CPUS], or one thread per usable core when that is
+unset. Each line gives the median rate of 5 reps and its min–max.
 
 Usage: python tools/bench_sources.py [n_warc_records] [n_trace_keys]
 """
@@ -12,6 +14,7 @@ Usage: python tools/bench_sources.py [n_warc_records] [n_trace_keys]
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -58,21 +61,22 @@ def build_trace(d: str) -> None:
         raw.tofile(f"{d}/p{s}.dat")
 
 
-def timeit(tag: str, df, n_expect: int, unit: float, reps: int = 2) -> float:
-    best = None
+def timeit(tag: str, df, n_expect: int, unit: float, reps: int = 5) -> float:
+    rates = []
     for _ in range(reps):
         t0 = time.time()
         n = df.groupBy().count().collect()[0][0]
         dt = time.time() - t0
         assert n == n_expect, (tag, n, n_expect)
-        best = dt if best is None else min(best, dt)
-    rate = n_expect / best / unit
-    print(f"{tag:55s} {rate:8.1f}")
+        rates.append(n_expect / dt / unit)
+    rate = statistics.median(rates)
+    print(f"{tag:55s} {rate:8.1f}  ({min(rates):.1f}–{max(rates):.1f})")
     return rate
 
 
 def main() -> None:
-    spark = get_spark(app="bench-sources", master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(app="bench-sources", master=f"local[{cpus}]", shuffle_partitions=cpus)
     with tempfile.TemporaryDirectory() as wd:
         build_warc(wd)
         comp = sum(os.path.getsize(f"{wd}/p{s}.warc.gz") for s in range(SHARDS))
