@@ -1,7 +1,7 @@
-"""Native kernels, one C pass each, called through ``ctypes``: the
-text lane's ASCII tokenizer and seeded string hash, the batch collapse,
-and the sketch add loops of the HeavyKeeper, Bucketed and Cuckoo
-layouts with Cuckoo's merge.
+"""Native kernels, called through ``ctypes``: the text lane's ASCII
+tokenizers and seeded string hash, the batch collapse, and the sketch
+add loops of the HeavyKeeper, Bucketed and Cuckoo layouts with Cuckoo's
+merge.
 
 The C source lives here as a string because ``--py-files`` zips ship
 only ``.py`` files. It is compiled on first use in each process into a
@@ -12,9 +12,13 @@ compile raises ``RuntimeError`` naming the command.
 
 The hash is the repo's canonical str/bytes fingerprint (persisted
 blobs depend on it): seeded FNV-1a over the bytes, then
-``h ^= len << 56``, then the splitmix64 finalizer. The tokenizer
-yields every ``[a-z]+`` run of the ASCII-lowered text, split at
-document boundaries, hashed over its lowered bytes.
+``h ^= len << 56``, then the splitmix64 finalizer. The token rule
+lives once, in ``next_run``: every ``[a-z]+`` run of the ASCII-lowered
+text, split at document boundaries, hashed over its lowered bytes.
+``ascii_tokens`` lists every run with its position (two scans: one
+counts, one fills); ``token_counts``, the token sketch feed, collapses
+the runs by hash in its one scan, keeping per distinct token its first
+run and its count, and nothing per occurrence.
 
 ``collapse``, the one batch collapse (behind ``kernel.preaggregate``),
 passes once over 64-bit words through an open-addressing table that
@@ -94,30 +98,45 @@ void hash_slices(const int64_t *starts, const int64_t *lens, int64_t n,
     }
 }
 
+/* The token rule: the next [a-z]+ run of the ASCII-lowered bytes
+   data[*i, end). Sets *s to its start and *h to its unfinished FNV-1a
+   state from h0, moves *i past it and returns its length; returns 0
+   when no run is left, -1 at a byte >= 128 before the next run. */
+static inline int64_t next_run(const uint8_t *data, int64_t *i, int64_t end,
+                               uint64_t h0, int64_t *s, uint64_t *h) {
+    int64_t j = *i;
+    for (; j < end; j++) {
+        if (data[j] >= 128) return -1;
+        if ((uint8_t)((data[j] | 0x20) - 'a') < 26) break;
+    }
+    *s = j;
+    *h = h0;
+    for (; j < end; j++) {
+        uint8_t c = data[j] | 0x20;
+        if ((uint8_t)(c - 'a') >= 26) break;
+        *h = (*h ^ c) * FNV_PRIME;
+    }
+    *i = j;
+    return j - *s;
+}
+
 /* Tokens of docs [offsets[d], offsets[d+1]); runs longer than max_len
    are dropped. With hashes == NULL only counts. Returns the token
    count, or -1 at the first byte >= 128. */
 int64_t ascii_tokens(const int64_t *offsets, int64_t ndocs,
                      const uint8_t *data, int64_t max_len, uint64_t h0,
                      uint64_t *hashes, int64_t *starts, int64_t *lens) {
-    int64_t n = 0;
+    int64_t n = 0, s, len;
+    uint64_t h;
     for (int64_t d = 0; d < ndocs; d++) {
-        int64_t i = offsets[d], end = offsets[d + 1];
-        while (i < end) {
-            if (data[i] >= 128) return -1;
-            if ((uint8_t)((data[i] | 0x20) - 'a') >= 26) { i++; continue; }
-            int64_t s = i;
-            uint64_t h = h0;
-            for (; i < end; i++) {
-                uint8_t c = data[i] | 0x20;
-                if ((uint8_t)(c - 'a') >= 26) break;
-                if (hashes) h = (h ^ c) * FNV_PRIME;
-            }
-            if (i - s > max_len) continue;
+        int64_t i = offsets[d];
+        while ((len = next_run(data, &i, offsets[d + 1], h0, &s, &h))) {
+            if (len < 0) return -1;
+            if (len > max_len) continue;
             if (hashes) {
-                hashes[n] = finish(h, i - s);
+                hashes[n] = finish(h, len);
                 starts[n] = s;
-                lens[n] = i - s;
+                lens[n] = len;
             }
             n++;
         }
@@ -132,6 +151,86 @@ static uint64_t slot_of(const slot_t *t, uint64_t mask, uint64_t x) {
     uint64_t s = mix(x) & mask;
     while (t[s].id && t[s].word != x) s = (s + 1) & mask;
     return s;
+}
+
+/* token_counts' output: distinct token d has hash[d], its first run at
+   start[d], len[d], and count[d] runs. */
+typedef struct {
+    uint64_t *hash;
+    int64_t *start, *len, *count;
+} counts_t;
+
+void free_counts(counts_t *o) {
+    free(o->hash);
+    free(o->start);
+    free(o->len);
+    free(o->count);
+    *o = (counts_t){0};
+}
+
+static int grow_counts(counts_t *o, int64_t cap) {
+    void *p[4] = {realloc(o->hash, cap * sizeof *o->hash),
+                  realloc(o->start, cap * sizeof *o->start),
+                  realloc(o->len, cap * sizeof *o->len),
+                  realloc(o->count, cap * sizeof *o->count)};
+    if (p[0]) o->hash = p[0];
+    if (p[1]) o->start = p[1];
+    if (p[2]) o->len = p[2];
+    if (p[3]) o->count = p[3];
+    return p[0] && p[1] && p[2] && p[3];
+}
+
+/* The tokens ascii_tokens finds, collapsed by hash as collapse does,
+   in first-occurrence order, without keeping the occurrences: one scan
+   inserts each run's hash into an open-addressing table that doubles
+   at load 1/2, and the outputs grow with it to the (mask + 1) / 2 + 1
+   entries a table of mask + 1 slots holds before it doubles. Returns
+   the distinct count, -1 at the first byte >= 128, -2 when memory runs
+   out; the caller frees o with free_counts in every case. */
+int64_t token_counts(const int64_t *offsets, int64_t ndocs,
+                     const uint8_t *data, int64_t max_len, uint64_t h0,
+                     counts_t *o) {
+    uint64_t mask = 1023, h;
+    int64_t d = 0, s, len;
+    slot_t *t = calloc(mask + 1, sizeof *t);
+    if (!t || !grow_counts(o, (mask + 1) / 2 + 1)) {
+        free(t);
+        return -2;
+    }
+    for (int64_t doc = 0; doc < ndocs; doc++) {
+        int64_t i = offsets[doc];
+        while ((len = next_run(data, &i, offsets[doc + 1], h0, &s, &h))) {
+            if (len < 0) {
+                free(t);
+                return -1;
+            }
+            if (len > max_len) continue;
+            h = finish(h, len);
+            uint64_t k = slot_of(t, mask, h);
+            if (t[k].id) {
+                o->count[t[k].id - 1]++;
+                continue;
+            }
+            t[k] = (slot_t){h, d + 1};
+            o->hash[d] = h;
+            o->start[d] = s;
+            o->len[d] = len;
+            o->count[d++] = 1;
+            if (d * 2 > (int64_t)mask + 1) {
+                free(t);
+                mask = 2 * mask + 1;
+                if (!(t = calloc(mask + 1, sizeof *t)) ||
+                    !grow_counts(o, (mask + 1) / 2 + 1)) {
+                    free(t);
+                    return -2;
+                }
+                for (int64_t j = 0; j < d; j++)
+                    t[slot_of(t, mask, o->hash[j])] = (slot_t){o->hash[j], j + 1};
+            }
+        }
+    }
+    free(t);
+    return d;
 }
 
 /* The distinct words of x in first-occurrence order: words[d], first[d]
@@ -398,6 +497,12 @@ void cuckoo_merge_heavy(uint64_t *lfp, uint64_t *lc, uint64_t *hfp,
 """
 
 
+class _Counts(ctypes.Structure):
+    """The C ``counts_t``: ``token_counts``' output arrays, allocated in C."""
+
+    _fields_ = [(n, ctypes.c_void_p) for n in ("hash", "start", "len", "count")]
+
+
 def _build() -> ctypes.CDLL:
     """Compile ``_SRC`` with ``_CC`` into a private temp dir and load it."""
     tmp = tempfile.mkdtemp(prefix="hk_native_")
@@ -423,6 +528,10 @@ def _build() -> ctypes.CDLL:
     lib.hash_slices.restype = None
     lib.ascii_tokens.argtypes = [p, i64, p, i64, u64, p, p, p]
     lib.ascii_tokens.restype = i64
+    lib.token_counts.argtypes = [p, i64, p, i64, u64, ctypes.POINTER(_Counts)]
+    lib.token_counts.restype = i64
+    lib.free_counts.argtypes = [ctypes.POINTER(_Counts)]
+    lib.free_counts.restype = None
     lib.collapse.argtypes = [p, p, i64, p, p, p]
     lib.collapse.restype = i64
     f64 = ctypes.c_double
@@ -481,6 +590,17 @@ def hash_slices(
     return out
 
 
+def _docs(offsets: np.ndarray, data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The checked contiguous ``(offsets, data)`` of the tokenizers."""
+    data = _bytes(data)
+    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
+    if offsets.ndim != 1 or offsets.size == 0:
+        raise ValueError("offsets must be a non-empty 1-D array")
+    if offsets[0] < 0 or offsets[-1] > data.size or (np.diff(offsets) < 0).any():
+        raise ValueError("offsets must be non-decreasing and lie inside data")
+    return offsets, data
+
+
 def ascii_tokens(
     offsets: np.ndarray, data: np.ndarray, max_len: int, seed: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
@@ -490,17 +610,12 @@ def ascii_tokens(
     Runs longer than ``max_len`` are dropped (0 keeps every run). The
     hashes equal ``hash_slices`` over the lowered bytes. Returns None
     when a doc holds a byte >= 128: Unicode case folding then differs
-    from the byte fold, so the caller takes its ``str`` path."""
-    data = _bytes(data)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    if offsets.ndim != 1 or offsets.size == 0:
-        raise ValueError("offsets must be a non-empty 1-D array")
-    if offsets[0] < 0 or offsets[-1] > data.size or (np.diff(offsets) < 0).any():
-        raise ValueError("offsets must be non-decreasing and lie inside data")
-    ndocs = offsets.size - 1
+    from the byte fold, so the caller takes its ``str`` path. Two
+    scans: one counts the runs, one fills 24 bytes per run."""
+    offsets, data = _docs(offsets, data)
     max_len = max_len if max_len > 0 else data.size
     lib = _lib()
-    args = (offsets.ctypes.data, ndocs, data.ctypes.data, max_len, _h0(seed))
+    args = (offsets.ctypes.data, offsets.size - 1, data.ctypes.data, max_len, _h0(seed))
     n = lib.ascii_tokens(*args, None, None, None)
     if n < 0:
         return None
@@ -511,6 +626,46 @@ def ascii_tokens(
         *args, hashes.ctypes.data, starts.ctypes.data, lens.ctypes.data
     )
     return hashes, starts, lens
+
+
+def token_counts(
+    offsets: np.ndarray, data: np.ndarray, max_len: int, seed: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
+    """``collapse(ascii_tokens(...)[0])`` in one scan that keeps no
+    occurrence: ``(hashes, first_start, first_len, counts)``, one entry
+    per distinct token hash in first-occurrence order, with the start
+    and length of its first run and its run count. Returns None at a
+    byte >= 128, as ``ascii_tokens`` does. Memory is O(distinct
+    tokens) and none per occurrence: the C side holds at most about
+    128 bytes per distinct token (a hash table of at most 4 slots of
+    16 bytes each, and output arrays of at most 2 entries of 32 bytes
+    each), and 32 KiB at least; the returned copies take 32 bytes per
+    distinct token. A table that cannot be allocated raises
+    ``MemoryError``."""
+    offsets, data = _docs(offsets, data)
+    max_len = max_len if max_len > 0 else data.size
+    lib = _lib()
+    out = _Counts()
+    try:
+        d = lib.token_counts(
+            offsets.ctypes.data, offsets.size - 1, data.ctypes.data, max_len,
+            _h0(seed), ctypes.byref(out),
+        )
+        if d == -2:
+            raise MemoryError("native token_counts could not allocate its tables")
+        if d < 0:
+            return None
+        return tuple(
+            np.ctypeslib.as_array((t * d).from_address(p)).copy()
+            for t, p in (
+                (ctypes.c_uint64, out.hash),
+                (ctypes.c_int64, out.start),
+                (ctypes.c_int64, out.len),
+                (ctypes.c_int64, out.count),
+            )
+        )
+    finally:
+        lib.free_counts(ctypes.byref(out))
 
 
 def collapse(

@@ -337,23 +337,25 @@ def _item_str(item) -> str:
 
 
 def _feed_tokens_arrow(sk, col, max_token_len: int, seed: int) -> bool:
-    """Object-free token feed: ``native.ascii_tokens`` tokenizes and
-    hashes every occurrence in one C pass over the Arrow buffers, and
-    the per-occurrence hashes go straight into ``add_batch_hashed``;
-    only tokens entering the top-K queue are ever lowered into Python
-    bytes. Returns False (caller falls back to the regex/str path) when
-    a document holds any non-ASCII byte — exotic case folding ('K'→'k')
-    then differs from the byte fold, so the exact str semantics take
-    over."""
-    from ..native import ascii_tokens
+    """Object-free token feed: ``native.token_counts`` tokenizes,
+    hashes and counts the batch's tokens in one C pass over the Arrow
+    buffers, keeping only the distinct ones, and their hashes go into
+    ``add_batch_hashed`` weighted by their counts; only tokens entering
+    the top-K queue are ever lowered into Python bytes (from their
+    first occurrence). The blob equals that of feeding every
+    occurrence's hash with no weights. Returns False (caller falls back
+    to the regex/str path) when a document holds any non-ASCII byte —
+    exotic case folding ('K'→'k') then differs from the byte fold, so
+    the exact str semantics take over."""
+    from ..native import token_counts
 
     if col.null_count:
         col = pc.fill_null(col, "")
     offsets, data = arrow_string_buffers(col)
-    toks = ascii_tokens(offsets, data, max_token_len, seed)
+    toks = token_counts(offsets, data, max_token_len, seed)
     if toks is None:
         return False
-    hashes, starts, lens = toks
+    hashes, starts, lens, counts = toks
 
     def key_take(sel: np.ndarray) -> np.ndarray:
         return np.asarray(
@@ -361,7 +363,7 @@ def _feed_tokens_arrow(sk, col, max_token_len: int, seed: int) -> bool:
             dtype=object,
         )
 
-    sk.add_batch_hashed(hashes, None, key_take)
+    sk.add_batch_hashed(hashes, counts, key_take)
     return True
 
 
@@ -455,8 +457,9 @@ def topk_tokens(
     scale: rather than explode()-ing a 40x token blowup through the
     JVM->Python Arrow channel, each batch is tokenized and hashed in
     one C pass over the Arrow byte buffers (``_feed_tokens_arrow`` →
-    ``native.ascii_tokens`` — zero Python token objects; occurrence
-    hashes feed ``add_batch_hashed``). Non-ASCII batches or a custom
+    ``native.token_counts`` — zero Python token objects; the batch's
+    distinct token hashes, weighted by their counts, feed
+    ``add_batch_hashed``). Non-ASCII batches or a custom
     ``token_re`` fall back to the chunked C-level regex pass. No
     explode, no shuffle of tokens — the only network traffic is sketch
     blobs.

@@ -15,20 +15,19 @@ byte-exact invertible — the per-row invariant pytest checks.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-_WORDS = None
 
-
+@functools.lru_cache(maxsize=4)
 def _vocab(size: int = 4096, seed: int = 1234) -> np.ndarray:
-    """Fixed deterministic word vocabulary (lowercase alpha)."""
-    global _WORDS
-    if _WORDS is not None and _WORDS.shape[0] == size:
-        return _WORDS
+    """Fixed deterministic word vocabulary (lowercase alpha), cached
+    per ``(size, seed)`` in the process: a reused Spark worker serves
+    corpora of several seeds."""
     rng = np.random.default_rng(seed)
     letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
     words = []
@@ -39,8 +38,9 @@ def _vocab(size: int = 4096, seed: int = 1234) -> np.ndarray:
         if w not in seen:
             seen.add(w)
             words.append(w)
-    _WORDS = np.asarray(words, dtype=object)
-    return _WORDS
+    words = np.asarray(words, dtype=object)
+    words.setflags(write=False)  # cached: shared by every caller
+    return words
 
 
 _DOMAINS_N = 10_000

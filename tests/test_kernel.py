@@ -906,3 +906,62 @@ def test_merge_mixed_negative_and_high_uint64_keys(layout):
     if layout == "heavykeeper":
         assert dict(HeavyKeeper.deserialize(merge_blobs(blobs)).list()) == want
     assert dict(a.merge(b).list()) == want
+
+
+def _occurrence_feed(sk, col, max_token_len: int, seed: int) -> bool:
+    """The token feed before ``native.token_counts``: every occurrence's
+    hash from ``ascii_tokens`` into ``add_batch_hashed`` with no
+    weights. Kept as the reference the distinct-token feed must equal."""
+    import pyarrow.compute as pc
+
+    from heavykeeper_rs_spark.kernel import arrow_string_buffers
+    from heavykeeper_rs_spark.native import ascii_tokens
+
+    if col.null_count:
+        col = pc.fill_null(col, "")
+    offsets, data = arrow_string_buffers(col)
+    toks = ascii_tokens(offsets, data, max_token_len, seed)
+    if toks is None:
+        return False
+    hashes, starts, lens = toks
+
+    def key_take(sel):
+        return np.asarray(
+            [data[s : s + l].tobytes().lower() for s, l in zip(starts[sel], lens[sel])],
+            dtype=object,
+        )
+
+    sk.add_batch_hashed(hashes, None, key_take)
+    return True
+
+
+@pytest.mark.parametrize("width,max_len", [(16384, 64), (64, 5)], ids=["exact", "contested"])
+def test_distinct_token_feed_equals_the_occurrence_feed(spark, monkeypatch, width, max_len):
+    """``_feed_tokens_arrow`` hands ``add_batch_hashed`` each batch's
+    distinct tokens with their counts; the blob equals the one the
+    occurrence feed gives, over webtext docs with a null doc and a
+    non-ASCII batch (which both feeds hand to the regex fallback)."""
+    import pyarrow as pa
+
+    from heavykeeper_rs_spark.operators import topk
+    from heavykeeper_rs_spark.operators.combine import partition_rng
+    from heavykeeper_rs_spark.sources.synth import webtext
+
+    docs = webtext(spark, 3000, seed=5, partitions=2).select("text").toArrow().column(0)
+    docs = docs.combine_chunks().to_pylist()
+    batches = [
+        pa.RecordBatch.from_pydict({"text": docs[:1000] + [None, "Tail  WORDS"]}),
+        pa.RecordBatch.from_pydict({"text": ["Ünïcode Straße café", *docs[1000:1500]]}),
+        pa.RecordBatch.from_pydict({"text": docs[1500:]}).slice(7),
+    ]
+    params = HKParams(k=40, width=width, depth=4, decay=0.9, seed=11)
+    feed = topk._feed_tokens("[a-z]+", max_len, params.seed)
+
+    def blob():
+        sk = HeavyKeeper(params, rng=partition_rng(params.seed, 3))
+        feed(sk, iter(batches))
+        return sk.serialize()
+
+    new = blob()
+    monkeypatch.setattr(topk, "_feed_tokens_arrow", _occurrence_feed)
+    assert new == blob()

@@ -273,3 +273,92 @@ def test_collapse_first_occurrence_order_and_row_order_sums():
     assert np.array_equal(words, r) and np.array_equal(first, np.arange(5000))
     assert (total == 2.0).all()
     assert all(a.size == 0 for a in native.collapse(np.zeros(0, dtype=np.uint64)))
+
+
+def _collapsed_tokens(offsets, data, max_len, seed):
+    """``token_counts``' answer built from the occurrence tokenizer:
+    ``collapse`` over ``ascii_tokens``' hashes."""
+    h, s, l = native.ascii_tokens(offsets, data, max_len, seed)
+    words, first, total = native.collapse(h)
+    return words, s[first], l[first], total.astype(np.int64)
+
+
+def _docs(*docs: bytes):
+    data = np.frombuffer(b"".join(docs), dtype=np.uint8)
+    return np.cumsum([0, *map(len, docs)]), data
+
+
+@pytest.mark.parametrize(
+    "docs,max_len",
+    [
+        ((b"",), 64),
+        ((b"", b"", b""), 64),
+        ((b"Hello, WORLDwide hello", b"wide WIDE x", b"", b"  hello"), 64),
+        ((b"split", b"run split", b"run"), 64),
+        ((b"a " + b"Z" * 70 + b" zz z", b"Q" * 65, b"q" * 64), 64),
+        ((b"a bb ccc dddd eeeee ffffff", b"ccc bb a"), 3),
+        ((b"a " + b"Z" * 70 + b" zz z 12ab_cd", b"x"), 0),
+    ],
+    ids=["one-empty-doc", "empty-docs", "repeats", "split-at-doc-boundary",
+         "over-max-len", "max-len-3", "max-len-0"],
+)
+def test_token_counts_equals_collapsed_ascii_tokens(docs, max_len):
+    offsets, data = _docs(*docs)
+    got = native.token_counts(offsets, data, max_len, 7)
+    want = _collapsed_tokens(offsets, data, max_len, 7)
+    assert [a.tolist() for a in got] == [a.tolist() for a in want]
+    assert [a.dtype for a in got] == [np.uint64, np.int64, np.int64, np.int64]
+
+
+def test_token_counts_grows_its_table_past_512_distinct():
+    rng = np.random.default_rng(3)
+    vocab = [
+        rng.integers(97, 123, n).astype(np.uint8).tobytes()
+        for n in rng.integers(1, 12, 5000)
+    ]
+    words = [vocab[i] for i in rng.zipf(1.2, 60_000) % len(vocab)]
+    docs = [b" ".join(words[i : i + 37]).upper() for i in range(0, len(words), 37)]
+    offsets, data = _docs(*docs)
+    hashes, start, length, count = native.token_counts(offsets, data, 64, 9)
+    assert hashes.size > 2000
+    want = _collapsed_tokens(offsets, data, 64, 9)
+    for a, b in zip((hashes, start, length, count), want):
+        assert np.array_equal(a, b)
+    assert count.sum() == len(words)
+
+
+def test_token_counts_of_a_sliced_arrow_array():
+    import pyarrow as pa
+
+    from heavykeeper_rs_spark.kernel import arrow_string_buffers
+
+    col = pa.array(["skip me", "Alpha beta", "", "BETA gamma alpha", "not me"]).slice(1, 3)
+    offsets, data = arrow_string_buffers(col)
+    assert offsets[0] > 0
+    hashes, start, length, count = native.token_counts(offsets, data, 64, 1)
+    assert [data[s : s + n].tobytes().lower() for s, n in zip(start, length)] == [
+        b"alpha", b"beta", b"gamma",
+    ]
+    assert count.tolist() == [2, 2, 1]
+    assert hashes.tolist() == native.hash_slices(
+        np.asarray([0, 6, 11]), np.asarray([5, 4, 5]),
+        np.frombuffer(b"alpha beta gamma", dtype=np.uint8), 1,
+    ).tolist()
+
+
+def test_token_counts_returns_none_after_counting_tokens():
+    offsets, data = _docs(b"alpha beta alpha", b"gamma", "delta é".encode())
+    assert native.token_counts(offsets, data, 64, 1) is None
+    # the same byte outside every doc's range is never read
+    counted = native.token_counts(offsets[:3], data, 64, 1)
+    assert counted[3].tolist() == [2, 1, 1]
+
+
+@pytest.mark.parametrize(
+    "offsets",
+    [[0, 9, 5, 16], [0, 17], [-1, 16], []],
+    ids=["decreasing", "past-end", "negative", "empty"],
+)
+def test_token_counts_rejects_bad_offsets(offsets):
+    with pytest.raises(ValueError):
+        native.token_counts(np.asarray(offsets, dtype=np.int64), DATA, 64, 1)

@@ -102,3 +102,14 @@ class TestTextFileSource:
 
         lines = read_text_corpus(spark, str(tmp_path), per_file=False, glob="a.txt")
         assert lines.count() == 2
+
+
+def test_vocab_cache_keys_on_the_seed():
+    """A worker that generated one seed's corpus serves another seed's
+    vocabulary, not the cached one."""
+    from heavykeeper_rs_spark.sources.synth import _vocab
+
+    a = _vocab(4096, 36)
+    b = _vocab(4096, 295)
+    assert a.tolist() != b.tolist()
+    assert _vocab(4096, 36).tolist() == a.tolist()

@@ -152,8 +152,9 @@ def token_docs(n_docs, n_vocab):
 
 def feed_tokens(sk, col):
     """The token lane as topk_tokens feeds it: 65536-doc Arrow batches
-    through _feed_tokens_arrow (one C tokenize + hash pass, then
-    add_batch_hashed)."""
+    through _feed_tokens_arrow (one C pass, native.token_counts, that
+    tokenizes, hashes and counts each batch's distinct tokens, then
+    add_batch_hashed of the distinct hashes weighted by their counts)."""
     from heavykeeper_rs_spark.operators.topk import _feed_tokens_arrow
 
     for i in range(0, len(col), 65536):
@@ -223,8 +224,9 @@ def best_ms(name, fn, reps=5):
 def collapse_lines():
     """The batch collapse (``kernel.preaggregate``) on one B-key batch
     of the reference fixture (raw int64 keys, as ``add_batch`` hands
-    them) and of token-lane occurrence hashes, and the whole string
-    lane (hash, collapse, add) on B distinct strings."""
+    them) and of token occurrence hashes (a Zipf text's shape; the
+    token lane itself collapses in ``native.token_counts``), and the
+    whole string lane (hash, collapse, add) on B distinct strings."""
     from heavykeeper_rs_spark.kernel import arrow_string_buffers, preaggregate
     from heavykeeper_rs_spark.native import ascii_tokens
     from heavykeeper_rs_spark.operators.topk import _feed_keys
@@ -235,7 +237,7 @@ def collapse_lines():
     best_ms("collapse: 1 Mi keys, reference fixture", lambda: preaggregate(keys, None, hash_fn))
     offsets, data = arrow_string_buffers(tok_col.slice(0, B // 40 + 1))
     hashes = ascii_tokens(offsets, data, 64, params.seed)[0][:B]
-    best_ms("collapse: 1 Mi token-lane hashes", lambda: preaggregate(hashes, None))
+    best_ms("collapse: 1 Mi token occurrence hashes", lambda: preaggregate(hashes, None))
     distinct = key_batches(f"user-{i:08d}" for i in rng.permutation(B))
     best_ms(
         "string lane: 1 Mi distinct strings via _feed_keys",

@@ -13,7 +13,14 @@ Starts a ``local[nproc]`` session and prints one JSON line:
   the workers run (``heavykeeper_rs_spark.worker`` when the stat-checked
   hook is active, ``zipimport`` when not);
 - ``trivial_job_s_p50``: median wall time of ``jobs`` (default 10) trivial
-  4-task ``mapInArrow`` jobs, after two warm-up jobs.
+  4-task ``mapInArrow`` jobs, after two warm-up jobs;
+- ``first_batch_wait_ms_p50``: median time, inside those jobs' tasks, from
+  the UDF's entry to its first input batch (about 40 ms on loopback TCP,
+  when a reused worker's previous task computed for less than Linux's
+  minimum delayed-ACK time);
+- ``worker_socket``: how the workers talk to the JVM, ``unix`` or ``tcp``
+  (``session.get_spark`` falls back to TCP when ``TMPDIR`` is too long
+  for a socket path, so a long ``TMPDIR`` measures TCP).
 
 Every task function imports ``heavykeeper_rs_spark`` first, as every
 library UDF does when it is unpickled in the worker.
@@ -34,9 +41,22 @@ from heavykeeper_rs_spark.session import get_spark  # noqa: E402
 
 
 def trivial(batches):
+    import os
+    import time
+
+    import pyarrow as pa
+
     import heavykeeper_rs_spark  # noqa: F401
 
-    yield from batches
+    unix = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "false").lower() == "true"
+    t0 = time.perf_counter()
+    # each task holds one row, so one batch; the loop still drains the
+    # input, which lets the worker be reused
+    for _ in batches:
+        yield pa.RecordBatch.from_pydict(
+            {"wait_ms": [(time.perf_counter() - t0) * 1e3],
+             "sock": ["unix" if unix else "tcp"]}
+        )
 
 
 def probe(batches):
@@ -65,13 +85,14 @@ def main() -> None:
     cpus = len(os.sched_getaffinity(0))
     spark = get_spark(app="worker-setup", master=f"local[{cpus}]", shuffle_partitions=cpus)
     try:
-        df = spark.range(0, 4, 1, 4).mapInArrow(trivial, "id long")
-        walls = []
+        df = spark.range(0, 4, 1, 4).mapInArrow(trivial, "wait_ms double, sock string")
+        walls, waits = [], []
         for i in range(jobs + 2):
             t0 = time.perf_counter()
-            df.collect()
+            out = df.collect()
             if i >= 2:
                 walls.append(time.perf_counter() - t0)
+                waits += out
         rows = spark.range(0, 10, 1, 10).mapInArrow(
             probe, "ms double, n_zip long, impl string"
         ).collect()
@@ -85,6 +106,8 @@ def main() -> None:
         "invalidate_impl": sorted({r.impl for r in rows}),
         "trivial_job_s_p50": round(statistics.median(walls), 4),
         "trivial_jobs": jobs,
+        "first_batch_wait_ms_p50": round(statistics.median(r.wait_ms for r in waits), 2),
+        "worker_socket": sorted({r.sock for r in waits}),
     }))
 
 
