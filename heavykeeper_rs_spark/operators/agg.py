@@ -1,7 +1,8 @@
 """Generic distributed sketch aggregation.
 
 One runner for the whole sketch family: partial build per partition
-(``mapInArrow``), salted combine (``groupBy(salt).applyInPandas``),
+(``combine.sketch_partials``: a Python RDD on the direct reader, else
+``mapInArrow``), salted combine (``groupBy(salt).applyInPandas``),
 final merge on the driver. Identical plan shape to operators/topk.py —
 the same partial stage and ``operators.combine`` tree; only the sketch
 kernel differs. One keyed projection (``agg_keyed``) and one feed
@@ -110,12 +111,12 @@ def sketch_agg(
     """Fold df[col] into a mergeable sketch; returns the merged sketch.
     Blobs decode through the magic-sniffing registry
     (``variants.deserialize_any``), so ``make`` is all a family needs."""
-    partials, n_parts = sketch_partials(
+    partials = sketch_partials(
         agg_keyed(df, col, numeric, weight_col),
         lambda pid: _seeded(make(), pid),
         _feed_values,
     )
-    return tree_fold(partials, n_parts, merge_groups, make)
+    return tree_fold(partials, merge_groups, make)
 
 
 # ---------------------------------------------------------------- wrappers
@@ -166,14 +167,14 @@ def _grouped_sketches(
     ``_feed_values``) and the per-group blob tree;
     ``finalize(group, blobs)`` emits the ``(group, out_field)`` result
     rows."""
-    partials, n_parts = sketch_partials(
+    partials = sketch_partials(
         agg_keyed(df, value_col, numeric, group_col=group_col),
         lambda pid: _seeded(make(), pid),
         _feed_values,
         max_live_groups,
     )
     out_schema = StructType([StructField("group", StringType(), False), out_field])
-    return combine.grouped_blob_tree(partials, n_parts, fan_in, finalize, out_schema)
+    return combine.grouped_blob_tree(partials, fan_in, finalize, out_schema)
 
 
 def sketch_by_group(

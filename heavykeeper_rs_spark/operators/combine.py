@@ -5,19 +5,23 @@ emits one serialized sketch per input partition (or per (partition,
 group)), a salted bounded-fan-in tree merges the blobs in the cluster,
 and the driver folds the few survivors:
 
-  partial:  ``(salt = pid % n_parts, sketch)`` rows out of
-            ``mapInArrow`` (``sketch_partials``, the only partial
-            stage: it reads plain parquet projections with pyarrow in
-            the worker when ``scan.direct_scan`` admits them, else
-            through Spark's scan; its grouped mode keeps one sketch per
-            live group and emits ``(group, salt, sketch)`` rows; the
+  partial:  ``(salt = pid % n_parts, sketch)`` rows, one per task
+            (``sketch_partials``, the only partial stage, returning a
+            ``Partials``). When ``scan.direct_scan`` admits the input,
+            its tasks read plain parquet projections with pyarrow and
+            run as one Python RDD job, with no SQL execution and no
+            Arrow round trip; otherwise Spark's scan feeds a
+            ``mapInArrow``. Its grouped mode keeps one sketch per live
+            group and emits ``(group, salt, sketch)`` rows; the
             resumable builds of ``plans.checkpoint`` run it with a
-            ``make``/``feed`` that save each blob and re-emit a saved one)
+            ``make``/``feed`` that save each blob and re-emit a saved one
   combine:  ``blob_tree`` — salted multi-level
             ``groupBy(salt).applyInPandas`` merge levels; no reducer
             ever folds more than ``fan_in`` blobs
   final:    ``fold`` — merge and decode the ≤ fan_in survivors
-            (``tree_fold`` runs combine + final for ``sketch_partials``)
+            (``tree_fold`` runs combine + final for ``sketch_partials``;
+            when no tree level runs, the direct reader's rows are
+            collected straight from its RDD)
 
 Blobs of every sketch kind carry a 4-byte magic, so ``merge`` needs no
 kind argument: HeavyKeeper blobs fold through ``kernel.merge_blobs``,
@@ -28,15 +32,18 @@ kind decodes through ``variants.deserialize_any`` and folds with
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from itertools import chain
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from functools import cached_property
+from itertools import chain, islice
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
+from pyspark import RDD, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -48,7 +55,7 @@ from pyspark.sql.types import (
 from ..kernel import _MAGIC as _HK_MAGIC
 from ..kernel import merge_blobs
 from ..variants import deserialize_any
-from .scan import _cls, direct_scan, estimate_partitions
+from .scan import direct_scan, estimate_partitions
 
 BLOB_SCHEMA = StructType(
     [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
@@ -145,26 +152,55 @@ def blob_tree(
         return pd.DataFrame(row)
 
     out = partials
-    groups = max(int(n_parts), 1)
-    fan_in = max(int(fan_in), 2)  # fan_in <= 1 would never converge
-    while groups > fan_in:
+    fan_in = max(int(fan_in), 2)
+    for _ in range(tree_levels(n_parts, fan_in)):
         out = (
             out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
             .groupBy(*keys, "salt")
             .applyInPandas(merge_level, partials.schema)
         )
-        groups = -(-groups // fan_in)  # ceil div
     return out
 
 
-def sketch_partials(
-    keyed: DataFrame, make, feed, max_live_groups: int | None = None
-) -> tuple[DataFrame, int]:
-    """The partial stage of every sketch operator, in ``mapInArrow``:
-    ``make(pid)`` builds one sketch per task, ``feed(sketch, batches)``
-    consumes the task's non-empty Arrow batches, and a task that saw
-    any rows emits one ``(salt = pid % n_parts, blob)`` row. Returns
-    ``(partials, n_parts)`` for ``blob_tree``.
+def tree_levels(n_parts: int, fan_in: int) -> int:
+    """Merge levels ``blob_tree`` runs over ``n_parts`` salts."""
+    groups, fan_in, levels = max(int(n_parts), 1), max(int(fan_in), 2), 0
+    while groups > fan_in:  # fan_in <= 1 would never converge
+        groups = -(-groups // fan_in)  # ceil div
+        levels += 1
+    return levels
+
+
+@dataclass(frozen=True)
+class Partials:
+    """The ``(…, salt, sketch)`` rows of one ``sketch_partials`` stage.
+
+    ``n_parts`` is the count the salts wrap at: the exact task count on
+    the direct reader, an estimate on Spark's. On the direct reader
+    ``rdd`` holds the rows as tuples, out of a Python RDD job that
+    starts no SQL execution, and ``frame`` is ``createDataFrame`` of
+    that RDD, built on first use (a merge-tree level, a grouped tree or
+    the checkpoint tree reads it). On Spark's reader ``rdd`` is None
+    and ``frame`` is the ``mapInArrow`` stage."""
+
+    n_parts: int
+    rdd: RDD | None
+    build_frame: Callable[[], DataFrame]
+
+    @property
+    def direct(self) -> bool:
+        return self.rdd is not None
+
+    @cached_property
+    def frame(self) -> DataFrame:
+        return self.build_frame()
+
+
+def sketch_partials(keyed: DataFrame, make, feed, max_live_groups: int | None = None) -> Partials:
+    """The partial stage of every sketch operator: ``make(pid)`` builds
+    one sketch per task, ``feed(sketch, batches)`` consumes the task's
+    non-empty Arrow batches, and a task that saw any rows emits one
+    ``(salt = pid % n_parts, blob)`` row.
 
     With ``max_live_groups`` set, ``keyed`` leads with a
     ``group_column`` and the stage keeps one sketch per group, at most
@@ -172,51 +208,55 @@ def sketch_partials(
     gets each group's slice of each batch without the group column,
     and the rows are ``(group, salt, blob)``.
 
-    When ``scan.direct_scan`` admits ``keyed``, each task reads its
-    parquet units itself and ``n_parts`` is the exact task count;
-    otherwise Spark's scan feeds the stage and ``n_parts`` is
-    estimated from the file listing."""
+    When ``scan.direct_scan`` admits ``keyed``, task ``t`` of a
+    ``parallelize(range(n_parts), n_parts)`` RDD reads its parquet
+    units itself and ``n_parts`` is the exact task count. Otherwise
+    Spark's scan feeds the same task body in ``mapInArrow``, which
+    wraps its rows in record batches of at most ``max_live_groups``
+    rows, so no more blobs wait in a task than sketches stay live, and
+    ``n_parts`` is estimated from the file listing."""
     direct = direct_scan(keyed)
-    if direct is None:
-        source, n_parts = keyed, max(estimate_partitions(keyed), 1)
-    else:
-        source, n_parts = direct.frame(keyed.sparkSession), len(direct.tasks)
+    spark = keyed.sparkSession
+    schema = BLOB_SCHEMA if max_live_groups is None else GROUP_BLOB_SCHEMA
+    n_parts = max(estimate_partitions(keyed), 1) if direct is None else len(direct.tasks)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if direct is not None:
-            batches = direct.read(batches)
+    def task(pid: int, batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         batches = (b for b in batches if b.num_rows)
         first = next(batches, None)
         if first is None:
             return
-        pid = partition_id()
+        batches = chain([first], batches)
         if max_live_groups is not None:
             yield from _group_partials(
-                chain([first], batches), lambda: make(pid), feed,
-                max_live_groups, pid % n_parts,
+                batches, lambda: make(pid), feed, max_live_groups, pid % n_parts
             )
             return
         sk = make(pid)
-        feed(sk, chain([first], batches))
-        yield pa.RecordBatch.from_pydict(
-            {
-                "salt": pa.array([pid % n_parts], type=pa.int32()),
-                "sketch": pa.array([sk.serialize()], type=pa.binary()),
-            }
+        feed(sk, batches)
+        yield pid % n_parts, sk.serialize()
+
+    if direct is not None:
+        rdd = spark.sparkContext.parallelize(range(n_parts), n_parts).mapPartitionsWithIndex(
+            lambda t, ids: task(t, direct.read(ids))
         )
+        return Partials(n_parts, rdd, lambda: spark.createDataFrame(rdd, schema))
 
-    schema = BLOB_SCHEMA if max_live_groups is None else GROUP_BLOB_SCHEMA
-    return source.mapInArrow(fn, schema), n_parts
+    arrow_schema = to_arrow_schema(schema)
+    rows_per_batch = max(int(max_live_groups or 1), 1)
 
+    def arrow_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = task(partition_id(), batches)
+        while block := list(islice(rows, rows_per_batch)):
+            cols = [pa.array(c, f.type) for c, f in zip(zip(*block), arrow_schema)]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-def reads_directly(partials: DataFrame) -> bool:
-    """Whether a ``sketch_partials`` stage reads the direct reader's ``Range`` of tasks."""
-    return _cls(partials._jdf.queryExecution().analyzed().child()) == "Range"
+    frame = keyed.mapInArrow(arrow_task, schema)
+    return Partials(n_parts, None, lambda: frame)
 
 
 def _group_partials(
     batches: Iterator[pa.RecordBatch], make, feed, max_live_groups: int, salt: int
-) -> Iterator[pa.RecordBatch]:
+) -> Iterator[tuple[str, int, bytes]]:
     """Grouped mode of ``sketch_partials``: per-(task, group) sketches
     with BOUNDED memory in the group dimension.
 
@@ -239,17 +279,9 @@ def _group_partials(
     cap = max(int(max_live_groups), 2)
     live: dict[str, object] = {}  # iteration order: least recently touched first
 
-    def emit(groups: list[str]) -> pa.RecordBatch:
-        groups = sorted(groups)
-        return pa.RecordBatch.from_pydict(
-            {
-                "group": pa.array(groups, type=pa.string()),
-                "salt": pa.array([salt] * len(groups), type=pa.int32()),
-                "sketch": pa.array(
-                    [live.pop(g).serialize() for g in groups], type=pa.binary()
-                ),
-            }
-        )
+    def emit(groups: list[str]) -> Iterator[tuple[str, int, bytes]]:
+        for g in sorted(groups):
+            yield g, salt, live.pop(g).serialize()
 
     for batch in batches:
         d = pc.dictionary_encode(pc.fill_null(batch.column(0), "None"))
@@ -263,13 +295,12 @@ def _group_partials(
             lo, hi = bounds[gi], bounds[gi + 1]
             feed(sk, [values.slice(lo, hi - lo)])
             if len(live) > cap:
-                yield emit(list(live)[: len(live) - cap // 2])
-    if live:
-        yield emit(list(live))
+                yield from emit(list(live)[: len(live) - cap // 2])
+    yield from emit(list(live))
 
 
 def grouped_blob_tree(
-    partials: DataFrame, n_parts: int, fan_in: int, finalize, out_schema: StructType
+    partials: Partials, fan_in: int, finalize, out_schema: StructType
 ) -> DataFrame:
     """Combine and final of grouped ``sketch_partials`` output: one
     ``blob_tree`` per group, then ``finalize(group, blobs)`` over each
@@ -278,7 +309,7 @@ def grouped_blob_tree(
     groups) of them, independent of the row count — and a Zipf-hot
     group costs each mapper bounded sketch memory instead of landing
     its row set on one reducer."""
-    tree = blob_tree(partials, n_parts, fan_in, keys=("group",))
+    tree = blob_tree(partials.frame, partials.n_parts, fan_in, keys=("group",))
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         return finalize(str(pdf["group"].iloc[0]), list(pdf["sketch"]))
@@ -286,10 +317,19 @@ def grouped_blob_tree(
     return tree.groupBy("group").applyInPandas(final, out_schema)
 
 
-def tree_fold(partials: DataFrame, n_parts: int, fan_in: int, empty):
+def final_blobs(partials: Partials, fan_in: int) -> list[bytes]:
+    """The ≤ fan_in blobs the driver folds: on the direct reader with
+    no tree level to run, the rows collected straight from its RDD;
+    otherwise the tree's ``sketch`` column, collected as Arrow."""
+    if partials.direct and not tree_levels(partials.n_parts, fan_in):
+        return [row[-1] for row in partials.rdd.collect()]
+    tree = blob_tree(partials.frame, partials.n_parts, fan_in)
+    return tree.select("sketch").toArrow().column(0).to_pylist()
+
+
+def tree_fold(partials: Partials, fan_in: int, empty):
     """Combine and final of ``sketch_partials`` output: the blob tree,
     a driver collect of the ≤ fan_in survivors, and the fold —
     ``empty()`` when no partition had rows."""
-    tree = blob_tree(partials, n_parts, fan_in)
-    blobs = [r["sketch"] for r in tree.select("sketch").collect()]
+    blobs = final_blobs(partials, fan_in)
     return fold(blobs) if blobs else empty()

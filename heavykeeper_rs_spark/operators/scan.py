@@ -29,14 +29,15 @@ relation on ``file:`` URIs, with no reader setting that changes the
 result), it returns a ``DirectScan``: read units (whole files, or row
 groups when there are fewer files than cores) packed into an exact
 number of tasks, which the partial stage reads with ``pyarrow.parquet``
-in the worker. Every other plan gets None and keeps Spark's reader.
+in the worker, as the tasks of a Python RDD (task ids in, no Spark SQL
+around them). Every other plan gets None and keeps Spark's reader.
 """
 
 from __future__ import annotations
 
 import heapq
 import warnings
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 from functools import cached_property
 from typing import NamedTuple
@@ -277,27 +278,21 @@ class DirectScan:
     """A keyed projection the partial stage reads itself: ``tasks[t]``
     lists the ``(file URI, row groups or None for all)`` units of task
     ``t``, read in batches of at most ``batch_rows`` rows. The unit
-    list travels in the stage's closure, O(files) bytes."""
+    list travels in the stage's closure, O(files) bytes; the stage's
+    task ``t`` is partition ``t`` of ``parallelize(range(len(tasks)))``."""
 
     columns: tuple[_Column, ...]
     tasks: tuple[tuple[tuple[str, tuple[int, ...] | None], ...], ...]
     batch_rows: int
     case_sensitive: bool
 
-    def frame(self, spark) -> DataFrame:
-        """One row per task, in its own partition: the ``mapInArrow``
-        input whose row ``t`` the worker turns into task ``t``'s units."""
-        n = len(self.tasks)
-        return spark.range(0, n, 1, n)
-
-    def read(self, ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def read(self, ids: Iterable[int]) -> Iterator[pa.RecordBatch]:
         """Worker side: the batches of every task id in ``ids``, with
         the projection's names, widenings and nulls — what Spark's
-        reader would hand the same ``mapInArrow``."""
-        for b in ids:
-            for t in b.column(0).to_pylist():
-                for uri, groups in self.tasks[t]:
-                    yield from self._read_file(uri, groups)
+        reader would hand a ``mapInArrow`` over the projection."""
+        for t in ids:
+            for uri, groups in self.tasks[t]:
+                yield from self._read_file(uri, groups)
 
     def _read_file(self, uri: str, groups) -> Iterator[pa.RecordBatch]:
         fs, path = _filesystem(uri)

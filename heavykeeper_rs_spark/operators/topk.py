@@ -24,8 +24,9 @@ Scale notes (100 TB / 1000-executor thinking):
   (``topk_keyed``, with the group column when grouped, or
   ``token_keyed``). A plain parquet projection is
   read by the direct reader (``scan.direct_scan``: pyarrow in the
-  worker, no JVM row→Arrow transfer; its plan is ``MapInArrow`` over a
-  ``Range`` of read tasks, with no FileScan); any other plan keeps
+  worker, no JVM row→Arrow transfer; its tasks run as a Python RDD,
+  and the merge levels read them as ``createDataFrame`` of that RDD,
+  with no FileScan); any other plan keeps
   Spark's scan, whose ``ReadSchema`` in ``.explain`` names the one
   pruned column. ``tools/capture_plans.py`` states which reader each
   stage takes; PLANS.md captures the plans.
@@ -223,10 +224,10 @@ def topk_partials(
     variant: str = "topk",
     group_col: str | None = None,
     max_live_groups: int = 4096,
-) -> tuple[DataFrame, int]:
+) -> combine.Partials:
     """The partial stage of ``topk_sketch`` (and, with ``group_col``,
     of ``topk_by_group``): ``topk_keyed`` into one sketch per task, or
-    per (task, group). Returns ``(partials, n_parts)``."""
+    per (task, group)."""
     return sketch_partials(
         topk_keyed(df, col, weight_col, group_col),
         lambda pid: _make_sketch(variant, params, partition_rng(params.seed, pid)),
@@ -268,10 +269,8 @@ def topk_sketch(
     if variant not in VARIANTS:
         raise ValueError(f"unknown variant {variant!r}; one of {sorted(VARIANTS)}")
     params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
-    partials, n_parts = topk_partials(df, col, params, weight_col, variant)
-    return tree_fold(
-        partials, n_parts, merge_groups, lambda: _make_sketch(variant, params, None)
-    )
+    partials = topk_partials(df, col, params, weight_col, variant)
+    return tree_fold(partials, merge_groups, lambda: _make_sketch(variant, params, None))
 
 
 def topk(
@@ -421,10 +420,9 @@ def token_partials(
     params: HKParams,
     token_re: str = "[a-z]+",
     max_token_len: int = 64,
-) -> tuple[DataFrame, int]:
+) -> combine.Partials:
     """The partial stage of ``topk_tokens``: ``token_keyed`` straight
-    into one in-kernel-tokenizing sketch per task. Returns
-    ``(partials, n_parts)``."""
+    into one in-kernel-tokenizing sketch per task."""
     return sketch_partials(
         token_keyed(df, text_col),
         lambda pid: HeavyKeeper(params, rng=partition_rng(params.seed, pid)),
@@ -468,8 +466,8 @@ def topk_tokens(
         k=_track_k(k, tie_break_key, candidates),
         width=width, depth=depth, decay=decay, seed=seed,
     )
-    partials, n_parts = token_partials(df, text_col, params, token_re, max_token_len)
-    sk = tree_fold(partials, n_parts, merge_groups, lambda: HeavyKeeper(params))
+    partials = token_partials(df, text_col, params, token_re, max_token_len)
+    sk = tree_fold(partials, merge_groups, lambda: HeavyKeeper(params))
     return _result_df(df.sparkSession, sk, k, tie_break_key)
 
 
@@ -533,10 +531,8 @@ def topk_by_group(
             }
         )
 
-    partials, n_parts = topk_partials(
-        df, key_col, params, weight_col, variant, group_col, max_live_groups
-    )
-    return combine.grouped_blob_tree(partials, n_parts, fan_in, finalize, out_schema)
+    partials = topk_partials(df, key_col, params, weight_col, variant, group_col, max_live_groups)
+    return combine.grouped_blob_tree(partials, fan_in, finalize, out_schema)
 
 
 def contains_top_k(df: DataFrame, col: str, sketch) -> DataFrame:

@@ -5,8 +5,8 @@ partial (per-partition) sketches ARE the job state, so checkpointing
 them makes the whole aggregation resumable:
 
 - the partial stage is ``operators.combine.sketch_partials`` (the direct
-  reader, ``MapInArrow`` over ``Range``, when ``scan.direct_scan``
-  admits the input); each task that saw rows atomically writes
+  reader, a Python RDD of read tasks, when ``scan.direct_scan`` admits
+  the input); each task that saw rows atomically writes
   ``{dir}/partials/part-{pid}.bin`` (temp + rename), the bytes it
   emits, plus a metrics JSON line (rows, tracked, mem_bytes, seconds,
   job token). A task with no rows writes and emits nothing, as in every
@@ -19,10 +19,12 @@ them makes the whole aggregation resumable:
   refused, not silently merged, and the driver's decode refuses a saved
   blob of another sketch family;
 - the combine stage is the SAME bounded-fan-in merge tree as the
-  non-checkpointed paths (``operators.combine.blob_tree``, salted by
+  non-checkpointed paths (``operators.combine.final_blobs``, salted by
   the partial stage's exact task count on either reader; no reducer
   ever folds more than ``fan_in`` blobs — at 10^5 partitions the
-  critical path is O(fan_in · log_fan_in(n)) merges, not one O(n) fold);
+  critical path is O(fan_in · log_fan_in(n)) merges, not one O(n) fold;
+  with no level to run, the direct reader's blobs are collected
+  straight from its RDD);
 - the final merged sketch is written to ``{dir}/final.bin``; a
   completed job resumes in O(1).
 
@@ -160,11 +162,16 @@ def _checkpointed_sketch(
         }
         _atomic_write(f"{pdir}/part-{pid:05d}.metrics.json", json.dumps(metrics).encode())
 
-    partials, _ = combine.sketch_partials(keyed, make, feed_and_save)
-    tasks = partials.rdd.getNumPartitions()
+    partials = combine.sketch_partials(keyed, make, feed_and_save)
+    if not partials.direct:  # salt by task id: Spark's reader salts by an estimate
+        frame = partials.frame
+        partials = combine.Partials(
+            frame.rdd.getNumPartitions(),
+            None,
+            lambda: frame.withColumn("salt", F.spark_partition_id()),
+        )
     lane = keyed.schema.fields[0].dataType.simpleString()
-    direct = combine.reads_directly(partials)
-    token = _params_token(params, lineage, tasks, direct, mode, lane)
+    token = _params_token(params, lineage, partials.n_parts, partials.direct, mode, lane)
     token_path = f"{ckpt_dir}/TOKEN"
     if not os.path.exists(token_path):
         _atomic_write(token_path, token.encode())
@@ -180,10 +187,7 @@ def _checkpointed_sketch(
         sk = HeavyKeeper.deserialize(_read(final_path))
         return sk, CheckpointReport(resumed, resumed, 0, True)
 
-    # salt by task id: on Spark's reader sketch_partials salts by an estimate
-    partials = partials.withColumn("salt", F.spark_partition_id())
-    tree = combine.blob_tree(partials, tasks, fan_in)
-    blobs = [r["sketch"] for r in tree.select("sketch").collect()]
+    blobs = combine.final_blobs(partials, fan_in)
     # partials come from disk: refuse a valid blob of another family
     sk = HeavyKeeper.deserialize(combine.merge(blobs)) if blobs else HeavyKeeper(params)
     _atomic_write(final_path, sk.serialize())

@@ -280,9 +280,10 @@ def _bins(ckpt):
 
 def test_checkpoint_takes_the_direct_reader(spark, row_groups, tmp_path, monkeypatch):
     """The checkpointed build runs the one partial stage: on a plain
-    parquet read it reads the files itself (a ``Range`` leaf, no file
-    relation), saves the blobs ``topk_partials`` emits, and a resumed
-    task emits exactly the bytes of its file."""
+    parquet read it reads the files itself (the stage reads directly;
+    its rows' plan is the RDD of its tasks, with no file relation),
+    saves the blobs ``topk_partials`` emits, and a resumed task emits
+    exactly the bytes of its file."""
     from collections import Counter
 
     from heavykeeper_rs_spark.operators import combine
@@ -298,23 +299,50 @@ def test_checkpoint_takes_the_direct_reader(spark, row_groups, tmp_path, monkeyp
     monkeypatch.setattr(combine, "sketch_partials", spy)
     ckpt = str(tmp_path / "direct")
     sk, rep = topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
-    (partials, n_parts), = stages
-    plan = partials._jdf.queryExecution().optimizedPlan().toString()
-    assert "Range (0, " in plan and "Relation" not in plan
+    partials, = stages
+    n_parts = partials.n_parts
+    plan = partials.frame._jdf.queryExecution().optimizedPlan().toString()
+    assert partials.direct and "LogicalRDD" in plan and "Relation" not in plan
     assert rep.computed_partitions == rep.total_partitions == n_parts > 1
     with open(f"{ckpt}/TOKEN") as f:
         token = f.read()
     assert token.endswith(f";tasks={n_parts};reader=direct")
     assert [m["token"] for m in read_metrics(ckpt)] == [token] * n_parts
     saved = _bins(ckpt)
-    want, _ = topk_partials(row_groups, "k", PARAMS)
-    assert Counter(saved.values()) == Counter(r["sketch"] for r in want.collect())
+    want = topk_partials(row_groups, "k", PARAMS)
+    assert Counter(saved.values()) == Counter(blob for _, blob in want.rdd.collect())
     # every file exists now: the stage emits the saved bytes, undecoded
-    assert Counter(r["sketch"] for r in partials.collect()) == Counter(saved.values())
+    assert Counter(blob for _, blob in partials.rdd.collect()) == Counter(saved.values())
     os.remove(f"{ckpt}/final.bin")
     sk2, rep2 = topk_checkpointed(row_groups, "k", PARAMS, ckpt, lineage="rg")
     assert rep2.resumed_partitions == rep2.total_partitions == n_parts
     assert sk2.list() == sk.list() and _bins(ckpt) == saved
+
+
+def test_checkpoint_resumes_a_directory_of_the_same_layout(spark, row_groups, tmp_path):
+    """A directory in the layout the direct reader's checkpoints have
+    had since tokens name the reader (this token, and task ``t``'s blob
+    in ``part-{t:05d}.bin``) resumes with its token unchanged and every
+    saved partial reused."""
+    from heavykeeper_rs_spark.operators.topk import topk_partials
+
+    partials = topk_partials(row_groups, "k", PARAMS)
+    n = partials.n_parts
+    ckpt = tmp_path / "saved"
+    (ckpt / "partials").mkdir(parents=True)
+    token = (
+        "mode=topk;lane=bigint;k=10;w=2048;d=4;decay=0.9;seed=12345;"
+        f"lineage=rg;tasks={n};reader=direct"
+    )
+    (ckpt / "TOKEN").write_text(token)
+    for t, blob in partials.rdd.collect():  # the salt is the task id
+        (ckpt / "partials" / f"part-{t:05d}.bin").write_bytes(blob)
+    sk, rep = topk_checkpointed(row_groups, "k", PARAMS, str(ckpt), lineage="rg")
+    assert (ckpt / "TOKEN").read_text() == token
+    assert rep.resumed_partitions == rep.total_partitions == n > 1
+    assert rep.computed_partitions == 0 and read_metrics(str(ckpt)) == []
+    fresh, _ = topk_checkpointed(row_groups, "k", PARAMS, str(tmp_path / "fresh"), lineage="rg")
+    assert sk.list() == fresh.list()
 
 
 def test_checkpoint_refuses_the_old_token_format(spark, events, tmp_path):

@@ -28,6 +28,7 @@ from heavykeeper_rs_spark.operators.topk import (
     topk_by_group,
     topk_keyed,
     topk_partials,
+    topk_sketch,
     topk_tokens,
 )
 from heavykeeper_rs_spark.sketches.hll import HLL
@@ -104,8 +105,7 @@ def test_batches_are_what_spark_reads(spark, df):
         direct = scan.direct_scan(keyed)
     finally:
         spark.conf.set(key, before)
-    ids = pa.record_batch([pa.array(range(len(direct.tasks)), pa.int64())], names=["id"])
-    batches = list(direct.read(iter([ids])))
+    batches = list(direct.read(range(len(direct.tasks))))
     assert {b.schema for b in batches} == {pa.schema([("__key", pa.int64()), ("__w", pa.int64())])}
     assert max(b.num_rows for b in batches) == direct.batch_rows == 300
     got = pa.Table.from_batches(batches).to_pylist()
@@ -207,10 +207,52 @@ def test_row_group_units_make_exact_partial_count(spark, tmp_path):
     pq.write_table(pa.table({"k": pa.array(np.arange(8000), pa.int64())}), path,
                    row_group_size=1000)
     df = spark.read.parquet(path)
-    partials, n_parts = topk_partials(df, "k", HKParams(k=8, width=512, depth=4))
+    partials = topk_partials(df, "k", HKParams(k=8, width=512, depth=4))
     par = spark.sparkContext.defaultParallelism
-    assert n_parts == min(8, par)
-    assert partials.count() == min(8, n_parts)
+    assert partials.direct and partials.n_parts == min(8, par)
+    assert partials.rdd.count() == min(8, partials.n_parts)
+
+
+def test_driver_final_topk_is_one_rdd_job(spark, df):
+    """With no merge level to run (``n_parts`` <= ``merge_groups``), a
+    ``topk_sketch`` over the direct reader runs exactly one Spark job,
+    of ``n_parts`` tasks, and starts no SQL execution."""
+    sc = spark.sparkContext
+    n_parts = topk_partials(df, "k", HKParams(k=8, width=512, depth=4)).n_parts
+    assert not combine.tree_levels(n_parts, 64)
+    executions = spark._jsparkSession.sharedState().statusStore()
+    before = executions.executionsCount()
+    sc.setJobGroup("direct-final", "driver-final topk_sketch")
+    try:
+        topk_sketch(df, "k", k=8, width=512)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("direct-final")
+    assert [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(job).stageIds] == [n_parts]
+    assert executions.executionsCount() == before
+
+
+def test_merge_level_over_direct_read_equals_exact(spark, tmp_path):
+    """``merge_groups=2`` over a 4-task direct read runs one tree level,
+    over ``createDataFrame`` of the stage's RDD, and equals DuckDB's
+    exact counts."""
+    rng = np.random.default_rng(11)
+    keys = pa.array(rng.integers(0, 30, 4000), mask=rng.random(4000) < 0.05)
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(pa.table({"k": keys}), path, row_group_size=1000)
+    df = spark.read.parquet(path)
+    partials = topk_partials(df, "k", HKParams(k=8, width=512, depth=4))
+    assert partials.direct and partials.n_parts == 4
+    assert combine.tree_levels(partials.n_parts, 2) == 1
+    exact = _exact(
+        pq.read_table(path),
+        "SELECT CAST(k AS VARCHAR), count(*) AS n FROM rows WHERE k IS NOT NULL "
+        "GROUP BY 1 ORDER BY n DESC, 1 LIMIT 10",
+    )
+    got = topk(df, "k", k=10, width=4096, tie_break_key=True, merge_groups=2)
+    assert _topk_rows(got) == exact
 
 
 def test_grouped_gate(spark, df, tmp_path):
@@ -294,11 +336,9 @@ def test_grouped_final_folds_at_most_fan_in(spark):
     ev = spark.range(6000).select(
         (F.col("id") % 3).cast("string").alias("bucket"), (F.col("id") % 7).alias("key")
     ).repartition(20)
-    partials, n_parts = topk_partials(
-        ev, "key", HKParams(k=4, width=256, depth=4), group_col="bucket"
-    )
-    assert partials.agg(F.max("salt")).collect()[0][0] < n_parts
-    tree = combine.blob_tree(partials, n_parts, 4, keys=("group",))
+    partials = topk_partials(ev, "key", HKParams(k=4, width=256, depth=4), group_col="bucket")
+    assert partials.frame.agg(F.max("salt")).collect()[0][0] < partials.n_parts
+    tree = combine.blob_tree(partials.frame, partials.n_parts, 4, keys=("group",))
     per_group = tree.groupBy("group").count().collect()
     assert len(per_group) == 3
     assert max(r["count"] for r in per_group) <= 4

@@ -119,9 +119,16 @@ def _typed_table(n=200):
     )
 
 
+def _partials(df, col, weight_col=None):
+    return topk_partials(df, col, HKParams(k=8, width=256, depth=4), weight_col)
+
+
+def _plan(partials) -> str:
+    return partials.frame._jdf.queryExecution().executedPlan().toString()
+
+
 def _partials_plan(df, col, weight_col=None) -> str:
-    partials, _ = topk_partials(df, col, HKParams(k=8, width=256, depth=4), weight_col)
-    return partials._jdf.queryExecution().executedPlan().toString()
+    return _plan(_partials(df, col, weight_col))
 
 
 @pytest.fixture
@@ -193,8 +200,10 @@ def test_spark_reader_kept(spark, typed_dir, monkeypatch, shape):
 )
 def test_direct_reader_taken(spark, typed_dir, col, weight_col):
     """A plain bigint, int32→bigint widening, string, binary and the
-    weighted (__key, __w) pair read with pyarrow in the worker: no
-    FileScan in the partial stage."""
-    df = spark.read.parquet(typed_dir)
-    plan = _partials_plan(df, col, weight_col)
-    assert "FileScan" not in plan and "MapInArrow" in plan
+    weighted (__key, __w) pair read with pyarrow in the worker: the
+    stage reads directly, and its rows' plan is the RDD of its tasks,
+    with no FileScan or file relation."""
+    partials = _partials(spark.read.parquet(typed_dir), col, weight_col)
+    plan = _plan(partials)
+    assert partials.direct
+    assert "ExistingRDD" in plan and "FileScan" not in plan and "Relation" not in plan

@@ -14,14 +14,17 @@
 
 The sketch top-k queries materialize internally (their returned
 DataFrame is a local result), so for those the capture is the
-distributed part that actually runs: the keyed projection -> mapInArrow
-partial stage, built with the library's own partial-stage functions
-(``topk_partials``, ``token_partials``) and the entry's parameters.
-Their files start with the reader the stage takes, from the library's
-own gate (``scan.direct_scan`` on the stage's keyed projection): the
-direct parquet reader (MapInArrow over a Range of read tasks) or
-Spark's scan (MapInArrow over a FileScan). Every other query is
-captured as the DataFrame the entry returns.
+distributed part that actually runs: the partial stage, built with the
+library's own partial-stage functions (``topk_partials``,
+``token_partials``) and the entry's parameters. Their files start with
+the reader the stage takes (``Partials.direct``, from the library's
+gate ``scan.direct_scan``). On Spark's scan the plan is MapInArrow over
+a FileScan of the keyed projection. The direct parquet reader runs its
+read tasks as a Python RDD, outside Spark SQL; the plan captured is
+``createDataFrame`` of that RDD (``Scan ExistingRDD``), the leaf a
+merge-tree level or a grouped tree reads, and a driver-final build
+collects the RDD without it. Every other query is captured as the
+DataFrame the entry returns.
 """
 
 from __future__ import annotations
@@ -36,13 +39,7 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from heavykeeper_rs_spark.kernel import HKParams  # noqa: E402
-from heavykeeper_rs_spark.operators.scan import direct_scan  # noqa: E402
-from heavykeeper_rs_spark.operators.topk import (  # noqa: E402
-    token_keyed,
-    token_partials,
-    topk_keyed,
-    topk_partials,
-)
+from heavykeeper_rs_spark.operators.topk import token_partials, topk_partials  # noqa: E402
 from heavykeeper_rs_spark.session import get_spark  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -64,34 +61,26 @@ def _params(width: int, depth: int) -> HKParams:
     return HKParams(k=256, width=width, depth=depth, decay=0.9, seed=12345)
 
 
-def _topk_stage(df, col, params, weight_col=None):
-    return topk_keyed(df, col, weight_col), topk_partials(df, col, params, weight_col)[0]
-
-
-def _token_stage(df, params):
-    return token_keyed(df, "text"), token_partials(df, "text", params)[0]
-
-
 def _weighted_parts(spark, sf_dir):
     # the entry's feed: one pre-aggregated (pk, SUM(q)) row per part
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
         F.col("l_partkey").cast("long").alias("pk")
     ).agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
-    return _topk_stage(li, "pk", _params(262144, 5), weight_col="q")
+    return topk_partials(li, "pk", _params(262144, 5), weight_col="q")
 
 
-#: partial stages of the internally-materializing sketch queries, as
-#: (keyed projection, partials)
+#: partial stages (``combine.Partials``) of the internally-materializing
+#: sketch queries
 SKETCH_STAGES = {
-    "hk_topk_event_type": lambda spark, sf: _topk_stage(
+    "hk_topk_event_type": lambda spark, sf: topk_partials(
         spark.read.parquet(f"{sf}/events.parquet"), "event_type", _params(1024, 4)
     ),
-    "hk_topk_user": lambda spark, sf: _topk_stage(
+    "hk_topk_user": lambda spark, sf: topk_partials(
         spark.read.parquet(f"{sf}/events.parquet"), "user_id", _params(65536, 4)
     ),
     "hk_weighted_topk_part": _weighted_parts,
-    "hk_topk_tokens": lambda spark, sf: _token_stage(
-        spark.read.parquet(f"{sf}/documents.parquet"), _params(65536, 4)
+    "hk_topk_tokens": lambda spark, sf: token_partials(
+        spark.read.parquet(f"{sf}/documents.parquet"), "text", _params(65536, 4)
     ),
 }
 SKETCH_STAGES["hk_topk_tokens_inkernel"] = SKETCH_STAGES["hk_topk_tokens"]
@@ -99,11 +88,15 @@ SKETCH_STAGES["hk_topk_tokens_inkernel"] = SKETCH_STAGES["hk_topk_tokens"]
 
 def plan_df(name: str, spark, sf_dir: str):
     """The DataFrame whose plan is captured for ``name``, and for a
-    sketch stage the reader ``scan.direct_scan`` picks for it."""
+    sketch stage the reader it takes."""
     if name in SKETCH_STAGES:
-        keyed, partials = SKETCH_STAGES[name](spark, sf_dir)
-        reader = "direct parquet (pyarrow in the worker)" if direct_scan(keyed) else "Spark scan"
-        return partials, reader
+        partials = SKETCH_STAGES[name](spark, sf_dir)
+        reader = (
+            f"direct parquet (pyarrow in the worker; a Python RDD, tasks: {partials.n_parts})"
+            if partials.direct
+            else "Spark scan"
+        )
+        return partials.frame, reader
     return entrymod.queries()[name](spark, sf_dir), None
 
 

@@ -14,13 +14,19 @@ Starts a ``local[nproc]`` session and prints one JSON line:
   hook is active, ``zipimport`` when not);
 - ``trivial_job_s_p50``: median wall time of ``jobs`` (default 10) trivial
   4-task ``mapInArrow`` jobs, after two warm-up jobs;
+- ``trivial_rdd_job_s_p50``: the same for trivial 4-task Python RDD jobs
+  (``parallelize(range(4), 4).mapPartitions``), the launcher of the
+  direct reader's partial stage;
 - ``first_batch_wait_ms_p50``: median time, inside those jobs' tasks, from
   the UDF's entry to its first input batch (about 40 ms on loopback TCP,
   when a reused worker's previous task computed for less than Linux's
   minimum delayed-ACK time);
 - ``worker_socket``: how the workers talk to the JVM, ``unix`` or ``tcp``
   (``session.get_spark`` falls back to TCP when ``TMPDIR`` is too long
-  for a socket path, so a long ``TMPDIR`` measures TCP).
+  for a socket path, so a long ``TMPDIR`` measures TCP);
+- ``worker_daemons``: distinct parent pids of the workers that ran one
+  4-task ``mapInArrow`` job and one 4-task RDD job: 1 when RDD and SQL
+  tasks share one worker pool, 2 when each has its own daemon.
 
 Every task function imports ``heavykeeper_rs_spark`` first, as every
 library UDF does when it is unpickled in the worker.
@@ -59,6 +65,39 @@ def trivial(batches):
         )
 
 
+def trivial_rdd(ids):
+    import os
+
+    import heavykeeper_rs_spark  # noqa: F401
+
+    for _ in ids:
+        yield os.getppid()
+
+
+def sql_ppid(batches):
+    import os
+
+    import pyarrow as pa
+
+    import heavykeeper_rs_spark  # noqa: F401
+
+    for b in batches:
+        yield pa.RecordBatch.from_pydict({"ppid": [os.getppid()] * b.num_rows})
+
+
+def _median_wall(collect, jobs: int) -> tuple[float, list]:
+    """Median wall time of ``jobs`` calls of ``collect`` after two
+    warm-up calls, and the rows the timed calls returned."""
+    walls, rows = [], []
+    for i in range(jobs + 2):
+        t0 = time.perf_counter()
+        out = collect()
+        if i >= 2:
+            walls.append(time.perf_counter() - t0)
+            rows += out
+    return statistics.median(walls), rows
+
+
 def probe(batches):
     import importlib
     import sys
@@ -86,13 +125,11 @@ def main() -> None:
     spark = get_spark(app="worker-setup", master=f"local[{cpus}]", shuffle_partitions=cpus)
     try:
         df = spark.range(0, 4, 1, 4).mapInArrow(trivial, "wait_ms double, sock string")
-        walls, waits = [], []
-        for i in range(jobs + 2):
-            t0 = time.perf_counter()
-            out = df.collect()
-            if i >= 2:
-                walls.append(time.perf_counter() - t0)
-                waits += out
+        wall, waits = _median_wall(df.collect, jobs)
+        rdd = spark.sparkContext.parallelize(range(4), 4).mapPartitions(trivial_rdd)
+        rdd_wall, _ = _median_wall(rdd.collect, jobs)
+        daemons = {r.ppid for r in spark.range(0, 4, 1, 4).mapInArrow(sql_ppid, "ppid long").collect()}
+        daemons.update(rdd.collect())
         rows = spark.range(0, 10, 1, 10).mapInArrow(
             probe, "ms double, n_zip long, impl string"
         ).collect()
@@ -104,10 +141,12 @@ def main() -> None:
         "invalidate_ms_p50": round(statistics.median(r.ms for r in rows), 3),
         "zipimporters": statistics.median(r.n_zip for r in rows),
         "invalidate_impl": sorted({r.impl for r in rows}),
-        "trivial_job_s_p50": round(statistics.median(walls), 4),
+        "trivial_job_s_p50": round(wall, 4),
+        "trivial_rdd_job_s_p50": round(rdd_wall, 4),
         "trivial_jobs": jobs,
         "first_batch_wait_ms_p50": round(statistics.median(r.wait_ms for r in waits), 2),
         "worker_socket": sorted({r.sock for r in waits}),
+        "worker_daemons": len(daemons),
     }))
 
 
